@@ -96,22 +96,16 @@ def _norm(col, digits: int):
 
 
 def _local_queries(spark: SparkSession, qpdf) -> DataFrame:
-    """LocalRelation query batch from a collected pandas frame (the
-    toPandas→createDataFrame roundtrip the r14 lane folds use). Asserts
-    the vec column came back as float32 arrays (r14 advice): the
-    distance lanes' values are identical to the parquet path only while
-    Arrow preserves the element type — a silent fallback to row-based
-    float64 inference must fail loudly here, not as an oracle hash
-    mismatch three stages later."""
-    from pyspark.sql import types as T
+    """LocalRelation query batch from a collected (qid, vec) pandas
+    frame (the toPandas→createDataFrame roundtrip the r14 lane folds
+    use), built by the library's own query builder: explicit ``qid
+    long, vec array<float>`` schema over plain-list cells. The batch —
+    and so every distance lane — is then identical whether or not the
+    session converts through Arrow, and whether ``vec`` came back as
+    float32 arrays (Arrow collect) or Python lists (row collect)."""
+    from faiss_metal_spark.compact_index import _query_df
 
-    out = spark.createDataFrame(qpdf)
-    vt = out.schema["vec"].dataType
-    assert vt == T.ArrayType(T.FloatType()), (
-        f"LocalRelation vec dtype drifted to {vt} — Arrow conversion "
-        "fell back to row-based inference?"
-    )
-    return out
+    return _query_df(spark, list(qpdf["vec"]), qid=qpdf["qid"])
 
 
 # ---------------------------------------------------------------------------
@@ -2468,8 +2462,10 @@ def q_mllib_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stops re-growing lineage. Partitioning is preserved 1:1, so the
     # (cell,pos) mean aggregation sums in the same order and the
     # 6dp-rounded centroids are unchanged (oracle-verified at sf0.001/
-    # 0.01/0.1). Not cross-run caching: the checkpoint lives and dies
-    # inside one query invocation.
+    # 0.01/0.1). Not cross-run caching: no later query reads the
+    # checkpoint, but its blocks do outlive this query — they stay in
+    # the block manager until a JVM GC lets the ContextCleaner drop the
+    # unreferenced RDD.
     emb = emb.localCheckpoint()
 
     # The build-time trainer actions (Lloyd's per-iteration means, the

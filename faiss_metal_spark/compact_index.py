@@ -23,7 +23,7 @@ FAISS re-adds into a freshly trained quantizer.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 import numpy as np
 import pandas as pd
@@ -42,13 +42,20 @@ def _float_view(vt) -> DataFrame:
     return df
 
 
-def _query_df(spark: SparkSession, x: np.ndarray) -> DataFrame:
+def _query_df(spark: SparkSession, x: np.ndarray, qid=None) -> DataFrame:
+    """(qid long, vec array<float>) query batch from host vectors;
+    ``qid`` defaults to 0..n−1. Explicit schema over plain-list cells,
+    so the batch is the same with or without Arrow conversion (a
+    non-Arrow session rejects numpy float32 cells and infers Python
+    floats as double)."""
     x = np.asarray(x, dtype=np.float32)
     if len(x):
         return spark.createDataFrame(
             pd.DataFrame(
                 {
-                    "qid": np.arange(len(x), dtype=np.int64),
+                    "qid": np.arange(len(x), dtype=np.int64)
+                    if qid is None
+                    else np.asarray(qid, np.int64),
                     "vec": [v.tolist() for v in x],
                 }
             ),
@@ -110,33 +117,6 @@ def _sel_rows(df: DataFrame, sel) -> DataFrame:
     return df.join(F.broadcast(sel_df), "id", "left_semi")
 
 
-def _remove_ids_frame(index, frame_attr: str, ids) -> int:
-    """Shared IVF-family remove_ids: drop rows, repersist, return the
-    number removed (the faiss ``remove_ids`` return value). Stored ids
-    are NEVER renumbered — IVF labels are explicit list entries
-    (unlike the flat index's sequential compaction). Accepts literal
-    id iterables AND faiss IDSelectors (``IDSelectorRange`` /
-    Not/And/Or/Xor combinators — ``IndexIVF::remove_ids`` takes an
-    ``IDSelector&``; here a selector removal is one negated predicate
-    filter, no list anywhere). A BARE 2-TUPLE is refused, like
-    ``VectorTable.remove_ids``: a 2-tuple still means a range in
-    ``SearchParams.sel``, so the same literal must not silently mean a
-    2-id batch on the destructive path."""
-    if isinstance(ids, tuple) and len(ids) == 2:
-        raise TypeError(
-            "remove_ids: a bare 2-tuple is ambiguous (it means a range "
-            "in SearchParams.sel but would be a 2-id batch here) — pass "
-            "remove_ids([a, b]) for two literal ids, or "
-            "IDSelectorRange(lo, hi) for a range"
-        )
-    old = getattr(index, frame_attr)
-    new = _drop_ids(old, ids).persist()
-    n_new = new.count()
-    removed = index.ntotal - n_new
-    old.unpersist()
-    setattr(index, frame_attr, new)
-    index._n = n_new
-    return removed
 
 
 def _append_frame(index, frame_attr: str, new_rows: DataFrame) -> None:
@@ -184,27 +164,6 @@ def _ivf_add_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _numpy_add_df(index, frame_attr: str, x: np.ndarray, ids) -> DataFrame:
-    """(id, vec) DataFrame for a host-side add batch. ``ids=None``
-    continues from max(stored id)+1 — NOT ntotal, which would recycle
-    labels after ``remove_ids`` (faiss's own add-after-remove
-    foot-gun; IVF labels here are opaque list entries, so fresh ids
-    are the only safe default)."""
-    x = np.atleast_2d(np.asarray(x, dtype=np.float32))
-    if x.shape[1] != index.d:
-        raise ValueError(f"expected d={index.d}, got {x.shape[1]}")
-    if ids is None:
-        row = getattr(index, frame_attr).agg(F.max("id")).first()
-        start = (row[0] + 1) if row and row[0] is not None else 0
-        ids = np.arange(start, start + len(x), dtype=np.int64)
-    else:
-        ids = np.asarray(ids, dtype=np.int64)
-        if len(ids) != len(x):
-            raise ValueError("ids length must match vector count")
-    return index.spark.createDataFrame(
-        pd.DataFrame({"id": ids, "vec": [v.tolist() for v in x]}),
-        schema="id long, vec array<float>",
-    )
 
 
 def _coarse_state(q) -> tuple:
@@ -212,8 +171,7 @@ def _coarse_state(q) -> tuple:
     (all five knobs change the APPROXIMATE assignment, so merge_from
     must compare them all — identical edges alone do not imply
     identical assignments: landmarks/beam/rounds/expand steer the walk
-    over the same graph). None-safe for absent quantizers and foreign
-    index types."""
+    over the same graph). None-safe for absent quantizers."""
     return (
         getattr(q, "edges", None),
         getattr(q, "landmarks", None),
@@ -223,74 +181,6 @@ def _coarse_state(q) -> tuple:
     )
 
 
-def _merge_ivf_frames(
-    self_idx, other, frame_attr: str, trained_state: tuple, add_id: int,
-    check_duplicates: bool = True,
-) -> None:
-    """Shared faiss ``IndexIVF::merge_from(other, add_id)``: both
-    indexes must carry the SAME trained state (faiss requires "trained
-    in the same way" — here that is checked exactly, not assumed);
-    the other's entries append with ids shifted by ``add_id`` and the
-    other index is emptied (faiss moves, not copies). This is the
-    shard-merge workflow for distributed builds: train once, assign
-    each data shard independently against the frozen quantizer, merge
-    the inverted files — a metadata union, no re-clustering.
-
-    DELIBERATE faiss deviation: upstream ``IndexIVF::merge_from``
-    performs NO duplicate-id check (duplicate labels are legal in
-    faiss IVF), so a merge that succeeds there can raise here. The
-    refusal is the safe default for the shard-merge workflow this
-    engine targets (independent shards with colliding label spaces
-    are almost always a forgotten add_id); callers that intentionally
-    carry duplicate labels opt out with ``check_duplicates=False``,
-    which also skips the check's eager semi-join count() job."""
-    if type(other) is not type(self_idx):
-        raise ValueError(
-            f"merge_from requires the same index type "
-            f"({type(self_idx).__name__} != {type(other).__name__})"
-        )
-    mine, theirs = trained_state
-    for a, b in zip(mine, theirs):
-        same = (
-            np.array_equal(np.asarray(a), np.asarray(b))
-            if isinstance(a, np.ndarray) or isinstance(b, np.ndarray)
-            else a == b
-        )
-        if not same:
-            raise ValueError(
-                "merge_from requires identical trained state "
-                "(train once, share the quantizer across shards)"
-            )
-    moved = getattr(other, frame_attr)
-    if add_id:
-        moved = moved.withColumn("id", (F.col("id") + F.lit(int(add_id))).cast("long"))
-    # Duplicate labels are unreachable in upstream faiss flat tiers
-    # (positional ids, add_id rejected unless 0) — two independently
-    # built indexes merged with the default add_id=0 would silently
-    # create them here. Exact check: bounded id semi-join, stops at
-    # the first clash. (Faiss IVF itself allows duplicate labels —
-    # see the docstring; check_duplicates=False restores that.)
-    if check_duplicates:
-        clash = (
-            moved.select("id")
-            .join(getattr(self_idx, frame_attr).select("id"), "id", "left_semi")
-            .limit(1)
-            .count()
-        )
-        if clash:
-            raise ValueError(
-                "merge_from: donor ids collide with acceptor ids after the "
-                "add_id shift — duplicate labels would result; pass add_id "
-                "(e.g. acceptor max id + 1) to re-base the donor, or "
-                "check_duplicates=False to carry duplicate labels like "
-                "upstream faiss IVF"
-            )
-    _append_frame(self_idx, frame_attr, moved)
-    # empty the donor (faiss merge_from leaves other with ntotal=0)
-    donor = getattr(other, frame_attr)
-    setattr(other, frame_attr, donor.where(F.lit(False)))
-    donor.unpersist()
-    other._n = 0
 
 
 def _add_sa_codes_frame(index, frame_attr, codes, ids, schema, extra=None):
@@ -299,7 +189,7 @@ def _add_sa_codes_frame(index, frame_attr, codes, ids, schema, extra=None):
     ship-codes-not-floats workflow (encode near the data, move
     ``sa_code_size`` bytes/vector, ingest here). ``extra`` supplies
     derived columns (RQ's precomputed ``recn``). Ids default to
-    max(stored id)+1 continuation, like ``_numpy_add_df``."""
+    max(stored id)+1 continuation, like ``add_numpy``."""
     width = index.sa_code_size
     rows = [bytes(c) for c in codes]
     for c in rows:
@@ -342,8 +232,208 @@ def _host_result(res: DataFrame, nq: int, k: int) -> tuple[np.ndarray, np.ndarra
     return D, L
 
 
+# ---------------------------------------------------------------------------
+# the shared host contract
+# ---------------------------------------------------------------------------
+
+# on-disk kind → tier class, filled as each tier class is defined; the
+# persistence registry of ``write_index`` / ``read_index``
+_TIERS: dict[str, type] = {}
+
+
+def _host_twin(method: str):
+    """Host-array twin of a DataFrame search method: (nq, d) queries
+    in, (D, L) arrays out, sentinel-padded to k (the
+    ``VectorTable.search_numpy`` contract); any further arguments
+    forward to ``method`` unchanged."""
+
+    def twin(self, x: np.ndarray, k: int, *args, **kw) -> tuple[np.ndarray, np.ndarray]:
+        res = getattr(self, method)(_query_df(self.spark, x), k, *args, **kw)
+        return _host_result(res, len(np.atleast_2d(x)), k)
+
+    twin.__name__ = twin.__qualname__ = f"{method}_numpy"
+    twin.__doc__ = f"Host twin of ``{method}``: (D, L) arrays, k per query."
+    return twin
+
+
+class _Tier:
+    """Host contract shared by every derived tier — the engine's one
+    faiss ``Index`` base. A tier is a dataclass whose fields ARE its
+    state and declares three class attributes:
+
+    - ``_kind``: its ``write_index`` kind (registers the class);
+    - ``_frame``: the DataFrame field with one row per stored entry
+      (``codes`` / ``words`` / ``assigned`` / ``vectors`` / ``hashed``
+      / ``ranked``) — what ``ntotal``, ``add_numpy``, ``remove_ids``
+      and ``merge_from`` act on;
+    - ``_partition``: the column that frame is ``partitionBy``-ed on in
+      a store (``cell`` for inverted files), so a reloaded index keeps
+      partition-pruned probes.
+
+    ``sources/index_io.py`` persists the fields generically: DataFrames
+    as ``<name>/`` parquet, numpy arrays in ``arrays/``, scalars in
+    ``_meta``. An optional ``_source`` field is the source table's
+    full-precision view, borrowed for exact rescoring: stored (with a
+    ``has_source`` flag) but never unpersisted by ``release``."""
+
+    _kind: str
+    _frame: str
+    _partition: str | None = None
+
+    def __init_subclass__(cls, **kw):
+        super().__init_subclass__(**kw)
+        if "_kind" in cls.__dict__:
+            _TIERS[cls._kind] = cls
+
+    @property
+    def ntotal(self) -> int:
+        return self._n if self._n >= 0 else getattr(self, self._frame).count()
+
+    search_numpy = _host_twin("search")
+
+    def add_numpy(self, x: np.ndarray, ids=None):
+        """Host-side add batch through ``add_df``. ``ids=None``
+        continues from max(stored id)+1 — NOT ntotal, which would
+        recycle labels after ``remove_ids`` (faiss's own
+        add-after-remove foot-gun; labels here are opaque list entries,
+        so fresh ids are the only safe default)."""
+        x = np.atleast_2d(np.asarray(x, dtype=np.float32))
+        if x.shape[1] != self.d:
+            raise ValueError(f"expected d={self.d}, got {x.shape[1]}")
+        if ids is None:
+            row = getattr(self, self._frame).agg(F.max("id")).first()
+            start = (row[0] + 1) if row and row[0] is not None else 0
+            ids = np.arange(start, start + len(x), dtype=np.int64)
+        else:
+            ids = np.asarray(ids, dtype=np.int64)
+            if len(ids) != len(x):
+                raise ValueError("ids length must match vector count")
+        return self.add_df(
+            self.spark.createDataFrame(
+                pd.DataFrame({"id": ids, "vec": [v.tolist() for v in x]}),
+                schema="id long, vec array<float>",
+            )
+        )
+
+    def release(self) -> None:
+        """Unpersist the frames this tier cached."""
+        for f in fields(self):
+            v = getattr(self, f.name)
+            if isinstance(v, DataFrame) and f.name != "_source":
+                v.unpersist()
+
+
+class _ListTier(_Tier):
+    """A tier whose entries are explicit labels in ``_frame``."""
+
+    def remove_ids(self, ids) -> int:
+        """faiss ``remove_ids``: drop rows, repersist, return the number
+        removed. Stored ids are NEVER renumbered — labels are explicit
+        list entries (unlike the flat ``VectorTable``'s sequential
+        compaction). Accepts literal id iterables AND faiss IDSelectors
+        (``IDSelectorRange`` / Not/And/Or/Xor combinators —
+        ``IndexIVF::remove_ids`` takes an ``IDSelector&``; here a
+        selector removal is one negated predicate filter, no list
+        anywhere). A BARE 2-TUPLE is refused, like
+        ``VectorTable.remove_ids``: a 2-tuple still means a range in
+        ``SearchParams.sel``, so the same literal must not silently
+        mean a 2-id batch on the destructive path."""
+        if isinstance(ids, tuple) and len(ids) == 2:
+            raise TypeError(
+                "remove_ids: a bare 2-tuple is ambiguous (it means a range "
+                "in SearchParams.sel but would be a 2-id batch here) — pass "
+                "remove_ids([a, b]) for two literal ids, or "
+                "IDSelectorRange(lo, hi) for a range"
+            )
+        old = getattr(self, self._frame)
+        new = _drop_ids(old, ids).persist()
+        n_new = new.count()
+        removed = self.ntotal - n_new
+        old.unpersist()
+        setattr(self, self._frame, new)
+        self._n = n_new
+        return removed
+
+
+class _MergeTier(_ListTier):
+    """A list tier with faiss ``merge_from``. Subclasses define
+    ``_trained_state()``: everything two indexes must share for their
+    entries to be interchangeable."""
+
+    def merge_from(self, other, add_id: int = 0, check_duplicates: bool = True):
+        """faiss ``merge_from(other, add_id)`` (``IndexIVF`` /
+        ``IndexFlatCodes``): ``other`` must be the same tier carrying
+        the SAME trained state (faiss requires "trained in the same
+        way" — here ``_trained_state()`` is compared exactly, not
+        assumed); the other's entries append with ids shifted by
+        ``add_id`` and the other index is emptied (faiss moves, not
+        copies). This is the
+        shard-merge workflow for distributed builds: train once, assign
+        each data shard independently against the frozen quantizer, merge
+        the inverted files — a metadata union, no re-clustering.
+
+        DELIBERATE faiss deviation: upstream ``IndexIVF::merge_from``
+        performs NO duplicate-id check (duplicate labels are legal in
+        faiss IVF), so a merge that succeeds there can raise here. The
+        refusal is the safe default for the shard-merge workflow this
+        engine targets (independent shards with colliding label spaces
+        are almost always a forgotten add_id); callers that intentionally
+        carry duplicate labels opt out with ``check_duplicates=False``,
+        which also skips the check's eager semi-join count() job."""
+        if type(other) is not type(self):
+            # refuse BEFORE touching donor attributes (a foreign type
+            # lacks this tier's trained-state fields)
+            raise ValueError(
+                f"merge_from requires the same index type "
+                f"({type(self).__name__} != {type(other).__name__})"
+            )
+        mine, theirs = self._trained_state(), other._trained_state()
+        for a, b in zip(mine, theirs):
+            same = (
+                np.array_equal(np.asarray(a), np.asarray(b))
+                if isinstance(a, np.ndarray) or isinstance(b, np.ndarray)
+                else a == b
+            )
+            if not same:
+                raise ValueError(
+                    "merge_from requires identical trained state "
+                    "(train once, share the quantizer across shards)"
+                )
+        moved = getattr(other, self._frame)
+        if add_id:
+            moved = moved.withColumn("id", (F.col("id") + F.lit(int(add_id))).cast("long"))
+        # Duplicate labels are unreachable in upstream faiss flat tiers
+        # (positional ids, add_id rejected unless 0) — two independently
+        # built indexes merged with the default add_id=0 would silently
+        # create them here. Exact check: bounded id semi-join, stops at
+        # the first clash. (Faiss IVF itself allows duplicate labels —
+        # see the docstring; check_duplicates=False restores that.)
+        if check_duplicates:
+            clash = (
+                moved.select("id")
+                .join(getattr(self, self._frame).select("id"), "id", "left_semi")
+                .limit(1)
+                .count()
+            )
+            if clash:
+                raise ValueError(
+                    "merge_from: donor ids collide with acceptor ids after the "
+                    "add_id shift — duplicate labels would result; pass add_id "
+                    "(e.g. acceptor max id + 1) to re-base the donor, or "
+                    "check_duplicates=False to carry duplicate labels like "
+                    "upstream faiss IVF"
+                )
+        _append_frame(self, self._frame, moved)
+        # empty the donor (faiss merge_from leaves other with ntotal=0)
+        donor = getattr(other, self._frame)
+        setattr(other, self._frame, donor.where(F.lit(False)))
+        donor.unpersist()
+        other._n = 0
+        return self
+
+
 @dataclass
-class SQ8Index:
+class SQ8Index(_MergeTier):
     """Scalar-quantizer tier derived from a VectorTable:
     per-dim min/max trained on the table's FP32 reconstruction, b-bit
     codes (``bits`` = 8 / 6 / 4 ≙ faiss QT_8bit / QT_6bit / QT_4bit;
@@ -359,6 +449,9 @@ class SQ8Index:
     ``"SQ8_direct"``): the code IS ``clamp(floor(x), 0, 255)`` and
     decode returns it verbatim — training-free, for data already on a
     [0, 256) integer scale (image bytes)."""
+
+    _kind = "sq8"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -402,21 +495,12 @@ class SQ8Index:
         n = codes.count()
         return cls(vt.spark, vt.d, vmin, vmax, codes, n, bits, direct)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.sq import sq_search
 
         return sq_search(
             self.codes, self.vmin, self.vmax, queries, k, self.bits,
             direct=self.direct,
-        )
-
-    def search_numpy(self, x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k), len(np.atleast_2d(x)), k
         )
 
     def range_search(self, queries: DataFrame, radius: float) -> DataFrame:
@@ -459,38 +543,10 @@ class SQ8Index:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "SQ8Index":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``remove_ids``; ids here are explicit labels (the IVF
-        discipline — never renumbered; the flat ``VectorTable`` keeps
-        faiss's sequential-compaction contract instead)."""
-        return _remove_ids_frame(self, "codes", ids)
-
-    def merge_from(self, other: "SQ8Index", add_id: int = 0, check_duplicates: bool = True) -> "SQ8Index":
-        """faiss ``IndexFlatCodes::merge_from(other, add_id)`` — codes
-        append verbatim (identical trained range/width required, checked
-        exactly), donor emptied, donor ids shifted by ``add_id``."""
-        if type(other) is not type(self):
-            # refuse BEFORE touching donor attributes (a foreign type
-            # lacks this tier's trained-state fields)
-            raise ValueError(
-                f"merge_from requires the same index type "
-                f"({type(self).__name__} != {type(other).__name__})"
-            )
-        _merge_ivf_frames(
-            self, other, "codes",
-            (
-                (self.d, self.bits, self.direct, self.vmin, self.vmax),
-                (other.d, other.bits, other.direct, other.vmin, other.vmax),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def release(self) -> None:
-        self.codes.unpersist()
+    def _trained_state(self) -> tuple:
+        """Codes append verbatim only under the identical range and
+        width."""
+        return (self.d, self.bits, self.direct, self.vmin, self.vmax)
 
     # -- standalone codec (faiss ScalarQuantizer sa_encode/sa_decode) ------
 
@@ -573,10 +629,13 @@ class SQ8Index:
 
 
 @dataclass
-class BinaryIndex:
+class BinaryIndex(_ListTier):
     """Sign-bit tier derived from a VectorTable: 1 bit/dim
     packed words, Hamming search, optional exact-rescore refine against
     the SOURCE table's full vectors."""
+
+    _kind = "binary"
+    _frame = "words"
 
     spark: SparkSession
     d: int
@@ -593,19 +652,10 @@ class BinaryIndex:
         n = words.count()
         return cls(vt.spark, vt.d, words, base, n)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.words.count()
-
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.binary import hamming_knn
 
         return hamming_knn(self.words, queries, k, self.d, vec_col="words", packed=True)
-
-    def search_numpy(self, x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k), len(np.atleast_2d(x)), k
-        )
 
     def range_search(self, queries: DataFrame, radius: int) -> DataFrame:
         """faiss ``IndexBinaryFlat::range_search``: Hamming distance
@@ -642,23 +692,17 @@ class BinaryIndex:
             self._source = self._source.unionByName(rows)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "BinaryIndex":
-        return self.add_df(_numpy_add_df(self, "words", x, ids))
-
     def remove_ids(self, ids) -> int:
         """faiss ``IndexBinaryFlat::remove_ids`` (explicit labels, no
         renumbering); the refine source shrinks in step."""
-        removed = _remove_ids_frame(self, "words", ids)
+        removed = super().remove_ids(ids)
         if self._source is not None:
             self._source = _drop_ids(self._source, ids)
         return removed
 
-    def release(self) -> None:
-        self.words.unpersist()
-
 
 @dataclass
-class BinaryIVFIndex:
+class BinaryIVFIndex(_MergeTier):
     """Binary inverted-file tier — faiss ``IndexBinaryIVF``
     (``index_binary_factory("BIVF<n>")``): packed sign-bit words
     clustered under a HAMMING coarse quantizer (binarized k-means
@@ -675,11 +719,20 @@ class BinaryIVFIndex:
     equi-join on ``cell``, so partitioned stores get dynamic partition
     pruning."""
 
+    _kind = "bivf"
+    _frame = "words"
+    _partition = "cell"
+
     spark: SparkSession
     d: int
     centroid_words: np.ndarray
     words: DataFrame
     _n: int = field(default=-1, repr=False)
+
+    def __post_init__(self):
+        # packed sign words are integers (< 2^32: exact through the
+        # float64 array store of write_index)
+        self.centroid_words = np.asarray(self.centroid_words, np.int64)
 
     @classmethod
     def from_table(
@@ -703,24 +756,11 @@ class BinaryIVFIndex:
     def nlist(self) -> int:
         return len(self.centroid_words)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.words.count()
-
     def search(self, queries: DataFrame, k: int, nprobe: int = 8) -> DataFrame:
         from .operators.binary import binary_ivf_search
 
         return binary_ivf_search(
             self.words, self.centroid_words, queries, k, nprobe, self.d
-        )
-
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, nprobe),
-            len(np.atleast_2d(x)),
-            k,
         )
 
     def range_search(
@@ -748,37 +788,23 @@ class BinaryIVFIndex:
         _append_frame(self, "words", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "BinaryIVFIndex":
-        return self.add_df(_numpy_add_df(self, "words", x, ids))
-
-    def merge_from(self, other: "BinaryIVFIndex", add_id: int = 0, check_duplicates: bool = True) -> "BinaryIVFIndex":
-        """faiss ``IndexBinaryIVF::merge_from`` — identical binary
-        centroids required."""
-        _merge_ivf_frames(
-            self,
-            other,
-            "words",
-            ((self.d, self.centroid_words), (other.d, other.centroid_words)),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``IndexBinaryIVF::remove_ids`` (no renumbering)."""
-        return _remove_ids_frame(self, "words", ids)
-
-    def release(self) -> None:
-        self.words.unpersist()
+    def _trained_state(self) -> tuple:
+        """Identical binary (Hamming) coarse centroids."""
+        return (self.d, self.centroid_words)
 
 
 @dataclass
-class IVFIndex:
+class IVFIndex(_MergeTier):
     """Coarse-quantized tier derived from a VectorTable: k-means cells,
     cell-pruned exact search within probed cells (IndexIVFFlat built by
     ``train``/``add`` from a flat index's vectors). ``assigned`` is the
     inverted file — (table columns + cell); persisting it via
     ``write_index`` keeps the ``partitionBy("cell")`` layout, so probes
     prune partitions at scan time after reload."""
+
+    _kind = "ivf"
+    _frame = "assigned"
+    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -827,10 +853,6 @@ class IVFIndex:
     def nlist(self) -> int:
         return len(self.centroids)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.assigned.count()
-
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
         max_codes: int | None = None,
@@ -851,19 +873,6 @@ class IVFIndex:
             probe_cells=(
                 self.quantizer.probe_fn(nprobe) if self.quantizer else None
             ),
-        )
-
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8, sel=None,
-        max_codes: int | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(
-                _query_df(self.spark, x), k, nprobe, sel=sel,
-                max_codes=max_codes,
-            ),
-            len(np.atleast_2d(x)),
-            k,
         )
 
     def range_search(
@@ -918,34 +927,9 @@ class IVFIndex:
         _append_frame(self, "assigned", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "IVFIndex":
-        """Host-side add batch; ``ids=None`` continues from
-        max(stored id)+1 (see ``_numpy_add_df``)."""
-        return self.add_df(_numpy_add_df(self, "assigned", x, ids))
-
-    def merge_from(self, other: "IVFIndex", add_id: int = 0, check_duplicates: bool = True) -> "IVFIndex":
-        """faiss ``IndexIVF::merge_from(other, add_id)`` — the
-        distributed shard-merge: requires the identical trained
-        quantizer, appends the other's lists with ids shifted by
-        ``add_id``, empties the other."""
-        _merge_ivf_frames(
-            self,
-            other,
-            "assigned",
-            (
-                (self.d, self.metric, self.centroids,
-                 *_coarse_state(self.quantizer)),
-                (other.d, other.metric, other.centroids,
-                 *_coarse_state(getattr(other, "quantizer", None))),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def remove_ids(self, ids) -> int:
-        """Drop entries from the inverted lists without renumbering —
-        faiss ``IndexIVF::remove_ids``; returns the count removed."""
-        return _remove_ids_frame(self, "assigned", ids)
+    def _trained_state(self) -> tuple:
+        """Identical coarse quantizer (centroids, metric, graph)."""
+        return (self.d, self.metric, self.centroids, *_coarse_state(self.quantizer))
 
     def reconstruct(self, key: int) -> np.ndarray:
         """Exact stored vector (IVF,Flat stores full precision —
@@ -980,16 +964,7 @@ class IVFIndex:
             nprobe=A.shape[1], metric=self.metric, probe_cells=hook,
         )
 
-    def search_preassigned_numpy(
-        self, x: np.ndarray, k: int, assign: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Host twin: ``assign`` row i pairs with query row i (the faiss
-        array contract)."""
-        return _host_result(
-            self.search_preassigned(_query_df(self.spark, x), k, assign),
-            len(np.atleast_2d(x)),
-            k,
-        )
+    search_preassigned_numpy = _host_twin("search_preassigned")
 
     def update_vectors(self, ids, x: np.ndarray) -> "IVFIndex":
         """≙ faiss ``IndexIVFFlat::update_vectors(n, idx, x)``: replace
@@ -1031,12 +1006,9 @@ class IVFIndex:
         self.assigned = updated
         return self
 
-    def release(self) -> None:
-        self.assigned.unpersist()
-
 
 @dataclass
-class IVFFlatDedupIndex:
+class IVFFlatDedupIndex(_ListTier):
     """≙ faiss ``IndexIVFFlatDedup`` (``index_factory("IVF<n>,
     FlatDedup")``): an IVF,Flat tier that stores each DISTINCT vector
     once and keeps the duplicate ids in a side map — faiss's answer to
@@ -1070,6 +1042,10 @@ class IVFFlatDedupIndex:
     and ``reconstruct`` are unsupported, as in faiss
     (IndexIVFFlatDedup.h: "does not support reconstruct").
     """
+
+    _kind = "ivf_dedup"
+    _frame = "assigned"
+    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -1131,10 +1107,6 @@ class IVFFlatDedupIndex:
         return len(self.centroids)
 
     @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.assigned.count()
-
-    @property
     def n_instances(self) -> int:
         return self._n_inst if self._n_inst >= 0 else self.instances.count()
 
@@ -1171,15 +1143,6 @@ class IVFFlatDedupIndex:
         )
         qq = queries.select(F.col("qid").cast("long").alias("qid"))
         return _finalize(qq, hits.unionByName(dups), k, self.metric)
-
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, nprobe),
-            len(np.atleast_2d(x)),
-            k,
-        )
 
     def add_df(
         self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
@@ -1400,13 +1363,9 @@ class IVFFlatDedupIndex:
             "group; remove_ids + add is the supported path"
         )
 
-    def release(self) -> None:
-        self.assigned.unpersist()
-        self.instances.unpersist()
-
 
 @dataclass
-class IVFSQIndex:
+class IVFSQIndex(_MergeTier):
     """IVF cells over scalar-quantized codes — faiss
     ``IndexIVFScalarQuantizer`` (``index_factory("IVF<n>,SQ8")``):
     k-means coarse cells, b-bit SQ codes stored IN the inverted lists,
@@ -1422,6 +1381,13 @@ class IVFSQIndex:
     partitions at scan time, exactly like :class:`IVFIndex`. With
     nprobe = nlist the result is value-identical to the flat
     :class:`SQ8Index` over the same ranges (pinned by test)."""
+
+    _kind = "ivfsq"
+    _frame = "codes"
+    _partition = "cell"
+    # stores of this kind write the coarse block in its first form
+    # (always present, no dtype key) — see index_io._write_coarse
+    _coarse_v0 = True
 
     spark: SparkSession
     d: int
@@ -1486,10 +1452,6 @@ class IVFSQIndex:
     def nlist(self) -> int:
         return len(self.centroids)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def _decode(self):
         from .operators.sq import sq_decode_np
 
@@ -1528,19 +1490,6 @@ class IVFSQIndex:
             ),
         )
 
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8, sel=None,
-        max_codes: int | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(
-                _query_df(self.spark, x), k, nprobe, sel=sel,
-                max_codes=max_codes,
-            ),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def search_preassigned(
         self, queries: DataFrame, k: int, assign: np.ndarray
     ) -> DataFrame:
@@ -1558,15 +1507,7 @@ class IVFSQIndex:
             probe_cells=hook,
         )
 
-    def search_preassigned_numpy(
-        self, x: np.ndarray, k: int, assign: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Host twin: ``assign`` row i pairs with query row i."""
-        return _host_result(
-            self.search_preassigned(_query_df(self.spark, x), k, assign),
-            len(np.atleast_2d(x)),
-            k,
-        )
+    search_preassigned_numpy = _host_twin("search_preassigned")
 
     def range_search(
         self, queries: DataFrame, radius: float, nprobe: int = 8
@@ -1624,38 +1565,13 @@ class IVFSQIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "IVFSQIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def merge_from(self, other: "IVFSQIndex", add_id: int = 0, check_duplicates: bool = True) -> "IVFSQIndex":
-        """faiss ``IndexIVF::merge_from`` — requires identical coarse
-        quantizer AND identical SQ range/width (codes must decode the
-        same on both sides)."""
-        _merge_ivf_frames(
-            self,
-            other,
-            "codes",
-            (
-                (self.d, self.metric, self.centroids, self.vmin,
-                 self.vmax, self.bits,
-                 *_coarse_state(self.quantizer)),
-                (
-                    other.d,
-                    other.metric,
-                    other.centroids,
-                    other.vmin,
-                    other.vmax,
-                    other.bits,
-                    *_coarse_state(getattr(other, "quantizer", None)),
-                ),
-            ),
-            add_id, check_duplicates=check_duplicates,
+    def _trained_state(self) -> tuple:
+        """Identical coarse quantizer AND SQ range/width (codes must decode
+        the same on both sides)."""
+        return (
+            self.d, self.metric, self.centroids, self.vmin, self.vmax, self.bits,
+            *_coarse_state(self.quantizer),
         )
-        return self
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``IndexIVF::remove_ids`` (no renumbering)."""
-        return _remove_ids_frame(self, "codes", ids)
 
     def reconstruct(self, key: int) -> np.ndarray:
         """Decoded code (``IndexIVFScalarQuantizer::reconstruct`` —
@@ -1668,16 +1584,17 @@ class IVFSQIndex:
         codes = np.asarray(row[0]["code"], np.uint8)[None, :]
         return sq_decode_np(codes, self.vmin, self.vmax, self.bits)[0]
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class IVFPQIndex:
+class IVFPQIndex(_MergeTier):
     """IVF + product-quantized residuals (IndexIVFPQ): m-byte codes,
     per-cell ADC against broadcast query LUTs, L2 only. Codes persist
     ``partitionBy("cell")`` — the inverted-list layout — via
     ``write_index``."""
+
+    _kind = "ivfpq"
+    _frame = "codes"
+    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -1737,10 +1654,6 @@ class IVFPQIndex:
     def nlist(self) -> int:
         return len(self.centroids)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def polysemous_train(
         self, n_iter: int = 30_000, seed: int = 123
     ) -> "IVFPQIndex":
@@ -1782,19 +1695,6 @@ class IVFPQIndex:
             ),
         )
 
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8,
-        ht: int | None = None, sel=None, max_codes: int | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(
-                _query_df(self.spark, x), k, nprobe, ht=ht, sel=sel,
-                max_codes=max_codes,
-            ),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def search_preassigned(
         self, queries: DataFrame, k: int, assign: np.ndarray
     ) -> DataFrame:
@@ -1812,16 +1712,7 @@ class IVFPQIndex:
             nprobe=A.shape[1], probe_cells=hook,
         )
 
-    def search_preassigned_numpy(
-        self, x: np.ndarray, k: int, assign: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Host twin: ``assign`` row i pairs with query row i (the
-        faiss array contract)."""
-        return _host_result(
-            self.search_preassigned(_query_df(self.spark, x), k, assign),
-            len(np.atleast_2d(x)),
-            k,
-        )
+    search_preassigned_numpy = _host_twin("search_preassigned")
 
     def range_search(
         self, queries: DataFrame, radius: float, nprobe: int = 8
@@ -1856,30 +1747,10 @@ class IVFPQIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "IVFPQIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def merge_from(self, other: "IVFPQIndex", add_id: int = 0, check_duplicates: bool = True) -> "IVFPQIndex":
-        """faiss ``IndexIVFPQ::merge_from`` — identical coarse
-        quantizer AND codebooks required (codes are meaningless under
-        a different ADC table)."""
-        _merge_ivf_frames(
-            self,
-            other,
-            "codes",
-            (
-                (self.d, self.centroids, self.codebooks,
-                 *_coarse_state(self.quantizer)),
-                (other.d, other.centroids, other.codebooks,
-                 *_coarse_state(getattr(other, "quantizer", None))),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``IndexIVF::remove_ids`` (no renumbering)."""
-        return _remove_ids_frame(self, "codes", ids)
+    def _trained_state(self) -> tuple:
+        """Identical coarse quantizer AND codebooks (codes are meaningless
+        under a different ADC table)."""
+        return (self.d, self.centroids, self.codebooks, *_coarse_state(self.quantizer))
 
     def reconstruct(self, key: int) -> np.ndarray:
         """centroid(cell) + decoded residual code
@@ -1898,12 +1769,9 @@ class IVFPQIndex:
             code, self.codebooks
         )[0]
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class IVFPQRIndex:
+class IVFPQRIndex(_MergeTier):
     """IVFPQ + refine PQ re-rank — faiss ``IndexIVFPQR``
     (``index_factory("IVF<n>,PQ<m>+<m2>")``): the first PQ encodes the
     cell residual, a second ``m_refine``-byte PQ encodes what the first
@@ -1912,6 +1780,10 @@ class IVFPQRIndex:
     re-rank touches only nq·k·k_factor candidate rows (broadcast
     semi-join — the code table never shuffles). L2 only, read-only
     derived tier like the other compressed kinds."""
+
+    _kind = "ivfpqr"
+    _frame = "codes"
+    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -1947,10 +1819,6 @@ class IVFPQRIndex:
     def nlist(self) -> int:
         return len(self.centroids)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 8, k_factor: int = 4
     ) -> DataFrame:
@@ -1959,15 +1827,6 @@ class IVFPQRIndex:
         return ivfpqr_search(
             self.codes, self.centroids, self.codebooks, self.refine_books,
             queries, k, nprobe, k_factor,
-        )
-
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8, k_factor: int = 4
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, nprobe, k_factor),
-            len(np.atleast_2d(x)),
-            k,
         )
 
     def add_df(
@@ -1987,27 +1846,9 @@ class IVFPQRIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "IVFPQRIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def merge_from(self, other: "IVFPQRIndex", add_id: int = 0, check_duplicates: bool = True) -> "IVFPQRIndex":
-        """faiss ``merge_from`` — identical coarse quantizer AND both
-        codebooks required."""
-        _merge_ivf_frames(
-            self,
-            other,
-            "codes",
-            (
-                (self.d, self.centroids, self.codebooks, self.refine_books),
-                (other.d, other.centroids, other.codebooks, other.refine_books),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``IndexIVF::remove_ids`` (no renumbering)."""
-        return _remove_ids_frame(self, "codes", ids)
+    def _trained_state(self) -> tuple:
+        """Identical coarse quantizer AND both codebooks."""
+        return (self.d, self.centroids, self.codebooks, self.refine_books)
 
     def reconstruct(self, key: int) -> np.ndarray:
         """centroid(cell) + decode1(code) + decode2(code2) — the
@@ -2030,15 +1871,15 @@ class IVFPQRIndex:
             + pq_decode_np(c2, self.refine_books)[0]
         )
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class OPQIndex:
+class OPQIndex(_ListTier):
     """Learned-rotation PQ (IndexPreTransform(OPQMatrix, IndexPQ)):
     queries rotate once on the broadcast side, ADC runs in rotated
     space (operators/opq.py, Ge et al. 2013)."""
+
+    _kind = "opq"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -2065,10 +1906,6 @@ class OPQIndex:
         codes = opq_encode(base, R, books).persist()
         n = codes.count()
         return cls(vt.spark, vt.d, R, books, codes, n)
-
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
 
     def polysemous_train(
         self, n_iter: int = 30_000, seed: int = 123
@@ -2109,15 +1946,6 @@ class OPQIndex:
             )
         return opq_search(self.codes, self.rotation, self.codebooks, queries, k)
 
-    def search_numpy(
-        self, x: np.ndarray, k: int, ht: int | None = None
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, ht=ht),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def range_search(self, queries: DataFrame, radius: float) -> DataFrame:
         """ADC radius filter in rotated space — ``IndexPreTransform``
         forwards range_search; L2 is rotation-invariant so the radius
@@ -2151,22 +1979,14 @@ class OPQIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "OPQIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        """``IndexPreTransform::remove_ids`` forwards to the inner PQ
-        (explicit labels, no renumbering)."""
-        return _remove_ids_frame(self, "codes", ids)
-
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class PQIndex:
+class PQIndex(_MergeTier):
     """Plain product quantization (IndexPQ): m-byte codes over the whole
     vector (no coarse quantizer), ADC search via broadcast LUTs."""
+
+    _kind = "pq"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -2199,10 +2019,6 @@ class PQIndex:
     def nbits(self) -> int:
         """Code width per subspace, read back from the codebook shape."""
         return int(self.codebooks.shape[1]).bit_length() - 1
-
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
 
     def polysemous_train(
         self, n_iter: int = 30_000, seed: int = 123
@@ -2246,15 +2062,6 @@ class PQIndex:
             )
         return pq_search(self.codes, self.codebooks, queries, k)
 
-    def search_numpy(
-        self, x: np.ndarray, k: int, ht: int | None = None
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, ht=ht),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def range_search(self, queries: DataFrame, radius: float) -> DataFrame:
         """faiss ``IndexPQ::range_search``: asymmetric (ADC) distance
         strictly below ``radius``; (qid, label, distance), unordered."""
@@ -2281,34 +2088,9 @@ class PQIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "PQIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``IndexPQ::remove_ids`` (explicit labels, no
-        renumbering)."""
-        return _remove_ids_frame(self, "codes", ids)
-
-    def merge_from(self, other: "PQIndex", add_id: int = 0, check_duplicates: bool = True) -> "PQIndex":
-        """faiss ``IndexFlatCodes::merge_from(other, add_id)`` — codes
-        are comparable only under the IDENTICAL codebooks (checked
-        exactly); donor emptied, donor ids shifted by ``add_id``."""
-        if type(other) is not type(self):
-            # refuse BEFORE touching donor attributes (a foreign type
-            # lacks this tier's trained-state fields)
-            raise ValueError(
-                f"merge_from requires the same index type "
-                f"({type(self).__name__} != {type(other).__name__})"
-            )
-        _merge_ivf_frames(
-            self, other, "codes",
-            ((self.d, self.codebooks), (other.d, other.codebooks)),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def release(self) -> None:
-        self.codes.unpersist()
+    def _trained_state(self) -> tuple:
+        """Codes are comparable only under the IDENTICAL codebooks."""
+        return (self.d, self.codebooks)
 
     # -- standalone codec (faiss IndexPQ sa_encode/sa_decode) --------------
 
@@ -2362,7 +2144,7 @@ class PQIndex:
 
 
 @dataclass
-class PQFastScanIndex:
+class PQFastScanIndex(_MergeTier):
     """faiss ``IndexPQFastScan`` (factory ``PQ<m>x4fs``): 4-bit PQ in
     the fast-scan layout — two sub-codes per stored byte, ADC via
     fused per-byte 256-entry tables (one gather per byte instead of
@@ -2374,6 +2156,9 @@ class PQFastScanIndex:
     int8). faiss/IndexPQFastScan.h; the engine keeps the pair-per-byte
     part that halves storage/scan bytes and drops the SIMD-register
     interleave, meaningless off-SIMD."""
+
+    _kind = "pq_fs"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -2403,21 +2188,10 @@ class PQFastScanIndex:
     def nbits(self) -> int:
         return 4
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.pq import pq_search
 
         return pq_search(self.codes, self.codebooks, queries, k, packed4=True)
-
-    def search_numpy(self, x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k),
-            len(np.atleast_2d(x)),
-            k,
-        )
 
     def range_search(self, *_a, **_k):
         """faiss ``IndexFastScan`` has no range_search (upstream raises
@@ -2452,30 +2226,9 @@ class PQFastScanIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "PQFastScanIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "codes", ids)
-
-    def merge_from(
-        self, other: "PQFastScanIndex", add_id: int = 0,
-        check_duplicates: bool = True,
-    ) -> "PQFastScanIndex":
-        if type(other) is not type(self):
-            raise ValueError(
-                f"merge_from requires the same index type "
-                f"({type(self).__name__} != {type(other).__name__})"
-            )
-        _merge_ivf_frames(
-            self, other, "codes",
-            ((self.d, self.codebooks), (other.d, other.codebooks)),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def release(self) -> None:
-        self.codes.unpersist()
+    def _trained_state(self) -> tuple:
+        """Identical codebooks."""
+        return (self.d, self.codebooks)
 
     # -- standalone codec (faiss IndexFastScan sa_encode/sa_decode) --------
 
@@ -2504,7 +2257,7 @@ class PQFastScanIndex:
 
 
 @dataclass
-class IVFPQFastScanIndex:
+class IVFPQFastScanIndex(_MergeTier):
     """faiss ``IndexIVFPQFastScan`` (factory ``IVF<n>,PQ<m>x4fs``):
     the inverted-file composition of :class:`PQFastScanIndex` —
     residual 4-bit codes packed two per byte in cell-partitioned
@@ -2512,6 +2265,10 @@ class IVFPQFastScanIndex:
     :class:`IVFPQIndex` (same trained state): labels exactly,
     distances to pair-association ulp. No polysemous gate (faiss
     fast-scan parity)."""
+
+    _kind = "ivfpq_fs"
+    _frame = "codes"
+    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -2548,10 +2305,6 @@ class IVFPQFastScanIndex:
     def nlist(self) -> int:
         return len(self.centroids)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
         max_codes: int | None = None,
@@ -2563,19 +2316,6 @@ class IVFPQFastScanIndex:
         return ivfpq_search(
             _sel_rows(self.codes, sel), self.centroids, self.codebooks,
             queries, k, nprobe, max_codes=max_codes, packed4=True,
-        )
-
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8, sel=None,
-        max_codes: int | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(
-                _query_df(self.spark, x), k, nprobe, sel=sel,
-                max_codes=max_codes,
-            ),
-            len(np.atleast_2d(x)),
-            k,
         )
 
     def range_search(self, *_a, **_k):
@@ -2615,34 +2355,14 @@ class IVFPQFastScanIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "IVFPQFastScanIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "codes", ids)
-
-    def merge_from(
-        self, other: "IVFPQFastScanIndex", add_id: int = 0,
-        check_duplicates: bool = True,
-    ) -> "IVFPQFastScanIndex":
-        """faiss ``merge_from`` — identical coarse quantizer AND
-        residual codebooks required (codes must decode the same)."""
-        _merge_ivf_frames(
-            self, other, "codes",
-            (
-                (self.d, self.centroids, self.codebooks),
-                (other.d, other.centroids, other.codebooks),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def release(self) -> None:
-        self.codes.unpersist()
+    def _trained_state(self) -> tuple:
+        """Identical coarse quantizer AND residual codebooks (codes must
+        decode the same)."""
+        return (self.d, self.centroids, self.codebooks)
 
 
 @dataclass
-class GraphIndex:
+class GraphIndex(_Tier):
     """Graph-ANN tier — the faiss ``IndexHNSWFlat`` workflow
     (``index_factory("HNSW32")``) served by a flat navigable kNN graph:
     build = distributed NN-Descent (operators/knn_graph.py, Dong et
@@ -2659,6 +2379,9 @@ class GraphIndex:
     tier: rebuild after mutating the source table. ``M`` is the graph
     degree (edges per node), ``ef_search`` the default beam width.
     """
+
+    _kind = "graph"
+    _frame = "vectors"
 
     spark: SparkSession
     d: int
@@ -2706,10 +2429,6 @@ class GraphIndex:
         graph.count()  # materialize the build (faiss builds eagerly on add)
         return cls(vt.spark, vt.d, base, graph, M, ef_search, n)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.vectors.count()
-
     def search(
         self,
         queries: DataFrame,
@@ -2742,20 +2461,6 @@ class GraphIndex:
             "GraphIndex.range_search: faiss IndexHNSW does not support "
             "range search (beam search cannot enumerate a radius); use "
             "a flat/IVF tier for radius queries"
-        )
-
-    def search_numpy(
-        self,
-        x: np.ndarray,
-        k: int,
-        ef: int | None = None,
-        iters: int = 3,
-        entry: str = "landmarks",
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, ef, iters=iters, entry=entry),
-            len(np.atleast_2d(x)),
-            k,
         )
 
     def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "GraphIndex":
@@ -2811,9 +2516,6 @@ class GraphIndex:
         rows.unpersist()
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "GraphIndex":
-        return self.add_df(_numpy_add_df(self, "vectors", x, ids))
-
     def reconstruct(self, key: int) -> np.ndarray:
         """Exact — the graph tier stores full vectors
         (``IndexHNSWFlat::reconstruct``)."""
@@ -2867,10 +2569,6 @@ class GraphIndex:
             [np.asarray(byid[i], np.float32) for i in range(start, start + n)]
         ) if n else np.zeros((0, self.d), dtype=np.float32)
 
-    def release(self) -> None:
-        self.vectors.unpersist()
-        self.graph.unpersist()
-
 
 @dataclass
 class NSGIndex(GraphIndex):
@@ -2905,6 +2603,8 @@ class NSGIndex(GraphIndex):
     may locally exceed NSG's pruning guarantees, rebuild for strict
     NSG structure).
     """
+
+    _kind = "nsg"
 
     nav_id: int = -1
 
@@ -2989,20 +2689,6 @@ class NSGIndex(GraphIndex):
             queries, k, ef, iters=3 if iters is None else iters, entry=entry
         )
 
-    def search_numpy(
-        self,
-        x: np.ndarray,
-        k: int,
-        ef: int | None = None,
-        iters: int | None = None,
-        entry: str = "nav",
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, ef, iters=iters, entry=entry),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def range_search(self, *_a, **_k):
         """faiss ``IndexNSG`` has no range_search (same beam-search
         limitation as IndexHNSW)."""
@@ -3013,7 +2699,7 @@ class NSGIndex(GraphIndex):
 
 
 @dataclass
-class GraphSQIndex:
+class GraphSQIndex(_Tier):
     """faiss ``IndexHNSWSQ`` (factory ``"HNSW<M>,SQ8/6/4"``): the NSW
     graph over SCALAR-QUANTIZED storage — the memory-constrained HNSW
     composition (faiss/IndexHNSW.h ``IndexHNSWSQ``: an IndexHNSW whose
@@ -3029,6 +2715,9 @@ class GraphSQIndex:
     tier like the other graph builds: rebuild after source mutation
     (``add_df`` refuses with guidance — the flat :class:`GraphIndex`
     owns incremental insertion)."""
+
+    _kind = "graph_sq"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -3080,10 +2769,6 @@ class GraphSQIndex:
             vt.spark, vt.d, vmin, vmax, codes, graph, M, ef_search, n, bits
         )
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def _decode(self):
         from .operators.sq import sq_decode_np
 
@@ -3117,20 +2802,6 @@ class GraphSQIndex:
             decode=self._decode(),
         )
 
-    def search_numpy(
-        self,
-        x: np.ndarray,
-        k: int,
-        ef: int | None = None,
-        iters: int = 3,
-        entry: str = "landmarks",
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, ef, iters=iters, entry=entry),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def range_search(self, *_a, **_k):
         """faiss ``IndexHNSW`` (any storage) has no range_search."""
         raise NotImplementedError(
@@ -3161,13 +2832,9 @@ class GraphSQIndex:
 
     add_numpy = add_df
 
-    def release(self) -> None:
-        self.codes.unpersist()
-        self.graph.unpersist()
-
 
 @dataclass
-class GraphPQIndex:
+class GraphPQIndex(_Tier):
     """faiss ``IndexHNSWPQ`` (factory ``"HNSW<M>,PQ<m>"``): the NSW
     graph over PRODUCT-QUANTIZED storage — m bytes/vector resident
     (the deepest-compression HNSW composition faiss offers). Same
@@ -3175,6 +2842,9 @@ class GraphPQIndex:
     (the storage DistanceComputer), serve by decoding fetched
     candidates only; search ≡ :class:`GraphIndex` over the table's PQ
     reconstruction, value for value. Read-only derived tier."""
+
+    _kind = "graph_pq"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -3227,10 +2897,6 @@ class GraphPQIndex:
     def nbits(self) -> int:
         return int(self.codebooks.shape[1]).bit_length() - 1
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def _decode(self):
         from .operators.pq import pq_decode_np
 
@@ -3267,20 +2933,6 @@ class GraphPQIndex:
             decode=self._decode(),
         )
 
-    def search_numpy(
-        self,
-        x: np.ndarray,
-        k: int,
-        ef: int | None = None,
-        iters: int = 3,
-        entry: str = "landmarks",
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, ef, iters=iters, entry=entry),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def range_search(self, *_a, **_k):
         """faiss ``IndexHNSW`` (any storage) has no range_search."""
         raise NotImplementedError(
@@ -3306,13 +2958,9 @@ class GraphPQIndex:
 
     add_numpy = add_df
 
-    def release(self) -> None:
-        self.codes.unpersist()
-        self.graph.unpersist()
-
 
 @dataclass
-class BinaryHNSWIndex:
+class BinaryHNSWIndex(_Tier):
     """faiss ``IndexBinaryHNSW`` (factory ``"BHNSW<M>"``): the NSW
     graph over PACKED BINARY storage, every distance the walk computes
     a Hamming distance (faiss/IndexBinaryHNSW.h — an IndexBinaryFlat
@@ -3335,6 +2983,9 @@ class BinaryHNSWIndex:
     exactness. Read-only derived tier: ``add_df`` refuses (rebuild
     after source mutation; incremental insertion lives on the flat
     :class:`GraphIndex`)."""
+
+    _kind = "bhnsw"
+    _frame = "words"
 
     spark: SparkSession
     d: int
@@ -3396,10 +3047,6 @@ class BinaryHNSWIndex:
         graph.count()
         dec.unpersist()
         return cls(vt.spark, vt.d, words, graph, M, ef_search, n)
-
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.words.count()
 
     def _decode(self):
         from .operators.binary import unpack_words_np
@@ -3500,13 +3147,9 @@ class BinaryHNSWIndex:
 
     add_numpy = add_df
 
-    def release(self) -> None:
-        self.words.unpersist()
-        self.graph.unpersist()
-
 
 @dataclass
-class LSHIndex:
+class LSHIndex(_ListTier):
     """Binary-hash tier — faiss ``IndexLSH`` (``index_factory("LSH")``),
     the ``rotate_data=true, train_thresholds=false`` default: each
     vector is projected through a seeded random rotation
@@ -3528,6 +3171,9 @@ class LSHIndex:
     the frozen rotation; retraining the rotation is a rebuild.
     """
 
+    _kind = "lsh"
+    _frame = "words"
+
     spark: SparkSession
     d: int
     nbits: int
@@ -3537,9 +3183,9 @@ class LSHIndex:
     _n: int = field(default=-1, repr=False)
     mean: np.ndarray = None  # (d,) centering — zeros for "rr", PCA mean for "itq"
 
-    @property
-    def _mu(self) -> np.ndarray:
-        return np.zeros(self.d) if self.mean is None else self.mean
+    def __post_init__(self):
+        if self.mean is None:  # no centering (stores that predate it)
+            self.mean = np.zeros(self.d)
 
     @classmethod
     def from_table(
@@ -3579,16 +3225,12 @@ class LSHIndex:
         n = words.count()
         return cls(vt.spark, vt.d, nbits, R, words, base, n, mean)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.words.count()
-
     def _project_queries(self, queries: DataFrame, qid_col: str, qvec_col: str) -> DataFrame:
         from .operators.pca import pca_project_col
 
         return queries.select(
             F.col(qid_col).cast("long").alias("qid"),
-            pca_project_col(qvec_col, self._mu, self.rotation).alias("vec"),
+            pca_project_col(qvec_col, self.mean, self.rotation).alias("vec"),
         )
 
     def search(
@@ -3606,11 +3248,6 @@ class LSHIndex:
             self.nbits,
             vec_col="words",
             packed=True,
-        )
-
-    def search_numpy(self, x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k), len(np.atleast_2d(x)), k
         )
 
     def refine_search_numpy(
@@ -3653,7 +3290,7 @@ class LSHIndex:
         x = np.atleast_2d(np.asarray(x, dtype=np.float64))
         if x.shape[1] != self.d:
             raise ValueError(f"expected d={self.d}, got {x.shape[1]}")
-        proj = (x - self._mu) @ self.rotation.T
+        proj = (x - self.mean) @ self.rotation.T
         words = binarize_np(proj.astype(np.float32))
         return np.array([w.tobytes() for w in words], dtype=object)
 
@@ -3664,29 +3301,23 @@ class LSHIndex:
         from .operators.pca import pca_apply
 
         rows = _ivf_add_rows(df, id_col, vec_col)
-        projected = pca_apply(rows, self._mu, self.rotation)
+        projected = pca_apply(rows, self.mean, self.rotation)
         _append_frame(self, "words", binarize(projected, self.nbits))
         if self._source is not None:
             self._source = self._source.unionByName(rows)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "LSHIndex":
-        return self.add_df(_numpy_add_df(self, "words", x, ids))
-
     def remove_ids(self, ids) -> int:
         """faiss ``IndexLSH::remove_ids`` (explicit labels, no
         renumbering); the refine source shrinks in step."""
-        removed = _remove_ids_frame(self, "words", ids)
+        removed = super().remove_ids(ids)
         if self._source is not None:
             self._source = _drop_ids(self._source, ids)
         return removed
 
-    def release(self) -> None:
-        self.words.unpersist()
-
 
 @dataclass
-class BinaryHashIndex:
+class BinaryHashIndex(_ListTier):
     """Hash-bucketed binary tier — faiss ``IndexBinaryHash``
     (``n_slices=1``) and ``IndexBinaryMultiHash`` (``n_slices>1``,
     index_binary_factory ``"BHash<b>"`` / ``"BMHash<n>x<b>"``): the
@@ -3701,6 +3332,10 @@ class BinaryHashIndex:
     binary family; the IVF tier gives balanced data-adaptive cells.
     Training-free, so ``add_df`` is a pure append.
     """
+
+    _kind = "bhash"
+    _frame = "hashed"
+    _partition = "h0"
 
     spark: SparkSession
     d: int
@@ -3718,10 +3353,6 @@ class BinaryHashIndex:
         n = hashed.count()
         return cls(vt.spark, vt.d, b, n_slices, hashed, n)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.hashed.count()
-
     def search(
         self, queries: DataFrame, k: int, nflip: int = 0,
         qid_col: str = "qid", qvec_col: str = "vec",
@@ -3731,15 +3362,6 @@ class BinaryHashIndex:
         return binary_hash_search(
             self.hashed, queries, k, self.d, self.b, nflip, self.n_slices,
             qid_col=qid_col, qvec_col=qvec_col,
-        )
-
-    def search_numpy(
-        self, x: np.ndarray, k: int, nflip: int = 0
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, nflip),
-            len(np.atleast_2d(x)),
-            k,
         )
 
     def range_search(
@@ -3771,18 +3393,9 @@ class BinaryHashIndex:
         _append_frame(self, "hashed", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "BinaryHashIndex":
-        return self.add_df(_numpy_add_df(self, "hashed", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "hashed", ids)
-
-    def release(self) -> None:
-        self.hashed.unpersist()
-
 
 @dataclass
-class IMIIndex:
+class IMIIndex(_MergeTier):
     """Inverted multi-index — faiss ``MultiIndexQuantizer`` coarse
     quantizer feeding flat inverted lists (``index_factory("IMI2x8")``
     ≙ IndexIVFFlat over the product quantizer): cell = composite of
@@ -3792,6 +3405,10 @@ class IMIIndex:
     partial/final merge are the shared IVF machinery — a probed cell
     behaves exactly like an :class:`IVFIndex` cell. L2 in-cell metric
     (the faiss IMI default)."""
+
+    _kind = "imi"
+    _frame = "assigned"
+    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -3819,10 +3436,6 @@ class IMIIndex:
     def nlist(self) -> int:
         return len(self.C0) * len(self.C1)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.assigned.count()
-
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
         max_codes: int | None = None,
@@ -3843,19 +3456,6 @@ class IMIIndex:
             max_codes=max_codes,
         )
 
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8, sel=None,
-        max_codes: int | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(
-                _query_df(self.spark, x), k, nprobe, sel=sel,
-                max_codes=max_codes,
-            ),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "IMIIndex":
         """faiss ``add``: assign against the FROZEN sub-quantizers,
         append."""
@@ -3865,23 +3465,9 @@ class IMIIndex:
         _append_frame(self, "assigned", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "IMIIndex":
-        return self.add_df(_numpy_add_df(self, "assigned", x, ids))
-
-    def merge_from(self, other: "IMIIndex", add_id: int = 0, check_duplicates: bool = True) -> "IMIIndex":
-        """faiss ``IndexIVF::merge_from`` over the product quantizer —
-        identical BOTH sub-quantizers required."""
-        _merge_ivf_frames(
-            self,
-            other,
-            "assigned",
-            ((self.d, self.b, self.C0, self.C1), (other.d, other.b, other.C0, other.C1)),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "assigned", ids)
+    def _trained_state(self) -> tuple:
+        """Identical BOTH sub-quantizers."""
+        return (self.d, self.b, self.C0, self.C1)
 
     def reconstruct(self, key: int) -> np.ndarray:
         """Exact — IMI lists store full vectors (IndexIVFFlat)."""
@@ -3890,17 +3476,17 @@ class IMIIndex:
             raise KeyError(f"id {key} not in index")
         return np.asarray(row[0]["vec"], np.float64)
 
-    def release(self) -> None:
-        self.assigned.unpersist()
-
 
 @dataclass
-class RQIndex:
+class RQIndex(_MergeTier):
     """Residual-quantizer tier — faiss ``IndexResidualQuantizer``
     (``index_factory("RQ<m>x8")``): m sequential full-width 256-entry
     stages, codes are the greedy argmin chain, search is LUT-only via
     the additive identity (operators/rq.py). Same m bytes/vector as
     PQ, usually lower reconstruction error on correlated data."""
+
+    _kind = "rq"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -3931,19 +3517,10 @@ class RQIndex:
             beam=int(beam), icm_sweeps=int(icm_sweeps),
         )
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.rq import rq_search
 
         return rq_search(self.codes, self.codebooks, queries, k)
-
-    def search_numpy(self, x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k), len(np.atleast_2d(x)), k
-        )
 
     def range_search(self, queries: DataFrame, radius: float) -> DataFrame:
         """faiss ``range_search`` (IndexFlatCodes inheritance): exact
@@ -3965,34 +3542,12 @@ class RQIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "RQIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "codes", ids)
-
-    def merge_from(self, other: "RQIndex", add_id: int = 0, check_duplicates: bool = True) -> "RQIndex":
-        """faiss ``IndexFlatCodes::merge_from(other, add_id)`` — stage
-        chains are comparable only under the IDENTICAL codebooks AND
-        encode discipline (beam/icm widths checked too: a donor encoded
-        with a different beam holds different codes for the same
+    def _trained_state(self) -> tuple:
+        """Stage chains are comparable only under the IDENTICAL
+        codebooks AND encode discipline (a donor encoded with a
+        different beam/icm width holds different codes for the same
         vectors, silently mixing quality tiers)."""
-        if type(other) is not type(self):
-            # refuse BEFORE touching donor attributes (a foreign type
-            # lacks this tier's trained-state fields)
-            raise ValueError(
-                f"merge_from requires the same index type "
-                f"({type(self).__name__} != {type(other).__name__})"
-            )
-        _merge_ivf_frames(
-            self, other, "codes",
-            (
-                (self.d, self.beam, self.icm_sweeps, self.codebooks),
-                (other.d, other.beam, other.icm_sweeps, other.codebooks),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
+        return (self.d, self.beam, self.icm_sweeps, self.codebooks)
 
     def reconstruct(self, key: int) -> np.ndarray:
         """Codeword SUM (``IndexResidualQuantizer::reconstruct``)."""
@@ -4049,12 +3604,9 @@ class RQIndex:
             "id long, code binary, recn double", extra,
         )
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class PRQIndex:
+class PRQIndex(_MergeTier):
     """Product-residual-quantizer tier — faiss
     ``IndexProductResidualQuantizer`` (``index_factory("PRQ<ns>x<m>x8")``)
     and, with ``icm_sweeps`` > 0, the ``IndexProductLocalSearchQuantizer``
@@ -4067,6 +3619,9 @@ class PRQIndex:
     here codebooks come from the greedy residual trainer and ICM is the
     ENCODE move (deterministic, per-vector error monotone) — same code
     layout and search arithmetic, different codebook optimizer."""
+
+    _kind = "prq"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -4100,19 +3655,10 @@ class PRQIndex:
     def nsplits(self) -> int:
         return len(self.codebooks)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.rq import prq_search
 
         return prq_search(self.codes, self.codebooks, queries, k)
-
-    def search_numpy(self, x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k), len(np.atleast_2d(x)), k
-        )
 
     def range_search(self, queries: DataFrame, radius: float) -> DataFrame:
         """faiss ``range_search`` over the product codes — same strict-<
@@ -4133,29 +3679,10 @@ class PRQIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "PRQIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "codes", ids)
-
-    def merge_from(self, other: "PRQIndex", add_id: int = 0, check_duplicates: bool = True) -> "PRQIndex":
-        """Same discipline as :meth:`RQIndex.merge_from`: chains are
-        comparable only under identical codebooks AND encode widths."""
-        if type(other) is not type(self):
-            raise ValueError(
-                f"merge_from requires the same index type "
-                f"({type(self).__name__} != {type(other).__name__})"
-            )
-        _merge_ivf_frames(
-            self, other, "codes",
-            (
-                (self.d, self.beam, self.icm_sweeps, self.codebooks),
-                (other.d, other.beam, other.icm_sweeps, other.codebooks),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
+    def _trained_state(self) -> tuple:
+        """Identical codebooks AND encode widths (the RQIndex
+        discipline)."""
+        return (self.d, self.beam, self.icm_sweeps, self.codebooks)
 
     def reconstruct(self, key: int) -> np.ndarray:
         """Per-block codeword sums concatenated
@@ -4213,12 +3740,9 @@ class PRQIndex:
             "id long, code binary, recn double", extra,
         )
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class IVFRQIndex:
+class IVFRQIndex(_MergeTier):
     """IVF + additive-quantized entries — the faiss
     ``IndexIVFResidualQuantizer`` family (``index_factory(
     "IVF<n>,RQ<m>x8")``) and its product/ICM variants:
@@ -4235,6 +3759,13 @@ class IVFRQIndex:
     bit-identical to the flat RQ/PRQ tier under shared codebooks.
     Codes persist ``partitionBy("cell")`` via ``write_index`` (the
     inverted-list layout, partition-pruned probes)."""
+
+    _kind = "ivfrq"
+    _frame = "codes"
+    _partition = "cell"
+    # stores of this kind write the coarse block in its first form
+    # (always present, no dtype key) — see index_io._write_coarse
+    _coarse_v0 = True
 
     spark: SparkSession
     d: int
@@ -4292,10 +3823,6 @@ class IVFRQIndex:
         return len(self.centroids)
 
     @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
-    @property
     def sa_code_size(self) -> int:
         from .operators.rq import addq_m_total
 
@@ -4318,19 +3845,6 @@ class IVFRQIndex:
             ),
         )
 
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8,
-        sel=None, max_codes: int | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(
-                _query_df(self.spark, x), k, nprobe, sel=sel,
-                max_codes=max_codes,
-            ),
-            len(np.atleast_2d(x)),
-            k,
-        )
-
     def search_preassigned(
         self, queries: DataFrame, k: int, assign: np.ndarray
     ) -> DataFrame:
@@ -4346,14 +3860,7 @@ class IVFRQIndex:
             probe_cells=hook,
         )
 
-    def search_preassigned_numpy(
-        self, x: np.ndarray, k: int, assign: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search_preassigned(_query_df(self.spark, x), k, assign),
-            len(np.atleast_2d(x)),
-            k,
-        )
+    search_preassigned_numpy = _host_twin("search_preassigned")
 
     def range_search(
         self, queries: DataFrame, radius: float, nprobe: int = 8
@@ -4394,36 +3901,14 @@ class IVFRQIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "IVFRQIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def merge_from(
-        self, other: "IVFRQIndex", add_id: int = 0,
-        check_duplicates: bool = True,
-    ) -> "IVFRQIndex":
-        """faiss ``IndexIVF::merge_from`` — identical coarse quantizer,
-        codebooks AND encode discipline required (a donor encoded with
-        a different beam/residual mode holds different codes for the
-        same vectors)."""
-        _merge_ivf_frames(
-            self,
-            other,
-            "codes",
-            (
-                (self.d, self.beam, self.icm_sweeps, self.by_residual,
-                 self.centroids, self.codebooks,
-                 *_coarse_state(self.quantizer)),
-                (other.d, other.beam, other.icm_sweeps, other.by_residual,
-                 other.centroids, other.codebooks,
-                 *_coarse_state(getattr(other, "quantizer", None))),
-            ),
-            add_id, check_duplicates=check_duplicates,
+    def _trained_state(self) -> tuple:
+        """Identical coarse quantizer, codebooks AND encode discipline (a
+        donor encoded with a different beam/residual mode holds
+        different codes for the same vectors)."""
+        return (
+            self.d, self.beam, self.icm_sweeps, self.by_residual,
+            self.centroids, self.codebooks, *_coarse_state(self.quantizer),
         )
-        return self
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``IndexIVF::remove_ids`` (no renumbering)."""
-        return _remove_ids_frame(self, "codes", ids)
 
     def reconstruct(self, key: int) -> np.ndarray:
         """centroid(cell) + additive decode when ``by_residual``, else
@@ -4443,12 +3928,9 @@ class IVFRQIndex:
             rec = rec + self.centroids[int(row[0]["cell"])]
         return rec
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class RQFastScanIndex:
+class RQFastScanIndex(_MergeTier):
     """faiss ``IndexAdditiveQuantizerFastScan`` in its residual form
     (``IndexResidualQuantizerFastScan``; factory ``RQ<m>x4fs``): 4-bit
     RQ stages packed two per stored byte, additive LUT search via
@@ -4460,6 +3942,9 @@ class RQFastScanIndex:
     fast-scan, which quantizes LUTs to int8). Packing reuses the PQ
     fast-scan layout helpers (operators/pq.py pq_pack4_np /
     _fuse_lut4) — the layout is codebook-agnostic."""
+
+    _kind = "rq_fs"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -4496,21 +3981,10 @@ class RQFastScanIndex:
     def nbits(self) -> int:
         return 4
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.rq import rq_search
 
         return rq_search(self.codes, self.codebooks, queries, k, packed4=True)
-
-    def search_numpy(self, x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k),
-            len(np.atleast_2d(x)),
-            k,
-        )
 
     def range_search(self, *_a, **_k):
         """faiss ``IndexFastScan`` has no range_search (upstream raises
@@ -4543,30 +4017,9 @@ class RQFastScanIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "RQFastScanIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "codes", ids)
-
-    def merge_from(
-        self, other: "RQFastScanIndex", add_id: int = 0,
-        check_duplicates: bool = True,
-    ) -> "RQFastScanIndex":
-        if type(other) is not type(self):
-            raise ValueError(
-                f"merge_from requires the same index type "
-                f"({type(self).__name__} != {type(other).__name__})"
-            )
-        _merge_ivf_frames(
-            self, other, "codes",
-            (
-                (self.d, self.beam, self.icm_sweeps, self.codebooks),
-                (other.d, other.beam, other.icm_sweeps, other.codebooks),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
+    def _trained_state(self) -> tuple:
+        """Identical codebooks AND encode widths."""
+        return (self.d, self.beam, self.icm_sweeps, self.codebooks)
 
     # -- standalone codec ---------------------------------------------------
 
@@ -4598,12 +4051,9 @@ class RQFastScanIndex:
             pq_unpack4_np(np.stack(rows), self.m), self.codebooks
         ).astype(np.float32)
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class PRQFastScanIndex:
+class PRQFastScanIndex(_MergeTier):
     """faiss ``IndexProductResidualQuantizerFastScan`` (factory
     ``PRQ<ns>x<m>x4fs``; with ``icm_sweeps`` > 0 the
     ``IndexProductLocalSearchQuantizerFastScan`` encode discipline,
@@ -4616,6 +4066,9 @@ class PRQFastScanIndex:
     nbits=4 :class:`PRQIndex` on the same trained state, distances to
     summation-order ulp. Layout helpers shared with every fast-scan
     tier (operators/pq.py ``pq_pack4_np`` / ``_fuse_lut4``)."""
+
+    _kind = "prq_fs"
+    _frame = "codes"
 
     spark: SparkSession
     d: int
@@ -4659,21 +4112,10 @@ class PRQFastScanIndex:
     def nbits(self) -> int:
         return 4
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.rq import prq_search
 
         return prq_search(self.codes, self.codebooks, queries, k, packed4=True)
-
-    def search_numpy(self, x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(_query_df(self.spark, x), k),
-            len(np.atleast_2d(x)),
-            k,
-        )
 
     def range_search(self, *_a, **_k):
         """faiss ``IndexFastScan`` has no range_search; use the plain
@@ -4707,30 +4149,9 @@ class PRQFastScanIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "PRQFastScanIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "codes", ids)
-
-    def merge_from(
-        self, other: "PRQFastScanIndex", add_id: int = 0,
-        check_duplicates: bool = True,
-    ) -> "PRQFastScanIndex":
-        if type(other) is not type(self):
-            raise ValueError(
-                f"merge_from requires the same index type "
-                f"({type(self).__name__} != {type(other).__name__})"
-            )
-        _merge_ivf_frames(
-            self, other, "codes",
-            (
-                (self.d, self.beam, self.icm_sweeps, self.codebooks),
-                (other.d, other.beam, other.icm_sweeps, other.codebooks),
-            ),
-            add_id, check_duplicates=check_duplicates,
-        )
-        return self
+    def _trained_state(self) -> tuple:
+        """Identical codebooks AND encode widths."""
+        return (self.d, self.beam, self.icm_sweeps, self.codebooks)
 
     # -- standalone codec ---------------------------------------------------
 
@@ -4762,12 +4183,9 @@ class PRQFastScanIndex:
             pq_unpack4_np(np.stack(rows), self.m_total), self.codebooks
         ).astype(np.float32)
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class IVFRQFastScanIndex:
+class IVFRQFastScanIndex(_MergeTier):
     """faiss ``IndexIVFAdditiveQuantizerFastScan`` (factory
     ``IVF<n>,RQ<m>x4fs`` for the residual form,
     ``IVF<n>,PRQ<ns>x<m>x4fs`` / ``IVF<n>,PLSQ<ns>x<m>x4fs`` for the
@@ -4778,6 +4196,10 @@ class IVFRQFastScanIndex:
     fused-LUT additive scan. Full probe ≡ the unpacked nbits=4
     :class:`IVFRQIndex` (same trained state): labels exactly,
     distances to pair-association ulp."""
+
+    _kind = "ivfrq_fs"
+    _frame = "codes"
+    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -4823,10 +4245,6 @@ class IVFRQFastScanIndex:
     def nlist(self) -> int:
         return len(self.centroids)
 
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.codes.count()
-
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 8,
         sel=None, max_codes: int | None = None,
@@ -4837,19 +4255,6 @@ class IVFRQFastScanIndex:
             _sel_rows(self.codes, sel), self.centroids, self.codebooks,
             queries, k, nprobe, by_residual=self.by_residual,
             max_codes=max_codes, packed4=True,
-        )
-
-    def search_numpy(
-        self, x: np.ndarray, k: int, nprobe: int = 8,
-        sel=None, max_codes: int | None = None,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        return _host_result(
-            self.search(
-                _query_df(self.spark, x), k, nprobe, sel=sel,
-                max_codes=max_codes,
-            ),
-            len(np.atleast_2d(x)),
-            k,
         )
 
     def range_search(self, *_a, **_k):
@@ -4878,29 +4283,12 @@ class IVFRQFastScanIndex:
         _append_frame(self, "codes", new)
         return self
 
-    def add_numpy(self, x: np.ndarray, ids=None) -> "IVFRQFastScanIndex":
-        return self.add_df(_numpy_add_df(self, "codes", x, ids))
-
-    def merge_from(
-        self, other: "IVFRQFastScanIndex", add_id: int = 0,
-        check_duplicates: bool = True,
-    ) -> "IVFRQFastScanIndex":
-        _merge_ivf_frames(
-            self,
-            other,
-            "codes",
-            (
-                (self.d, self.beam, self.icm_sweeps, self.by_residual,
-                 self.centroids, self.codebooks),
-                (other.d, other.beam, other.icm_sweeps, other.by_residual,
-                 other.centroids, other.codebooks),
-            ),
-            add_id, check_duplicates=check_duplicates,
+    def _trained_state(self) -> tuple:
+        """Identical coarse quantizer, codebooks AND encode discipline."""
+        return (
+            self.d, self.beam, self.icm_sweeps, self.by_residual,
+            self.centroids, self.codebooks,
         )
-        return self
-
-    def remove_ids(self, ids) -> int:
-        return _remove_ids_frame(self, "codes", ids)
 
     def reconstruct(self, key: int) -> np.ndarray:
         from .operators.pq import pq_unpack4_np
@@ -4919,12 +4307,9 @@ class IVFRQFastScanIndex:
             rec = rec + self.centroids[int(row[0]["cell"])]
         return rec
 
-    def release(self) -> None:
-        self.codes.unpersist()
-
 
 @dataclass
-class Flat1DIndex:
+class Flat1DIndex(_ListTier):
     """1-d specialized flat tier — faiss ``IndexFlat1D`` (IndexFlat.h:
     "optimized version for 1D vectors"; built here from a d=1 table via
     ``index_factory("Flat1D")``). Upstream quirk mirrored: distances are
@@ -4955,6 +4340,9 @@ class Flat1DIndex:
     neighbors — the upstream two-pointer walk's own behavior — rather
     than the global min-label members the flat (distance, label)
     contract would pick."""
+
+    _kind = "flat1d"
+    _frame = "ranked"
 
     spark: SparkSession
     ranked: DataFrame  # (id long, val double, rank long)
@@ -5020,10 +4408,6 @@ class Flat1DIndex:
         return cls.from_df(
             base.select("id", F.element_at("vec", 1).alias("val")), **kw
         )
-
-    @property
-    def ntotal(self) -> int:
-        return self._n if self._n >= 0 else self.ranked.count()
 
     def _positions(self, qvals) -> list[int]:
         """Insertion positions ``count(val < q)`` for ALL queries in ONE
@@ -5201,9 +4585,6 @@ class Flat1DIndex:
         self.ranked, self._n = new.ranked, new._n
         return removed
 
-    def release(self) -> None:
-        self.ranked.unpersist()
-
 
 def _refine_reconstruct_df(index) -> DataFrame:
     """``(id, vec)`` DECODED view of a tier's storage — the rescore
@@ -5341,12 +4722,7 @@ class RefineIndex:
         )
         return _finalize(qq.select("qid"), rescored, k, metric)
 
-    def search_numpy(self, x: np.ndarray, k: int, **base_kw):
-        return _host_result(
-            self.search(_query_df(self.spark, x), k, **base_kw),
-            len(np.atleast_2d(x)),
-            k,
-        )
+    search_numpy = _host_twin("search")
 
 
 @dataclass

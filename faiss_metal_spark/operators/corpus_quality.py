@@ -258,14 +258,19 @@ def dsir_weights(
     # SQL the Column API built.
     from ..functions.text import _sql_h32
 
-    # bucket-hash INSIDE the token array, then one explode — a single
-    # DataFrame op (one analyzer pass) instead of explode + hash select;
-    # same per-token md5 count, same values
+    # bucket-hash INSIDE the token array, then one explode — same
+    # per-token md5 count, same values. The caller's text column is
+    # projected once under a fixed alias (F.col resolves any name,
+    # nested fields included), so the SQL never interpolates it.
     tok = docs.select(
         F.col(id_col).alias("doc_id"),
         target.alias("_is_target"),
+        F.col(text_col).alias("_text"),
+    ).select(
+        "doc_id",
+        "_is_target",
         F.expr(
-            f"explode(transform(split(`{text_col}`, ' '), "
+            "explode(transform(split(_text, ' '), "
             f"t -> pmod({_sql_h32('t')}, {buckets}))) AS b"
         ),
     )
@@ -328,17 +333,22 @@ def bigram_lm_scores(
         # r15: one F.expr string (the Column build was ~40 py4j calls
         # per invocation, and this runs twice per score); the inline
         # repetition of the split mirrors the Column API exactly —
-        # equality pinned by tests/test_r15_expr_equiv.py
-        sp = f"split(`{text_col}`, ' ')"
+        # equality pinned by tests/test_r15_expr_equiv.py. The text
+        # column is projected once under a fixed alias, so the SQL never
+        # interpolates the caller's column name.
+        sp = "split(_text, ' ')"
         pairs = (
             f"CASE WHEN size({sp}) >= 2 THEN "
             f"transform(sequence(0, size({sp}) - 2), i -> named_struct("
             f"'a', element_at({sp}, i + 1), 'b', element_at({sp}, i + 2))) "
             f"ELSE CAST(array() AS array<struct<a:string,b:string>>) END"
         )
-        cols = [F.col(id_col).alias("doc_id")] if keep_id else []
-        # inline() emits (a, b) directly — one op, one analyzer pass
-        return df.select(*cols, F.expr(f"inline({pairs})"))
+        ids = ["doc_id"] if keep_id else []
+        text = df.select(
+            *[F.col(id_col).alias(c) for c in ids], F.col(text_col).alias("_text")
+        )
+        # inline() emits (a, b) directly
+        return text.select(*ids, F.expr(f"inline({pairs})"))
 
     c2 = _bigrams(train, keep_id=False).groupBy("a", "b").agg(
         F.count(F.lit(1)).alias("c2")

@@ -22,25 +22,33 @@ Layout under ``path``::
                 reloaded index keeps partition-pruned probes (the
                 inverted-list layout of ``ivf_write`` / ``ivfpq_write``)
 
-Supported kinds: ``VectorTable`` / ``IDMapVectorTable`` (flat, incl.
-fp16/bf16 compact), ``SQ8Index`` (any bit width), ``BinaryIndex``,
-``BinaryIVFIndex``, ``IVFIndex``, ``IVFSQIndex``, ``IVFPQIndex``,
-``IVFPQRIndex``, ``PQIndex``, ``OPQIndex``, ``RQIndex``, ``GraphIndex``,
-``LSHIndex``,
-and the composites ``PreTransformIndex`` (recursive inner payload),
-``RefineIndex`` (recursive base payload + full-precision source), and
-``ShardedIndex`` (recursive member payloads). ``read_index`` returns
-the same type that was written and search results are value-identical
-pre/post round-trip (``tests/test_index_io.py``).
+Which classes persist, and how: every derived tier in
+``compact_index.py`` subclasses ``_Tier``, whose ``__init_subclass__``
+files the class under its on-disk ``_kind`` in one registry
+(``compact_index._TIERS``). A tier's store is a generic walk over its
+dataclass fields — DataFrame fields → ``<name>/`` parquet (the primary
+frame ``partitionBy`` the tier's declared ``_partition`` key), numpy
+fields → ``arrays/``, scalars → ``_meta`` — under the legacy on-disk
+names in ``_DISK_NAMES``, so a new tier needs no edit here. The
+composites keep explicit code because they nest member payloads in
+sub-directories: ``VectorTable`` (and its IDMap forms),
+``PreTransformIndex`` / ``NormTransformIndex`` (recursive inner
+payload), ``RefineIndex`` (recursive base payload + full-precision
+source) and ``ShardedIndex`` (recursive member payloads).
+``read_index`` returns the same type that was written and search
+results are value-identical pre/post round-trip
+(``tests/test_index_io.py``); the layout itself is pinned kind by kind
+in ``tests/test_index_layout.py``.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
+import typing
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _META_VERSION = 1
 
@@ -180,116 +188,91 @@ def write_index(index, path: str, keep_versions: int = 2) -> None:
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_v{v}"), True)
 
 
-def _is_engine_index(index) -> bool:
-    from ..compact_index import (
-        BinaryHashIndex,
-        BinaryHNSWIndex,
-        BinaryIndex,
-        BinaryIVFIndex,
-        Flat1DIndex,
-        GraphIndex,
-        GraphPQIndex,
-        GraphSQIndex,
-        IMIIndex,
-        IVFFlatDedupIndex,
-        IVFIndex,
-        IVFPQFastScanIndex,
-        IVFPQIndex,
-        IVFPQRIndex,
-        IVFRQFastScanIndex,
-        IVFRQIndex,
-        IVFSQIndex,
-        LSHIndex,
-        NSGIndex,
-        OPQIndex,
-        PQFastScanIndex,
-        PQIndex,
-        PRQFastScanIndex,
-        PRQIndex,
-        RefineIndex,
-        RQFastScanIndex,
-        RQIndex,
-        SQ8Index,
-    )
+def _composites() -> tuple:
+    """The index classes written by explicit code (not the registry)."""
+    from ..compact_index import RefineIndex
     from ..operators.pca import NormTransformIndex, PreTransformIndex
     from ..sharded import ShardedIndex
     from ..vector_table import VectorTable
 
-    return isinstance(
-        index,
-        (
-            NormTransformIndex,
-            PreTransformIndex,
-            VectorTable,
-            SQ8Index,
-            BinaryHashIndex,
-            BinaryHNSWIndex,
-            BinaryIndex,
-            BinaryIVFIndex,
-            Flat1DIndex,
-            GraphIndex,
-            GraphPQIndex,
-            GraphSQIndex,
-            IMIIndex,
-            IVFFlatDedupIndex,
-            IVFIndex,
-            IVFPQFastScanIndex,
-            IVFPQIndex,
-            IVFPQRIndex,
-            IVFRQFastScanIndex,
-            IVFRQIndex,
-            IVFSQIndex,
-            LSHIndex,
-            NSGIndex,
-            PQFastScanIndex,
-            PQIndex,
-            OPQIndex,
-            PRQFastScanIndex,
-            PRQIndex,
-            RefineIndex,
-            RQFastScanIndex,
-            RQIndex,
-            ShardedIndex,
-        ),
-    )
+    return (VectorTable, ShardedIndex, RefineIndex, PreTransformIndex, NormTransformIndex)
+
+
+def _is_engine_index(index) -> bool:
+    """Whether ``write_index`` / ``clone_index`` handle ``index``: a
+    registered tier or one of the explicitly written composites."""
+    from ..compact_index import _Tier
+
+    return isinstance(index, (_Tier, *_composites()))
+
+
+# on-disk names of the tier fields not stored under their own name;
+# where the disk name is also a public property (``ntotal``,
+# ``n_instances``) the property is what gets stored — it resolves the
+# −1 "not counted yet" value of the private counter
+_DISK_NAMES = {"_n": "ntotal", "_n_inst": "n_instances", "_source": "source"}
+
+
+def _tier_fields(cls) -> list:
+    """(field name, on-disk name, type) of a tier's persisted fields."""
+    hints = typing.get_type_hints(cls)
+    return [
+        (f.name, _DISK_NAMES.get(f.name, f.name), hints[f.name])
+        for f in dataclasses.fields(cls)
+        if f.name != "spark"
+    ]
+
+
+def _write_coarse(index, meta: dict, arrays: dict) -> None:
+    """The graph coarse quantizer: its graph in ``arrays/``, its search
+    knobs in ``meta["coarse"]``. Tiers flagged ``_coarse_v0`` keep the
+    block's first form: always present (null without a quantizer), no
+    ``dtype`` key."""
+    q, v0 = index.quantizer, getattr(index, "_coarse_v0", False)
+    if q is None:
+        if v0:
+            meta["coarse"] = None
+        return
+    arrays["coarse_edges"] = q.edges
+    arrays["coarse_landmarks"] = q.landmarks
+    meta["coarse"] = {"beam": q.beam, "rounds": q.rounds, "expand": q.expand}
+    if not v0:
+        meta["coarse"]["dtype"] = q.dtype
+
+
+def _write_tier(index, path: str) -> None:
+    """A registered tier: frames first, then ``arrays/``, ``_meta`` last."""
+    meta, arrays = {"kind": index._kind, "d": index.d}, {}
+    for name, disk, t in _tier_fields(type(index)):
+        v = getattr(index, name)
+        if name == "quantizer":
+            _write_coarse(index, meta, arrays)
+        elif t is DataFrame:
+            if name == "_source":  # optional: the refine tier's source
+                meta["has_source"] = v is not None
+            if v is not None:
+                part = index._partition if name == index._frame else None
+                _write_frame(v, f"{path}/{disk}", partition_by=part)
+        elif t is np.ndarray:
+            arrays[disk] = v
+        else:
+            if isinstance(getattr(type(index), disk, None), property):
+                v = getattr(index, disk)
+            meta[disk] = v.item() if isinstance(v, np.generic) else v
+    if arrays:
+        meta["shapes"] = _write_arrays(index.spark, path, arrays)
+    _write_meta(index.spark, path, meta)
 
 
 def _write_payload(index, path: str) -> None:
-    from ..compact_index import (
-        BinaryHashIndex,
-        BinaryHNSWIndex,
-        BinaryIndex,
-        BinaryIVFIndex,
-        Flat1DIndex,
-        GraphIndex,
-        GraphPQIndex,
-        GraphSQIndex,
-        IMIIndex,
-        IVFFlatDedupIndex,
-        IVFIndex,
-        IVFPQFastScanIndex,
-        IVFPQIndex,
-        IVFPQRIndex,
-        IVFRQFastScanIndex,
-        IVFRQIndex,
-        IVFSQIndex,
-        LSHIndex,
-        NSGIndex,
-        OPQIndex,
-        PQFastScanIndex,
-        PQIndex,
-        PRQFastScanIndex,
-        PRQIndex,
-        RefineIndex,
-        RQFastScanIndex,
-        RQIndex,
-        SQ8Index,
-    )
-    from ..vector_table import VectorTable
+    from ..compact_index import RefineIndex, _Tier
+    from ..operators.pca import NormTransformIndex, PreTransformIndex
+    from ..sharded import ShardedIndex
+    from ..vector_table import IDMap2VectorTable, IDMapVectorTable, VectorTable
 
-    if isinstance(index, VectorTable):
-        from ..vector_table import IDMap2VectorTable, IDMapVectorTable
-
+    if isinstance(index, _Tier):
+        _write_tier(index, path)
+    elif isinstance(index, VectorTable):
         if isinstance(index, IDMap2VectorTable):
             vt_kind = "idmap2_vector_table"
         elif isinstance(index, IDMapVectorTable):
@@ -309,367 +292,6 @@ def _write_payload(index, path: str) -> None:
                 "next_id": index._next_id,
             },
         )
-    elif isinstance(index, SQ8Index):
-        _write_frame(index.codes, f"{path}/codes")
-        shapes = _write_arrays(
-            index.spark, path, {"vmin": index.vmin, "vmax": index.vmax}
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "sq8",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "bits": index.bits,
-                "direct": index.direct,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, BinaryIndex):
-        _write_frame(index.words, f"{path}/words")
-        has_source = index._source is not None
-        if has_source:
-            # the refine tier needs the full-precision vectors; persist
-            # them so refine_search works after reload
-            _write_frame(index._source, f"{path}/source")
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "binary",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "has_source": has_source,
-            },
-        )
-    elif isinstance(index, IVFIndex):
-        _write_frame(index.assigned, f"{path}/assigned", partition_by="cell")
-        arrays = {"centroids": index.centroids}
-        meta = {
-            "kind": "ivf",
-            "d": index.d,
-            "metric": index.metric,
-            "ntotal": index.ntotal,
-        }
-        if index.quantizer is not None:
-            arrays["coarse_edges"] = index.quantizer.edges
-            arrays["coarse_landmarks"] = index.quantizer.landmarks
-            meta["coarse"] = {
-                "beam": index.quantizer.beam,
-                "rounds": index.quantizer.rounds,
-                "expand": index.quantizer.expand,
-                "dtype": index.quantizer.dtype,
-            }
-        meta["shapes"] = _write_arrays(index.spark, path, arrays)
-        _write_meta(index.spark, path, meta)
-    elif isinstance(index, IVFFlatDedupIndex):
-        _write_frame(index.assigned, f"{path}/assigned", partition_by="cell")
-        _write_frame(index.instances, f"{path}/instances")
-        shapes = _write_arrays(index.spark, path, {"centroids": index.centroids})
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "ivf_dedup",
-                "d": index.d,
-                "metric": index.metric,
-                "ntotal": index.ntotal,
-                "n_instances": index.n_instances,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, IVFPQFastScanIndex):
-        _write_frame(index.codes, f"{path}/codes", partition_by="cell")
-        shapes = _write_arrays(
-            index.spark,
-            path,
-            {"centroids": index.centroids, "codebooks": index.codebooks},
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "ivfpq_fs",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, IVFPQIndex):
-        _write_frame(index.codes, f"{path}/codes", partition_by="cell")
-        arrays = {"centroids": index.centroids, "codebooks": index.codebooks}
-        meta = {"kind": "ivfpq", "d": index.d, "ntotal": index.ntotal}
-        if index.quantizer is not None:
-            arrays["coarse_edges"] = index.quantizer.edges
-            arrays["coarse_landmarks"] = index.quantizer.landmarks
-            meta["coarse"] = {
-                "beam": index.quantizer.beam,
-                "rounds": index.quantizer.rounds,
-                "expand": index.quantizer.expand,
-                "dtype": index.quantizer.dtype,
-            }
-        meta["shapes"] = _write_arrays(index.spark, path, arrays)
-        _write_meta(index.spark, path, meta)
-    elif isinstance(index, IVFPQRIndex):
-        _write_frame(index.codes, f"{path}/codes", partition_by="cell")
-        shapes = _write_arrays(
-            index.spark,
-            path,
-            {
-                "centroids": index.centroids,
-                "codebooks": index.codebooks,
-                "refine_books": index.refine_books,
-            },
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {"kind": "ivfpqr", "d": index.d, "ntotal": index.ntotal, "shapes": shapes},
-        )
-    elif isinstance(index, IVFRQIndex):
-        _write_frame(index.codes, f"{path}/codes", partition_by="cell")
-        arrays = {"centroids": index.centroids, "codebooks": index.codebooks}
-        coarse = None
-        if index.quantizer is not None:
-            arrays["coarse_edges"] = index.quantizer.edges
-            arrays["coarse_landmarks"] = index.quantizer.landmarks
-            coarse = {
-                "beam": index.quantizer.beam,
-                "rounds": index.quantizer.rounds,
-                "expand": index.quantizer.expand,
-            }
-        shapes = _write_arrays(index.spark, path, arrays)
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "ivfrq",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "beam": index.beam,
-                "icm_sweeps": index.icm_sweeps,
-                "by_residual": index.by_residual,
-                "coarse": coarse,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, IVFRQFastScanIndex):
-        _write_frame(index.codes, f"{path}/codes", partition_by="cell")
-        shapes = _write_arrays(
-            index.spark,
-            path,
-            {"centroids": index.centroids, "codebooks": index.codebooks},
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "ivfrq_fs",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "beam": index.beam,
-                "icm_sweeps": index.icm_sweeps,
-                "by_residual": index.by_residual,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, PRQFastScanIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        shapes = _write_arrays(index.spark, path, {"codebooks": index.codebooks})
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "prq_fs",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "beam": index.beam,
-                "icm_sweeps": index.icm_sweeps,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, RQFastScanIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        shapes = _write_arrays(index.spark, path, {"codebooks": index.codebooks})
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "rq_fs",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "beam": index.beam,
-                "icm_sweeps": index.icm_sweeps,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, BinaryIVFIndex):
-        _write_frame(index.words, f"{path}/words", partition_by="cell")
-        # packed words are < 2^32 — exact in the float64 array store
-        shapes = _write_arrays(
-            index.spark, path, {"centroid_words": index.centroid_words}
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "bivf",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, BinaryHNSWIndex):
-        _write_frame(index.words, f"{path}/words")
-        _write_frame(index.graph, f"{path}/graph")
-        # binary kind: no arrays/ dataset (the BinaryIndex discipline)
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "bhnsw",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "M": index.M,
-                "ef_search": index.ef_search,
-            },
-        )
-    elif isinstance(index, GraphSQIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        _write_frame(index.graph, f"{path}/graph")
-        shapes = _write_arrays(
-            index.spark, path, {"vmin": index.vmin, "vmax": index.vmax}
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "graph_sq",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "M": index.M,
-                "ef_search": index.ef_search,
-                "bits": index.bits,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, GraphPQIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        _write_frame(index.graph, f"{path}/graph")
-        shapes = _write_arrays(
-            index.spark, path, {"codebooks": index.codebooks}
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "graph_pq",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "M": index.M,
-                "ef_search": index.ef_search,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, GraphIndex):
-        _write_frame(index.vectors, f"{path}/vectors")
-        _write_frame(index.graph, f"{path}/graph")
-        meta = {
-            # NSGIndex subclasses GraphIndex: same payload plus the
-            # navigating node (kind "nsg" restores the subclass)
-            "kind": "nsg" if isinstance(index, NSGIndex) else "graph",
-            "d": index.d,
-            "ntotal": index.ntotal,
-            "M": index.M,
-            "ef_search": index.ef_search,
-        }
-        if isinstance(index, NSGIndex):
-            meta["nav_id"] = int(index.nav_id)
-        _write_meta(index.spark, path, meta)
-    elif isinstance(index, IVFSQIndex):
-        _write_frame(index.codes, f"{path}/codes", partition_by="cell")
-        arrays = {
-            "centroids": index.centroids,
-            "vmin": index.vmin,
-            "vmax": index.vmax,
-        }
-        coarse = None
-        if index.quantizer is not None:
-            arrays["coarse_edges"] = index.quantizer.edges
-            arrays["coarse_landmarks"] = index.quantizer.landmarks
-            coarse = {
-                "beam": index.quantizer.beam,
-                "rounds": index.quantizer.rounds,
-                "expand": index.quantizer.expand,
-            }
-        shapes = _write_arrays(index.spark, path, arrays)
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "ivfsq",
-                "d": index.d,
-                "metric": index.metric,
-                "ntotal": index.ntotal,
-                "bits": index.bits,
-                "coarse": coarse,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, PQFastScanIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        shapes = _write_arrays(index.spark, path, {"codebooks": index.codebooks})
-        _write_meta(
-            index.spark,
-            path,
-            {"kind": "pq_fs", "d": index.d, "ntotal": index.ntotal, "shapes": shapes},
-        )
-    elif isinstance(index, PQIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        shapes = _write_arrays(index.spark, path, {"codebooks": index.codebooks})
-        _write_meta(
-            index.spark,
-            path,
-            {"kind": "pq", "d": index.d, "ntotal": index.ntotal, "shapes": shapes},
-        )
-    elif isinstance(index, Flat1DIndex):
-        _write_frame(index.ranked, f"{path}/ranked")
-        _write_meta(
-            index.spark,
-            path,
-            {"kind": "flat1d", "d": 1, "ntotal": index.ntotal},
-        )
-    elif isinstance(index, PRQIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        shapes = _write_arrays(index.spark, path, {"codebooks": index.codebooks})
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "prq",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "beam": index.beam,
-                "icm_sweeps": index.icm_sweeps,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, RQIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        shapes = _write_arrays(index.spark, path, {"codebooks": index.codebooks})
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "rq",
-                "d": index.d,
-                "ntotal": index.ntotal,
-                "beam": index.beam,
-                "icm_sweeps": index.icm_sweeps,
-                "shapes": shapes,
-            },
-        )
     elif isinstance(index, RefineIndex):
         # faiss persists IndexRefineFlat as base + refine storage; here
         # the wrapper is base payload (recursive, any kind) + the
@@ -686,27 +308,13 @@ def _write_payload(index, path: str) -> None:
                 "k_factor": index.k_factor,
             },
         )
-    elif isinstance(index, OPQIndex):
-        _write_frame(index.codes, f"{path}/codes")
-        shapes = _write_arrays(
-            index.spark, path, {"rotation": index.rotation, "codebooks": index.codebooks}
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {"kind": "opq", "d": index.d, "ntotal": index.ntotal, "shapes": shapes},
-        )
-    elif _is_normtransform(index):
+    elif isinstance(index, NormTransformIndex):
         # composite: inner payload first, _meta LAST (shards discipline);
         # the transform itself is stateless (unit normalization), so the
         # payload is just the inner index + d_in
         _write_payload(index.inner, f"{path}/inner")
-        _write_meta(
-            index.spark,
-            path,
-            {"kind": "normtransform", "d": index.d_in},
-        )
-    elif _is_pretransform(index):
+        _write_meta(index.spark, path, {"kind": "normtransform", "d": index.d_in})
+    elif isinstance(index, PreTransformIndex):
         # composite: inner payload first, _meta LAST (shards discipline)
         _write_payload(index.inner, f"{path}/inner")
         shapes = _write_arrays(
@@ -718,63 +326,7 @@ def _write_payload(index, path: str) -> None:
             path,
             {"kind": "pretransform", "d": index.d_in, "shapes": shapes},
         )
-    elif isinstance(index, IMIIndex):
-        _write_frame(index.assigned, f"{path}/assigned", partition_by="cell")
-        shapes = _write_arrays(
-            index.spark, path, {"C0": index.C0, "C1": index.C1}
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "imi",
-                "d": index.d,
-                "b": index.b,
-                "ntotal": index.ntotal,
-                "shapes": shapes,
-            },
-        )
-    elif isinstance(index, BinaryHashIndex):
-        _write_frame(index.hashed, f"{path}/hashed", partition_by="h0")
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "bhash",
-                "d": index.d,
-                "b": index.b,
-                "n_slices": index.n_slices,
-                "ntotal": index.ntotal,
-            },
-        )
-    elif isinstance(index, LSHIndex):
-        _write_frame(index.words, f"{path}/words")
-        has_source = index._source is not None
-        if has_source:
-            _write_frame(index._source, f"{path}/source")
-        shapes = _write_arrays(
-            index.spark, path,
-            {"rotation": index.rotation, "mean": index._mu},
-        )
-        _write_meta(
-            index.spark,
-            path,
-            {
-                "kind": "lsh",
-                "d": index.d,
-                "nbits": index.nbits,
-                "ntotal": index.ntotal,
-                "has_source": has_source,
-                "shapes": shapes,
-            },
-        )
-    else:
-        from ..sharded import ShardedIndex
-
-        if not isinstance(index, ShardedIndex):
-            raise TypeError(
-                f"write_index: unsupported index type {type(index).__name__}"
-            )
+    elif isinstance(index, ShardedIndex):
         # composite: member payloads first (each a self-describing
         # dataset with its own _meta), composite _meta LAST so a
         # crashed member write leaves no committed composite behind —
@@ -792,18 +344,10 @@ def _write_payload(index, path: str) -> None:
                 "successive_ids": index.successive_ids,
             },
         )
-
-
-def _is_pretransform(index) -> bool:
-    from ..operators.pca import PreTransformIndex
-
-    return isinstance(index, PreTransformIndex)
-
-
-def _is_normtransform(index) -> bool:
-    from ..operators.pca import NormTransformIndex
-
-    return isinstance(index, NormTransformIndex)
+    else:
+        raise TypeError(
+            f"write_index: unsupported index type {type(index).__name__}"
+        )
 
 
 def clone_index(index):
@@ -818,11 +362,17 @@ def clone_index(index):
     correctness): a derived tier's persisted code frame is shared, so
     ``release()`` on one handle drops the shared cache for both.
     """
-    import dataclasses
-
+    from ..compact_index import RefineIndex, _Tier
+    from ..operators.pca import NormTransformIndex, PreTransformIndex
     from ..sharded import ShardedIndex
     from ..vector_table import VectorTable
 
+    if isinstance(index, _Tier):
+        kw = {}
+        for f in dataclasses.fields(index):
+            v = getattr(index, f.name)
+            kw[f.name] = v.copy() if isinstance(v, np.ndarray) else v
+        return type(index)(**kw)
     if isinstance(index, ShardedIndex):
         return ShardedIndex.from_indexes(
             *[clone_index(m) for m in index.shards],
@@ -838,18 +388,12 @@ def clone_index(index):
             df=index.df,
             _next_id=index._next_id,
         )
-    if _is_normtransform(index):
-        from ..operators.pca import NormTransformIndex
-
+    if isinstance(index, NormTransformIndex):
         return NormTransformIndex(clone_index(index.inner), d_in=index.d_in)
-    if _is_pretransform(index):
-        from ..operators.pca import PreTransformIndex
-
+    if isinstance(index, PreTransformIndex):
         return PreTransformIndex(
             index.mean.copy(), index.components.copy(), clone_index(index.inner)
         )
-    from ..compact_index import RefineIndex
-
     if isinstance(index, RefineIndex):
         # not a dataclass: recurse into the base, share the immutable
         # source frame (same discipline as the other composites); the
@@ -859,15 +403,9 @@ def clone_index(index):
             clone_index(index.base), index.source, index.k_factor,
             refine=index.refine,
         )
-    if not _is_engine_index(index):
-        raise TypeError(
-            f"clone_index: unsupported index type {type(index).__name__}"
-        )
-    kw = {}
-    for f in dataclasses.fields(index):
-        v = getattr(index, f.name)
-        kw[f.name] = v.copy() if isinstance(v, np.ndarray) else v
-    return type(index)(**kw)
+    raise TypeError(
+        f"clone_index: unsupported index type {type(index).__name__}"
+    )
 
 
 def _read_coarse(meta: dict, arrays: dict):
@@ -904,41 +442,32 @@ def read_index(spark: SparkSession, path: str):
     return _read_payload(spark, path)
 
 
+def _read_tier(spark: SparkSession, path: str, cls, meta: dict):
+    """A registered tier, by the same field walk as ``_write_tier``. A
+    scalar or array the store predates is simply absent: the field's
+    dataclass default applies (the documented legacy defaults)."""
+    arrays = _read_arrays(spark, path, meta.get("shapes", {}))
+    kw = {"spark": spark}
+    for name, disk, t in _tier_fields(cls):
+        if name == "quantizer":
+            kw[name] = _read_coarse(meta, arrays)
+        elif t is DataFrame:
+            if meta.get(f"has_{disk}", True):
+                kw[name] = spark.read.parquet(f"{path}/{disk}")
+        elif disk in arrays:
+            kw[name] = arrays[disk]
+        elif disk in meta:
+            kw[name] = meta[disk]
+    return cls(**kw)
+
+
 def _read_payload(spark: SparkSession, path: str):
-    from ..compact_index import (
-        BinaryHashIndex,
-        BinaryHNSWIndex,
-        BinaryIndex,
-        BinaryIVFIndex,
-        Flat1DIndex,
-        GraphIndex,
-        GraphPQIndex,
-        GraphSQIndex,
-        IMIIndex,
-        IVFFlatDedupIndex,
-        IVFIndex,
-        IVFPQFastScanIndex,
-        IVFPQIndex,
-        IVFPQRIndex,
-        IVFRQFastScanIndex,
-        IVFRQIndex,
-        IVFSQIndex,
-        LSHIndex,
-        NSGIndex,
-        OPQIndex,
-        PQFastScanIndex,
-        PQIndex,
-        PRQFastScanIndex,
-        PRQIndex,
-        RefineIndex,
-        RQFastScanIndex,
-        RQIndex,
-        SQ8Index,
-    )
-    from ..vector_table import VectorTable
+    from ..compact_index import _TIERS, RefineIndex
 
     meta = _read_meta(spark, path)
     kind = meta["kind"]
+    if kind in _TIERS:
+        return _read_tier(spark, path, _TIERS[kind], meta)
     if kind == "shards":
         from ..sharded import ShardedIndex
 
@@ -956,7 +485,7 @@ def _read_payload(spark: SparkSession, path: str):
             int(meta["k_factor"]),
         )
     if kind in ("vector_table", "idmap_vector_table", "idmap2_vector_table"):
-        from ..vector_table import IDMap2VectorTable, IDMapVectorTable
+        from ..vector_table import IDMap2VectorTable, IDMapVectorTable, VectorTable
 
         cls = {
             "idmap_vector_table": IDMapVectorTable,
@@ -971,249 +500,6 @@ def _read_payload(spark: SparkSession, path: str):
             df=spark.read.parquet(f"{path}/vectors"),
             _next_id=meta["next_id"],
         )
-    arrays = _read_arrays(spark, path, meta.get("shapes", {}))
-    if kind == "sq8":
-        return SQ8Index(
-            spark,
-            meta["d"],
-            arrays["vmin"],
-            arrays["vmax"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            meta.get("bits", 8),  # round-7 stores predate b-bit tiers
-            meta.get("direct", False),  # False/True/"signed"; pre-r13: minmax
-        )
-    if kind == "binary":
-        source = (
-            spark.read.parquet(f"{path}/source") if meta["has_source"] else None
-        )
-        return BinaryIndex(
-            spark,
-            meta["d"],
-            spark.read.parquet(f"{path}/words"),
-            source,
-            meta["ntotal"],
-        )
-    if kind == "ivf":
-        return IVFIndex(
-            spark,
-            meta["d"],
-            meta["metric"],
-            arrays["centroids"],
-            spark.read.parquet(f"{path}/assigned"),
-            meta["ntotal"],
-            quantizer=_read_coarse(meta, arrays),
-        )
-    if kind == "ivf_dedup":
-        return IVFFlatDedupIndex(
-            spark,
-            meta["d"],
-            meta["metric"],
-            arrays["centroids"],
-            spark.read.parquet(f"{path}/assigned"),
-            spark.read.parquet(f"{path}/instances"),
-            meta["ntotal"],
-            meta["n_instances"],
-        )
-    if kind == "bivf":
-        return BinaryIVFIndex(
-            spark,
-            meta["d"],
-            arrays["centroid_words"].astype(np.int64),
-            spark.read.parquet(f"{path}/words"),
-            meta["ntotal"],
-        )
-    if kind == "bhnsw":
-        return BinaryHNSWIndex(
-            spark,
-            meta["d"],
-            spark.read.parquet(f"{path}/words"),
-            spark.read.parquet(f"{path}/graph"),
-            meta["M"],
-            meta["ef_search"],
-            meta["ntotal"],
-        )
-    if kind == "graph_sq":
-        return GraphSQIndex(
-            spark,
-            meta["d"],
-            arrays["vmin"],
-            arrays["vmax"],
-            spark.read.parquet(f"{path}/codes"),
-            spark.read.parquet(f"{path}/graph"),
-            meta["M"],
-            meta["ef_search"],
-            meta["ntotal"],
-            meta["bits"],
-        )
-    if kind == "graph_pq":
-        return GraphPQIndex(
-            spark,
-            meta["d"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            spark.read.parquet(f"{path}/graph"),
-            meta["M"],
-            meta["ef_search"],
-            meta["ntotal"],
-        )
-    if kind == "graph":
-        return GraphIndex(
-            spark,
-            meta["d"],
-            spark.read.parquet(f"{path}/vectors"),
-            spark.read.parquet(f"{path}/graph"),
-            meta["M"],
-            meta["ef_search"],
-            meta["ntotal"],
-        )
-    if kind == "nsg":
-        return NSGIndex(
-            spark,
-            meta["d"],
-            spark.read.parquet(f"{path}/vectors"),
-            spark.read.parquet(f"{path}/graph"),
-            meta["M"],
-            meta["ef_search"],
-            meta["ntotal"],
-            nav_id=int(meta["nav_id"]),
-        )
-    if kind == "ivfsq":
-        return IVFSQIndex(
-            spark,
-            meta["d"],
-            meta["metric"],
-            arrays["centroids"],
-            arrays["vmin"],
-            arrays["vmax"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            meta["bits"],
-            quantizer=_read_coarse(meta, arrays),
-        )
-    if kind == "ivfpq_fs":
-        return IVFPQFastScanIndex(
-            spark,
-            meta["d"],
-            arrays["centroids"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-        )
-    if kind == "ivfpq":
-        return IVFPQIndex(
-            spark,
-            meta["d"],
-            arrays["centroids"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            quantizer=_read_coarse(meta, arrays),
-        )
-    if kind == "ivfrq_fs":
-        return IVFRQFastScanIndex(
-            spark,
-            meta["d"],
-            arrays["centroids"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            beam=int(meta.get("beam", 1)),
-            icm_sweeps=int(meta.get("icm_sweeps", 0)),
-            by_residual=bool(meta.get("by_residual", True)),
-        )
-    if kind == "prq_fs":
-        return PRQFastScanIndex(
-            spark,
-            meta["d"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            beam=int(meta.get("beam", 1)),
-            icm_sweeps=int(meta.get("icm_sweeps", 0)),
-        )
-    if kind == "rq_fs":
-        return RQFastScanIndex(
-            spark,
-            meta["d"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            beam=int(meta.get("beam", 1)),
-            icm_sweeps=int(meta.get("icm_sweeps", 0)),
-        )
-    if kind == "ivfrq":
-        return IVFRQIndex(
-            spark,
-            meta["d"],
-            arrays["centroids"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            beam=int(meta.get("beam", 1)),
-            icm_sweeps=int(meta.get("icm_sweeps", 0)),
-            by_residual=bool(meta.get("by_residual", True)),
-            quantizer=_read_coarse(meta, arrays),
-        )
-    if kind == "ivfpqr":
-        return IVFPQRIndex(
-            spark,
-            meta["d"],
-            arrays["centroids"],
-            arrays["codebooks"],
-            arrays["refine_books"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-        )
-    if kind == "pq_fs":
-        return PQFastScanIndex(
-            spark,
-            meta["d"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-        )
-    if kind == "pq":
-        return PQIndex(
-            spark,
-            meta["d"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-        )
-    if kind == "flat1d":
-        return Flat1DIndex(
-            spark, spark.read.parquet(f"{path}/ranked"), meta["ntotal"]
-        )
-    if kind == "prq":
-        return PRQIndex(
-            spark,
-            meta["d"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            beam=int(meta.get("beam", 1)),
-            icm_sweeps=int(meta.get("icm_sweeps", 0)),
-        )
-    if kind == "rq":
-        return RQIndex(
-            spark,
-            meta["d"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-            beam=int(meta.get("beam", 1)),  # pre-beam stores default greedy
-            icm_sweeps=int(meta.get("icm_sweeps", 0)),
-        )
-    if kind == "opq":
-        return OPQIndex(
-            spark,
-            meta["d"],
-            arrays["rotation"],
-            arrays["codebooks"],
-            spark.read.parquet(f"{path}/codes"),
-            meta["ntotal"],
-        )
     if kind == "normtransform":
         from ..operators.pca import NormTransformIndex
 
@@ -1223,39 +509,10 @@ def _read_payload(spark: SparkSession, path: str):
     if kind == "pretransform":
         from ..operators.pca import PreTransformIndex
 
+        arrays = _read_arrays(spark, path, meta["shapes"])
         return PreTransformIndex(
             arrays["mean"],
             arrays["components"],
             _read_payload(spark, f"{path}/inner"),
-        )
-    if kind == "imi":
-        return IMIIndex(
-            spark,
-            meta["d"],
-            meta["b"],
-            arrays["C0"],
-            arrays["C1"],
-            spark.read.parquet(f"{path}/assigned"),
-            meta["ntotal"],
-        )
-    if kind == "bhash":
-        return BinaryHashIndex(
-            spark,
-            meta["d"],
-            meta["b"],
-            meta["n_slices"],
-            spark.read.parquet(f"{path}/hashed"),
-            meta["ntotal"],
-        )
-    if kind == "lsh":
-        return LSHIndex(
-            spark,
-            meta["d"],
-            meta["nbits"],
-            arrays["rotation"],
-            spark.read.parquet(f"{path}/words"),
-            spark.read.parquet(f"{path}/source") if meta["has_source"] else None,
-            meta["ntotal"],
-            arrays.get("mean"),  # absent in early round-8 stores → zeros
         )
     raise ValueError(f"read_index: unknown index kind {kind!r} at {path}")
