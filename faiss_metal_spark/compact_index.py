@@ -183,36 +183,76 @@ def _coarse_state(q) -> tuple:
 
 
 
-def _add_sa_codes_frame(index, frame_attr, codes, ids, schema, extra=None):
-    """Shared faiss ``Index::add_sa_codes``: append PRE-ENCODED codes
-    verbatim — no decode, no re-encode — the distributed half of the
-    ship-codes-not-floats workflow (encode near the data, move
-    ``sa_code_size`` bytes/vector, ingest here). ``extra`` supplies
-    derived columns (RQ's precomputed ``recn``). Ids default to
-    max(stored id)+1 continuation, like ``add_numpy``."""
-    width = index.sa_code_size
-    rows = [bytes(c) for c in codes]
-    for c in rows:
-        if len(c) != width:
-            raise ValueError(
-                f"add_sa_codes: expected {width}-byte codes "
-                f"(sa_code_size), got {len(c)}"
-            )
-    if ids is None:
-        row = getattr(index, frame_attr).agg(F.max("id")).first()
-        start = (row[0] + 1) if row and row[0] is not None else 0
-        ids = np.arange(start, start + len(rows), dtype=np.int64)
-    else:
-        ids = np.asarray(ids, dtype=np.int64)
-        if len(ids) != len(rows):
-            raise ValueError("ids length must match code count")
-    if not rows:
-        return index
-    pdf = pd.DataFrame({"id": ids, "code": rows, **(extra or {})})
-    _append_frame(
-        index, frame_attr, index.spark.createDataFrame(pdf, schema=schema)
+def _hnsw_coarse(spark, C: np.ndarray, coarse_hnsw_m, coarse_kw):
+    """The faiss ``IVF<n>_HNSW<M>`` coarse quantizer over trained
+    centroids (operators/coarse.py) — None without ``coarse_hnsw_m``;
+    ``coarse_kw`` forwards beam/rounds/expand/seed to
+    :meth:`HNSWCoarseQuantizer.train`."""
+    if coarse_hnsw_m is None:
+        return None
+    from .operators.coarse import HNSWCoarseQuantizer
+
+    return HNSWCoarseQuantizer.train(
+        C, M=int(coarse_hnsw_m), **{"spark": spark, **(coarse_kw or {})}
     )
-    return index
+
+
+# -- decode batches: the stored rows a ``_decode()`` closure receives ------
+
+
+def _codes(pdf: pd.DataFrame, col: str = "code") -> np.ndarray:
+    """(n, width) uint8 matrix of a fixed-width BINARY code column."""
+    return np.frombuffer(b"".join(pdf[col].tolist()), np.uint8).reshape(len(pdf), -1)
+
+
+def _cells(pdf: pd.DataFrame) -> np.ndarray:
+    return pdf["cell"].to_numpy(np.int64)
+
+
+def _float_rows(pdf: pd.DataFrame) -> np.ndarray:
+    """Decode of full-precision storage: the stored ``vec`` rows."""
+    return np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+
+
+def _sq_decoder(vmin, vmax, bits: int, direct=False):
+    """Decode of an ``array<int>`` SQ code column (per-dim b-bit codes)."""
+    from .operators.sq import sq_decode_np
+
+    def dec(pdf: pd.DataFrame) -> np.ndarray:
+        codes = np.stack(pdf["code"].to_numpy()).astype(np.uint8)
+        return sq_decode_np(codes, vmin, vmax, bits, direct=direct)
+
+    return dec
+
+
+def _nsw_graph(
+    vectors: DataFrame, n: int, M: int, iters: int, seed: int,
+    diversify: bool, repair: bool,
+) -> DataFrame:
+    """A graph tier's build: the NN-Descent kNN graph over ``vectors``,
+    persisted and materialized (faiss builds eagerly on add) —
+    ``diversify`` shrinks a 2M-candidate graph with the MRNG neighbor
+    select, ``repair`` re-links disconnected islands."""
+    from .operators.knn_graph import connect_graph, mrng_diversify, nn_descent
+
+    if diversify:
+        cand = nn_descent(vectors, k=2 * M, iters=iters, seed=seed)
+        graph = mrng_diversify(cand, vectors, M)
+    else:
+        graph = nn_descent(vectors, k=M, iters=iters, seed=seed)
+    if repair and n > 1:
+        graph = connect_graph(graph, vectors)
+    graph = graph.persist()
+    graph.count()
+    return graph
+
+
+def _read_only(self, *_a, **_k):
+    raise NotImplementedError(
+        f"{type(self).__name__} is a read-only derived tier — rebuild via "
+        "from_table after mutating the source (incremental NSW "
+        "insertion lives on the flat GraphIndex)"
+    )
 
 
 def _host_result(res: DataFrame, nq: int, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -270,11 +310,23 @@ class _Tier:
       a store (``cell`` for inverted files), so a reloaded index keeps
       partition-pruned probes.
 
+    Its codec is stated once, in two hooks:
+
+    - ``_encode_df(rows)``: ``(id, vec)`` rows → rows of ``_frame``,
+      encoded against the FROZEN trained state (faiss ``add`` after
+      ``train`` never retrains) — the build of ``from_table``
+      (:meth:`_fill`) and every ``add_df``;
+    - ``_decode()``: a picklable ``pdf → (n, d) float`` closure over
+      stored rows — ``reconstruct`` and ``sa_decode`` on the driver,
+      ``decode=`` in the operators that score stored codes on the
+      executors (see :class:`_Decoded`).
+
     ``sources/index_io.py`` persists the fields generically: DataFrames
     as ``<name>/`` parquet, numpy arrays in ``arrays/``, scalars in
     ``_meta``. An optional ``_source`` field is the source table's
     full-precision view, borrowed for exact rescoring: stored (with a
-    ``has_source`` flag) but never unpersisted by ``release``."""
+    ``has_source`` flag), grown and shrunk with the stored entries, but
+    never unpersisted by ``release``."""
 
     _kind: str
     _frame: str
@@ -291,6 +343,37 @@ class _Tier:
 
     search_numpy = _host_twin("search")
 
+    def _fill(self, rows: DataFrame):
+        """``from_table``'s build: ``rows`` encoded as the whole stored
+        frame, persisted and counted."""
+        frame = self._encode_df(rows).persist()
+        setattr(self, self._frame, frame)
+        self._n = frame.count()
+        return self
+
+    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"):
+        """faiss ``add`` after ``train``: encode the rows against the
+        FROZEN trained state (values outside a trained range clamp,
+        assignment uses the frozen quantizer) and append — training
+        never reruns."""
+        rows = _ivf_add_rows(df, id_col, vec_col)
+        _append_frame(self, self._frame, self._encode_df(rows))
+        if getattr(self, "_source", None) is not None:
+            self._source = self._source.unionByName(rows)
+        return self
+
+    def _new_ids(self, ids, n: int, what: str) -> np.ndarray:
+        """Labels for ``n`` new entries: ``ids`` checked, or, when None,
+        a continuation from max(stored id)+1."""
+        if ids is None:
+            row = getattr(self, self._frame).agg(F.max("id")).first()
+            start = (row[0] + 1) if row and row[0] is not None else 0
+            return np.arange(start, start + n, dtype=np.int64)
+        ids = np.asarray(ids, dtype=np.int64)
+        if len(ids) != n:
+            raise ValueError(f"ids length must match {what} count")
+        return ids
+
     def add_numpy(self, x: np.ndarray, ids=None):
         """Host-side add batch through ``add_df``. ``ids=None``
         continues from max(stored id)+1 — NOT ntotal, which would
@@ -300,14 +383,7 @@ class _Tier:
         x = np.atleast_2d(np.asarray(x, dtype=np.float32))
         if x.shape[1] != self.d:
             raise ValueError(f"expected d={self.d}, got {x.shape[1]}")
-        if ids is None:
-            row = getattr(self, self._frame).agg(F.max("id")).first()
-            start = (row[0] + 1) if row and row[0] is not None else 0
-            ids = np.arange(start, start + len(x), dtype=np.int64)
-        else:
-            ids = np.asarray(ids, dtype=np.int64)
-            if len(ids) != len(x):
-                raise ValueError("ids length must match vector count")
+        ids = self._new_ids(ids, len(x), "vector")
         return self.add_df(
             self.spark.createDataFrame(
                 pd.DataFrame({"id": ids, "vec": [v.tolist() for v in x]}),
@@ -352,6 +428,8 @@ class _ListTier(_Tier):
         old.unpersist()
         setattr(self, self._frame, new)
         self._n = n_new
+        if getattr(self, "_source", None) is not None:
+            self._source = _drop_ids(self._source, ids)
         return removed
 
 
@@ -432,8 +510,95 @@ class _MergeTier(_ListTier):
         return self
 
 
+class _Decoded:
+    """Mixin of a tier whose stored rows decode back to vectors through
+    its ``_decode()`` hook."""
+
+    def reconstruct(self, key: int) -> np.ndarray:
+        """faiss ``reconstruct``: the stored row of ``key`` decoded —
+        the stored vector on full-precision tiers, the lossy decode of
+        its code on coded ones (plus ``centroid(cell)`` on residual IVF
+        tiers). Absent ids raise KeyError."""
+        pdf = getattr(self, self._frame).where(F.col("id") == int(key)).toPandas()
+        if pdf.empty:
+            raise KeyError(f"id {key} not in index")
+        return self._decode()(pdf)[0]
+
+
+class _FlatCodes(_Decoded, _MergeTier):
+    """faiss ``IndexFlatCodes``: a tier whose stored ``code`` bytes ARE
+    its standalone code, so ``sa_encode`` / ``sa_decode`` are the
+    tier's own codec. Subclasses add ``_encode_np(x)``: (n, d) float64
+    → (n, code bytes) uint8, the host twin of ``_encode_df`` (same
+    arithmetic, so a host-encoded code is the stored one)."""
+
+    def sa_encode(self, x: np.ndarray) -> np.ndarray:
+        """(n, d) FP32 → n ``sa_code_size``-byte strings."""
+        x = np.atleast_2d(np.asarray(x, np.float64))
+        if x.ndim != 2 or x.shape[1] != self.d:
+            raise ValueError(f"expected (n, {self.d}) array, got {x.shape}")
+        return np.array([row.tobytes() for row in self._encode_np(x)], dtype=object)
+
+    def sa_decode(self, codes) -> np.ndarray:
+        """n byte strings → (n, d) FP32 (≙ ``reconstruct`` of stored
+        codes, narrowed to float32)."""
+        rows = [bytes(c) for c in codes]
+        if not rows:
+            return np.zeros((0, self.d), dtype=np.float32)
+        return self._decode()(pd.DataFrame({"code": rows})).astype(np.float32)
+
+
+class _AddCodes(_FlatCodes):
+    """A flat-codes tier that also ingests codes directly. Subclasses
+    declare ``_code_schema``, the DDL of their stored rows."""
+
+    _code_schema: str
+
+    def add_sa_codes(self, codes, ids=None):
+        """faiss ``Index::add_sa_codes``: append PRE-ENCODED codes
+        verbatim — no re-encode — the distributed half of the
+        ship-codes-not-floats workflow (``sa_encode`` near the data,
+        move ``sa_code_size`` bytes/vector, ingest here). Codes must
+        come from this index's own trained state. Code bytes are
+        validated against the codebook width at INGEST: with nbits<8 a
+        byte ≥ 2^nbits would otherwise only explode as an out-of-bounds
+        LUT gather inside an executor at search time, far from the bad
+        input. An additive tier's stored ``recn`` (‖reconstruction‖²,
+        the LUT-only search term) is derived from the codes. Ids
+        default to max(stored id)+1 continuation, like ``add_numpy``."""
+        width = self.sa_code_size
+        rows = [bytes(c) for c in codes]
+        for c in rows:
+            if len(c) != width:
+                raise ValueError(
+                    f"add_sa_codes: expected {width}-byte codes "
+                    f"(sa_code_size), got {len(c)}"
+                )
+        ncw = int(self.codebooks.shape[-2])  # 2^nbits codewords
+        if ncw < 256 and rows:
+            hi = int(np.frombuffer(b"".join(rows), dtype=np.uint8).max())
+            if hi >= ncw:
+                raise ValueError(
+                    f"add_sa_codes: code byte {hi} out of range for "
+                    f"nbits={ncw.bit_length() - 1} ({ncw} codewords per "
+                    "subspace)"
+                )
+        ids = self._new_ids(ids, len(rows), "code")
+        if not rows:
+            return self
+        pdf = pd.DataFrame({"id": ids, "code": rows})
+        if "recn" in self._code_schema:
+            rec = self._decode()(pdf)
+            pdf["recn"] = (rec * rec).sum(1)
+        _append_frame(
+            self, self._frame,
+            self.spark.createDataFrame(pdf, schema=self._code_schema),
+        )
+        return self
+
+
 @dataclass
-class SQ8Index(_MergeTier):
+class SQ8Index(_Decoded, _MergeTier):
     """Scalar-quantizer tier derived from a VectorTable:
     per-dim min/max trained on the table's FP32 reconstruction, b-bit
     codes (``bits`` = 8 / 6 / 4 ≙ faiss QT_8bit / QT_6bit / QT_4bit;
@@ -471,7 +636,7 @@ class SQ8Index(_MergeTier):
         ``"signed"`` (QT_8bit_direct_signed — code =
         clamp(floor(x)+128, 0, 255), decode = code − 128; the
         [−128, 128) domain)."""
-        from .operators.sq import sq_encode, sq_train
+        from .operators.sq import sq_train
 
         if direct not in (False, True, "signed"):
             raise ValueError(
@@ -491,9 +656,17 @@ class SQ8Index(_MergeTier):
             vmax = np.full(vt.d, 255.0 - off, np.float64)
         else:
             vmin, vmax = sq_train(base, uniform=uniform)
-        codes = sq_encode(base, vmin, vmax, bits, direct=direct).persist()
-        n = codes.count()
-        return cls(vt.spark, vt.d, vmin, vmax, codes, n, bits, direct)
+        return cls(
+            vt.spark, vt.d, vmin, vmax, None, bits=bits, direct=direct
+        )._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.sq import sq_encode
+
+        return sq_encode(rows, self.vmin, self.vmax, self.bits, direct=self.direct)
+
+    def _decode(self):
+        return _sq_decoder(self.vmin, self.vmax, self.bits, self.direct)
 
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.sq import sq_search
@@ -512,36 +685,6 @@ class SQ8Index(_MergeTier):
             self.codes, self.vmin, self.vmax, queries, radius, self.bits,
             direct=self.direct,
         )
-
-    def reconstruct(self, key: int) -> np.ndarray:
-        from .operators.sq import sq_reconstruct_col
-
-        row = (
-            self.codes.where(F.col("id") == int(key))
-            .select(
-                sq_reconstruct_col(
-                    "code", self.vmin, self.vmax, self.bits,
-                    direct=self.direct,
-                ).alias("r")
-            )
-            .collect()
-        )
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        return np.asarray(row[0]["r"], np.float64)
-
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "SQ8Index":
-        """faiss ``IndexScalarQuantizer::add``: encode against the
-        FROZEN trained range (values outside [vmin, vmax] clamp, the
-        faiss behavior) and append — training never reruns."""
-        from .operators.sq import sq_encode
-
-        new = sq_encode(
-            _ivf_add_rows(df, id_col, vec_col), self.vmin, self.vmax, self.bits,
-            direct=self.direct,
-        )
-        _append_frame(self, "codes", new)
-        return self
 
     def _trained_state(self) -> tuple:
         """Codes append verbatim only under the identical range and
@@ -595,20 +738,10 @@ class SQ8Index(_MergeTier):
             np.stack([np.frombuffer(c, np.uint8) for c in rows]),
             self.d, self.bits,
         )
-        return self._append_int_codes(
-            [row.astype(int).tolist() for row in unpacked], ids
+        ids = self._new_ids(ids, len(rows), "code")
+        pdf = pd.DataFrame(
+            {"id": ids, "code": [row.astype(int).tolist() for row in unpacked]}
         )
-
-    def _append_int_codes(self, int_codes, ids) -> "SQ8Index":
-        if ids is None:
-            row = self.codes.agg(F.max("id")).first()
-            start = (row[0] + 1) if row and row[0] is not None else 0
-            ids = np.arange(start, start + len(int_codes), dtype=np.int64)
-        else:
-            ids = np.asarray(ids, dtype=np.int64)
-            if len(ids) != len(int_codes):
-                raise ValueError("ids length must match code count")
-        pdf = pd.DataFrame({"id": ids, "code": int_codes})
         _append_frame(
             self, "codes",
             self.spark.createDataFrame(pdf, schema="id long, code array<int>"),
@@ -645,12 +778,13 @@ class BinaryIndex(_ListTier):
 
     @classmethod
     def from_table(cls, vt) -> "BinaryIndex":
+        base = _float_view(vt)
+        return cls(vt.spark, vt.d, None, base)._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
         from .operators.binary import binarize
 
-        base = _float_view(vt)
-        words = binarize(base, vt.d).persist()
-        n = words.count()
-        return cls(vt.spark, vt.d, words, base, n)
+        return binarize(rows, self.d)
 
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.binary import hamming_knn
@@ -680,25 +814,6 @@ class BinaryIndex(_ListTier):
         )
         return _host_result(res, len(np.atleast_2d(x)), k)
 
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "BinaryIndex":
-        """faiss ``IndexBinaryFlat::add``: sign-pack the new rows
-        (training-free tier) and append; the refine source grows in
-        step so two-stage rescore stays complete."""
-        from .operators.binary import binarize
-
-        rows = _ivf_add_rows(df, id_col, vec_col)
-        _append_frame(self, "words", binarize(rows, self.d))
-        if self._source is not None:
-            self._source = self._source.unionByName(rows)
-        return self
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``IndexBinaryFlat::remove_ids`` (explicit labels, no
-        renumbering); the refine source shrinks in step."""
-        removed = super().remove_ids(ids)
-        if self._source is not None:
-            self._source = _drop_ids(self._source, ids)
-        return removed
 
 
 @dataclass
@@ -742,15 +857,18 @@ class BinaryIVFIndex(_MergeTier):
         sample_size: int = 16384,
         iters: int = 10,
     ) -> "BinaryIVFIndex":
-        from .operators.binary import binarize, binarize_np, binary_ivf_assign
+        from .operators.binary import binarize_np
         from .operators.similarity import ivf_train_centroids
 
         base = _float_view(vt)
         C = ivf_train_centroids(base, n_cells, sample_size=sample_size, iters=iters)
-        Cw = binarize_np(C)
-        inv = binary_ivf_assign(binarize(base, vt.d), Cw).persist()
-        n = inv.count()
-        return cls(vt.spark, vt.d, Cw, inv, n)
+        return cls(vt.spark, vt.d, binarize_np(C), None)._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Sign-pack, then assign against the Hamming quantizer."""
+        from .operators.binary import binarize, binary_ivf_assign
+
+        return binary_ivf_assign(binarize(rows, self.d), self.centroid_words)
 
     @property
     def nlist(self) -> int:
@@ -775,26 +893,13 @@ class BinaryIVFIndex(_MergeTier):
             self.words, self.centroid_words, queries, radius, nprobe, self.d
         )
 
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "BinaryIVFIndex":
-        """faiss ``IndexBinaryIVF::add_with_ids``: binarize the new
-        rows and assign them against the frozen Hamming quantizer."""
-        from .operators.binary import binarize, binary_ivf_assign
-
-        new = binary_ivf_assign(
-            binarize(_ivf_add_rows(df, id_col, vec_col), self.d), self.centroid_words
-        )
-        _append_frame(self, "words", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical binary (Hamming) coarse centroids."""
         return (self.d, self.centroid_words)
 
 
 @dataclass
-class IVFIndex(_MergeTier):
+class IVFIndex(_Decoded, _MergeTier):
     """Coarse-quantized tier derived from a VectorTable: k-means cells,
     cell-pruned exact search within probed cells (IndexIVFFlat built by
     ``train``/``add`` from a flat index's vectors). ``assigned`` is the
@@ -833,21 +938,22 @@ class IVFIndex(_MergeTier):
         ``IVF<n>_HNSW<M>`` recipe) — assignment becomes approximate
         exactly as in faiss; ``coarse_kw`` forwards beam/rounds/expand/
         seed to :meth:`HNSWCoarseQuantizer.train`."""
-        from .operators.similarity import ivf_assign, ivf_train_centroids
+        from .operators.similarity import ivf_train_centroids
 
         base = _float_view(vt)
         C = ivf_train_centroids(base, n_cells, sample_size=sample_size, iters=iters)
-        q = None
-        if coarse_hnsw_m is not None:
-            from .operators.coarse import HNSWCoarseQuantizer
+        q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
+        return cls(vt.spark, vt.d, vt.metric, C, None, quantizer=q)._fill(base)
 
-            q = HNSWCoarseQuantizer.train(
-                C, M=int(coarse_hnsw_m),
-                **{"spark": vt.spark, **(coarse_kw or {})},
-            )
-        assigned = ivf_assign(base, C, assigner=q).persist()
-        n = assigned.count()
-        return cls(vt.spark, vt.d, vt.metric, C, assigned, n, quantizer=q)
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Assign against the coarse quantizer (IVF,Flat stores the
+        vectors themselves)."""
+        from .operators.similarity import ivf_assign
+
+        return ivf_assign(rows, self.centroids, assigner=self.quantizer)
+
+    def _decode(self):
+        return _float_rows
 
     @property
     def nlist(self) -> int:
@@ -912,32 +1018,9 @@ class IVFIndex(_MergeTier):
             nprobe=A.shape[1], metric=self.metric, probe_cells=hook,
         )
 
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFIndex":
-        """faiss ``IndexIVF::add_with_ids`` after train: assign the new
-        rows against the FROZEN coarse quantizer (one scan, no
-        retrain) and append them to the inverted file."""
-        from .operators.similarity import ivf_assign
-
-        new = ivf_assign(
-            _ivf_add_rows(df, id_col, vec_col), self.centroids,
-            assigner=self.quantizer,
-        )
-        _append_frame(self, "assigned", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer (centroids, metric, graph)."""
         return (self.d, self.metric, self.centroids, *_coarse_state(self.quantizer))
-
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Exact stored vector (IVF,Flat stores full precision —
-        ``IndexIVFFlat::reconstruct``)."""
-        row = self.assigned.where(F.col("id") == int(key)).select("vec").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        return np.asarray(row[0]["vec"], np.float64)
 
     def search_preassigned(
         self, queries: DataFrame, k: int, assign: np.ndarray
@@ -1365,7 +1448,7 @@ class IVFFlatDedupIndex(_ListTier):
 
 
 @dataclass
-class IVFSQIndex(_MergeTier):
+class IVFSQIndex(_Decoded, _MergeTier):
     """IVF cells over scalar-quantized codes — faiss
     ``IndexIVFScalarQuantizer`` (``index_factory("IVF<n>,SQ8")``):
     k-means coarse cells, b-bit SQ codes stored IN the inverted lists,
@@ -1385,9 +1468,6 @@ class IVFSQIndex(_MergeTier):
     _kind = "ivfsq"
     _frame = "codes"
     _partition = "cell"
-    # stores of this kind write the coarse block in its first form
-    # (always present, no dtype key) — see index_io._write_coarse
-    _coarse_v0 = True
 
     spark: SparkSession
     d: int
@@ -1417,51 +1497,36 @@ class IVFSQIndex(_MergeTier):
         """``uniform`` (r13): one shared (vmin, vmax) across dims —
         faiss ``IVF<n>,SQ8_uniform``; constant trained arrays, every
         downstream path unchanged (the SQ8Index uniform discipline)."""
-        from .operators.similarity import ivf_assign, ivf_train_centroids
-        from .operators.sq import sq_code_col, sq_train
+        from .operators.similarity import ivf_train_centroids
+        from .operators.sq import sq_train
 
         base = _float_view(vt)
         vmin, vmax = sq_train(base, uniform=uniform)
         C = ivf_train_centroids(base, n_cells, sample_size=sample_size, iters=iters)
-        q = None
-        if coarse_hnsw_m is not None:
-            from .operators.coarse import HNSWCoarseQuantizer
-
-            q = HNSWCoarseQuantizer.train(
-                C, M=int(coarse_hnsw_m),
-                **{"spark": vt.spark, **(coarse_kw or {})},
-            )
-        # one scan: cell assignment (Arrow stage) then the Catalyst
-        # encode projection — vectors never leave the executors
-        codes = (
-            ivf_assign(base, C, assigner=q)
-            .select(
-                F.col("id").cast("long").alias("id"),
-                sq_code_col("vec", vmin, vmax, bits).alias("code"),
-                "cell",
-            )
-            .persist()
-        )
-        n = codes.count()
+        q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
         return cls(
-            vt.spark, vt.d, vt.metric, C, vmin, vmax, codes, n, bits,
+            vt.spark, vt.d, vt.metric, C, vmin, vmax, None, bits=bits,
             quantizer=q,
-        )
+        )._fill(base)
 
     @property
     def nlist(self) -> int:
         return len(self.centroids)
 
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """One scan: cell assignment (Arrow stage) then the Catalyst
+        SQ encode projection — vectors never leave the executors."""
+        from .operators.similarity import ivf_assign
+        from .operators.sq import sq_code_col
+
+        return ivf_assign(rows, self.centroids, assigner=self.quantizer).select(
+            F.col("id").cast("long").alias("id"),
+            sq_code_col("vec", self.vmin, self.vmax, self.bits).alias("code"),
+            "cell",
+        )
+
     def _decode(self):
-        from .operators.sq import sq_decode_np
-
-        vmin, vmax, bits = self.vmin, self.vmax, self.bits
-
-        def dec(pdf: pd.DataFrame) -> np.ndarray:
-            codes = np.stack(pdf["code"].to_numpy()).astype(np.uint8)
-            return sq_decode_np(codes, vmin, vmax, bits)
-
-        return dec
+        return _sq_decoder(self.vmin, self.vmax, self.bits)
 
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
@@ -1546,25 +1611,6 @@ class IVFSQIndex(_MergeTier):
             decode=self._decode(), probe_cells=hook,
         )
 
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFSQIndex":
-        """faiss ``IndexIVF::add_with_ids``: assign against the frozen
-        quantizer, SQ-encode with the frozen range, append."""
-        from .operators.similarity import ivf_assign
-        from .operators.sq import sq_code_col
-
-        new = ivf_assign(
-            _ivf_add_rows(df, id_col, vec_col), self.centroids,
-            assigner=self.quantizer,
-        ).select(
-            F.col("id").cast("long").alias("id"),
-            sq_code_col("vec", self.vmin, self.vmax, self.bits).alias("code"),
-            "cell",
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer AND SQ range/width (codes must decode
         the same on both sides)."""
@@ -1573,20 +1619,9 @@ class IVFSQIndex(_MergeTier):
             *_coarse_state(self.quantizer),
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Decoded code (``IndexIVFScalarQuantizer::reconstruct`` —
-        lossy, bounded by the per-dim step/2)."""
-        from .operators.sq import sq_decode_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        codes = np.asarray(row[0]["code"], np.uint8)[None, :]
-        return sq_decode_np(codes, self.vmin, self.vmax, self.bits)[0]
-
 
 @dataclass
-class IVFPQIndex(_MergeTier):
+class IVFPQIndex(_Decoded, _MergeTier):
     """IVF + product-quantized residuals (IndexIVFPQ): m-byte codes,
     per-cell ADC against broadcast query LUTs, L2 only. Codes persist
     ``partitionBy("cell")`` — the inverted-list layout — via
@@ -1624,19 +1659,14 @@ class IVFPQIndex(_MergeTier):
         from .operators.pq import ivfpq_build
 
         base = _float_view(vt)
-        q = None
-        kw = {}
+        q, kw = None, {}
         if coarse_hnsw_m is not None:
-            from .operators.coarse import HNSWCoarseQuantizer
             from .operators.similarity import ivf_train_centroids
 
             C = ivf_train_centroids(
                 base, n_cells, sample_size=sample_size, iters=iters
             )
-            q = HNSWCoarseQuantizer.train(
-                C, M=int(coarse_hnsw_m),
-                **{"spark": vt.spark, **(coarse_kw or {})},
-            )
+            q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
             kw = {"centroids": C, "assigner": q}
         centroids, books, codes = ivfpq_build(
             base, n_cells, m, sample_size=sample_size, iters=iters,
@@ -1645,6 +1675,23 @@ class IVFPQIndex(_MergeTier):
         codes = codes.persist()
         n = codes.count()
         return cls(vt.spark, vt.d, centroids, books, codes, n, quantizer=q)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Assign against the coarse quantizer, PQ-encode the residual."""
+        from .operators.pq import ivfpq_encode
+        from .operators.similarity import ivf_assign
+
+        return ivfpq_encode(
+            ivf_assign(rows, self.centroids, assigner=self.quantizer),
+            self.centroids, self.codebooks,
+        )
+
+    def _decode(self):
+        """centroid(cell) + decoded residual code."""
+        from .operators.pq import pq_decode_np
+
+        C, books = self.centroids, self.codebooks
+        return lambda pdf: C[_cells(pdf)] + pq_decode_np(_codes(pdf), books)
 
     @property
     def nbits(self) -> int:
@@ -1727,51 +1774,14 @@ class IVFPQIndex(_MergeTier):
             self.codes, self.centroids, self.codebooks, queries, radius, nprobe
         )
 
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFPQIndex":
-        """faiss ``IndexIVF::add_with_ids``: assign against the frozen
-        coarse quantizer, PQ-encode the residuals with the frozen
-        codebooks, append."""
-        from .operators.pq import ivfpq_encode
-        from .operators.similarity import ivf_assign
-
-        new = ivfpq_encode(
-            ivf_assign(
-                _ivf_add_rows(df, id_col, vec_col), self.centroids,
-                assigner=self.quantizer,
-            ),
-            self.centroids,
-            self.codebooks,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer AND codebooks (codes are meaningless
         under a different ADC table)."""
         return (self.d, self.centroids, self.codebooks, *_coarse_state(self.quantizer))
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """centroid(cell) + decoded residual code
-        (``IndexIVFPQ::reconstruct``)."""
-        from .operators.pq import pq_decode_np
-
-        row = (
-            self.codes.where(F.col("id") == int(key))
-            .select("code", "cell")
-            .collect()
-        )
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        code = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return self.centroids[int(row[0]["cell"])] + pq_decode_np(
-            code, self.codebooks
-        )[0]
-
 
 @dataclass
-class IVFPQRIndex(_MergeTier):
+class IVFPQRIndex(_Decoded, _MergeTier):
     """IVFPQ + refine PQ re-rank — faiss ``IndexIVFPQR``
     (``index_factory("IVF<n>,PQ<m>+<m2>")``): the first PQ encodes the
     cell residual, a second ``m_refine``-byte PQ encodes what the first
@@ -1815,6 +1825,29 @@ class IVFPQRIndex(_MergeTier):
         n = codes.count()
         return cls(vt.spark, vt.d, centroids, books, rbooks, codes, n)
 
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Assign, then the two-level residual encode."""
+        from .operators.pq import ivfpqr_encode
+        from .operators.similarity import ivf_assign
+
+        return ivfpqr_encode(
+            ivf_assign(rows, self.centroids), self.centroids,
+            self.codebooks, self.refine_books,
+        )
+
+    def _decode(self):
+        """centroid(cell) + decode1(code) + decode2(code2) — the
+        refine-augmented reconstruction (``IndexIVFPQR`` reconstructs
+        through both quantizers)."""
+        from .operators.pq import pq_decode_np
+
+        C, books, rbooks = self.centroids, self.codebooks, self.refine_books
+        return lambda pdf: (
+            C[_cells(pdf)]
+            + pq_decode_np(_codes(pdf), books)
+            + pq_decode_np(_codes(pdf, "code2"), rbooks)
+        )
+
     @property
     def nlist(self) -> int:
         return len(self.centroids)
@@ -1829,51 +1862,13 @@ class IVFPQRIndex(_MergeTier):
             queries, k, nprobe, k_factor,
         )
 
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFPQRIndex":
-        """faiss ``IndexIVFPQR`` add: assign + two-level encode against
-        the FROZEN trained state, append."""
-        from .operators.pq import ivfpqr_encode
-        from .operators.similarity import ivf_assign
-
-        new = ivfpqr_encode(
-            ivf_assign(_ivf_add_rows(df, id_col, vec_col), self.centroids),
-            self.centroids,
-            self.codebooks,
-            self.refine_books,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer AND both codebooks."""
         return (self.d, self.centroids, self.codebooks, self.refine_books)
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """centroid(cell) + decode1(code) + decode2(code2) — the
-        refine-augmented reconstruction (``IndexIVFPQR`` reconstructs
-        through both quantizers)."""
-        from .operators.pq import pq_decode_np
-
-        row = (
-            self.codes.where(F.col("id") == int(key))
-            .select("code", "code2", "cell")
-            .collect()
-        )
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        c1 = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        c2 = np.frombuffer(row[0]["code2"], np.uint8)[None, :]
-        return (
-            self.centroids[int(row[0]["cell"])]
-            + pq_decode_np(c1, self.codebooks)[0]
-            + pq_decode_np(c2, self.refine_books)[0]
-        )
-
 
 @dataclass
-class OPQIndex(_ListTier):
+class OPQIndex(_Decoded, _ListTier):
     """Learned-rotation PQ (IndexPreTransform(OPQMatrix, IndexPQ)):
     queries rotate once on the broadcast side, ADC runs in rotated
     space (operators/opq.py, Ge et al. 2013)."""
@@ -1897,15 +1892,28 @@ class OPQIndex(_ListTier):
         sample_size: int = 16384,
         nbits: int = 8,
     ) -> "OPQIndex":
-        from .operators.opq import opq_encode, opq_train
+        from .operators.opq import opq_train
 
         base = _float_view(vt)
         R, books = opq_train(
             base, m, iters=iters, sample_size=sample_size, nbits=nbits
         )
-        codes = opq_encode(base, R, books).persist()
-        n = codes.count()
-        return cls(vt.spark, vt.d, R, books, codes, n)
+        return cls(vt.spark, vt.d, R, books, None)._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Rotate with the learned R, PQ-encode (``IndexPreTransform``)."""
+        from .operators.opq import opq_encode
+
+        return opq_encode(rows, self.rotation, self.codebooks)
+
+    def _decode(self):
+        """Codeword concatenation rotated back to input space:
+        decode(code) @ R (``IndexPreTransform::reconstruct`` applies
+        the OPQ matrix's reverse transform)."""
+        from .operators.pq import pq_decode_np
+
+        books, R = self.codebooks, self.rotation
+        return lambda pdf: pq_decode_np(_codes(pdf), books) @ R
 
     def polysemous_train(
         self, n_iter: int = 30_000, seed: int = 123
@@ -1956,37 +1964,16 @@ class OPQIndex(_ListTier):
             self.codes, self.rotation, self.codebooks, queries, radius
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Codeword concatenation rotated back to input space:
-        decode(code) @ R (``IndexPreTransform::reconstruct`` applies
-        the OPQ matrix's reverse transform)."""
-        from .operators.pq import pq_decode_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        code = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return (pq_decode_np(code, self.codebooks) @ self.rotation)[0]
-
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "OPQIndex":
-        """``IndexPreTransform::add``: rotate with the FROZEN learned R,
-        encode with the frozen codebooks, append."""
-        from .operators.opq import opq_encode
-
-        new = opq_encode(
-            _ivf_add_rows(df, id_col, vec_col), self.rotation, self.codebooks
-        )
-        _append_frame(self, "codes", new)
-        return self
 
 
 @dataclass
-class PQIndex(_MergeTier):
+class PQIndex(_AddCodes):
     """Plain product quantization (IndexPQ): m-byte codes over the whole
     vector (no coarse quantizer), ADC search via broadcast LUTs."""
 
     _kind = "pq"
     _frame = "codes"
+    _code_schema = "id long, code binary"
 
     spark: SparkSession
     d: int
@@ -2005,15 +1992,32 @@ class PQIndex(_MergeTier):
     ) -> "PQIndex":
         """``nbits`` = code width per subspace (faiss ``PQ<m>x<b>``,
         1..8); the codebook shape carries it everywhere downstream."""
-        from .operators.pq import pq_encode, pq_train
+        from .operators.pq import pq_train
 
         base = _float_view(vt)
         books = pq_train(
             base, m, iters=iters, sample_size=sample_size, nbits=nbits
         )
-        codes = pq_encode(base, books).persist()
-        n = codes.count()
-        return cls(vt.spark, vt.d, books, codes, n)
+        return cls(vt.spark, vt.d, books, None)._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.pq import pq_encode
+
+        return pq_encode(rows, self.codebooks)
+
+    def _encode_np(self, x: np.ndarray) -> np.ndarray:
+        """:func:`~.operators.pq.pq_assign_np` — the exact assignment
+        ``pq_encode`` stores, by construction."""
+        from .operators.pq import pq_assign_np
+
+        return pq_assign_np(x, self.codebooks)
+
+    def _decode(self):
+        """Codeword concatenation (``IndexPQ::reconstruct``)."""
+        from .operators.pq import pq_decode_np
+
+        books = self.codebooks
+        return lambda pdf: pq_decode_np(_codes(pdf), books)
 
     @property
     def nbits(self) -> int:
@@ -2069,82 +2073,17 @@ class PQIndex(_MergeTier):
 
         return pq_range_search(self.codes, self.codebooks, queries, radius)
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Codeword concatenation (``IndexPQ::reconstruct``)."""
-        from .operators.pq import pq_decode_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        code = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return pq_decode_np(code, self.codebooks)[0]
-
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "PQIndex":
-        """faiss ``IndexPQ::add``: encode with the FROZEN codebooks
-        (``pq_assign_np`` arithmetic, never retrained) and append."""
-        from .operators.pq import pq_encode
-
-        new = pq_encode(_ivf_add_rows(df, id_col, vec_col), self.codebooks)
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Codes are comparable only under the IDENTICAL codebooks."""
         return (self.d, self.codebooks)
-
-    # -- standalone codec (faiss IndexPQ sa_encode/sa_decode) --------------
 
     @property
     def sa_code_size(self) -> int:
         return self.codebooks.shape[0]  # m bytes/vector
 
-    def sa_encode(self, x: np.ndarray) -> np.ndarray:
-        """(n, d) FP32 → n m-byte strings via the shared
-        :func:`~.operators.pq.pq_assign_np` — the exact assignment
-        ``pq_encode`` stores, by construction."""
-        from .operators.pq import pq_assign_np
-
-        x = np.asarray(x, dtype=np.float64)
-        if x.ndim != 2 or x.shape[1] != self.d:
-            raise ValueError(f"expected (n, {self.d}) array, got {x.shape}")
-        codes = pq_assign_np(x, self.codebooks)
-        return np.array([row.tobytes() for row in codes], dtype=object)
-
-    def add_sa_codes(self, codes, ids=None) -> "PQIndex":
-        """faiss ``Index::add_sa_codes``: ingest PRE-ENCODED m-byte
-        codes verbatim — codes must come from this index's own
-        codebooks (``sa_encode``). Code bytes are validated against
-        the codebook width at INGEST (cheap numpy max over the batch):
-        with nbits<8 a byte ≥ 2^nbits would otherwise only explode as
-        an out-of-bounds LUT gather inside an executor at search time,
-        far from the bad input."""
-        rows = [bytes(c) for c in codes]
-        ncw = int(self.codebooks.shape[1])  # 2^nbits codewords/subspace
-        if ncw < 256 and rows:
-            flat = np.frombuffer(b"".join(rows), dtype=np.uint8)
-            hi = int(flat.max()) if flat.size else 0
-            if hi >= ncw:
-                raise ValueError(
-                    f"add_sa_codes: code byte {hi} out of range for "
-                    f"nbits={self.nbits} ({ncw} codewords per subspace)"
-                )
-        return _add_sa_codes_frame(
-            self, "codes", rows, ids, "id long, code binary"
-        )
-
-    def sa_decode(self, codes) -> np.ndarray:
-        """n m-byte strings → (n, d) FP32 codeword concatenation
-        (≙ IndexPQ::sa_decode / reconstruct)."""
-        from .operators.pq import pq_decode_np
-
-        rows = [np.frombuffer(c, dtype=np.uint8) for c in codes]
-        if not rows:
-            return np.zeros((0, self.d), dtype=np.float32)
-        return pq_decode_np(np.stack(rows), self.codebooks).astype(np.float32)
-
 
 @dataclass
-class PQFastScanIndex(_MergeTier):
+class PQFastScanIndex(_FlatCodes):
     """faiss ``IndexPQFastScan`` (factory ``PQ<m>x4fs``): 4-bit PQ in
     the fast-scan layout — two sub-codes per stored byte, ADC via
     fused per-byte 256-entry tables (one gather per byte instead of
@@ -2170,15 +2109,31 @@ class PQFastScanIndex(_MergeTier):
     def from_table(
         cls, vt, m: int, iters: int = 10, sample_size: int = 16384
     ) -> "PQFastScanIndex":
-        from .operators.pq import pq_encode, pq_train
+        from .operators.pq import pq_train
 
         base = _float_view(vt)
         books = pq_train(
             base, m, iters=iters, sample_size=sample_size, nbits=4
         )
-        codes = pq_encode(base, books, pack4=True).persist()
-        n = codes.count()
-        return cls(vt.spark, vt.d, books, codes, n)
+        return cls(vt.spark, vt.d, books, None)._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.pq import pq_encode
+
+        return pq_encode(rows, self.codebooks, pack4=True)
+
+    def _encode_np(self, x: np.ndarray) -> np.ndarray:
+        from .operators.pq import pq_assign_np, pq_pack4_np
+
+        return pq_pack4_np(pq_assign_np(x, self.codebooks))
+
+    def _decode(self):
+        """Unpack the byte pair layout, then codeword concatenation
+        (``IndexPQFastScan::reconstruct`` decodes the same way)."""
+        from .operators.pq import pq_decode_np, pq_unpack4_np
+
+        books, m = self.codebooks, self.m
+        return lambda pdf: pq_decode_np(pq_unpack4_np(_codes(pdf), m), books)
 
     @property
     def m(self) -> int:
@@ -2203,29 +2158,6 @@ class PQFastScanIndex(_MergeTier):
             "implement range search; use PQIndex (PQ<m>x4) instead"
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Unpack the byte pair layout, then codeword concatenation
-        (``IndexPQFastScan::reconstruct`` decodes the same way)."""
-        from .operators.pq import pq_decode_np, pq_unpack4_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        packed = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return pq_decode_np(pq_unpack4_np(packed, self.m), self.codebooks)[0]
-
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "PQFastScanIndex":
-        """faiss ``add``: encode with the FROZEN codebooks, packed."""
-        from .operators.pq import pq_encode
-
-        new = pq_encode(
-            _ivf_add_rows(df, id_col, vec_col), self.codebooks, pack4=True
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical codebooks."""
         return (self.d, self.codebooks)
@@ -2236,28 +2168,9 @@ class PQFastScanIndex(_MergeTier):
     def sa_code_size(self) -> int:
         return (self.m + 1) // 2  # packed bytes/vector
 
-    def sa_encode(self, x: np.ndarray) -> np.ndarray:
-        from .operators.pq import pq_assign_np, pq_pack4_np
-
-        x = np.asarray(x, dtype=np.float64)
-        if x.ndim != 2 or x.shape[1] != self.d:
-            raise ValueError(f"expected (n, {self.d}) array, got {x.shape}")
-        packed = pq_pack4_np(pq_assign_np(x, self.codebooks))
-        return np.array([row.tobytes() for row in packed], dtype=object)
-
-    def sa_decode(self, codes) -> np.ndarray:
-        from .operators.pq import pq_decode_np, pq_unpack4_np
-
-        rows = [np.frombuffer(c, dtype=np.uint8) for c in codes]
-        if not rows:
-            return np.zeros((0, self.d), dtype=np.float32)
-        return pq_decode_np(
-            pq_unpack4_np(np.stack(rows), self.m), self.codebooks
-        ).astype(np.float32)
-
 
 @dataclass
-class IVFPQFastScanIndex(_MergeTier):
+class IVFPQFastScanIndex(_Decoded, _MergeTier):
     """faiss ``IndexIVFPQFastScan`` (factory ``IVF<n>,PQ<m>x4fs``):
     the inverted-file composition of :class:`PQFastScanIndex` —
     residual 4-bit codes packed two per byte in cell-partitioned
@@ -2293,6 +2206,25 @@ class IVFPQFastScanIndex(_MergeTier):
         n = codes.count()
         return cls(vt.spark, vt.d, centroids, books, codes, n)
 
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Assign, encode the residual packed."""
+        from .operators.pq import ivfpq_encode
+        from .operators.similarity import ivf_assign
+
+        return ivfpq_encode(
+            ivf_assign(rows, self.centroids), self.centroids, self.codebooks,
+            pack4=True,
+        )
+
+    def _decode(self):
+        """centroid(cell) + decoded residual (unpacked first)."""
+        from .operators.pq import pq_decode_np, pq_unpack4_np
+
+        C, books, m = self.centroids, self.codebooks, self.m
+        return lambda pdf: C[_cells(pdf)] + pq_decode_np(
+            pq_unpack4_np(_codes(pdf), m), books
+        )
+
     @property
     def m(self) -> int:
         return int(self.codebooks.shape[0])
@@ -2326,35 +2258,6 @@ class IVFPQFastScanIndex(_MergeTier):
             "does not implement range search; use IVFPQIndex instead"
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """centroid(cell) + decoded residual (unpacked first)."""
-        from .operators.pq import pq_decode_np, pq_unpack4_np
-
-        row = (
-            self.codes.where(F.col("id") == int(key))
-            .select("cell", "code").collect()
-        )
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        packed = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        resid = pq_decode_np(pq_unpack4_np(packed, self.m), self.codebooks)[0]
-        return self.centroids[int(row[0]["cell"])] + resid
-
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFPQFastScanIndex":
-        """faiss ``add_with_ids``: assign against the frozen coarse
-        quantizer, encode the residual packed, append."""
-        from .operators.pq import ivfpq_encode
-        from .operators.similarity import ivf_assign
-
-        new = ivfpq_encode(
-            ivf_assign(_ivf_add_rows(df, id_col, vec_col), self.centroids),
-            self.centroids, self.codebooks, pack4=True,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer AND residual codebooks (codes must
         decode the same)."""
@@ -2362,7 +2265,7 @@ class IVFPQFastScanIndex(_MergeTier):
 
 
 @dataclass
-class GraphIndex(_Tier):
+class GraphIndex(_Decoded, _Tier):
     """Graph-ANN tier — the faiss ``IndexHNSWFlat`` workflow
     (``index_factory("HNSW32")``) served by a flat navigable kNN graph:
     build = distributed NN-Descent (operators/knn_graph.py, Dong et
@@ -2414,20 +2317,13 @@ class GraphIndex(_Tier):
         re-linked to their exact nearest main-component neighbor, so
         beam search can reach every node from any entry region —
         required for NSG parity on clustered data."""
-        from .operators.knn_graph import connect_graph, mrng_diversify, nn_descent
-
         base = _float_view(vt).persist()
         n = base.count()
-        if diversify:
-            cand = nn_descent(base, k=2 * M, iters=iters, seed=seed)
-            graph = mrng_diversify(cand, base, M)
-        else:
-            graph = nn_descent(base, k=M, iters=iters, seed=seed)
-        if repair and n > 1:
-            graph = connect_graph(graph, base)
-        graph = graph.persist()
-        graph.count()  # materialize the build (faiss builds eagerly on add)
+        graph = _nsw_graph(base, n, M, iters, seed, diversify, repair)
         return cls(vt.spark, vt.d, base, graph, M, ef_search, n)
+
+    def _decode(self):
+        return _float_rows
 
     def search(
         self,
@@ -2515,14 +2411,6 @@ class GraphIndex(_Tier):
         old_g.unpersist()
         rows.unpersist()
         return self
-
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Exact — the graph tier stores full vectors
-        (``IndexHNSWFlat::reconstruct``)."""
-        row = self.vectors.where(F.col("id") == int(key)).select("vec").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        return np.asarray(row[0]["vec"], np.float64)
 
     def reconstruct_batch(self, ids) -> np.ndarray:
         """(len(ids), d) FP32 rows in the given id order — faiss
@@ -2699,7 +2587,7 @@ class NSGIndex(GraphIndex):
 
 
 @dataclass
-class GraphSQIndex(_Tier):
+class GraphSQIndex(_Decoded, _Tier):
     """faiss ``IndexHNSWSQ`` (factory ``"HNSW<M>,SQ8/6/4"``): the NSW
     graph over SCALAR-QUANTIZED storage — the memory-constrained HNSW
     composition (faiss/IndexHNSW.h ``IndexHNSWSQ``: an IndexHNSW whose
@@ -2742,43 +2630,30 @@ class GraphSQIndex(_Tier):
         diversify: bool = False,
         repair: bool = False,
     ) -> "GraphSQIndex":
-        from .operators.knn_graph import connect_graph, mrng_diversify, nn_descent
-        from .operators.sq import sq_encode, sq_reconstruct_col, sq_train
+        from .operators.sq import sq_reconstruct_col, sq_train
 
         base = _float_view(vt)
         vmin, vmax = sq_train(base)
-        codes = sq_encode(base, vmin, vmax, bits).persist()
-        n = codes.count()
+        idx = cls(
+            vt.spark, vt.d, vmin, vmax, None, None, M, ef_search, bits=bits
+        )._fill(base)
         # build over DECODED storage (faiss constructs HNSWSQ edges
         # with the storage DistanceComputer); the decoded view is a
         # BUILD-TIME transient — released before serving
-        dec = codes.select(
+        dec = idx.codes.select(
             "id", sq_reconstruct_col("code", vmin, vmax, bits).alias("vec")
         ).persist()
-        if diversify:
-            cand = nn_descent(dec, k=2 * M, iters=iters, seed=seed)
-            graph = mrng_diversify(cand, dec, M)
-        else:
-            graph = nn_descent(dec, k=M, iters=iters, seed=seed)
-        if repair and n > 1:
-            graph = connect_graph(graph, dec)
-        graph = graph.persist()
-        graph.count()
+        idx.graph = _nsw_graph(dec, idx.ntotal, M, iters, seed, diversify, repair)
         dec.unpersist()
-        return cls(
-            vt.spark, vt.d, vmin, vmax, codes, graph, M, ef_search, n, bits
-        )
+        return idx
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.sq import sq_encode
+
+        return sq_encode(rows, self.vmin, self.vmax, self.bits)
 
     def _decode(self):
-        from .operators.sq import sq_decode_np
-
-        vmin, vmax, bits = self.vmin, self.vmax, self.bits
-
-        def dec(pdf: pd.DataFrame) -> np.ndarray:
-            codes = np.stack(pdf["code"].to_numpy()).astype(np.uint8)
-            return sq_decode_np(codes, vmin, vmax, bits)
-
-        return dec
+        return _sq_decoder(self.vmin, self.vmax, self.bits)
 
     def search(
         self,
@@ -2809,32 +2684,11 @@ class GraphSQIndex(_Tier):
             "range search; use SQ8Index.range_search for radius queries"
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        from .operators.sq import sq_reconstruct_col
-
-        row = (
-            self.codes.where(F.col("id") == int(key))
-            .select(
-                sq_reconstruct_col("code", self.vmin, self.vmax, self.bits).alias("r")
-            )
-            .collect()
-        )
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        return np.asarray(row[0]["r"], np.float64)
-
-    def add_df(self, *_a, **_k):
-        raise NotImplementedError(
-            "GraphSQIndex is a read-only derived tier — rebuild via "
-            "from_table after mutating the source (incremental NSW "
-            "insertion lives on the flat GraphIndex)"
-        )
-
-    add_numpy = add_df
+    add_df = add_numpy = _read_only
 
 
 @dataclass
-class GraphPQIndex(_Tier):
+class GraphPQIndex(_Decoded, _Tier):
     """faiss ``IndexHNSWPQ`` (factory ``"HNSW<M>,PQ<m>"``): the NSW
     graph over PRODUCT-QUANTIZED storage — m bytes/vector resident
     (the deepest-compression HNSW composition faiss offers). Same
@@ -2869,25 +2723,20 @@ class GraphPQIndex(_Tier):
         diversify: bool = False,
         repair: bool = False,
     ) -> "GraphPQIndex":
-        from .operators.knn_graph import connect_graph, mrng_diversify, nn_descent
-        from .operators.pq import pq_encode, pq_reconstruct, pq_train
+        from .operators.pq import pq_reconstruct, pq_train
 
         base = _float_view(vt)
         books = pq_train(base, m, sample_size=sample_size, nbits=nbits)
-        codes = pq_encode(base, books).persist()
-        n = codes.count()
-        dec = pq_reconstruct(codes, books).persist()
-        if diversify:
-            cand = nn_descent(dec, k=2 * M, iters=iters, seed=seed)
-            graph = mrng_diversify(cand, dec, M)
-        else:
-            graph = nn_descent(dec, k=M, iters=iters, seed=seed)
-        if repair and n > 1:
-            graph = connect_graph(graph, dec)
-        graph = graph.persist()
-        graph.count()
+        idx = cls(vt.spark, vt.d, books, None, None, M, ef_search)._fill(base)
+        dec = pq_reconstruct(idx.codes, books).persist()
+        idx.graph = _nsw_graph(dec, idx.ntotal, M, iters, seed, diversify, repair)
         dec.unpersist()
-        return cls(vt.spark, vt.d, books, codes, graph, M, ef_search, n)
+        return idx
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.pq import pq_encode
+
+        return pq_encode(rows, self.codebooks)
 
     @property
     def m(self) -> int:
@@ -2901,15 +2750,7 @@ class GraphPQIndex(_Tier):
         from .operators.pq import pq_decode_np
 
         books = self.codebooks
-        m = books.shape[0]
-
-        def dec(pdf: pd.DataFrame) -> np.ndarray:
-            C = np.frombuffer(
-                b"".join(pdf["code"].tolist()), dtype=np.uint8
-            ).reshape(len(pdf), m)
-            return pq_decode_np(C, books)
-
-        return dec
+        return lambda pdf: pq_decode_np(_codes(pdf), books)
 
     def search(
         self,
@@ -2940,27 +2781,11 @@ class GraphPQIndex(_Tier):
             "range search; use PQIndex.range_search for radius queries"
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        from .operators.pq import pq_decode_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        code = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return pq_decode_np(code, self.codebooks)[0]
-
-    def add_df(self, *_a, **_k):
-        raise NotImplementedError(
-            "GraphPQIndex is a read-only derived tier — rebuild via "
-            "from_table after mutating the source (incremental NSW "
-            "insertion lives on the flat GraphIndex)"
-        )
-
-    add_numpy = add_df
+    add_df = add_numpy = _read_only
 
 
 @dataclass
-class BinaryHNSWIndex(_Tier):
+class BinaryHNSWIndex(_Decoded, _Tier):
     """faiss ``IndexBinaryHNSW`` (factory ``"BHNSW<M>"``): the NSW
     graph over PACKED BINARY storage, every distance the walk computes
     a Hamming distance (faiss/IndexBinaryHNSW.h — an IndexBinaryFlat
@@ -3006,12 +2831,9 @@ class BinaryHNSWIndex(_Tier):
         diversify: bool = False,
         repair: bool = False,
     ) -> "BinaryHNSWIndex":
-        from .operators.binary import binarize, unpack_words_np
-        from .operators.knn_graph import connect_graph, mrng_diversify, nn_descent
+        from .operators.binary import unpack_words_np
 
-        base = _float_view(vt)
-        words = binarize(base, vt.d).persist()
-        n = words.count()
+        idx = cls(vt.spark, vt.d, None, None, M, ef_search)._fill(_float_view(vt))
         # build over the unpacked bit vectors (one Arrow-vectorized
         # stage — a BUILD-TIME transient released before serving);
         # l2sq(bits_a, bits_b) == hamming(words_a, words_b) exactly
@@ -3033,31 +2855,25 @@ class BinaryHNSWIndex(_Tier):
                     names=["id", "vec"],
                 )
 
-        dec = words.mapInArrow(
-            unpack, bits_schema
-        ).persist()
-        if diversify:
-            cand = nn_descent(dec, k=2 * M, iters=iters, seed=seed)
-            graph = mrng_diversify(cand, dec, M)
-        else:
-            graph = nn_descent(dec, k=M, iters=iters, seed=seed)
-        if repair and n > 1:
-            graph = connect_graph(graph, dec)
-        graph = graph.persist()
-        graph.count()
+        dec = idx.words.mapInArrow(unpack, bits_schema).persist()
+        idx.graph = _nsw_graph(dec, idx.ntotal, M, iters, seed, diversify, repair)
         dec.unpersist()
-        return cls(vt.spark, vt.d, words, graph, M, ef_search, n)
+        return idx
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.binary import binarize
+
+        return binarize(rows, self.d)
 
     def _decode(self):
+        """The stored 0/1 bit vectors (d,) — the decoded form of the
+        packed words (faiss reconstructs the binary code)."""
         from .operators.binary import unpack_words_np
 
         d = self.d
-
-        def dec(pdf: pd.DataFrame) -> np.ndarray:
-            W = np.stack(pdf["code"].to_numpy()).astype(np.int64)
-            return unpack_words_np(W, d)
-
-        return dec
+        return lambda pdf: unpack_words_np(
+            np.stack(pdf["words"].to_numpy()).astype(np.int64), d
+        )
 
     def search(
         self,
@@ -3124,28 +2940,7 @@ class BinaryHNSWIndex(_Tier):
             "not implement range search; use BinaryIndex instead"
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """The stored 0/1 bit vector (d,) — the decoded form of the
-        packed code (faiss reconstructs the binary code)."""
-        from .operators.binary import unpack_words_np
-
-        row = (
-            self.words.where(F.col("id") == int(key)).select("words").collect()
-        )
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        return unpack_words_np(
-            np.asarray(row[0]["words"], np.int64)[None, :], self.d
-        )[0]
-
-    def add_df(self, *_a, **_k):
-        raise NotImplementedError(
-            "BinaryHNSWIndex is a read-only derived tier — rebuild via "
-            "from_table after mutating the source (incremental NSW "
-            "insertion lives on the flat GraphIndex)"
-        )
-
-    add_numpy = add_df
+    add_df = add_numpy = _read_only
 
 
 @dataclass
@@ -3202,8 +2997,7 @@ class LSHIndex(_ListTier):
         instead (faiss ``ITQMatrix``, binary factory ``"ITQ,LSH"``) —
         same storage, same search, strictly better sign bits on
         correlated data (pinned in tests/test_lsh_index.py)."""
-        from .operators.binary import binarize
-        from .operators.pca import itq_rotation, pca_apply, random_rotation
+        from .operators.pca import itq_rotation, random_rotation
 
         nbits = vt.d if nbits is None else int(nbits)
         if nbits <= 0:
@@ -3220,10 +3014,14 @@ class LSHIndex(_ListTier):
             )
         else:
             raise ValueError(f"unknown transform {transform!r} (rr/itq)")
-        projected = pca_apply(base, mean, R)
-        words = binarize(projected, nbits).persist()
-        n = words.count()
-        return cls(vt.spark, vt.d, nbits, R, words, base, n, mean)
+        return cls(vt.spark, vt.d, nbits, R, None, base, mean=mean)._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Project through the seeded rotation, sign-pack."""
+        from .operators.binary import binarize
+        from .operators.pca import pca_apply
+
+        return binarize(pca_apply(rows, self.mean, self.rotation), self.nbits)
 
     def _project_queries(self, queries: DataFrame, qid_col: str, qvec_col: str) -> DataFrame:
         from .operators.pca import pca_project_col
@@ -3294,26 +3092,6 @@ class LSHIndex(_ListTier):
         words = binarize_np(proj.astype(np.float32))
         return np.array([w.tobytes() for w in words], dtype=object)
 
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "LSHIndex":
-        """faiss ``IndexLSH::add``: project through the FROZEN seeded
-        rotation, sign-pack, append; the refine source grows in step."""
-        from .operators.binary import binarize
-        from .operators.pca import pca_apply
-
-        rows = _ivf_add_rows(df, id_col, vec_col)
-        projected = pca_apply(rows, self.mean, self.rotation)
-        _append_frame(self, "words", binarize(projected, self.nbits))
-        if self._source is not None:
-            self._source = self._source.unionByName(rows)
-        return self
-
-    def remove_ids(self, ids) -> int:
-        """faiss ``IndexLSH::remove_ids`` (explicit labels, no
-        renumbering); the refine source shrinks in step."""
-        removed = super().remove_ids(ids)
-        if self._source is not None:
-            self._source = _drop_ids(self._source, ids)
-        return removed
 
 
 @dataclass
@@ -3346,12 +3124,12 @@ class BinaryHashIndex(_ListTier):
 
     @classmethod
     def from_table(cls, vt, b: int = 16, n_slices: int = 1) -> "BinaryHashIndex":
+        return cls(vt.spark, vt.d, b, n_slices, None)._fill(_float_view(vt))
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
         from .operators.binary import binary_hash_table
 
-        base = _float_view(vt)
-        hashed = binary_hash_table(base, vt.d, b, n_slices).persist()
-        n = hashed.count()
-        return cls(vt.spark, vt.d, b, n_slices, hashed, n)
+        return binary_hash_table(rows, self.d, self.b, self.n_slices)
 
     def search(
         self, queries: DataFrame, k: int, nflip: int = 0,
@@ -3382,20 +3160,10 @@ class BinaryHashIndex(_ListTier):
             self.n_slices, qid_col=qid_col, qvec_col=qvec_col,
         )
 
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "BinaryHashIndex":
-        """faiss ``IndexBinaryHash::add`` — hashing is training-free,
-        so add is a pure encode+append."""
-        from .operators.binary import binary_hash_table
-
-        new = binary_hash_table(
-            _ivf_add_rows(df, id_col, vec_col), self.d, self.b, self.n_slices
-        )
-        _append_frame(self, "hashed", new)
-        return self
 
 
 @dataclass
-class IMIIndex(_MergeTier):
+class IMIIndex(_Decoded, _MergeTier):
     """Inverted multi-index — faiss ``MultiIndexQuantizer`` coarse
     quantizer feeding flat inverted lists (``index_factory("IMI2x8")``
     ≙ IndexIVFFlat over the product quantizer): cell = composite of
@@ -3422,15 +3190,23 @@ class IMIIndex(_MergeTier):
     def from_table(
         cls, vt, b: int = 4, sample_size: int = 16384, iters: int = 10
     ) -> "IMIIndex":
-        from .operators.similarity import imi_assign, imi_train
+        from .operators.similarity import imi_train
 
         base = _float_view(vt)
         C0, C1 = imi_train(
             base, b, vt.d, sample_size=sample_size, iters=iters
         )
-        assigned = imi_assign(base, C0, C1).persist()
-        n = assigned.count()
-        return cls(vt.spark, vt.d, b, C0, C1, assigned, n)
+        return cls(vt.spark, vt.d, b, C0, C1, None)._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Assign against both sub-quantizers (the lists store the
+        vectors themselves)."""
+        from .operators.similarity import imi_assign
+
+        return imi_assign(rows, self.C0, self.C1)
+
+    def _decode(self):
+        return _float_rows
 
     @property
     def nlist(self) -> int:
@@ -3456,29 +3232,14 @@ class IMIIndex(_MergeTier):
             max_codes=max_codes,
         )
 
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "IMIIndex":
-        """faiss ``add``: assign against the FROZEN sub-quantizers,
-        append."""
-        from .operators.similarity import imi_assign
-
-        new = imi_assign(_ivf_add_rows(df, id_col, vec_col), self.C0, self.C1)
-        _append_frame(self, "assigned", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical BOTH sub-quantizers."""
         return (self.d, self.b, self.C0, self.C1)
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Exact — IMI lists store full vectors (IndexIVFFlat)."""
-        row = self.assigned.where(F.col("id") == int(key)).select("vec").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        return np.asarray(row[0]["vec"], np.float64)
 
 
 @dataclass
-class RQIndex(_MergeTier):
+class RQIndex(_AddCodes):
     """Residual-quantizer tier — faiss ``IndexResidualQuantizer``
     (``index_factory("RQ<m>x8")``): m sequential full-width 256-entry
     stages, codes are the greedy argmin chain, search is LUT-only via
@@ -3487,6 +3248,7 @@ class RQIndex(_MergeTier):
 
     _kind = "rq"
     _frame = "codes"
+    _code_schema = "id long, code binary, recn double"
 
     spark: SparkSession
     d: int
@@ -3506,16 +3268,35 @@ class RQIndex(_MergeTier):
         ≙ the LocalSearchQuantizer ICM encode move (coordinate-descent
         refinement, composable with any beam). The index remembers
         both so add/sa_encode stay self-consistent."""
-        from .operators.rq import rq_encode, rq_train
+        from .operators.rq import rq_train
 
         base = _float_view(vt)
         books = rq_train(base, m, sample_size=sample_size, iters=iters)
-        codes = rq_encode(base, books, beam=beam, icm_sweeps=icm_sweeps).persist()
-        n = codes.count()
         return cls(
-            vt.spark, vt.d, books, codes, n,
+            vt.spark, vt.d, books, None,
             beam=int(beam), icm_sweeps=int(icm_sweeps),
+        )._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.rq import rq_encode
+
+        return rq_encode(
+            rows, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps
         )
+
+    def _encode_np(self, x: np.ndarray) -> np.ndarray:
+        from .operators.rq import rq_assign_np
+
+        return rq_assign_np(
+            x, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps
+        )
+
+    def _decode(self):
+        """Codeword SUM (``IndexResidualQuantizer::reconstruct``)."""
+        from .operators.rq import rq_decode_np
+
+        books = self.codebooks
+        return lambda pdf: rq_decode_np(_codes(pdf), books)
 
     def search(self, queries: DataFrame, k: int) -> DataFrame:
         from .operators.rq import rq_search
@@ -3530,18 +3311,6 @@ class RQIndex(_MergeTier):
 
         return rq_range_search(self.codes, self.codebooks, queries, radius)
 
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "RQIndex":
-        """faiss ``add``: encode with the FROZEN stage codebooks,
-        append."""
-        from .operators.rq import rq_encode
-
-        new = rq_encode(
-            _ivf_add_rows(df, id_col, vec_col), self.codebooks,
-            beam=self.beam, icm_sweeps=self.icm_sweeps,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Stage chains are comparable only under the IDENTICAL
         codebooks AND encode discipline (a donor encoded with a
@@ -3549,64 +3318,13 @@ class RQIndex(_MergeTier):
         vectors, silently mixing quality tiers)."""
         return (self.d, self.beam, self.icm_sweeps, self.codebooks)
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Codeword SUM (``IndexResidualQuantizer::reconstruct``)."""
-        from .operators.rq import rq_decode_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        code = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return rq_decode_np(code, self.codebooks)[0]
-
-    # -- standalone codec (faiss ResidualQuantizer sa_encode/sa_decode) ----
-
     @property
     def sa_code_size(self) -> int:
         return len(self.codebooks)  # m bytes/vector
 
-    def sa_encode(self, x: np.ndarray) -> np.ndarray:
-        from .operators.rq import rq_assign_np
-
-        x = np.atleast_2d(np.asarray(x, np.float64))
-        if x.shape[1] != self.d:
-            raise ValueError(f"expected (n, {self.d}) array, got {x.shape}")
-        codes = rq_assign_np(x, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps)
-        return np.array([row.tobytes() for row in codes], dtype=object)
-
-    def sa_decode(self, codes) -> np.ndarray:
-        from .operators.rq import rq_decode_np
-
-        rows = [np.frombuffer(c, dtype=np.uint8) for c in codes]
-        if not rows:
-            return np.zeros((0, self.d), dtype=np.float32)
-        return rq_decode_np(np.stack(rows), self.codebooks).astype(np.float32)
-
-    def add_sa_codes(self, codes, ids=None) -> "RQIndex":
-        """faiss ``Index::add_sa_codes``: ingest PRE-ENCODED stage
-        chains verbatim; the stored ``recn`` (‖reconstruction‖², the
-        LUT-only search term) is derived from the codes themselves."""
-        rows = [np.frombuffer(bytes(c), dtype=np.uint8) for c in codes]
-        for c in rows:
-            if len(c) != self.sa_code_size:
-                raise ValueError(
-                    f"add_sa_codes: expected {self.sa_code_size}-byte "
-                    f"codes (sa_code_size), got {len(c)}"
-                )
-        extra = None
-        if rows:
-            from .operators.rq import rq_decode_np
-
-            rec = rq_decode_np(np.stack(rows), self.codebooks)
-            extra = {"recn": (rec * rec).sum(1)}
-        return _add_sa_codes_frame(
-            self, "codes", codes, ids,
-            "id long, code binary, recn double", extra,
-        )
-
 
 @dataclass
-class PRQIndex(_MergeTier):
+class PRQIndex(_AddCodes):
     """Product-residual-quantizer tier — faiss
     ``IndexProductResidualQuantizer`` (``index_factory("PRQ<ns>x<m>x8")``)
     and, with ``icm_sweeps`` > 0, the ``IndexProductLocalSearchQuantizer``
@@ -3622,6 +3340,7 @@ class PRQIndex(_MergeTier):
 
     _kind = "prq"
     _frame = "codes"
+    _code_schema = "id long, code binary, recn double"
 
     spark: SparkSession
     d: int
@@ -3637,19 +3356,39 @@ class PRQIndex(_MergeTier):
         iters: int = 10, beam: int = 1, icm_sweeps: int = 0,
         nbits: int = 8,
     ) -> "PRQIndex":
-        from .operators.rq import prq_encode, prq_train
+        from .operators.rq import prq_train
 
         if vt.d % nsplits:
             raise ValueError(f"d={vt.d} not divisible by nsplits={nsplits}")
         base = _float_view(vt)
         books = prq_train(base, nsplits, m, sample_size=sample_size,
                           iters=iters, nbits=nbits)
-        codes = prq_encode(base, books, beam=beam, icm_sweeps=icm_sweeps).persist()
-        n = codes.count()
         return cls(
-            vt.spark, vt.d, books, codes, n,
+            vt.spark, vt.d, books, None,
             beam=int(beam), icm_sweeps=int(icm_sweeps),
+        )._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.rq import prq_encode
+
+        return prq_encode(
+            rows, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps
         )
+
+    def _encode_np(self, x: np.ndarray) -> np.ndarray:
+        from .operators.rq import prq_assign_np
+
+        return prq_assign_np(
+            x, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps
+        )
+
+    def _decode(self):
+        """Per-block codeword sums concatenated
+        (``ProductAdditiveQuantizer::decode``)."""
+        from .operators.rq import prq_decode_np
+
+        books = self.codebooks
+        return lambda pdf: prq_decode_np(_codes(pdf), books)
 
     @property
     def nsplits(self) -> int:
@@ -3667,82 +3406,19 @@ class PRQIndex(_MergeTier):
 
         return prq_range_search(self.codes, self.codebooks, queries, radius)
 
-    def add_df(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> "PRQIndex":
-        """faiss ``add``: encode with the FROZEN per-block codebooks,
-        append."""
-        from .operators.rq import prq_encode
-
-        new = prq_encode(
-            _ivf_add_rows(df, id_col, vec_col), self.codebooks,
-            beam=self.beam, icm_sweeps=self.icm_sweeps,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical codebooks AND encode widths (the RQIndex
         discipline)."""
         return (self.d, self.beam, self.icm_sweeps, self.codebooks)
-
-    def reconstruct(self, key: int) -> np.ndarray:
-        """Per-block codeword sums concatenated
-        (``ProductAdditiveQuantizer::decode``)."""
-        from .operators.rq import prq_decode_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        code = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return prq_decode_np(code, self.codebooks)[0]
-
-    # -- standalone codec (faiss ProductAdditiveQuantizer sa_encode/decode) --
 
     @property
     def sa_code_size(self) -> int:
         ns, m = self.codebooks.shape[:2]
         return ns * m  # bytes/vector
 
-    def sa_encode(self, x: np.ndarray) -> np.ndarray:
-        from .operators.rq import prq_assign_np
-
-        x = np.atleast_2d(np.asarray(x, np.float64))
-        if x.shape[1] != self.d:
-            raise ValueError(f"expected (n, {self.d}) array, got {x.shape}")
-        codes = prq_assign_np(x, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps)
-        return np.array([row.tobytes() for row in codes], dtype=object)
-
-    def sa_decode(self, codes) -> np.ndarray:
-        from .operators.rq import prq_decode_np
-
-        rows = [np.frombuffer(c, dtype=np.uint8) for c in codes]
-        if not rows:
-            return np.zeros((0, self.d), dtype=np.float32)
-        return prq_decode_np(np.stack(rows), self.codebooks).astype(np.float32)
-
-    def add_sa_codes(self, codes, ids=None) -> "PRQIndex":
-        """faiss ``Index::add_sa_codes``: ingest pre-encoded per-block
-        chains verbatim; ``recn`` is derived from the codes themselves."""
-        rows = [np.frombuffer(bytes(c), dtype=np.uint8) for c in codes]
-        for c in rows:
-            if len(c) != self.sa_code_size:
-                raise ValueError(
-                    f"add_sa_codes: expected {self.sa_code_size}-byte "
-                    f"codes (sa_code_size), got {len(c)}"
-                )
-        extra = None
-        if rows:
-            from .operators.rq import prq_decode_np
-
-            rec = prq_decode_np(np.stack(rows), self.codebooks)
-            extra = {"recn": (rec * rec).sum(1)}
-        return _add_sa_codes_frame(
-            self, "codes", codes, ids,
-            "id long, code binary, recn double", extra,
-        )
-
 
 @dataclass
-class IVFRQIndex(_MergeTier):
+class IVFRQIndex(_Decoded, _MergeTier):
     """IVF + additive-quantized entries — the faiss
     ``IndexIVFResidualQuantizer`` family (``index_factory(
     "IVF<n>,RQ<m>x8")``) and its product/ICM variants:
@@ -3763,9 +3439,6 @@ class IVFRQIndex(_MergeTier):
     _kind = "ivfrq"
     _frame = "codes"
     _partition = "cell"
-    # stores of this kind write the coarse block in its first form
-    # (always present, no dtype key) — see index_io._write_coarse
-    _coarse_v0 = True
 
     spark: SparkSession
     d: int
@@ -3791,19 +3464,14 @@ class IVFRQIndex(_MergeTier):
         from .operators.rq import ivfrq_build
 
         base = _float_view(vt)
-        q = None
-        kw = {}
+        q, kw = None, {}
         if coarse_hnsw_m is not None:
-            from .operators.coarse import HNSWCoarseQuantizer
             from .operators.similarity import ivf_train_centroids
 
             C = ivf_train_centroids(
                 base, n_cells, sample_size=sample_size, iters=iters
             )
-            q = HNSWCoarseQuantizer.train(
-                C, M=int(coarse_hnsw_m),
-                **{"spark": vt.spark, **(coarse_kw or {})},
-            )
+            q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
             kw = {"centroids": C, "assigner": q}
         centroids, books, codes = ivfrq_build(
             base, n_cells, m, nsplits=nsplits, sample_size=sample_size,
@@ -3817,6 +3485,30 @@ class IVFRQIndex(_MergeTier):
             beam=int(beam), icm_sweeps=int(icm_sweeps),
             by_residual=bool(by_residual), quantizer=q,
         )
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        """Assign against the coarse quantizer, additive-encode (the
+        residual when ``by_residual``) with the index's beam/ICM."""
+        from .operators.rq import ivfrq_encode
+        from .operators.similarity import ivf_assign
+
+        return ivfrq_encode(
+            ivf_assign(rows, self.centroids, assigner=self.quantizer),
+            self.centroids, self.codebooks, beam=self.beam,
+            icm_sweeps=self.icm_sweeps, by_residual=self.by_residual,
+        )
+
+    def _decode(self):
+        """Additive decode, + centroid(cell) when ``by_residual``."""
+        from .operators.rq import addq_decode_np
+
+        C, books, by_residual = self.centroids, self.codebooks, self.by_residual
+
+        def dec(pdf: pd.DataFrame) -> np.ndarray:
+            rec = addq_decode_np(_codes(pdf), books)
+            return rec + C[_cells(pdf)] if by_residual else rec
+
+        return dec
 
     @property
     def nlist(self) -> int:
@@ -3878,29 +3570,6 @@ class IVFRQIndex(_MergeTier):
             ),
         )
 
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFRQIndex":
-        """faiss ``IndexIVF::add_with_ids``: assign against the frozen
-        coarse quantizer, additive-encode with the frozen codebooks
-        (and the index's own beam/ICM discipline), append."""
-        from .operators.rq import ivfrq_encode
-        from .operators.similarity import ivf_assign
-
-        new = ivfrq_encode(
-            ivf_assign(
-                _ivf_add_rows(df, id_col, vec_col), self.centroids,
-                assigner=self.quantizer,
-            ),
-            self.centroids,
-            self.codebooks,
-            beam=self.beam,
-            icm_sweeps=self.icm_sweeps,
-            by_residual=self.by_residual,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer, codebooks AND encode discipline (a
         donor encoded with a different beam/residual mode holds
@@ -3910,27 +3579,10 @@ class IVFRQIndex(_MergeTier):
             self.centroids, self.codebooks, *_coarse_state(self.quantizer),
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        """centroid(cell) + additive decode when ``by_residual``, else
-        the plain codeword sum (faiss IVF-additive reconstruct)."""
-        from .operators.rq import addq_decode_np
-
-        row = (
-            self.codes.where(F.col("id") == int(key))
-            .select("code", "cell")
-            .collect()
-        )
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        code = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        rec = addq_decode_np(code, self.codebooks)[0]
-        if self.by_residual:
-            rec = rec + self.centroids[int(row[0]["cell"])]
-        return rec
 
 
 @dataclass
-class RQFastScanIndex(_MergeTier):
+class RQFastScanIndex(_FlatCodes):
     """faiss ``IndexAdditiveQuantizerFastScan`` in its residual form
     (``IndexResidualQuantizerFastScan``; factory ``RQ<m>x4fs``): 4-bit
     RQ stages packed two per stored byte, additive LUT search via
@@ -3959,19 +3611,40 @@ class RQFastScanIndex(_MergeTier):
         cls, vt, m: int, sample_size: int = 16384, iters: int = 10,
         beam: int = 1, icm_sweeps: int = 0,
     ) -> "RQFastScanIndex":
-        from .operators.rq import rq_encode, rq_train
+        from .operators.rq import rq_train
 
         base = _float_view(vt)
         books = rq_train(base, m, sample_size=sample_size, iters=iters,
                          nbits=4)
-        codes = rq_encode(
-            base, books, beam=beam, icm_sweeps=icm_sweeps, pack4=True
-        ).persist()
-        n = codes.count()
         return cls(
-            vt.spark, vt.d, books, codes, n,
+            vt.spark, vt.d, books, None,
             beam=int(beam), icm_sweeps=int(icm_sweeps),
+        )._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.rq import rq_encode
+
+        return rq_encode(
+            rows, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps,
+            pack4=True,
         )
+
+    def _encode_np(self, x: np.ndarray) -> np.ndarray:
+        from .operators.pq import pq_pack4_np
+        from .operators.rq import rq_assign_np
+
+        return pq_pack4_np(
+            rq_assign_np(
+                x, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps
+            )
+        )
+
+    def _decode(self):
+        from .operators.pq import pq_unpack4_np
+        from .operators.rq import rq_decode_np
+
+        books, m = self.codebooks, self.m
+        return lambda pdf: rq_decode_np(pq_unpack4_np(_codes(pdf), m), books)
 
     @property
     def m(self) -> int:
@@ -3995,65 +3668,17 @@ class RQFastScanIndex(_MergeTier):
             "implement range search; use RQIndex instead"
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        from .operators.pq import pq_unpack4_np
-        from .operators.rq import rq_decode_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        packed = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return rq_decode_np(pq_unpack4_np(packed, self.m), self.codebooks)[0]
-
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "RQFastScanIndex":
-        from .operators.rq import rq_encode
-
-        new = rq_encode(
-            _ivf_add_rows(df, id_col, vec_col), self.codebooks,
-            beam=self.beam, icm_sweeps=self.icm_sweeps, pack4=True,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical codebooks AND encode widths."""
         return (self.d, self.beam, self.icm_sweeps, self.codebooks)
-
-    # -- standalone codec ---------------------------------------------------
 
     @property
     def sa_code_size(self) -> int:
         return (self.m + 1) // 2  # packed bytes/vector
 
-    def sa_encode(self, x: np.ndarray) -> np.ndarray:
-        from .operators.pq import pq_pack4_np
-        from .operators.rq import rq_assign_np
-
-        x = np.atleast_2d(np.asarray(x, np.float64))
-        if x.shape[1] != self.d:
-            raise ValueError(f"expected (n, {self.d}) array, got {x.shape}")
-        packed = pq_pack4_np(
-            rq_assign_np(x, self.codebooks, beam=self.beam,
-                         icm_sweeps=self.icm_sweeps)
-        )
-        return np.array([row.tobytes() for row in packed], dtype=object)
-
-    def sa_decode(self, codes) -> np.ndarray:
-        from .operators.pq import pq_unpack4_np
-        from .operators.rq import rq_decode_np
-
-        rows = [np.frombuffer(c, dtype=np.uint8) for c in codes]
-        if not rows:
-            return np.zeros((0, self.d), dtype=np.float32)
-        return rq_decode_np(
-            pq_unpack4_np(np.stack(rows), self.m), self.codebooks
-        ).astype(np.float32)
-
 
 @dataclass
-class PRQFastScanIndex(_MergeTier):
+class PRQFastScanIndex(_FlatCodes):
     """faiss ``IndexProductResidualQuantizerFastScan`` (factory
     ``PRQ<ns>x<m>x4fs``; with ``icm_sweeps`` > 0 the
     ``IndexProductLocalSearchQuantizerFastScan`` encode discipline,
@@ -4083,21 +3708,42 @@ class PRQFastScanIndex(_MergeTier):
         cls, vt, nsplits: int, m: int, sample_size: int = 16384,
         iters: int = 10, beam: int = 1, icm_sweeps: int = 0,
     ) -> "PRQFastScanIndex":
-        from .operators.rq import prq_encode, prq_train
+        from .operators.rq import prq_train
 
         if vt.d % nsplits:
             raise ValueError(f"d={vt.d} not divisible by nsplits={nsplits}")
         base = _float_view(vt)
         books = prq_train(base, nsplits, m, sample_size=sample_size,
                           iters=iters, nbits=4)
-        codes = prq_encode(
-            base, books, beam=beam, icm_sweeps=icm_sweeps, pack4=True
-        ).persist()
-        n = codes.count()
         return cls(
-            vt.spark, vt.d, books, codes, n,
+            vt.spark, vt.d, books, None,
             beam=int(beam), icm_sweeps=int(icm_sweeps),
+        )._fill(base)
+
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.rq import prq_encode
+
+        return prq_encode(
+            rows, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps,
+            pack4=True,
         )
+
+    def _encode_np(self, x: np.ndarray) -> np.ndarray:
+        from .operators.pq import pq_pack4_np
+        from .operators.rq import prq_assign_np
+
+        return pq_pack4_np(
+            prq_assign_np(
+                x, self.codebooks, beam=self.beam, icm_sweeps=self.icm_sweeps
+            )
+        )
+
+    def _decode(self):
+        from .operators.pq import pq_unpack4_np
+        from .operators.rq import prq_decode_np
+
+        books, m = self.codebooks, self.m_total
+        return lambda pdf: prq_decode_np(pq_unpack4_np(_codes(pdf), m), books)
 
     @property
     def nsplits(self) -> int:
@@ -4125,67 +3771,17 @@ class PRQFastScanIndex(_MergeTier):
             "implement range search; use PRQIndex instead"
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        from .operators.pq import pq_unpack4_np
-        from .operators.rq import prq_decode_np
-
-        row = self.codes.where(F.col("id") == int(key)).select("code").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        packed = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        return prq_decode_np(
-            pq_unpack4_np(packed, self.m_total), self.codebooks
-        )[0]
-
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "PRQFastScanIndex":
-        from .operators.rq import prq_encode
-
-        new = prq_encode(
-            _ivf_add_rows(df, id_col, vec_col), self.codebooks,
-            beam=self.beam, icm_sweeps=self.icm_sweeps, pack4=True,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical codebooks AND encode widths."""
         return (self.d, self.beam, self.icm_sweeps, self.codebooks)
-
-    # -- standalone codec ---------------------------------------------------
 
     @property
     def sa_code_size(self) -> int:
         return (self.m_total + 1) // 2  # packed bytes/vector
 
-    def sa_encode(self, x: np.ndarray) -> np.ndarray:
-        from .operators.pq import pq_pack4_np
-        from .operators.rq import prq_assign_np
-
-        x = np.atleast_2d(np.asarray(x, np.float64))
-        if x.shape[1] != self.d:
-            raise ValueError(f"expected (n, {self.d}) array, got {x.shape}")
-        packed = pq_pack4_np(
-            prq_assign_np(x, self.codebooks, beam=self.beam,
-                          icm_sweeps=self.icm_sweeps)
-        )
-        return np.array([row.tobytes() for row in packed], dtype=object)
-
-    def sa_decode(self, codes) -> np.ndarray:
-        from .operators.pq import pq_unpack4_np
-        from .operators.rq import prq_decode_np
-
-        rows = [np.frombuffer(c, dtype=np.uint8) for c in codes]
-        if not rows:
-            return np.zeros((0, self.d), dtype=np.float32)
-        return prq_decode_np(
-            pq_unpack4_np(np.stack(rows), self.m_total), self.codebooks
-        ).astype(np.float32)
-
 
 @dataclass
-class IVFRQFastScanIndex(_MergeTier):
+class IVFRQFastScanIndex(_Decoded, _MergeTier):
     """faiss ``IndexIVFAdditiveQuantizerFastScan`` (factory
     ``IVF<n>,RQ<m>x4fs`` for the residual form,
     ``IVF<n>,PRQ<ns>x<m>x4fs`` / ``IVF<n>,PLSQ<ns>x<m>x4fs`` for the
@@ -4234,6 +3830,30 @@ class IVFRQFastScanIndex(_MergeTier):
             by_residual=bool(by_residual),
         )
 
+    def _encode_df(self, rows: DataFrame) -> DataFrame:
+        from .operators.rq import ivfrq_encode
+        from .operators.similarity import ivf_assign
+
+        return ivfrq_encode(
+            ivf_assign(rows, self.centroids), self.centroids, self.codebooks,
+            beam=self.beam, icm_sweeps=self.icm_sweeps,
+            by_residual=self.by_residual, pack4=True,
+        )
+
+    def _decode(self):
+        """Unpack, additive decode, + centroid(cell) when ``by_residual``."""
+        from .operators.pq import pq_unpack4_np
+        from .operators.rq import addq_decode_np
+
+        C, books, m = self.centroids, self.codebooks, self.m
+        by_residual = self.by_residual
+
+        def dec(pdf: pd.DataFrame) -> np.ndarray:
+            rec = addq_decode_np(pq_unpack4_np(_codes(pdf), m), books)
+            return rec + C[_cells(pdf)] if by_residual else rec
+
+        return dec
+
     @property
     def m(self) -> int:
         """Stored 4-bit stages per vector (ns·m for the product form)."""
@@ -4265,24 +3885,6 @@ class IVFRQFastScanIndex(_MergeTier):
             "does not implement range search; use IVFRQIndex instead"
         )
 
-    def add_df(
-        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFRQFastScanIndex":
-        from .operators.rq import ivfrq_encode
-        from .operators.similarity import ivf_assign
-
-        new = ivfrq_encode(
-            ivf_assign(_ivf_add_rows(df, id_col, vec_col), self.centroids),
-            self.centroids,
-            self.codebooks,
-            beam=self.beam,
-            icm_sweeps=self.icm_sweeps,
-            by_residual=self.by_residual,
-            pack4=True,
-        )
-        _append_frame(self, "codes", new)
-        return self
-
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer, codebooks AND encode discipline."""
         return (
@@ -4290,26 +3892,10 @@ class IVFRQFastScanIndex(_MergeTier):
             self.centroids, self.codebooks,
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        from .operators.pq import pq_unpack4_np
-        from .operators.rq import addq_decode_np
-
-        row = (
-            self.codes.where(F.col("id") == int(key))
-            .select("code", "cell")
-            .collect()
-        )
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        packed = np.frombuffer(row[0]["code"], np.uint8)[None, :]
-        rec = addq_decode_np(pq_unpack4_np(packed, self.m), self.codebooks)[0]
-        if self.by_residual:
-            rec = rec + self.centroids[int(row[0]["cell"])]
-        return rec
 
 
 @dataclass
-class Flat1DIndex(_ListTier):
+class Flat1DIndex(_Decoded, _ListTier):
     """1-d specialized flat tier — faiss ``IndexFlat1D`` (IndexFlat.h:
     "optimized version for 1D vectors"; built here from a d=1 table via
     ``index_factory("Flat1D")``). Upstream quirk mirrored: distances are
@@ -4536,11 +4122,8 @@ class Flat1DIndex(_ListTier):
             .where(F.col("distance") < r)  # exact strict-< boundary
         )
 
-    def reconstruct(self, key: int) -> np.ndarray:
-        row = self.ranked.where(F.col("id") == int(key)).select("val").collect()
-        if not row:
-            raise KeyError(f"id {key} not in index")
-        return np.array([row[0]["val"]], dtype=np.float32)
+    def _decode(self):
+        return lambda pdf: pdf["val"].to_numpy(np.float32)[:, None]
 
     def add_df(self, df: DataFrame, id_col: str = "id", val_col: str = "val") -> "Flat1DIndex":
         """Append + re-rank (the upstream ``update_permutation`` after

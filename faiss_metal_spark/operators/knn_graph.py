@@ -640,8 +640,8 @@ def graph_search(
 
     ``decode`` (r11, the graph-over-compressed-storage hook — faiss
     ``IndexHNSWSQ``/``IndexHNSWPQ``): a callable ``pdf → (n, d)
-    float64`` reading a ``code`` column (the same contract as
-    ``ivf_search(decode=)``). When set, ``vec_col`` holds CODES and
+    float64`` reading the stored ``vec_col`` column (the same contract
+    as ``ivf_search(decode=)``). When set, ``vec_col`` holds CODES and
     every distance is ‖q − decode(code)‖² — faiss's storage
     DistanceComputer. The persisted per-search cache stays the
     compact code table, and decoding happens on FETCHED candidates
@@ -696,7 +696,7 @@ def graph_search(
             for pdf in pdfs:
                 if len(pdf) == 0:
                     continue
-                Vd = decode(pdf.rename(columns={"_vv": "code"}))
+                Vd = decode(pdf.rename(columns={"_vv": vec_col}))
                 Qm = np.stack(pdf["_qv"].to_numpy()).astype(np.float64)
                 yield pd.DataFrame(
                     {

@@ -263,12 +263,12 @@ def _fuse_lut4(lut: np.ndarray) -> np.ndarray:
     return lut[:, 0::2, b & 15] + lut[:, 1::2, b >> 4]
 
 
-def pq_reconstruct(
-    codes: DataFrame, codebooks: np.ndarray, id_col: str = "id"
+def _decode_frame(
+    codes: DataFrame, decode_np, codebooks: np.ndarray, id_col: str = "id"
 ) -> DataFrame:
-    """Distributed decode: ``(id, vec ARRAY<FLOAT>)`` from the code
-    table (for rerank stages that need approximate float vectors)."""
-    m, _, dsub = codebooks.shape
+    """Distributed decode ``(id, vec ARRAY<FLOAT>)`` of a code table:
+    ``decode_np(codes (n, m) uint8, codebooks)`` per Arrow batch — one
+    ``mapInArrow`` scan, no shuffle."""
     spark = codes.sparkSession
     bc = spark.sparkContext.broadcast(codebooks)
     schema = T.StructType(
@@ -286,7 +286,7 @@ def pq_reconstruct(
             if batch.num_rows == 0:
                 continue
             C = _arrow_codes(batch.column("code"))
-            V = pq_decode_np(C, books).astype(np.float32)
+            V = decode_np(C, books).astype(np.float32)
             n, d = V.shape
             offs = pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32))
             vec_arr = pa.ListArray.from_arrays(offs, pa.array(V.ravel()))
@@ -296,6 +296,14 @@ def pq_reconstruct(
             )
 
     return codes.mapInArrow(dec, schema)
+
+
+def pq_reconstruct(
+    codes: DataFrame, codebooks: np.ndarray, id_col: str = "id"
+) -> DataFrame:
+    """Distributed decode: ``(id, vec ARRAY<FLOAT>)`` from the code
+    table (for rerank stages that need approximate float vectors)."""
+    return _decode_frame(codes, pq_decode_np, codebooks, id_col)
 
 
 def _adc_lut(Q: np.ndarray, codebooks: np.ndarray, metric: str) -> np.ndarray:

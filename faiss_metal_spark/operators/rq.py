@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .knn import _PARTIAL_SCHEMA, _arrow_i64, _arrow_matrix, _finalize
-from .pq import KSUB, _arrow_codes, _binary_array, train_books_np
+from .pq import KSUB, _arrow_codes, _binary_array, _decode_frame, train_books_np
 
 
 def _train_sample_matrix(
@@ -1112,30 +1112,4 @@ def rq_reconstruct(
     code table — the RQ/PRQ twin of ``pq.pq_reconstruct`` (one
     ``mapInArrow`` scan, no shuffle), for rerank stages that need
     approximate float vectors (e.g. a ``Refine(RQ4x8)`` tier)."""
-    spark = codes.sparkSession
-    bc = spark.sparkContext.broadcast(codebooks)
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("vec", T.ArrayType(T.FloatType()), False),
-        ]
-    )
-
-    def dec(batches):
-        import pyarrow as pa
-
-        books = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            C = _arrow_codes(batch.column("code"))
-            V = addq_decode_np(C, books).astype(np.float32)
-            n, d_ = V.shape
-            offs = pa.array(np.arange(0, (n + 1) * d_, d_, dtype=np.int32))
-            vec_arr = pa.ListArray.from_arrays(offs, pa.array(V.ravel()))
-            yield pa.record_batch(
-                [pa.array(_arrow_i64(batch.column(id_col))), vec_arr],
-                names=["id", "vec"],
-            )
-
-    return codes.mapInArrow(dec, schema)
+    return _decode_frame(codes, addq_decode_np, codebooks, id_col)

@@ -51,18 +51,3 @@ def get_spark(app_name: str = "faiss-metal-spark", cpus: int | None = None) -> S
     )
     return builder.getOrCreate()
 
-
-def apply_engine_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally built session.
-
-    The driver passes us its own SparkSession; static configs (memory,
-    master) can't change, but these session confs are what our plans
-    rely on.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass  # immutable in some deployments; plans still work
-    return spark

@@ -225,19 +225,15 @@ def _tier_fields(cls) -> list:
 
 def _write_coarse(index, meta: dict, arrays: dict) -> None:
     """The graph coarse quantizer: its graph in ``arrays/``, its search
-    knobs in ``meta["coarse"]``. Tiers flagged ``_coarse_v0`` keep the
-    block's first form: always present (null without a quantizer), no
-    ``dtype`` key."""
-    q, v0 = index.quantizer, getattr(index, "_coarse_v0", False)
+    knobs in ``meta["coarse"]`` (absent without a quantizer)."""
+    q = index.quantizer
     if q is None:
-        if v0:
-            meta["coarse"] = None
         return
     arrays["coarse_edges"] = q.edges
     arrays["coarse_landmarks"] = q.landmarks
-    meta["coarse"] = {"beam": q.beam, "rounds": q.rounds, "expand": q.expand}
-    if not v0:
-        meta["coarse"]["dtype"] = q.dtype
+    meta["coarse"] = {
+        "beam": q.beam, "rounds": q.rounds, "expand": q.expand, "dtype": q.dtype,
+    }
 
 
 def _write_tier(index, path: str) -> None:
@@ -409,8 +405,9 @@ def clone_index(index):
 
 
 def _read_coarse(meta: dict, arrays: dict):
-    """Rebuild the graph coarse quantizer from an ivf/ivfpq payload
-    (r12; ids persisted as exact float64 < 2^53, re-cast on read)."""
+    """Rebuild the graph coarse quantizer from an IVF-family payload
+    (r12; ids persisted as exact float64 < 2^53, re-cast on read). Older
+    ivfsq/ivfrq stores carry ``"coarse": null`` when there is none."""
     c = meta.get("coarse")
     if not c:
         return None
@@ -423,7 +420,8 @@ def _read_coarse(meta: dict, arrays: dict):
         beam=int(c["beam"]),
         rounds=int(c["rounds"]),
         expand=int(c["expand"]),
-        dtype=str(c.get("dtype", "f32")),  # pre-r13 stores: f32
+        # pre-r13 stores, and older ivfsq/ivfrq ones: f32
+        dtype=str(c.get("dtype", "f32")),
     )
 
 

@@ -6,7 +6,9 @@ filled by ``_Tier.__init_subclass__`` under the tier's ``_kind``), a
 composite ``write_index`` writes explicitly, or on the explicit
 non-persistable list below — so a new tier cannot ship without a store
 format. Every exported ``merge_from`` refuses a foreign tier with
-``ValueError("same index type")`` before touching the donor.
+``ValueError("same index type")`` before touching the donor, and every
+exported tier keeps exactly its pinned public method set — a shared
+base must not hand a tier a method it never had.
 """
 
 from __future__ import annotations
@@ -62,3 +64,145 @@ def test_merge_from_refuses_foreign_tier_first(name):
     foreign = PQIndex if cls is SQ8Index else SQ8Index
     with pytest.raises(ValueError, match="same index type"):
         object.__new__(cls).merge_from(object.__new__(foreign))
+
+
+# public methods of every exported tier, recorded before the tiers
+# shared their codec methods through base classes
+PUBLIC_METHODS = {
+    "BinaryHNSWIndex": (
+        "add_df add_numpy from_table range_search reconstruct release "
+        "search search_numpy"
+    ),
+    "BinaryHashIndex": (
+        "add_df add_numpy from_table range_search release remove_ids "
+        "search search_numpy"
+    ),
+    "BinaryIVFIndex": (
+        "add_df add_numpy from_table merge_from range_search release "
+        "remove_ids search search_numpy"
+    ),
+    "BinaryIndex": (
+        "add_df add_numpy from_table range_search refine_search_numpy "
+        "release remove_ids search search_numpy"
+    ),
+    "Flat1DIndex": (
+        "add_df add_numpy from_df from_table range_search reconstruct "
+        "release remove_ids search search_numpy"
+    ),
+    "GraphIndex": (
+        "add_df add_numpy from_table range_search reconstruct "
+        "reconstruct_batch reconstruct_n release search search_numpy"
+    ),
+    "GraphPQIndex": (
+        "add_df add_numpy from_table range_search reconstruct release "
+        "search search_numpy"
+    ),
+    "GraphSQIndex": (
+        "add_df add_numpy from_table range_search reconstruct release "
+        "search search_numpy"
+    ),
+    "IMIIndex": (
+        "add_df add_numpy from_table merge_from reconstruct release "
+        "remove_ids search search_numpy"
+    ),
+    "IVFFlatDedupIndex": (
+        "add_df add_numpy from_table range_search reconstruct release "
+        "remove_ids search search_numpy update_vectors"
+    ),
+    "IVFIndex": (
+        "add_df add_numpy from_table merge_from range_search "
+        "range_search_preassigned reconstruct release remove_ids "
+        "search search_numpy search_preassigned "
+        "search_preassigned_numpy update_vectors"
+    ),
+    "IVFPQFastScanIndex": (
+        "add_df add_numpy from_table merge_from range_search "
+        "reconstruct release remove_ids search search_numpy"
+    ),
+    "IVFPQIndex": (
+        "add_df add_numpy from_table merge_from polysemous_train "
+        "range_search reconstruct release remove_ids search "
+        "search_numpy search_preassigned search_preassigned_numpy"
+    ),
+    "IVFPQRIndex": (
+        "add_df add_numpy from_table merge_from reconstruct release "
+        "remove_ids search search_numpy"
+    ),
+    "IVFRQFastScanIndex": (
+        "add_df add_numpy from_table merge_from range_search "
+        "reconstruct release remove_ids search search_numpy"
+    ),
+    "IVFRQIndex": (
+        "add_df add_numpy from_table merge_from range_search "
+        "reconstruct release remove_ids search search_numpy "
+        "search_preassigned search_preassigned_numpy"
+    ),
+    "IVFSQIndex": (
+        "add_df add_numpy from_table merge_from range_search "
+        "range_search_preassigned reconstruct release remove_ids "
+        "search search_numpy search_preassigned "
+        "search_preassigned_numpy"
+    ),
+    "LSHIndex": (
+        "add_df add_numpy from_table refine_search_numpy release "
+        "remove_ids sa_encode search search_numpy"
+    ),
+    "NSGIndex": (
+        "add_df add_numpy from_table range_search reconstruct "
+        "reconstruct_batch reconstruct_n release search search_numpy"
+    ),
+    "OPQIndex": (
+        "add_df add_numpy from_table polysemous_train range_search "
+        "reconstruct release remove_ids search search_numpy"
+    ),
+    "PQFastScanIndex": (
+        "add_df add_numpy from_table merge_from range_search "
+        "reconstruct release remove_ids sa_decode sa_encode search "
+        "search_numpy"
+    ),
+    "PQIndex": (
+        "add_df add_numpy add_sa_codes from_table merge_from "
+        "polysemous_train range_search reconstruct release remove_ids "
+        "sa_decode sa_encode search search_numpy"
+    ),
+    "PRQFastScanIndex": (
+        "add_df add_numpy from_table merge_from range_search "
+        "reconstruct release remove_ids sa_decode sa_encode search "
+        "search_numpy"
+    ),
+    "PRQIndex": (
+        "add_df add_numpy add_sa_codes from_table merge_from "
+        "range_search reconstruct release remove_ids sa_decode "
+        "sa_encode search search_numpy"
+    ),
+    "RQFastScanIndex": (
+        "add_df add_numpy from_table merge_from range_search "
+        "reconstruct release remove_ids sa_decode sa_encode search "
+        "search_numpy"
+    ),
+    "RQIndex": (
+        "add_df add_numpy add_sa_codes from_table merge_from "
+        "range_search reconstruct release remove_ids sa_decode "
+        "sa_encode search search_numpy"
+    ),
+    "SQ8Index": (
+        "add_df add_numpy add_sa_codes from_table merge_from "
+        "range_search reconstruct release remove_ids sa_decode "
+        "sa_encode search search_numpy"
+    ),
+}
+
+
+TIER_CLASSES = [n for n in INDEX_CLASSES if issubclass(getattr(fms, n), _Tier)]
+
+
+def test_tier_public_methods_pinned():
+    got = {
+        n: sorted(
+            a
+            for a in dir(getattr(fms, n))
+            if not a.startswith("_") and callable(getattr(getattr(fms, n), a))
+        )
+        for n in TIER_CLASSES
+    }
+    assert got == {n: sorted(v.split()) for n, v in PUBLIC_METHODS.items()}
