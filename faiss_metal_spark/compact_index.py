@@ -131,30 +131,6 @@ def _append_frame(index, frame_attr: str, new_rows: DataFrame) -> None:
     setattr(index, frame_attr, new)
 
 
-def _preassign_hook(assign) -> tuple[np.ndarray, object]:
-    """Shared faiss ``search_preassigned`` plumbing: validate the
-    caller-supplied (nq, nprobe) cell matrix is indexed by qid and
-    covers max(qid)+1 rows (clear error up front, not an executor
-    IndexError at collect time); -1 entries are the faiss
-    skip-this-probe-slot sentinel (dropped at probe-map build).
-    Returns (A, by_qid hook) for the probe_cells= parameter."""
-    A = np.atleast_2d(np.asarray(assign, dtype=np.int64))
-
-    def hook(Q, qids):
-        qarr = np.asarray(qids, np.int64)
-        if qarr.size and int(qarr.max()) >= len(A):
-            raise ValueError(
-                f"search_preassigned: assign covers {len(A)} queries "
-                f"(rows) but the batch contains qid {int(qarr.max())} "
-                "— assign is indexed by qid and must cover max(qid)+1 "
-                "rows"
-            )
-        return A[qarr]
-
-    hook.by_qid = True
-    return A, hook
-
-
 def _ivf_add_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     # cast to the stored FP32 layout so the union with the existing
     # inverted file type-checks regardless of the caller's element type
@@ -195,6 +171,21 @@ def _hnsw_coarse(spark, C: np.ndarray, coarse_hnsw_m, coarse_kw):
     return HNSWCoarseQuantizer.train(
         C, M=int(coarse_hnsw_m), **{"spark": spark, **(coarse_kw or {})}
     )
+
+
+def _fused_coarse(vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw):
+    """``(quantizer, build kwargs)`` for a fused IVF builder
+    (``ivfpq_build`` / ``ivfrq_build``): ``(None, {})`` without
+    ``coarse_hnsw_m`` — the builder trains its own centroids — else
+    centroids trained here and the graph quantizer over them, which
+    the builder then assigns through."""
+    if coarse_hnsw_m is None:
+        return None, {}
+    from .operators.similarity import ivf_train_centroids
+
+    C = ivf_train_centroids(base, n_cells, sample_size=sample_size, iters=iters)
+    q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
+    return q, {"centroids": C, "assigner": q}
 
 
 # -- decode batches: the stored rows a ``_decode()`` closure receives ------
@@ -597,6 +588,131 @@ class _AddCodes(_FlatCodes):
         return self
 
 
+class _IVF(_Decoded, _MergeTier):
+    """faiss ``IndexIVF`` as a composition of three parts:
+
+    - the coarse quantizer: ``centroids``, plus the optional graph
+      ``quantizer`` that then ranks probes (and assigns adds);
+    - the inverted lists: ``_frame``, one row per entry with its
+      ``cell``, ``partitionBy("cell")`` in a store;
+    - the codec's scan kernel, ``_kernel()``
+      (``operators.similarity.ScanKernel``) — by default the exact
+      ``metric`` over the ``_decode()``-d rows.
+
+    Every search is one call of the probe-and-scan driver,
+    ``operators.similarity.probe_scan``."""
+
+    _partition = "cell"
+
+    @property
+    def nlist(self) -> int:
+        return len(self.centroids)
+
+    def _kernel(self):
+        from .operators.similarity import decode_scan
+
+        return decode_scan(getattr(self, "metric", "l2"), decode=self._decode())
+
+    def _probe_cells(self, nprobe: int):
+        """Probe ranking hook: the graph coarse quantizer's beam search
+        when the tier has one, else None (exact centroid order)."""
+        q = getattr(self, "quantizer", None)
+        return q.probe_fn(nprobe) if q else None
+
+    def _scan(self, queries, nprobe, probe_cells, sel=None, kernel=None, **kw):
+        from .operators.similarity import probe_scan
+
+        return probe_scan(
+            _sel_rows(getattr(self, self._frame), sel), queries,
+            kernel or self._kernel(), nprobe,
+            centroids=getattr(self, "centroids", None),
+            probe_cells=probe_cells, **kw,
+        )
+
+    def search(
+        self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
+        max_codes: int | None = None,
+    ) -> DataFrame:
+        """faiss ``IndexIVF::search``: top-k within the ``nprobe``
+        probed cells, min(k, probed rows) results per query. ``sel`` ≙
+        faiss ``SearchParametersIVF::sel`` (IDSelector): restrict the
+        search to a stored-id subset — one predicate on the inverted
+        lists before the probe machinery (see ``_sel_rows``).
+        ``max_codes`` ≙ faiss ``SearchParametersIVF::max_codes``: bound
+        the entries scanned per query (whole-list granularity — see
+        ``probe_scan``); with ``sel`` set the bound counts SELECTED
+        entries — faiss counts raw list sizes (documented deviation,
+        see COVERAGE.md)."""
+        return self._scan(
+            queries, nprobe, self._probe_cells(nprobe), sel=sel, k=k,
+            max_codes=max_codes,
+        )
+
+
+class _Preassigned(_IVF):
+    """An IVF tier with ``range_search`` and ``search_preassigned``."""
+
+    def range_search(
+        self, queries: DataFrame, radius: float, nprobe: int = 8
+    ) -> DataFrame:
+        """faiss ``IndexIVF::range_search``: the radius filter over the
+        probed cells, applied to the codec's distance — exact within
+        cell coverage, a subset under partial probes, never a false
+        positive; (qid, label, distance) unordered like the flat
+        ``range_search``."""
+        return self._scan(queries, nprobe, self._probe_cells(nprobe), radius=radius)
+
+    def _preassigned(self, queries: DataFrame, assign, **kw) -> DataFrame:
+        """The caller-supplied (nq, nprobe) cell matrix as the probe
+        ranking: indexed by qid, so it must cover max(qid)+1 rows —
+        checked when the batch is collected, with the shapes in the
+        message, instead of a bare numpy IndexError inside an executor;
+        -1 entries are the faiss skip-this-probe-slot sentinel."""
+        A = np.atleast_2d(np.asarray(assign, dtype=np.int64))
+
+        def hook(Q, qids):
+            qarr = np.asarray(qids, np.int64)
+            if qarr.size and int(qarr.max()) >= len(A):
+                raise ValueError(
+                    f"search_preassigned: assign covers {len(A)} queries "
+                    f"(rows) but the batch contains qid {int(qarr.max())} "
+                    "— assign is indexed by qid and must cover max(qid)+1 "
+                    "rows"
+                )
+            return A[qarr]
+
+        hook.by_qid = True
+        return self._scan(queries, A.shape[1], hook, **kw)
+
+    def search_preassigned(
+        self, queries: DataFrame, k: int, assign: np.ndarray
+    ) -> DataFrame:
+        """≙ faiss ``IndexIVF::search_preassigned``: the CALLER supplies
+        each query's probe cells instead of ranking against the coarse
+        quantizer — the hook for cached, sharded, or externally-computed
+        assignments. ``assign[qid]`` lists that query's cells; nprobe =
+        the row width; a ``-1`` entry skips that probe slot (the faiss
+        sentinel coarse quantizers emit for unfillable slots). In-cell
+        search is unchanged, so the engine's own ranking fed back
+        reproduces ``search`` exactly."""
+        return self._preassigned(queries, assign, k=k)
+
+    search_preassigned_numpy = _host_twin("search_preassigned")
+
+
+class _RangePreassigned(_Preassigned):
+    """An IVF tier that also has ``range_search_preassigned``."""
+
+    def range_search_preassigned(
+        self, queries: DataFrame, radius: float, assign: np.ndarray
+    ) -> DataFrame:
+        """≙ faiss ``IndexIVF::range_search_preassigned``: the radius
+        filter over CALLER-supplied probe cells (same assign contract
+        as :meth:`search_preassigned`); the engine's own ranking fed
+        back reproduces ``range_search`` exactly."""
+        return self._preassigned(queries, assign, radius=radius)
+
+
 @dataclass
 class SQ8Index(_Decoded, _MergeTier):
     """Scalar-quantizer tier derived from a VectorTable:
@@ -899,7 +1015,7 @@ class BinaryIVFIndex(_MergeTier):
 
 
 @dataclass
-class IVFIndex(_Decoded, _MergeTier):
+class IVFIndex(_RangePreassigned):
     """Coarse-quantized tier derived from a VectorTable: k-means cells,
     cell-pruned exact search within probed cells (IndexIVFFlat built by
     ``train``/``add`` from a flat index's vectors). ``assigned`` is the
@@ -909,7 +1025,6 @@ class IVFIndex(_Decoded, _MergeTier):
 
     _kind = "ivf"
     _frame = "assigned"
-    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -955,99 +1070,18 @@ class IVFIndex(_Decoded, _MergeTier):
     def _decode(self):
         return _float_rows
 
-    @property
-    def nlist(self) -> int:
-        return len(self.centroids)
-
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
-        max_codes: int | None = None,
-    ) -> DataFrame:
-        """``sel`` ≙ faiss ``SearchParametersIVF::sel`` (IDSelector):
-        restrict the search to a stored-id subset — one predicate on
-        the inverted lists before the probe machinery (see
-        ``_sel_rows``). ``max_codes`` ≙ faiss
-        ``SearchParametersIVF::max_codes``: bound the entries scanned
-        per query (whole-list granularity — see ``ivf_search``); with
-        ``sel`` set the bound counts SELECTED entries, since the
-        predicate applies before the probe machinery."""
-        from .operators.similarity import ivf_search
-
-        return ivf_search(
-            _sel_rows(self.assigned, sel), self.centroids, queries, k,
-            nprobe, metric=self.metric, max_codes=max_codes,
-            probe_cells=(
-                self.quantizer.probe_fn(nprobe) if self.quantizer else None
-            ),
-        )
-
     def range_search(
         self, queries: DataFrame, radius: float, nprobe: int = 8, sel=None
     ) -> DataFrame:
-        """faiss ``IndexIVF::range_search``: radius filter over the
-        probed cells — exact within cell coverage, (qid, label,
-        distance) unordered like the flat range_search. ``sel`` ≙
-        faiss ``SearchParametersIVF::sel``."""
-        from .operators.similarity import ivf_range_search
-
-        return ivf_range_search(
-            _sel_rows(self.assigned, sel),
-            self.centroids,
-            queries,
-            radius,
-            nprobe,
-            metric=self.metric,
-            probe_cells=(
-                self.quantizer.probe_fn(nprobe) if self.quantizer else None
-            ),
-        )
-
-    def range_search_preassigned(
-        self, queries: DataFrame, radius: float, assign: np.ndarray
-    ) -> DataFrame:
-        """≙ faiss ``IndexIVF::range_search_preassigned``: the radius
-        filter over CALLER-supplied probe cells (same assign contract
-        as :meth:`search_preassigned`: indexed by qid, -1 = skip
-        slot); the engine's own ranking fed back reproduces
-        ``range_search`` exactly."""
-        from .operators.similarity import ivf_range_search
-
-        A, hook = _preassign_hook(assign)
-        return ivf_range_search(
-            self.assigned, self.centroids, queries, radius,
-            nprobe=A.shape[1], metric=self.metric, probe_cells=hook,
+        """faiss ``IndexIVF::range_search`` (see the base) with ``sel``
+        ≙ faiss ``SearchParametersIVF::sel``."""
+        return self._scan(
+            queries, nprobe, self._probe_cells(nprobe), sel=sel, radius=radius
         )
 
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer (centroids, metric, graph)."""
         return (self.d, self.metric, self.centroids, *_coarse_state(self.quantizer))
-
-    def search_preassigned(
-        self, queries: DataFrame, k: int, assign: np.ndarray
-    ) -> DataFrame:
-        """≙ faiss ``IndexIVF::search_preassigned``: the CALLER supplies
-        each query's probe cells instead of ranking against the coarse
-        quantizer — the hook for cached, sharded, or externally-computed
-        assignments. ``assign`` is indexed by qid: row ``assign[qid]``
-        lists that query's cells (so it must cover max(qid)+1 rows);
-        nprobe = the row width. In-cell search is unchanged, so a full
-        assignment reproduces ``search`` exactly.
-
-        A ``-1`` entry means "skip this probe slot" (the faiss
-        sentinel: coarse quantizers emit -1 for unfillable slots) —
-        it matches no cell, so the slot contributes nothing. Any qid
-        not covered by ``assign`` raises up front, with the shapes in
-        the message, instead of surfacing as a bare numpy IndexError
-        inside an executor at collect time."""
-        from .operators.similarity import ivf_search
-
-        A, hook = _preassign_hook(assign)
-        return ivf_search(
-            self.assigned, self.centroids, queries, k,
-            nprobe=A.shape[1], metric=self.metric, probe_cells=hook,
-        )
-
-    search_preassigned_numpy = _host_twin("search_preassigned")
 
     def update_vectors(self, ids, x: np.ndarray) -> "IVFIndex":
         """≙ faiss ``IndexIVFFlat::update_vectors(n, idx, x)``: replace
@@ -1185,9 +1219,7 @@ class IVFFlatDedupIndex(_ListTier):
         )
         return reps.select("id", "vec"), inst
 
-    @property
-    def nlist(self) -> int:
-        return len(self.centroids)
+    nlist = _IVF.nlist
 
     @property
     def n_instances(self) -> int:
@@ -1448,7 +1480,7 @@ class IVFFlatDedupIndex(_ListTier):
 
 
 @dataclass
-class IVFSQIndex(_Decoded, _MergeTier):
+class IVFSQIndex(_RangePreassigned):
     """IVF cells over scalar-quantized codes — faiss
     ``IndexIVFScalarQuantizer`` (``index_factory("IVF<n>,SQ8")``):
     k-means coarse cells, b-bit SQ codes stored IN the inverted lists,
@@ -1467,7 +1499,6 @@ class IVFSQIndex(_Decoded, _MergeTier):
 
     _kind = "ivfsq"
     _frame = "codes"
-    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -1509,10 +1540,6 @@ class IVFSQIndex(_Decoded, _MergeTier):
             quantizer=q,
         )._fill(base)
 
-    @property
-    def nlist(self) -> int:
-        return len(self.centroids)
-
     def _encode_df(self, rows: DataFrame) -> DataFrame:
         """One scan: cell assignment (Arrow stage) then the Catalyst
         SQ encode projection — vectors never leave the executors."""
@@ -1528,89 +1555,6 @@ class IVFSQIndex(_Decoded, _MergeTier):
     def _decode(self):
         return _sq_decoder(self.vmin, self.vmax, self.bits)
 
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
-        max_codes: int | None = None,
-    ) -> DataFrame:
-        """``sel`` ≙ faiss ``SearchParametersIVF::sel`` — one predicate
-        on the coded inverted lists before the probe machinery.
-        ``max_codes`` ≙ faiss ``SearchParametersIVF::max_codes`` (whole
-        IVF family); with ``sel`` set the bound counts post-selector
-        entries — faiss counts raw list sizes (documented deviation,
-        see COVERAGE.md)."""
-        from .operators.similarity import ivf_search
-
-        return ivf_search(
-            _sel_rows(self.codes, sel),
-            self.centroids,
-            queries,
-            k,
-            nprobe,
-            metric=self.metric,
-            vec_col="code",
-            decode=self._decode(),
-            max_codes=max_codes,
-            probe_cells=(
-                self.quantizer.probe_fn(nprobe) if self.quantizer else None
-            ),
-        )
-
-    def search_preassigned(
-        self, queries: DataFrame, k: int, assign: np.ndarray
-    ) -> DataFrame:
-        """≙ faiss ``IndexIVF::search_preassigned`` on the SQ-coded
-        inverted file: caller-supplied probe cells indexed by qid
-        (validated up front; -1 = skip slot); in-cell asymmetric
-        search unchanged, so a full assignment reproduces ``search``
-        exactly."""
-        from .operators.similarity import ivf_search
-
-        A, hook = _preassign_hook(assign)
-        return ivf_search(
-            self.codes, self.centroids, queries, k, nprobe=A.shape[1],
-            metric=self.metric, vec_col="code", decode=self._decode(),
-            probe_cells=hook,
-        )
-
-    search_preassigned_numpy = _host_twin("search_preassigned")
-
-    def range_search(
-        self, queries: DataFrame, radius: float, nprobe: int = 8
-    ) -> DataFrame:
-        """faiss ``IndexIVFScalarQuantizer`` inherits
-        ``IndexIVF::range_search``; radius applies to the asymmetric
-        (decoded-code) distance."""
-        from .operators.similarity import ivf_range_search
-
-        return ivf_range_search(
-            self.codes,
-            self.centroids,
-            queries,
-            radius,
-            nprobe,
-            metric=self.metric,
-            vec_col="code",
-            decode=self._decode(),
-            probe_cells=(
-                self.quantizer.probe_fn(nprobe) if self.quantizer else None
-            ),
-        )
-
-    def range_search_preassigned(
-        self, queries: DataFrame, radius: float, assign: np.ndarray
-    ) -> DataFrame:
-        """≙ faiss ``IndexIVF::range_search_preassigned`` over the
-        SQ-coded lists (same assign contract as
-        :meth:`search_preassigned`)."""
-        from .operators.similarity import ivf_range_search
-
-        A, hook = _preassign_hook(assign)
-        return ivf_range_search(
-            self.codes, self.centroids, queries, radius,
-            nprobe=A.shape[1], metric=self.metric, vec_col="code",
-            decode=self._decode(), probe_cells=hook,
-        )
-
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer AND SQ range/width (codes must decode
         the same on both sides)."""
@@ -1621,7 +1565,7 @@ class IVFSQIndex(_Decoded, _MergeTier):
 
 
 @dataclass
-class IVFPQIndex(_Decoded, _MergeTier):
+class IVFPQIndex(_Preassigned):
     """IVF + product-quantized residuals (IndexIVFPQ): m-byte codes,
     per-cell ADC against broadcast query LUTs, L2 only. Codes persist
     ``partitionBy("cell")`` — the inverted-list layout — via
@@ -1629,7 +1573,6 @@ class IVFPQIndex(_Decoded, _MergeTier):
 
     _kind = "ivfpq"
     _frame = "codes"
-    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -1659,15 +1602,9 @@ class IVFPQIndex(_Decoded, _MergeTier):
         from .operators.pq import ivfpq_build
 
         base = _float_view(vt)
-        q, kw = None, {}
-        if coarse_hnsw_m is not None:
-            from .operators.similarity import ivf_train_centroids
-
-            C = ivf_train_centroids(
-                base, n_cells, sample_size=sample_size, iters=iters
-            )
-            q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
-            kw = {"centroids": C, "assigner": q}
+        q, kw = _fused_coarse(
+            vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw
+        )
         centroids, books, codes = ivfpq_build(
             base, n_cells, m, sample_size=sample_size, iters=iters,
             nbits=nbits, **kw,
@@ -1693,13 +1630,14 @@ class IVFPQIndex(_Decoded, _MergeTier):
         C, books = self.centroids, self.codebooks
         return lambda pdf: C[_cells(pdf)] + pq_decode_np(_codes(pdf), books)
 
+    def _kernel(self, ht: int | None = None):
+        from .operators.pq import pq_scan
+
+        return pq_scan(self.centroids, self.codebooks, ht=ht)
+
     @property
     def nbits(self) -> int:
         return int(self.codebooks.shape[1]).bit_length() - 1
-
-    @property
-    def nlist(self) -> int:
-        return len(self.centroids)
 
     def polysemous_train(
         self, n_iter: int = 30_000, seed: int = 123
@@ -1727,51 +1665,11 @@ class IVFPQIndex(_Decoded, _MergeTier):
         self, queries: DataFrame, k: int, nprobe: int = 8,
         ht: int | None = None, sel=None, max_codes: int | None = None,
     ) -> DataFrame:
-        """``sel`` ≙ faiss ``SearchParametersIVF::sel`` — one predicate
-        on the coded inverted lists before the probe machinery.
-        ``max_codes`` ≙ faiss ``SearchParametersIVF::max_codes``; with
-        ``sel`` set the bound counts post-selector entries — faiss
-        counts raw list sizes (documented deviation, see COVERAGE.md)."""
-        from .operators.pq import ivfpq_search
-
-        return ivfpq_search(
-            _sel_rows(self.codes, sel), self.centroids, self.codebooks,
-            queries, k, nprobe, ht=ht, max_codes=max_codes,
-            probe_cells=(
-                self.quantizer.probe_fn(nprobe) if self.quantizer else None
-            ),
-        )
-
-    def search_preassigned(
-        self, queries: DataFrame, k: int, assign: np.ndarray
-    ) -> DataFrame:
-        """≙ faiss ``IndexIVFPQ::search_preassigned``: caller-supplied
-        probe cells indexed by qid (``assign[qid]`` lists that query's
-        cells; must cover max(qid)+1 rows — validated up front; -1 =
-        the faiss skip-this-probe-slot sentinel). In-cell residual ADC
-        is unchanged, so a full assignment reproduces ``search``
-        exactly."""
-        from .operators.pq import ivfpq_search
-
-        A, hook = _preassign_hook(assign)
-        return ivfpq_search(
-            self.codes, self.centroids, self.codebooks, queries, k,
-            nprobe=A.shape[1], probe_cells=hook,
-        )
-
-    search_preassigned_numpy = _host_twin("search_preassigned")
-
-    def range_search(
-        self, queries: DataFrame, radius: float, nprobe: int = 8
-    ) -> DataFrame:
-        """faiss ``IndexIVFPQ::range_search``: residual-ADC radius
-        filter over the probed cells (L2); exact w.r.t. the ADC
-        approximation within cell coverage, subset under partial
-        probes, never a false positive."""
-        from .operators.pq import ivfpq_range_search
-
-        return ivfpq_range_search(
-            self.codes, self.centroids, self.codebooks, queries, radius, nprobe
+        """faiss ``IndexIVF::search`` (see the base) plus ``ht``: the
+        polysemous in-cell Hamming gate (see ``ivfpq_search``)."""
+        return self._scan(
+            queries, nprobe, self._probe_cells(nprobe), sel=sel,
+            kernel=self._kernel(ht), k=k, max_codes=max_codes,
         )
 
     def _trained_state(self) -> tuple:
@@ -1781,7 +1679,7 @@ class IVFPQIndex(_Decoded, _MergeTier):
 
 
 @dataclass
-class IVFPQRIndex(_Decoded, _MergeTier):
+class IVFPQRIndex(_IVF):
     """IVFPQ + refine PQ re-rank — faiss ``IndexIVFPQR``
     (``index_factory("IVF<n>,PQ<m>+<m2>")``): the first PQ encodes the
     cell residual, a second ``m_refine``-byte PQ encodes what the first
@@ -1793,7 +1691,6 @@ class IVFPQRIndex(_Decoded, _MergeTier):
 
     _kind = "ivfpqr"
     _frame = "codes"
-    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -1847,10 +1744,6 @@ class IVFPQRIndex(_Decoded, _MergeTier):
             + pq_decode_np(_codes(pdf), books)
             + pq_decode_np(_codes(pdf, "code2"), rbooks)
         )
-
-    @property
-    def nlist(self) -> int:
-        return len(self.centroids)
 
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 8, k_factor: int = 4
@@ -2170,7 +2063,7 @@ class PQFastScanIndex(_FlatCodes):
 
 
 @dataclass
-class IVFPQFastScanIndex(_Decoded, _MergeTier):
+class IVFPQFastScanIndex(_IVF):
     """faiss ``IndexIVFPQFastScan`` (factory ``IVF<n>,PQ<m>x4fs``):
     the inverted-file composition of :class:`PQFastScanIndex` —
     residual 4-bit codes packed two per byte in cell-partitioned
@@ -2181,7 +2074,6 @@ class IVFPQFastScanIndex(_Decoded, _MergeTier):
 
     _kind = "ivfpq_fs"
     _frame = "codes"
-    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -2233,22 +2125,10 @@ class IVFPQFastScanIndex(_Decoded, _MergeTier):
     def nbits(self) -> int:
         return 4
 
-    @property
-    def nlist(self) -> int:
-        return len(self.centroids)
+    def _kernel(self):
+        from .operators.pq import pq_scan
 
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
-        max_codes: int | None = None,
-    ) -> DataFrame:
-        """``sel``/``max_codes`` ≙ faiss ``SearchParametersIVF`` (the
-        fast-scan tier inherits the whole IVF parameter surface)."""
-        from .operators.pq import ivfpq_search
-
-        return ivfpq_search(
-            _sel_rows(self.codes, sel), self.centroids, self.codebooks,
-            queries, k, nprobe, max_codes=max_codes, packed4=True,
-        )
+        return pq_scan(self.centroids, self.codebooks, packed4=True)
 
     def range_search(self, *_a, **_k):
         """faiss ``IndexIVFFastScan`` has no range_search; explicit
@@ -3163,7 +3043,7 @@ class BinaryHashIndex(_ListTier):
 
 
 @dataclass
-class IMIIndex(_Decoded, _MergeTier):
+class IMIIndex(_IVF):
     """Inverted multi-index — faiss ``MultiIndexQuantizer`` coarse
     quantizer feeding flat inverted lists (``index_factory("IMI2x8")``
     ≙ IndexIVFFlat over the product quantizer): cell = composite of
@@ -3176,7 +3056,6 @@ class IMIIndex(_Decoded, _MergeTier):
 
     _kind = "imi"
     _frame = "assigned"
-    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -3212,25 +3091,11 @@ class IMIIndex(_Decoded, _MergeTier):
     def nlist(self) -> int:
         return len(self.C0) * len(self.C1)
 
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 8, sel=None,
-        max_codes: int | None = None,
-    ) -> DataFrame:
-        """``sel`` / ``max_codes`` ≙ faiss ``SearchParametersIVF`` on
-        the multi-index (faiss ``IndexIVF`` surface applies to IMI too);
-        with ``sel`` set the bound counts post-selector entries — faiss
-        counts raw list sizes (documented deviation, see COVERAGE.md)."""
-        from .operators.similarity import imi_probe_cells, ivf_search
+    def _probe_cells(self, nprobe: int):
+        """The product quantizer ranks every composite cell."""
+        from .operators.similarity import imi_probe_cells
 
-        return ivf_search(
-            _sel_rows(self.assigned, sel),
-            None,  # the product quantizer supplies the ranking
-            queries,
-            k,
-            nprobe,
-            probe_cells=imi_probe_cells(self.C0, self.C1),
-            max_codes=max_codes,
-        )
+        return imi_probe_cells(self.C0, self.C1)
 
     def _trained_state(self) -> tuple:
         """Identical BOTH sub-quantizers."""
@@ -3418,7 +3283,7 @@ class PRQIndex(_AddCodes):
 
 
 @dataclass
-class IVFRQIndex(_Decoded, _MergeTier):
+class IVFRQIndex(_Preassigned):
     """IVF + additive-quantized entries — the faiss
     ``IndexIVFResidualQuantizer`` family (``index_factory(
     "IVF<n>,RQ<m>x8")``) and its product/ICM variants:
@@ -3438,7 +3303,6 @@ class IVFRQIndex(_Decoded, _MergeTier):
 
     _kind = "ivfrq"
     _frame = "codes"
-    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -3464,15 +3328,9 @@ class IVFRQIndex(_Decoded, _MergeTier):
         from .operators.rq import ivfrq_build
 
         base = _float_view(vt)
-        q, kw = None, {}
-        if coarse_hnsw_m is not None:
-            from .operators.similarity import ivf_train_centroids
-
-            C = ivf_train_centroids(
-                base, n_cells, sample_size=sample_size, iters=iters
-            )
-            q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
-            kw = {"centroids": C, "assigner": q}
+        q, kw = _fused_coarse(
+            vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw
+        )
         centroids, books, codes = ivfrq_build(
             base, n_cells, m, nsplits=nsplits, sample_size=sample_size,
             iters=iters, beam=beam, icm_sweeps=icm_sweeps,
@@ -3510,65 +3368,16 @@ class IVFRQIndex(_Decoded, _MergeTier):
 
         return dec
 
-    @property
-    def nlist(self) -> int:
-        return len(self.centroids)
+    def _kernel(self):
+        from .operators.rq import additive_scan
+
+        return additive_scan(self.centroids, self.codebooks, self.by_residual)
 
     @property
     def sa_code_size(self) -> int:
         from .operators.rq import addq_m_total
 
         return addq_m_total(self.codebooks)
-
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 8,
-        sel=None, max_codes: int | None = None,
-    ) -> DataFrame:
-        """``sel`` / ``max_codes`` ≙ faiss ``SearchParametersIVF`` —
-        same contracts as :meth:`IVFPQIndex.search`."""
-        from .operators.rq import ivfrq_search
-
-        return ivfrq_search(
-            _sel_rows(self.codes, sel), self.centroids, self.codebooks,
-            queries, k, nprobe, by_residual=self.by_residual,
-            max_codes=max_codes,
-            probe_cells=(
-                self.quantizer.probe_fn(nprobe) if self.quantizer else None
-            ),
-        )
-
-    def search_preassigned(
-        self, queries: DataFrame, k: int, assign: np.ndarray
-    ) -> DataFrame:
-        """≙ faiss ``IndexIVF::search_preassigned`` on the additive
-        file — caller-supplied probe cells indexed by qid (-1 = skip
-        slot); a full assignment reproduces ``search`` exactly."""
-        from .operators.rq import ivfrq_search
-
-        A, hook = _preassign_hook(assign)
-        return ivfrq_search(
-            self.codes, self.centroids, self.codebooks, queries, k,
-            nprobe=A.shape[1], by_residual=self.by_residual,
-            probe_cells=hook,
-        )
-
-    search_preassigned_numpy = _host_twin("search_preassigned")
-
-    def range_search(
-        self, queries: DataFrame, radius: float, nprobe: int = 8
-    ) -> DataFrame:
-        """faiss IVF-additive ``range_search``: strict ``< radius``
-        over the probed cells; subset under partial probes, never a
-        false positive."""
-        from .operators.rq import ivfrq_range_search
-
-        return ivfrq_range_search(
-            self.codes, self.centroids, self.codebooks, queries, radius,
-            nprobe, by_residual=self.by_residual,
-            probe_cells=(
-                self.quantizer.probe_fn(nprobe) if self.quantizer else None
-            ),
-        )
 
     def _trained_state(self) -> tuple:
         """Identical coarse quantizer, codebooks AND encode discipline (a
@@ -3781,7 +3590,7 @@ class PRQFastScanIndex(_FlatCodes):
 
 
 @dataclass
-class IVFRQFastScanIndex(_Decoded, _MergeTier):
+class IVFRQFastScanIndex(_IVF):
     """faiss ``IndexIVFAdditiveQuantizerFastScan`` (factory
     ``IVF<n>,RQ<m>x4fs`` for the residual form,
     ``IVF<n>,PRQ<ns>x<m>x4fs`` / ``IVF<n>,PLSQ<ns>x<m>x4fs`` for the
@@ -3795,7 +3604,6 @@ class IVFRQFastScanIndex(_Decoded, _MergeTier):
 
     _kind = "ivfrq_fs"
     _frame = "codes"
-    _partition = "cell"
 
     spark: SparkSession
     d: int
@@ -3861,20 +3669,11 @@ class IVFRQFastScanIndex(_Decoded, _MergeTier):
 
         return addq_m_total(self.codebooks)
 
-    @property
-    def nlist(self) -> int:
-        return len(self.centroids)
+    def _kernel(self):
+        from .operators.rq import additive_scan
 
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 8,
-        sel=None, max_codes: int | None = None,
-    ) -> DataFrame:
-        from .operators.rq import ivfrq_search
-
-        return ivfrq_search(
-            _sel_rows(self.codes, sel), self.centroids, self.codebooks,
-            queries, k, nprobe, by_residual=self.by_residual,
-            max_codes=max_codes, packed4=True,
+        return additive_scan(
+            self.centroids, self.codebooks, self.by_residual, packed4=True
         )
 
     def range_search(self, *_a, **_k):

@@ -264,8 +264,8 @@ class HNSWCoarseQuantizer:
         return self.search_np(X, 1)[0][:, 0]
 
     def probe_fn(self, nprobe: int):
-        """Hook for the shared ``probe_cells=`` machinery of
-        ivf_search / ivfpq_search / ivfrq_search."""
+        """``probe_cells=`` hook of the IVF probe-and-scan driver
+        (``similarity.probe_scan``)."""
 
         def probe(Q):
             return self.search_np(Q, nprobe)[0]

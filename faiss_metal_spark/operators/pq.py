@@ -623,6 +623,71 @@ def ivfpq_write(codes: DataFrame, path: str) -> None:
     codes.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 
+def pq_scan(
+    centroids: np.ndarray,
+    codebooks: np.ndarray,
+    ht: int | None = None,
+    packed4: bool = False,
+):
+    """The residual-ADC scan kernel of the PQ inverted file (faiss
+    ``IndexIVFPQ``'s scanner) for :func:`~.similarity.probe_scan`.
+
+    ‖q − v‖² ≈ ‖(q − c) − decode(code)‖² decomposes over subspaces of
+    the per-cell residual r = q − c, so each cell group builds its own
+    (queries-probing-it × m × ksub) lookup tables and sums m gathers
+    per stored code. ``packed4`` fuses them into per-byte 256-entry
+    tables over the fast-scan layout; ``ht`` gates candidates at
+    STRICTLY < ht Hamming bits between the query's own residual code
+    and each stored code (rejects leave as +inf and drop after the
+    partial top-k). The stored code width is checked hard: a
+    packed4/layout mismatch raises instead of gathering a prefix."""
+    from .similarity import ScanKernel
+
+    m, ksub, dsub = codebooks.shape
+    if packed4:
+        if ksub != 16:
+            raise ValueError(
+                f"packed4 requires nbits=4 codebooks, got ksub={ksub}"
+            )
+        if ht is not None:
+            raise ValueError(
+                "packed4 (fast-scan) has no polysemous gate (faiss "
+                "IndexIVFPQFastScan parity); use the unpacked IVFPQ tier"
+            )
+    width = (m + 1) // 2 if packed4 else m
+    htv = None if ht is None else int(ht)
+
+    def prepare(Q: np.ndarray):
+        if Q.shape[1] != m * dsub:
+            raise ValueError(f"query dim {Q.shape[1]} != m·dsub {m * dsub}")
+        return centroids, codebooks
+
+    def score(state, Q, qidx, cell, pdf: pd.DataFrame) -> np.ndarray:
+        C, books = state
+        R = Q[qidx] - C[cell]  # (nq_c, d) per-cell query residuals
+        lut = _adc_lut(R, books, "l2")
+        if packed4:
+            lut = _fuse_lut4(lut)  # (nq_c, ⌈m/2⌉, 256) fused tables
+        codes = np.frombuffer(
+            b"".join(pdf["code"].tolist()), dtype=np.uint8
+        ).reshape(len(pdf), width)
+        D = np.zeros((len(qidx), len(codes)), dtype=np.float64)
+        for j in range(lut.shape[1]):
+            D += lut[:, j, :][:, codes[:, j]]
+        np.maximum(D, 0.0, out=D)
+        if htv is not None:
+            # polysemous gate: XOR + popcount per byte position
+            qc = pq_assign_np(R, books)
+            pop = np.array([bin(i).count("1") for i in range(256)], np.int64)
+            ham = np.zeros_like(D, dtype=np.int64)
+            for j in range(m):
+                ham += pop[np.bitwise_xor(qc[:, j][:, None], codes[:, j][None, :])]
+            D[ham >= htv] = np.inf
+        return D
+
+    return ScanKernel(score, prepare, gated=htv is not None)
+
+
 def ivfpq_search(
     codes: DataFrame,
     centroids: np.ndarray,
@@ -673,119 +738,13 @@ def ivfpq_search(
     build dominates — the flat tier's survivor-gather variant lives in
     ``operators/polysemous.py``).
     """
-    from .knn import RESULT_SCHEMA, _finalize
+    from .similarity import probe_scan
 
-    m, ksub, dsub = codebooks.shape
-    if packed4:
-        if ksub != 16:
-            raise ValueError(
-                f"packed4 requires nbits=4 codebooks, got ksub={ksub}"
-            )
-        if ht is not None:
-            raise ValueError(
-                "packed4 (fast-scan) has no polysemous gate (faiss "
-                "IndexIVFPQFastScan parity); use the unpacked IVFPQ tier"
-            )
-    qpdf = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = codes.sparkSession
-    if len(qpdf) == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qids = qpdf["qid"].to_numpy(np.int64)
-    Q = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-    if Q.shape[1] != m * dsub:
-        raise ValueError(f"query dim {Q.shape[1]} != m·dsub {m * dsub}")
-
-    if probe_cells is not None:
-        # caller-supplied probe cells (IndexIVFPQ::search_preassigned):
-        # hooks marked by_qid receive the collected qids to align
-        # per-query assignments; -1 = the faiss skip-this-slot sentinel
-        if getattr(probe_cells, "by_qid", False):
-            probe = np.asarray(probe_cells(Q, qids))[:, :nprobe]
-        else:
-            probe = np.asarray(probe_cells(Q))[:, :nprobe]
-    else:
-        cn = (centroids * centroids).sum(1)
-        order = (cn[None, :] - 2.0 * (Q @ centroids.T)).argsort(1, kind="stable")
-        probe = order[:, :nprobe]
-    from .similarity import build_probe_map, cell_size_map
-
-    sizes = cell_size_map(codes, max_codes)
-    cell_to_qidx = {
-        c: np.asarray(ix, dtype=np.int64)
-        for c, ix in build_probe_map(
-            probe, max_codes=max_codes, cell_sizes=sizes
-        ).items()
-    }
-    ht_ = None if ht is None else int(ht)
-    bc = spark.sparkContext.broadcast(
-        (qids, Q, centroids, codebooks, cell_to_qidx, ht_)
+    return probe_scan(
+        codes, queries, pq_scan(centroids, codebooks, ht=ht, packed4=packed4),
+        nprobe, centroids=centroids, k=k, probe_cells=probe_cells,
+        max_codes=max_codes, qid_col=qid_col, qvec_col=qvec_col,
     )
-
-    from .knn import _PARTIAL_SCHEMA
-
-    def cell_topk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qids_, Q_, C_, books_, c2q, htv = bc.value
-        cell = int(key[0])
-        qidx = c2q.get(cell)
-        if qidx is None or len(pdf) == 0:
-            return pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
-                {"qid": np.int64, "label": np.int64, "distance": np.float64}
-            )
-        R = Q_[qidx] - C_[cell]  # (nq_c, d) per-cell query residuals
-        nq_c = len(qidx)
-        lut = np.empty((nq_c, m, ksub), dtype=np.float64)
-        for j in range(m):
-            # direct squared difference (see pq_search): exact 0 when
-            # the residual lands on a codebook point
-            Rj = R[:, j * dsub : (j + 1) * dsub]
-            diff = Rj[:, None, :] - books_[j][None, :, :]
-            lut[:, j, :] = np.einsum("ijk,ijk->ij", diff, diff)
-        if packed4:
-            lut = _fuse_lut4(lut)  # (nq_c, ⌈m/2⌉, 256) fused tables
-        # hard width check: a packed4/layout mismatch must raise, not
-        # gather a prefix of the code bytes silently
-        width = (m + 1) // 2 if packed4 else m
-        Ccodes = np.frombuffer(
-            b"".join(pdf["code"].tolist()), dtype=np.uint8
-        ).reshape(len(pdf), width)
-        labels = pdf["id"].to_numpy(np.int64)
-        D = np.zeros((nq_c, len(Ccodes)), dtype=np.float64)
-        for j in range(lut.shape[1]):
-            D += lut[:, j, :][:, Ccodes[:, j]]
-        np.maximum(D, 0.0, out=D)
-        if htv is not None:
-            # polysemous gate: the query's own residual code vs the
-            # cell's stored codes, XOR + popcount per byte position;
-            # gated-out candidates leave as +inf and are dropped below
-            qc = pq_assign_np(R, books_)
-            pop = np.array([bin(i).count("1") for i in range(256)], np.int64)
-            ham = np.zeros_like(D, dtype=np.int64)
-            for j in range(m):
-                ham += pop[np.bitwise_xor(qc[:, j][:, None], Ccodes[:, j][None, :])]
-            D[ham >= htv] = np.inf
-        kk = min(k, D.shape[1])
-        idx = (
-            np.argpartition(D, kk - 1, axis=1)[:, :kk]
-            if kk < D.shape[1]
-            else np.argsort(D, axis=1)
-        )
-        out = pd.DataFrame(
-            {
-                "qid": np.repeat(qids_[qidx], idx.shape[1]),
-                "label": labels[idx.ravel()],
-                "distance": np.take_along_axis(D, idx, axis=1).ravel(),
-            }
-        )
-        if htv is not None:
-            out = out[np.isfinite(out["distance"].to_numpy())]
-        return out
-
-    subset = codes.where(F.col("cell").isin([int(c) for c in sorted(cell_to_qidx)]))
-    candidates = subset.groupBy("cell").applyInPandas(cell_topk, _PARTIAL_SCHEMA)
-    qdf = queries.select(F.col(qid_col).cast("long").alias("qid"))
-    return _finalize(qdf, candidates, k, "l2").where(F.col("label") >= 0)
 
 
 def ivfpq_range_search(
@@ -807,61 +766,13 @@ def ivfpq_range_search(
     sentinel rows, no ``_finalize`` merge: each probed cell group
     emits its passing pairs directly, so output volume is bounded by
     the radius."""
-    from .knn import RANGE_SCHEMA
+    from .similarity import probe_scan
 
-    m, ksub, dsub = codebooks.shape
-    qpdf = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = codes.sparkSession
-    if len(qpdf) == 0:
-        return spark.createDataFrame([], RANGE_SCHEMA)
-    qids = qpdf["qid"].to_numpy(np.int64)
-    Q = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-    if Q.shape[1] != m * dsub:
-        raise ValueError(f"query dim {Q.shape[1]} != m·dsub {m * dsub}")
-
-    cn = (centroids * centroids).sum(1)
-    order = (cn[None, :] - 2.0 * (Q @ centroids.T)).argsort(1, kind="stable")
-    probe = order[:, :nprobe]
-    from .similarity import build_probe_map  # shared loop: -1 skip slots
-
-    cell_to_qidx = {
-        c: np.asarray(ix, dtype=np.int64)
-        for c, ix in build_probe_map(probe).items()
-    }
-    bc = spark.sparkContext.broadcast((qids, Q, centroids, codebooks, cell_to_qidx))
-    r = float(radius)
-
-    def cell_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qids_, Q_, C_, books_, c2q = bc.value
-        cell = int(key[0])
-        qidx = c2q.get(cell)
-        if qidx is None or len(pdf) == 0:
-            return pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
-                {"qid": np.int64, "label": np.int64, "distance": np.float64}
-            )
-        R = Q_[qidx] - C_[cell]
-        lut = _adc_lut(R, books_, "l2")
-        Ccodes = np.frombuffer(
-            b"".join(pdf["code"].tolist()), dtype=np.uint8
-        ).reshape(len(pdf), m)
-        labels = pdf["id"].to_numpy(np.int64)
-        D = np.zeros((len(qidx), len(Ccodes)), dtype=np.float64)
-        for j in range(m):
-            D += lut[:, j, :][:, Ccodes[:, j]]
-        np.maximum(D, 0.0, out=D)
-        qi, vi = np.nonzero(D < r)
-        return pd.DataFrame(
-            {
-                "qid": qids_[qidx][qi],
-                "label": labels[vi],
-                "distance": D[qi, vi],
-            }
-        )
-
-    subset = codes.where(F.col("cell").isin([int(c) for c in sorted(cell_to_qidx)]))
-    return subset.groupBy("cell").applyInPandas(cell_range, RANGE_SCHEMA)
+    return probe_scan(
+        codes, queries, pq_scan(centroids, codebooks), nprobe,
+        centroids=centroids, radius=radius, qid_col=qid_col,
+        qvec_col=qvec_col,
+    )
 
 
 def refine_search(

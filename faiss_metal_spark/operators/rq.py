@@ -29,7 +29,6 @@ Scale shape is the PQ discipline exactly:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -884,6 +883,74 @@ def ivfrq_encode(
     return assigned.mapInArrow(enc, IVFRQ_CODE_SCHEMA)
 
 
+def additive_scan(
+    centroids: np.ndarray,
+    codebooks: np.ndarray,
+    by_residual: bool = True,
+    packed4: bool = False,
+):
+    """The additive-LUT scan kernel of the IVF additive file (faiss
+    ``IndexIVFAdditiveQuantizer``'s scanner) for
+    :func:`~.similarity.probe_scan`: distances are EXACTLY ‖q − full
+    reconstruction‖² via the extended additive identity (module
+    section header) — one cell-independent (nq, m_total, ksub)
+    inner-product LUT for the whole batch (validated against the
+    query dim and the broadcast cap on the driver), plus the per-cell
+    scalar ⟨q, centroid(cell)⟩ when ``by_residual``. ``packed4``: the
+    fast-scan layout, fused per-byte LUTs over packed 4-bit codes.
+    Partial top-k by (distance, label) lexsort — additive codes
+    collide heavily, same argument as ``_lut_topk_search``."""
+    from .knn import _MAX_BROADCAST_ELEMS
+    from .similarity import ScanKernel
+
+    width = addq_m_total(codebooks)
+    if packed4:
+        width = (width + 1) // 2  # packed byte width
+
+    def prepare(Q: np.ndarray):
+        lut = addq_lut(Q, codebooks)  # validates the query dim
+        if packed4:
+            from .pq import _fuse_lut4
+
+            if not addq_is4(codebooks):
+                raise ValueError(
+                    "packed4 requires nbits=4 additive codebooks ((m, 16, d) "
+                    f"RQ or (ns, m, 16, dsub) PRQ); got shape {codebooks.shape}"
+                )
+            lut = _fuse_lut4(lut)
+        if lut.size > _MAX_BROADCAST_ELEMS:
+            raise ValueError(
+                f"ADC LUT too large to broadcast ({lut.size} elems > "
+                f"{_MAX_BROADCAST_ELEMS}); use smaller query batches "
+                f"(see operators.chunked.chunked_queries)"
+            )
+        return centroids, lut, (Q * Q).sum(1)
+
+    def score(state, Q, qidx, cell, pdf):
+        C, lut, qn = state
+        codes = np.frombuffer(
+            b"".join(pdf["code"].tolist()), dtype=np.uint8
+        ).reshape(len(pdf), -1)
+        # hard width check (the pq.py / _lut_topk_search discipline)
+        if codes.shape[1] != width:
+            raise ValueError(
+                f"stored code width {codes.shape[1]} != codebook "
+                f"stages {width}: codes/codebooks mismatch"
+            )
+        recn = pdf["recn"].to_numpy(np.float64)
+        ip = np.zeros((len(qidx), len(codes)), np.float64)
+        for j in range(width):
+            ip += lut[qidx, j, :][:, codes[:, j]]
+        if by_residual:
+            # the one per-cell scalar: <q, centroid(cell)> per query
+            ip += (Q[qidx] @ C[cell])[:, None]
+        D = qn[qidx][:, None] - 2.0 * ip + recn[None, :]
+        np.maximum(D, 0.0, out=D)
+        return D
+
+    return ScanKernel(score, prepare, lexsort=True)
+
+
 def ivfrq_search(
     codes: DataFrame,
     centroids: np.ndarray,
@@ -911,104 +978,14 @@ def ivfrq_search(
     packed 4-bit RQ codes, distances ≡ unpacked to pair-association
     ulp. Scan cost is probed cells only; the LUT broadcast is
     query-batch-sized and shared across cells."""
-    import pandas as pd
+    from .similarity import probe_scan
 
-    from .knn import _MAX_BROADCAST_ELEMS, _PARTIAL_SCHEMA, RESULT_SCHEMA, _finalize
-    from .similarity import build_probe_map, cell_size_map
-
-    m_total = addq_m_total(codebooks)
-    qpdf = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = codes.sparkSession
-    if len(qpdf) == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qids = qpdf["qid"].to_numpy(np.int64)
-    Q = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-    lut = addq_lut(Q, codebooks)  # validates the query dim
-    if packed4:
-        from .pq import _fuse_lut4
-
-        if not addq_is4(codebooks):
-            raise ValueError(
-                "packed4 requires nbits=4 additive codebooks ((m, 16, d) "
-                f"RQ or (ns, m, 16, dsub) PRQ); got shape {codebooks.shape}"
-            )
-        lut = _fuse_lut4(lut)
-        m_total = (m_total + 1) // 2  # packed byte width
-    if lut.size > _MAX_BROADCAST_ELEMS:
-        raise ValueError(
-            f"ADC LUT too large to broadcast ({lut.size} elems > "
-            f"{_MAX_BROADCAST_ELEMS}); use smaller query batches "
-            f"(see operators.chunked.chunked_queries)"
-        )
-    qn = (Q * Q).sum(1)
-
-    if probe_cells is not None:
-        if getattr(probe_cells, "by_qid", False):
-            probe = np.asarray(probe_cells(Q, qids))[:, :nprobe]
-        else:
-            probe = np.asarray(probe_cells(Q))[:, :nprobe]
-    else:
-        cn = (centroids * centroids).sum(1)
-        order = (cn[None, :] - 2.0 * (Q @ centroids.T)).argsort(1, kind="stable")
-        probe = order[:, :nprobe]
-    sizes = cell_size_map(codes, max_codes)
-    cell_to_qidx = {
-        c: np.asarray(ix, dtype=np.int64)
-        for c, ix in build_probe_map(
-            probe, max_codes=max_codes, cell_sizes=sizes
-        ).items()
-    }
-    bc = spark.sparkContext.broadcast((qids, Q, qn, centroids, lut, cell_to_qidx))
-
-    def cell_topk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qids_, Q_, qn_, C_, lut_, c2q = bc.value
-        cell = int(key[0])
-        qidx = c2q.get(cell)
-        if qidx is None or len(pdf) == 0:
-            return pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
-                {"qid": np.int64, "label": np.int64, "distance": np.float64}
-            )
-        Ccodes = np.frombuffer(
-            b"".join(pdf["code"].tolist()), dtype=np.uint8
-        ).reshape(len(pdf), -1)
-        # hard width check (the pq.py / _lut_topk_search discipline)
-        if Ccodes.shape[1] != m_total:
-            raise ValueError(
-                f"stored code width {Ccodes.shape[1]} != codebook "
-                f"stages {m_total}: codes/codebooks mismatch"
-            )
-        labels = pdf["id"].to_numpy(np.int64)
-        recn = pdf["recn"].to_numpy(np.float64)
-        ip = np.zeros((len(qidx), len(Ccodes)), np.float64)
-        for j in range(m_total):
-            ip += lut_[qidx, j, :][:, Ccodes[:, j]]
-        if by_residual:
-            # the one per-cell scalar: <q, centroid(cell)> per query
-            ip += (Q_[qidx] @ C_[cell])[:, None]
-        D = qn_[qidx][:, None] - 2.0 * ip + recn[None, :]
-        np.maximum(D, 0.0, out=D)
-        kk = min(k, D.shape[1])
-        # (distance, label) lexicographic ties — additive codes collide
-        # heavily, same argument as _lut_topk_search
-        idx = np.lexsort(
-            (np.broadcast_to(labels, D.shape), D), axis=1
-        )[:, :kk]
-        return pd.DataFrame(
-            {
-                "qid": np.repeat(qids_[qidx], kk),
-                "label": labels[idx.ravel()],
-                "distance": np.take_along_axis(D, idx, axis=1).ravel(),
-            }
-        )
-
-    subset = codes.where(
-        F.col("cell").isin([int(c) for c in sorted(cell_to_qidx)])
+    return probe_scan(
+        codes, queries,
+        additive_scan(centroids, codebooks, by_residual, packed4=packed4),
+        nprobe, centroids=centroids, k=k, probe_cells=probe_cells,
+        max_codes=max_codes, qid_col=qid_col, qvec_col=qvec_col,
     )
-    candidates = subset.groupBy("cell").applyInPandas(cell_topk, _PARTIAL_SCHEMA)
-    qdf = queries.select(F.col(qid_col).cast("long").alias("qid"))
-    return _finalize(qdf, candidates, k, "l2").where(F.col("label") >= 0)
 
 
 def ivfrq_range_search(
@@ -1029,80 +1006,13 @@ def ivfrq_range_search(
     subset under partial probes, never a false positive. Unordered
     (qid, label, distance); each probed cell group emits its passing
     pairs directly, so output volume is bounded by the radius."""
-    import pandas as pd
+    from .similarity import probe_scan
 
-    from .knn import _MAX_BROADCAST_ELEMS, RANGE_SCHEMA
-
-    m_total = addq_m_total(codebooks)
-    qpdf = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = codes.sparkSession
-    if len(qpdf) == 0:
-        return spark.createDataFrame([], RANGE_SCHEMA)
-    qids = qpdf["qid"].to_numpy(np.int64)
-    Q = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-    lut = addq_lut(Q, codebooks)
-    if lut.size > _MAX_BROADCAST_ELEMS:
-        raise ValueError(
-            f"ADC LUT too large to broadcast ({lut.size} elems > "
-            f"{_MAX_BROADCAST_ELEMS}); use smaller query batches "
-            f"(see operators.chunked.chunked_queries)"
-        )
-    qn = (Q * Q).sum(1)
-    if probe_cells is not None:
-        probe = np.asarray(probe_cells(Q))[:, :nprobe]
-    else:
-        cn = (centroids * centroids).sum(1)
-        order = (cn[None, :] - 2.0 * (Q @ centroids.T)).argsort(1, kind="stable")
-        probe = order[:, :nprobe]
-    from .similarity import build_probe_map  # shared loop: -1 skip slots
-
-    cell_to_qidx = {
-        c: np.asarray(ix, dtype=np.int64)
-        for c, ix in build_probe_map(probe).items()
-    }
-    bc = spark.sparkContext.broadcast((qids, Q, qn, centroids, lut, cell_to_qidx))
-    r = float(radius)
-
-    def cell_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qids_, Q_, qn_, C_, lut_, c2q = bc.value
-        cell = int(key[0])
-        qidx = c2q.get(cell)
-        if qidx is None or len(pdf) == 0:
-            return pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
-                {"qid": np.int64, "label": np.int64, "distance": np.float64}
-            )
-        Ccodes = np.frombuffer(
-            b"".join(pdf["code"].tolist()), dtype=np.uint8
-        ).reshape(len(pdf), -1)
-        if Ccodes.shape[1] != m_total:
-            raise ValueError(
-                f"stored code width {Ccodes.shape[1]} != codebook "
-                f"stages {m_total}: codes/codebooks mismatch"
-            )
-        labels = pdf["id"].to_numpy(np.int64)
-        recn = pdf["recn"].to_numpy(np.float64)
-        ip = np.zeros((len(qidx), len(Ccodes)), np.float64)
-        for j in range(m_total):
-            ip += lut_[qidx, j, :][:, Ccodes[:, j]]
-        if by_residual:
-            ip += (Q_[qidx] @ C_[cell])[:, None]
-        D = qn_[qidx][:, None] - 2.0 * ip + recn[None, :]
-        np.maximum(D, 0.0, out=D)
-        qi, vi = np.nonzero(D < r)
-        return pd.DataFrame(
-            {
-                "qid": qids_[qidx][qi],
-                "label": labels[vi],
-                "distance": D[qi, vi],
-            }
-        )
-
-    subset = codes.where(
-        F.col("cell").isin([int(c) for c in sorted(cell_to_qidx)])
+    return probe_scan(
+        codes, queries, additive_scan(centroids, codebooks, by_residual),
+        nprobe, centroids=centroids, radius=radius, probe_cells=probe_cells,
+        qid_col=qid_col, qvec_col=qvec_col,
     )
-    return subset.groupBy("cell").applyInPandas(cell_range, RANGE_SCHEMA)
 
 
 def rq_reconstruct(

@@ -19,12 +19,14 @@ the horizontal-scale paths a 100 TB corpus needs:
   the nprobe nearest cells per query. Written ``partitionBy("cell")``
   the probe filter becomes parquet partition pruning — the scan never
   touches non-probed cells, which is the IVF promise expressed in
-  Spark's own storage layout.
+  Spark's own storage layout. Every IVF search in the engine runs the
+  one driver ``probe_scan`` with its codec's ``ScanKernel``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -34,7 +36,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.vector import cosine_sim
-from .knn import RESULT_SCHEMA, _finalize
+from .knn import RANGE_SCHEMA, RESULT_SCHEMA, _finalize
 
 # ---------------------------------------------------------------------------
 # Random-hyperplane LSH (cosine)
@@ -486,9 +488,8 @@ def ivf_write(assigned: DataFrame, path: str) -> None:
 
 def cell_size_map(frame, max_codes):
     """Per-cell inverted-list sizes for the faiss max_codes pre-list
-    check — ONE implementation shared by the IVF-family search paths
-    (similarity.ivf_search and pq.ivfpq_search). Returns {} when the
-    bound is off; validates the bound once here."""
+    check, read by :func:`probe_scan`. Returns {} when the bound is
+    off; validates the bound once here."""
     if max_codes is None:
         return {}
     if int(max_codes) <= 0:
@@ -506,9 +507,7 @@ def build_probe_map(probe, max_codes=None, cell_sizes=None):
     faiss ``SearchParametersIVF::max_codes`` pre-list cut (``if
     (max_codes && nscan >= max_codes) break`` — the crossing list still
     scans in full, the first list always does). Negative cells are the
-    faiss -1 skip-slot sentinel. ONE statement of the loop, shared by
-    ``_collect_probe`` and ``pq.ivfpq_search`` so a future fix cannot
-    miss one copy."""
+    faiss -1 skip-slot sentinel. The probe map of :func:`probe_scan`."""
     cell_to_qidx: dict[int, list[int]] = {}
     sizes = cell_sizes or {}
     for i, cells_i in enumerate(probe):
@@ -522,59 +521,201 @@ def build_probe_map(probe, max_codes=None, cell_sizes=None):
             cell_to_qidx.setdefault(int(c), []).append(i)
     return cell_to_qidx
 
-def _collect_probe(
+
+def _no_state(Q: np.ndarray) -> None:
+    return None
+
+
+@dataclass(frozen=True)
+class ScanKernel:
+    """A codec's in-cell scan for :func:`probe_scan` (the role of
+    faiss's ``InvertedListScanner``):
+
+    - ``score(state, Q, qidx, cell, pdf) -> D``: the (len(qidx),
+      len(pdf)) distances of the probing queries ``Q[qidx]`` to one
+      cell group's stored rows, on the executors;
+    - ``prepare(Q) -> state``: driver-side, once per query batch; its
+      state rides the one broadcast, so large arrays (codebooks, LUTs,
+      centroids) live there and never in ``score``'s pickled closure.
+      It raises on a batch the codec cannot score;
+    - ``metric``: top-k direction, ``_finalize`` order and radius keep
+      rule (L2/L1 keep ``distance < radius``, IP/cosine ``>``);
+    - ``lexsort``: partial top-k by (distance, label) lexsort instead
+      of argpartition (additive codes collide heavily);
+    - ``gated``: drop non-finite distances after the partial top-k (a
+      gate's rejects, e.g. the polysemous filter);
+    - ``range_schema``: the radius path's result schema."""
+
+    score: Callable
+    prepare: Callable = _no_state
+    metric: str = "l2"
+    lexsort: bool = False
+    gated: bool = False
+    range_schema: object = RANGE_SCHEMA
+
+
+def _no_pairs() -> pd.DataFrame:
+    return pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
+        {"qid": np.int64, "label": np.int64, "distance": np.float64}
+    )
+
+
+def probe_scan(
+    lists: DataFrame,
     queries: DataFrame,
-    centroids: np.ndarray,
+    kernel: ScanKernel,
     nprobe: int,
-    qid_col: str,
-    qvec_col: str,
+    *,
+    centroids: np.ndarray | None = None,
+    k: int | None = None,
+    radius: float | None = None,
     probe_cells=None,
     max_codes: int | None = None,
-    cell_sizes: dict[int, int] | None = None,
-):
-    """Collect the query batch and build the cell→query probe map
-    (nearest-centroid order, L2 over the coarse quantizer — faiss
-    probes L2-nearest cells for every metric). Returns (qids, Q,
-    {cell: query-local-indices}) or None for an empty batch.
+    id_col: str = "id",
+    qid_col: str = "qid",
+    qvec_col: str = "vec",
+) -> DataFrame:
+    """The IVF probe-and-scan driver (faiss ``IndexIVF::search`` /
+    ``range_search``): a coarse quantizer picks each query's cells, the
+    inverted ``lists`` (rows with a ``cell`` column) are scanned only
+    there, and the codec's :class:`ScanKernel` scores each cell group.
+    Every IVF operator and tier searches through this one function.
 
-    ``probe_cells``: optional callable ``(Q) -> (nq, nprobe) int cell
-    matrix`` replacing the flat-centroid ranking — the hook a product
-    coarse quantizer (IMI) plugs its two-table cell scoring into.
+    1. Collect the query batch once (an empty batch returns an empty
+       result of the right schema).
+    2. Rank probe cells: ``probe_cells`` — a hook marked ``by_qid`` is
+       called as ``(Q, qids)`` so it can align caller-supplied per-query
+       assignments (search_preassigned), a plain hook as ``(Q)`` (IMI,
+       the graph coarse quantizer) — else the exact L2 order against
+       ``centroids`` (faiss probes L2-nearest cells for every metric).
+       A negative cell is the faiss -1 skip slot.
+    3. ``max_codes`` (faiss ``SearchParametersIVF::max_codes``): keep
+       probe cells in ranking order only while the codes scanned so far
+       stay under the bound — the crossing list still scans in full, at
+       least the first list always does (whole-list granularity, one
+       bounded nlist-row count job per call when set).
+    4. ONE broadcast of (qids, Q, cell → query indices, kernel state).
+    5. A plain ``cell isin`` prune — partition pruning on a
+       ``partitionBy("cell")`` store — then ``groupBy("cell")
+       .applyInPandas``: each cell group scores exactly the queries
+       that probed it, so a dense foreign cell never crowds out a
+       sparse probed one.
+    6. With ``k``: a per-cell partial top-k merged by ``_finalize``,
+       min(k, probed rows) real results per query. With ``radius``:
+       each cell emits its passing (qid, label, distance) pairs
+       unordered — every vector lives in one cell, so nothing merges
+       and there is no finalize shuffle."""
+    from .knn import _PARTIAL_SCHEMA
 
-    ``max_codes`` (+ ``cell_sizes``): faiss
-    ``SearchParametersIVF::max_codes`` — each query keeps probe cells
-    in ranking order only while the codes scanned SO FAR stay under
-    the bound, exactly faiss's pre-list check (``if (max_codes &&
-    nscan >= max_codes) break``): the list that crosses the bound is
-    still scanned in full, and at least the first list always is.
-    Cell granularity IS the faiss granularity here — the engine scans
-    whole inverted lists."""
+    spark = queries.sparkSession
+    cell_sizes = cell_size_map(lists, max_codes)
     qpdf = queries.select(
         F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
     ).toPandas()
     if len(qpdf) == 0:
-        return None
+        schema = RESULT_SCHEMA if radius is None else kernel.range_schema
+        return spark.createDataFrame([], schema)
     qids = qpdf["qid"].to_numpy(np.int64)
     Q = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-    if probe_cells is not None:
-        # a hook marked ``by_qid`` is called with the collected qids so
-        # it can align caller-supplied per-query assignments exactly
-        # (search_preassigned); plain hooks rank from Q alone (IMI)
-        if getattr(probe_cells, "by_qid", False):
-            probe = np.asarray(probe_cells(Q, qids))[:, :nprobe]
-        else:
-            probe = np.asarray(probe_cells(Q))[:, :nprobe]
-    else:
+    state = kernel.prepare(Q)
+    if probe_cells is None:
         cn = (centroids * centroids).sum(1)
-        order = (cn[None, :] - 2.0 * (Q @ centroids.T)).argsort(1, kind="stable")
-        probe = order[:, :nprobe]
+        probe = (cn[None, :] - 2.0 * (Q @ centroids.T)).argsort(1, kind="stable")
+    elif getattr(probe_cells, "by_qid", False):
+        probe = np.asarray(probe_cells(Q, qids))
+    else:
+        probe = np.asarray(probe_cells(Q))
+    cell_to_qidx = build_probe_map(probe[:, :nprobe], max_codes, cell_sizes)
+    bc = spark.sparkContext.broadcast(
+        (
+            qids, Q,
+            {c: np.asarray(ix, dtype=np.int64) for c, ix in cell_to_qidx.items()},
+            state,
+        )
+    )
+    # the task closure holds the kernel's parts, never the kernel:
+    # ``prepare`` may close over codebooks and centroids
+    score, metric, lexsort, gated = (
+        kernel.score, kernel.metric, kernel.lexsort, kernel.gated
+    )
+    want_min = metric in ("l2", "l1")
+    r = None if radius is None else float(radius)
 
-    # cell → local indices of the queries that probe it. A negative
-    # cell is the faiss -1 "skip this probe slot" sentinel (coarse
-    # quantizers emit it for unfillable slots; search_preassigned
-    # callers pass it through) — it matches nothing, drop it here.
-    cell_to_qidx = build_probe_map(probe, max_codes=max_codes, cell_sizes=cell_sizes)
-    return qids, Q, cell_to_qidx
+    def scan_cell(key, pdf):
+        qids_, Q_, c2q, state_ = bc.value
+        cell = int(key[0])
+        qidx = c2q.get(cell)
+        if qidx is None or len(pdf) == 0:
+            return _no_pairs()
+        D = score(state_, Q_, qidx, cell, pdf)
+        labels = pdf[id_col].to_numpy(np.int64)
+        if r is not None:
+            qi, vi = np.nonzero(D < r if want_min else D > r)
+            return pd.DataFrame(
+                {"qid": qids_[qidx][qi], "label": labels[vi], "distance": D[qi, vi]}
+            )
+        kk = min(k, D.shape[1])
+        if lexsort:
+            idx = np.lexsort((np.broadcast_to(labels, D.shape), D), axis=1)[:, :kk]
+        else:
+            Ds = D if want_min else -D
+            idx = (
+                np.argpartition(Ds, kk - 1, axis=1)[:, :kk]
+                if kk < D.shape[1]
+                else np.argsort(Ds, axis=1)
+            )
+        out = pd.DataFrame(
+            {
+                "qid": np.repeat(qids_[qidx], idx.shape[1]),
+                "label": labels[idx.ravel()],
+                "distance": np.take_along_axis(D, idx, axis=1).ravel(),
+            }
+        )
+        return out[np.isfinite(out["distance"].to_numpy())] if gated else out
+
+    subset = lists.where(F.col("cell").isin([int(c) for c in sorted(cell_to_qidx)]))
+    if r is not None:
+        return subset.groupBy("cell").applyInPandas(scan_cell, kernel.range_schema)
+    candidates = subset.groupBy("cell").applyInPandas(scan_cell, _PARTIAL_SCHEMA)
+    qdf = queries.select(F.col(qid_col).cast("long").alias("qid"))
+    # merge per-cell winners; drop the sentinel padding — the contract
+    # here (approximate path) is min(k, probed rows) real results
+    return _finalize(qdf, candidates, k, metric).where(F.col("label") >= 0)
+
+
+def decode_scan(metric: str = "l2", vec_col: str = "vec", decode=None) -> ScanKernel:
+    """The flat/decode kernel: exact ``metric`` (l2 / ip / cosine / l1)
+    between the probing queries and a cell's rows as floats —
+    ``decode(pdf) -> (n, d)`` for a coded list (faiss
+    ``IndexIVFScalarQuantizer`` scores codes in-list the same way),
+    else ``vec_col`` read as a float array column."""
+    if metric not in ("l2", "ip", "cosine", "l1"):
+        raise ValueError(f"unknown metric {metric!r}")
+
+    def score(_state, Q, qidx, _cell, pdf: pd.DataFrame) -> np.ndarray:
+        Qs = Q[qidx]
+        V = (
+            decode(pdf)
+            if decode is not None
+            else np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        )
+        if metric == "l1":
+            return np.abs(Qs[:, None, :] - V[None, :, :]).sum(-1)
+        G = Qs @ V.T
+        if metric == "l2":
+            D = (Qs * Qs).sum(1)[:, None] + (V * V).sum(1)[None, :] - 2.0 * G
+            np.maximum(D, 0.0, out=D)
+            return D
+        if metric == "cosine":
+            denom = np.sqrt((Qs * Qs).sum(1))[:, None] * np.sqrt((V * V).sum(1))[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                return np.where(denom > 0, G / denom, 0.0)
+        return G
+
+    # ivf_range_search has always declared nullable result columns
+    return ScanKernel(
+        score, metric=metric, range_schema="qid long, label long, distance double"
+    )
 
 
 def ivf_search(
@@ -595,7 +736,7 @@ def ivf_search(
     """Probe the nprobe nearest cells per query, exact search within.
 
     ``probe_cells``: optional ``(Q) -> (nq, ≥nprobe) int`` cell-ranking
-    override (see :func:`_collect_probe`) — the IMI hook.
+    override (see :func:`probe_scan`) — the IMI hook.
 
     ``max_codes``: faiss ``SearchParametersIVF::max_codes`` — bound the
     stored entries scanned per query: probe cells are kept in ranking
@@ -624,78 +765,12 @@ def ivf_search(
     each query gets exactly min(k, |probed rows|) results.
     nprobe = n_cells degrades gracefully to exact search.
     """
-    from .knn import _PARTIAL_SCHEMA, _finalize
-
-    if metric not in ("l2", "ip", "cosine", "l1"):
-        raise ValueError(f"unknown metric {metric!r}")
-    cell_sizes = cell_size_map(assigned, max_codes) if max_codes is not None else None
-    collected = _collect_probe(
-        queries, centroids, nprobe, qid_col, qvec_col, probe_cells,
-        max_codes=max_codes, cell_sizes=cell_sizes,
+    return probe_scan(
+        assigned, queries, decode_scan(metric, vec_col, decode), nprobe,
+        centroids=centroids, k=k, probe_cells=probe_cells,
+        max_codes=max_codes, id_col=id_col, qid_col=qid_col,
+        qvec_col=qvec_col,
     )
-    if collected is None:
-        return queries.sparkSession.createDataFrame([], RESULT_SCHEMA)
-    qids, Q, cell_to_qidx = collected
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (qids, Q, {c: np.asarray(ix, dtype=np.int64) for c, ix in cell_to_qidx.items()})
-    )
-    want_min = metric in ("l2", "l1")
-    sign = 1.0 if want_min else -1.0
-
-    def cell_topk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qids_, Q_, c2q = bc.value
-        qidx = c2q.get(int(key[0]))
-        if qidx is None or len(pdf) == 0:
-            return pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
-                {"qid": np.int64, "label": np.int64, "distance": np.float64}
-            )
-        Qs = Q_[qidx]
-        V = (
-            decode(pdf)
-            if decode is not None
-            else np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        )
-        labels = pdf[id_col].to_numpy(np.int64)
-        if metric == "l1":
-            D = np.abs(Qs[:, None, :] - V[None, :, :]).sum(-1)
-        else:
-            G = Qs @ V.T
-            if metric == "l2":
-                D = (Qs * Qs).sum(1)[:, None] + (V * V).sum(1)[None, :] - 2.0 * G
-                np.maximum(D, 0.0, out=D)
-            elif metric == "cosine":
-                denom = (
-                    np.sqrt((Qs * Qs).sum(1))[:, None]
-                    * np.sqrt((V * V).sum(1))[None, :]
-                )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = np.where(denom > 0, G / denom, 0.0)
-            else:
-                D = G
-        kk = min(k, D.shape[1])
-        Ds = sign * D
-        idx = (
-            np.argpartition(Ds, kk - 1, axis=1)[:, :kk]
-            if kk < D.shape[1]
-            else np.argsort(Ds, axis=1)
-        )
-        return pd.DataFrame(
-            {
-                "qid": np.repeat(qids_[qidx], idx.shape[1]),
-                "label": labels[idx.ravel()],
-                "distance": np.take_along_axis(D, idx, axis=1).ravel(),
-            }
-        )
-
-    subset = assigned.where(
-        F.col("cell").isin([int(c) for c in sorted(cell_to_qidx)])
-    )
-    candidates = subset.groupBy("cell").applyInPandas(cell_topk, _PARTIAL_SCHEMA)
-    qdf = queries.select(F.col(qid_col).cast("long").alias("qid"))
-    # merge per-cell winners; drop the sentinel padding — the contract
-    # here (approximate path) is min(k, probed rows) real results
-    return _finalize(qdf, candidates, k, metric).where(F.col("label") >= 0)
 
 
 def ivf_range_search(
@@ -729,64 +804,11 @@ def ivf_range_search(
     ``ivf_search`` there is no finalize shuffle at all — output volume
     is bounded by the radius, not nq·nv.
     """
-    if metric not in ("l2", "ip", "cosine", "l1"):
-        raise ValueError(f"unknown metric {metric!r}")
-    want_min = metric in ("l2", "l1")
-    schema_df = queries.sparkSession
-    collected = _collect_probe(
-        queries, centroids, nprobe, qid_col, qvec_col, probe_cells
+    return probe_scan(
+        assigned, queries, decode_scan(metric, vec_col, decode), nprobe,
+        centroids=centroids, radius=radius, probe_cells=probe_cells,
+        id_col=id_col, qid_col=qid_col, qvec_col=qvec_col,
     )
-    out_schema = "qid long, label long, distance double"
-    if collected is None:
-        return schema_df.createDataFrame([], out_schema)
-    qids, Q, cell_to_qidx = collected
-    bc = schema_df.sparkContext.broadcast(
-        (qids, Q, {c: np.asarray(ix, dtype=np.int64) for c, ix in cell_to_qidx.items()})
-    )
-
-    def cell_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qids_, Q_, c2q = bc.value
-        qidx = c2q.get(int(key[0]))
-        empty = pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
-            {"qid": np.int64, "label": np.int64, "distance": np.float64}
-        )
-        if qidx is None or len(pdf) == 0:
-            return empty
-        Qs = Q_[qidx]
-        V = (
-            decode(pdf)
-            if decode is not None
-            else np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        )
-        labels = pdf[id_col].to_numpy(np.int64)
-        if metric == "l1":
-            D = np.abs(Qs[:, None, :] - V[None, :, :]).sum(-1)
-        else:
-            G = Qs @ V.T
-            if metric == "l2":
-                D = (Qs * Qs).sum(1)[:, None] + (V * V).sum(1)[None, :] - 2.0 * G
-                np.maximum(D, 0.0, out=D)
-            elif metric == "cosine":
-                denom = (
-                    np.sqrt((Qs * Qs).sum(1))[:, None]
-                    * np.sqrt((V * V).sum(1))[None, :]
-                )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = np.where(denom > 0, G / denom, 0.0)
-            else:
-                D = G
-        mask = D < radius if want_min else D > radius
-        qi, vi = np.nonzero(mask)
-        if len(qi) == 0:
-            return empty
-        return pd.DataFrame(
-            {"qid": qids_[qidx][qi], "label": labels[vi], "distance": D[qi, vi]}
-        )
-
-    subset = assigned.where(
-        F.col("cell").isin([int(c) for c in sorted(cell_to_qidx)])
-    )
-    return subset.groupBy("cell").applyInPandas(cell_range, out_schema)
 
 
 # ---------------------------------------------------------------------------

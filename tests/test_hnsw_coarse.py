@@ -216,6 +216,37 @@ def probe_cells_to_assign(idx, Q, nprobe):
     return idx.quantizer.search_np(Q, nprobe)[0]
 
 
+def test_ivfpq_range_search_probes_through_graph_quantizer(spark):
+    """IVFPQIndex.range_search ranks its probes with the graph coarse
+    quantizer, like search does — not with the exact centroid order.
+    The geometry is one where the two orders pick different cells for
+    some query (asserted, so the check cannot pass vacuously); a radius
+    above every probed distance must then return exactly the (qid,
+    label) set of search(k=ntotal) at the same nprobe."""
+    from faiss_metal_spark.compact_index import _query_df
+
+    V = _clustered(300, 16, seed=51)
+    Q = _clustered(8, 16, seed=52).astype(np.float64)
+    idx = IVFPQIndex.from_table(
+        _vt(spark, V), n_cells=32, m=4, nbits=4, sample_size=300, iters=4,
+        coarse_hnsw_m=4, coarse_kw={"beam": 4},
+    )
+    nprobe = 4
+    graph = idx.quantizer.search_np(Q, nprobe)[0]
+    C = idx.centroids
+    exact = ((C * C).sum(1)[None, :] - 2.0 * (Q @ C.T)).argsort(1, kind="stable")
+    assert any(
+        set(g) != set(e) for g, e in zip(graph, exact[:, :nprobe])
+    ), "geometry no longer separates the graph and exact probe orders"
+
+    D, L = idx.search_numpy(Q, idx.ntotal, nprobe=nprobe)
+    want = {(i, int(lab)) for i, row in enumerate(L) for lab in row[row >= 0]}
+    radius = float(D[L >= 0].max()) + 1.0
+    got = idx.range_search(_query_df(spark, Q), radius, nprobe=nprobe).collect()
+    assert {(r["qid"], r["label"]) for r in got} == want
+    idx.release()
+
+
 def test_probe_rows_unique_and_pad_sentinel(spark):
     """r12 review findings: (a) a probe row must never repeat a REAL
     cell — build_probe_map appends the query once per occurrence and

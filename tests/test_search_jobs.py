@@ -13,6 +13,7 @@ be bitwise identical to the DataFrame path — same float32-rounded
 """
 
 import numpy as np
+import pytest
 
 from faiss_metal_spark import VectorTable
 from tests.conftest import make_fixture, numpy_oracle
@@ -91,3 +92,31 @@ def test_host_path_shapes_and_guards(spark):
             vt.df, None, 3, method="sql",
             queries_host=(np.arange(2), Q[:2].astype(np.float64)),
         )
+
+
+# jobs per IVF-family search_numpy call, measured on these toy sizes
+# (local[2]) before the family shared one probe-and-scan driver
+IVF_SEARCH_JOBS = 5
+
+
+@pytest.mark.parametrize("kind, nq", [("ivf", 1), ("ivfpq", 3), ("ivfrq", 3)])
+def test_ivf_search_numpy_job_budget(spark, kind, nq):
+    """Job budget of one IVF-family ``search_numpy`` call: the query
+    collect, then the per-cell scan, the merge and the result fetch
+    (the AQE sub-jobs). An extra collect or count in the probe
+    machinery shows here as one more job; the ``interactive``
+    benchmark's traced ``ivf.jobs_per_call`` (IVF, nq=1) reads 5."""
+    from faiss_metal_spark import IVFIndex, IVFPQIndex, IVFRQIndex
+
+    V, Q = make_fixture(300, nq, 8, seed=5)
+    vt = VectorTable(spark, 8).add_numpy(V)
+    idx = {
+        "ivf": lambda: IVFIndex.from_table(vt, 8, iters=2),
+        "ivfpq": lambda: IVFPQIndex.from_table(vt, 8, 4, iters=2, nbits=4),
+        "ivfrq": lambda: IVFRQIndex.from_table(vt, 8, 2, iters=2, nbits=4),
+    }[kind]()
+    _, jobs = _jobs_during(
+        spark, f"ivf-jobs-{kind}", lambda: idx.search_numpy(Q, 5, nprobe=2)
+    )
+    assert len(jobs) == IVF_SEARCH_JOBS, f"{kind}: {len(jobs)} jobs {jobs}"
+    idx.release()
