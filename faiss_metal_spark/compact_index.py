@@ -596,7 +596,7 @@ class _IVF(_Decoded, _MergeTier):
     - the inverted lists: ``_frame``, one row per entry with its
       ``cell``, ``partitionBy("cell")`` in a store;
     - the codec's scan kernel, ``_kernel()``
-      (``operators.similarity.ScanKernel``) — by default the exact
+      (``operators.knn.ScanKernel``) — by default the exact
       ``metric`` over the ``_decode()``-d rows.
 
     Every search is one call of the probe-and-scan driver,

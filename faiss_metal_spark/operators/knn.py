@@ -15,11 +15,15 @@ Physical strategies (the §4 planner, chosen by ``method='auto'``):
 
 ``gemm``  — the scale path, analog of the reference's simdgroup-GEMM +
   two-phase top-k select (/root/reference/shaders/simdgroup_gemm.metal,
-  block_select.metal). Queries are small by contract (like the build
-  side of a broadcast join): collected to a numpy (nq×d) matrix and
-  broadcast to every executor. A single ``mapInArrow`` pass over the
-  vector partitions computes per-Arrow-batch distance blocks with BLAS
-  (``Q @ V.T``) and folds them into a *running* per-partition top-k —
+  block_select.metal), run by ``flat_scan`` — the one scan-and-merge
+  driver every exhaustive search shares (float here, PQ ADC in pq.py,
+  additive LUTs in rq.py) — with the ``gemm_scan`` kernel. Queries are
+  small by contract (like the build side of a broadcast join):
+  collected to a numpy (nq×d) matrix and broadcast to every executor.
+  A single ``mapInArrow`` pass over the vector partitions computes
+  per-Arrow-batch distance blocks with BLAS (``Q @ V.T``, one
+  ``_metric_block`` epilogue) and folds them into a *running*
+  per-partition top-k (``_topk_fold``) —
   the full (nq×nv) distance matrix is never materialized, which is
   exactly the reference's fused_l2_topk strategy
   (/root/reference/shaders/fused_l2_topk.metal:19-124) generalized to
@@ -45,6 +49,8 @@ broadcast-join discipline; larger query sets should use
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from dataclasses import dataclass
 from typing import Literal
 
 import numpy as np
@@ -75,6 +81,10 @@ _PARTIAL_SCHEMA = T.StructType(
         T.StructField("distance", T.DoubleType(), False),
     ]
 )
+
+# Range results are unordered (qid, label, distance) rows — the
+# partial-candidate shape, no rank.
+RANGE_SCHEMA = _PARTIAL_SCHEMA
 
 # Broadcast-side ceiling for the gemm path, in floats (≈ 64 MB of FP64).
 _MAX_BROADCAST_ELEMS = 8_000_000
@@ -135,7 +145,7 @@ def knn_search(
 
     ``queries_host=(qids, Q)`` (r14): host-array queries for callers
     that already hold them in numpy (``search_numpy``). Skips both the
-    query-DataFrame build and the ``_collect_queries`` round-trip —
+    query-DataFrame build and the query collect round-trip —
     the collect is a whole Spark job whose ~0.4 s scheduling floor
     dominated every sub-second grid config (BENCH_GRID method notes),
     and it only re-materializes arrays the caller had. gemm path only
@@ -147,78 +157,45 @@ def knn_search(
     if metric not in ("l2", "ip", "cosine", "l1"):
         raise ValueError(f"unknown metric {metric!r}")
 
-    # Precomputed-norm numerics (MetalIndexFlat.mm:258-268): a quantized
-    # table's L2 decomposition uses norms from the UNQUANTIZED fp32
-    # input, threaded in via ``norm_col``; without it the gemm path
-    # recomputes norms from the stored vectors (identical for fp32).
-    vcols = [F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")]
-    use_norms = norm_col is not None and metric in ("l2", "cosine")
-    if use_norms:
-        vcols.append(F.col(norm_col).cast("double").alias("norm_sq"))
-    v = vectors.select(*vcols)
+    vcols, use_norms = _vector_cols(id_col, vec_col, norm_col, metric)
     if queries_host is not None:
         if method == "sql":
             raise ValueError("queries_host requires the gemm path")
         method = "gemm"
-        q = None
-    else:
-        q = queries.select(
-            F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
-        )
-        if method == "auto":
-            method = "sql" if (nv_hint is not None and nv_hint <= _SMALL_NV) else "gemm"
+    elif method == "auto":
+        method = "sql" if (nv_hint is not None and nv_hint <= _SMALL_NV) else "gemm"
     if vec_format != "array" and method != "gemm":
         raise ValueError("compact binary vector storage requires the gemm path")
 
     if method == "gemm":
-        # Accumulator precision: ``auto`` = float32, the reference's
-        # accumulator width (simdgroup_gemm.metal:13-14) — sgemm runs at
-        # 2× dgemm FLOPS with half the memory traffic, which at 100 TB
-        # is the difference between the right plan and a 2-4× slower
-        # one (measured 1.8-3.6× on the 768d grid keys). ``f64`` is the
-        # opt-in exactness mode for oracle-grade hash comparisons
-        # (DuckDB computes in double); callers that diff against a
-        # float64 oracle pin ``compute="f64"`` explicitly.
-        if compute == "auto":
-            compute = "f32"
-        if compute not in ("f32", "f64"):
-            raise ValueError(f"unknown compute {compute!r} (auto/f32/f64)")
-        dtype = np.float64 if compute == "f64" else np.float32
-        if queries_host is not None:
-            qids = np.asarray(queries_host[0], dtype=np.int64)
-            Q = np.asarray(queries_host[1], dtype=np.float64)
-            if Q.ndim != 2 or len(qids) != len(Q):
-                raise ValueError("queries_host must be (qids, (nq, d) matrix)")
-            if Q.size > _MAX_BROADCAST_ELEMS:
-                raise ValueError(
-                    f"query batch too large to broadcast ({Q.size} elems); "
-                    "use knn_join for large-nq workloads"
-                )
-        else:
-            qids, Q = _collect_queries(q)
-        candidates = _gemm_candidates(
-            v, qids, Q, k, metric, vec_format, use_norms, dtype
+        return flat_scan(
+            vectors, queries,
+            gemm_scan(metric, vec_format, use_norms, _compute_dtype(compute)),
+            columns=vcols, k=k, qid_col=qid_col, qvec_col=qvec_col,
+            queries_host=queries_host,
         )
-    else:
-        qids = None
-        candidates = _sql_candidates(v.select("id", "vec"), q, k, metric)
+    q = queries.select(
+        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
+    )
+    candidates = _sql_candidates(vectors.select(*vcols[:2]), q, k, metric)
+    return _finalize(q, candidates, k, metric)
 
-    # Two-level merge gate: the final per-qid group sees parts·k structs;
-    # past ~64k that single collect_list becomes the straggler (50k
-    # partitions × k=100 = 5M structs in one task at cluster scale), so
-    # a salted partial merge caps it at _PREMERGE_SALT·k first — the
-    # same partial/final shape block_select applies within a partition
-    # (/root/reference/shaders/block_select.metal phase 1/2), applied
-    # once more ACROSS partitions.
-    salt = None
-    if method == "gemm":
-        try:
-            parts = vectors.rdd.getNumPartitions()
-        except Exception:  # pragma: no cover — exotic plans; skip the gate
-            parts = None
-        if parts is not None and parts * k > _PREMERGE_PARTS_K:
-            salt = _PREMERGE_SALT
-    return _finalize(q, candidates, k, metric, premerge_salt=salt, qids=qids)
+
+def _vector_cols(
+    id_col: str, vec_col: str, norm_col: str | None, metric: Metric
+) -> tuple[list, bool]:
+    """The (id, vec[, norm_sq]) columns a float search scans, and
+    whether they carry the norms.
+
+    Precomputed-norm numerics (MetalIndexFlat.mm:258-268): a quantized
+    table's L2/cosine decomposition uses norms from the UNQUANTIZED
+    fp32 input, threaded in via ``norm_col``; without it the gemm path
+    recomputes norms from the stored vectors (identical for fp32)."""
+    vcols = [F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")]
+    use_norms = norm_col is not None and metric in ("l2", "cosine")
+    if use_norms:
+        vcols.append(F.col(norm_col).cast("double").alias("norm_sq"))
+    return vcols, use_norms
 
 
 # ---------------------------------------------------------------------------
@@ -253,13 +230,31 @@ def _sql_candidates(v: DataFrame, q: DataFrame, k: int, metric: Metric) -> DataF
 
 
 # ---------------------------------------------------------------------------
-# gemm path — broadcast queries, single scan, per-partition running top-k
+# flat scan — broadcast query state, single scan, per-partition running top-k
 # ---------------------------------------------------------------------------
 
 
-def _collect_queries(q: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Queries are the broadcast side: small by contract, like a dim table.
+def _compute_dtype(compute: str):
+    """``compute`` → the accumulator dtype of every float GEMM path.
 
+    ``auto`` = float32, the reference's accumulator width
+    (simdgroup_gemm.metal:13-14) — sgemm runs at 2× dgemm FLOPS with
+    half the memory traffic, which at 100 TB is the difference between
+    the right plan and a 2-4× slower one (measured 1.8-3.6× on the 768d
+    grid keys). ``f64`` is the opt-in exactness mode for oracle-grade
+    hash comparisons (DuckDB computes in double); callers that diff
+    against a float64 oracle pin ``compute="f64"`` explicitly."""
+    if compute == "auto":
+        compute = "f32"
+    if compute not in ("f32", "f64"):
+        raise ValueError(f"unknown compute {compute!r} (auto/f32/f64)")
+    return np.float64 if compute == "f64" else np.float32
+
+
+def _collect_queries(q: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(qids, float64 Q) of a selected (qid, qvec) query frame.
+
+    Queries are the broadcast side: small by contract, like a dim table.
     Collect cost scales with the query table's partition count, not its
     rows: a 100-row batch created from a Python list is a pickled RDD
     over defaultParallelism partitions (~350 ms of task scheduling on
@@ -270,13 +265,22 @@ def _collect_queries(q: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     qids = pdf["qid"].to_numpy(np.int64)
     if len(pdf) == 0:
         return qids, np.zeros((0, 0), np.float64)
-    Q = np.stack(pdf["qvec"].to_numpy()).astype(np.float64)
+    return qids, np.stack(pdf["qvec"].to_numpy()).astype(np.float64)
+
+
+def _query_state(Q: np.ndarray, dtype):
+    """The broadcast query state of a float scan: ``(Q, ‖q‖²)`` cast
+    ONCE on the driver — the f32 default halves the broadcast bytes and
+    saves every task a fresh astype copy. Norms are computed in f64
+    first, THEN cast (identical values to a per-task cast of the f64
+    matrix). The query matrix is what broadcasts, so its size meets the
+    broadcast ceiling here."""
     if Q.size > _MAX_BROADCAST_ELEMS:
         raise ValueError(
             f"query batch too large to broadcast ({Q.size} elems); "
             "use knn_join for large-nq workloads"
         )
-    return qids, Q
+    return Q.astype(dtype, copy=False), (Q * Q).sum(axis=1).astype(dtype, copy=False)
 
 
 def _arrow_matrix(arr, vec_format: str, dtype=np.float64) -> np.ndarray:
@@ -316,110 +320,253 @@ def _arrow_i64(arr) -> np.ndarray:
     return arr.to_numpy(zero_copy_only=True)
 
 
-def _gemm_candidates(
-    v: DataFrame, qids: np.ndarray, Q: np.ndarray, k: int, metric: Metric,
-    vec_format: str = "array", use_norms: bool = False, dtype=np.float64,
+def _metric_block(metric: Metric, G: np.ndarray, qn, vn) -> np.ndarray:
+    """The metric epilogue over one GEMM block ``G = Q·Vᵀ`` with the
+    squared norms ``qn`` (queries) and ``vn`` (vectors): l2 = qn + vn −
+    2G clamped at 0 (the reference's fused epilogue), cosine = G over
+    the norm product (0 where a norm is 0), ip = G. Split from the GEMM
+    so one ``G`` can serve several metrics (``knn_search_multi``)."""
+    if metric == "l2":
+        D = qn[:, None] + vn[None, :] - 2.0 * G
+        np.maximum(D, 0.0, out=D)
+        return D
+    if metric == "cosine":
+        denom = np.sqrt(qn)[:, None] * np.sqrt(vn)[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return np.where(denom > 0, G / denom, 0.0)
+    return G
+
+
+def _distances(metric: Metric, Q: np.ndarray, V: np.ndarray, qn=None, vn=None):
+    """(nq, n) ``metric`` distances of ``Q`` to ``V`` in their dtype —
+    BLAS ``Q @ V.T`` (the reference's GEMM kernel family) plus
+    :func:`_metric_block`, norms recomputed when not supplied. l1 has no
+    GEMM decomposition: direct |q−v| broadcast, O(nq·n·d) bounded by
+    the caller's block."""
+    if metric == "l1":
+        return np.abs(Q[:, None, :] - V[None, :, :]).sum(axis=-1)
+    if metric == "ip":
+        return Q @ V.T
+    return _metric_block(
+        metric, Q @ V.T,
+        (Q * Q).sum(axis=1) if qn is None else qn,
+        (V * V).sum(axis=1) if vn is None else vn,
+    )
+
+
+def _topk_fold(best, D: np.ndarray, labels: np.ndarray, k: int, lexsort: bool = False):
+    """Fold one (nq, n) block of distances ``D`` (smaller is better —
+    callers negate max-metrics) with its (n,) ``labels`` into the
+    running per-query top-k ``best`` = (distances, labels), or start it
+    from ``None``. Returns the new ≤ k-wide pair, unordered unless
+    ``lexsort``: then by (distance, label), so every member of a tie
+    group the final merge must keep survives (additive codes collide
+    heavily, ≤ ksub^m distinct code chains)."""
+    lab = np.broadcast_to(labels, D.shape)
+    if best is not None:
+        D = np.concatenate([best[0], D], axis=1)
+        lab = np.concatenate([best[1], lab], axis=1)
+    if lexsort:
+        idx = np.lexsort((lab, D), axis=1)[:, :k]
+    elif D.shape[1] > k:
+        idx = np.argpartition(D, k - 1, axis=1)[:, :k]
+    else:
+        idx = np.argsort(D, axis=1)
+    return np.take_along_axis(D, idx, axis=1), np.take_along_axis(lab, idx, axis=1)
+
+
+def _no_state(Q: np.ndarray) -> None:
+    return None
+
+
+@dataclass(frozen=True)
+class ScanKernel:
+    """A codec's scan: how the stored rows of one batch score against
+    the query batch. Two drivers run kernels — :func:`flat_scan` (the
+    whole table, one Arrow batch at a time) and
+    :func:`~.similarity.probe_scan` (the IVF cells a query probes, the
+    role of faiss's ``InvertedListScanner``):
+
+    - ``score``: on the executors. ``flat_scan`` calls
+      ``score(state, batch) -> D``, the (nq, batch rows) distances of
+      every query to one Arrow record batch; ``probe_scan`` calls
+      ``score(state, Q, qidx, cell, pdf) -> D``, the (len(qidx),
+      len(pdf)) distances of the probing queries ``Q[qidx]`` to one
+      cell group's stored rows;
+    - ``prepare(Q) -> state``: driver-side, once per query batch; its
+      state rides the one broadcast, so large arrays (query matrix,
+      codebooks, LUTs, centroids) live there and never in ``score``'s
+      pickled closure. It raises on a batch the codec cannot score,
+      and holds the broadcast ceiling of what it broadcasts;
+    - ``metric``: top-k direction, ``_finalize`` order and radius keep
+      rule (L2/L1 keep ``distance < radius``, IP/cosine ``>``);
+    - ``lexsort``: partial top-k by (distance, label) lexsort instead
+      of argpartition (additive codes collide heavily);
+    - ``gated``: drop non-finite distances after the partial top-k (a
+      gate's rejects, e.g. the polysemous filter; ``probe_scan`` only);
+    - ``range_schema``: the radius path's result schema."""
+
+    score: Callable
+    prepare: Callable = _no_state
+    metric: str = "l2"
+    lexsort: bool = False
+    gated: bool = False
+    range_schema: object = RANGE_SCHEMA
+
+
+def gemm_scan(
+    metric: Metric, vec_format: str = "array", use_norms: bool = False,
+    dtype=np.float64,
+) -> ScanKernel:
+    """The float kernel of :func:`flat_scan`: ``metric`` distances of the
+    broadcast query matrix (cast to ``dtype``) to each Arrow batch's
+    ``vec`` column, decoded in the same Python stage as the GEMM
+    (``_arrow_matrix``: array / fp16_binary / bf16_binary). With
+    ``use_norms`` the l2/cosine epilogue reads the batch's stored fp32
+    ``norm_sq`` column (the reference's precomputed-norm policy) instead
+    of recomputing norms from the stored, possibly quantized, values."""
+
+    def prepare(Q: np.ndarray):
+        return _query_state(Q, dtype)
+
+    def score(state, batch) -> np.ndarray:
+        Q, qn = state
+        V = _arrow_matrix(batch.column("vec"), vec_format, dtype)
+        vn = (
+            batch.column("norm_sq").to_numpy(zero_copy_only=True).astype(dtype, copy=False)
+            if use_norms
+            else None
+        )
+        return _distances(metric, Q, V, qn, vn)
+
+    return ScanKernel(score, prepare, metric=metric)
+
+
+def flat_scan(
+    rows: DataFrame,
+    queries: DataFrame | None,
+    kernel: ScanKernel,
+    *,
+    k: int | None = None,
+    radius: float | None = None,
+    qid_col: str = "qid",
+    qvec_col: str = "vec",
+    queries_host: tuple | None = None,
+    columns: list | None = None,
 ) -> DataFrame:
-    nq = len(qids)
-    if nq == 0:
-        return v.sparkSession.createDataFrame([], _PARTIAL_SCHEMA)
+    """The flat scan-and-merge driver (faiss ``IndexFlatCodes::search``
+    / ``range_search``): every exhaustive search in the engine — float
+    (:func:`gemm_scan`), PQ ADC (``pq.adc_scan``) and additive LUT
+    (``rq.lut_scan``) — is this one function with its codec's
+    :class:`ScanKernel`. The kernel is called as ``score(state, batch)``
+    on each Arrow record batch of ``rows`` (which carry an ``id``
+    label column) — or of their ``columns`` projection, taken here so
+    the premerge gate counts partitions on the caller's own frame:
+    pyspark caches a frame's ``.rdd``, while a fresh projection's
+    re-plans and, under AQE, runs any shuffle in its lineage as jobs.
+    The IVF driver ``probe_scan`` calls the same record's
+    ``score(state, Q, qidx, cell, pdf)`` per cell group instead.
 
-    spark = v.sparkSession
-    # Cast ONCE on the driver: the f32 default halves the broadcast
-    # bytes and saves every task a fresh astype copy of the query
-    # matrix. Norms are computed in f64 first, THEN cast — identical
-    # values to a per-task cast of the f64 broadcast. ONE broadcast
-    # for the whole query state (ids + matrix + norms): each
-    # sparkContext.broadcast is a driver round-trip on every search
-    # call, and a second one buys nothing.
-    want_min = _better_is_min(metric)
-    qnorm = (
-        (Q * Q).sum(axis=1).astype(dtype, copy=False)
-        if metric in ("l2", "cosine")
-        else None
-    )
-    bc = spark.sparkContext.broadcast(
-        (qids, Q.astype(dtype, copy=False), qnorm)
-    )
+    1. Collect the query batch once — or take ``queries_host=(qids,
+       Q)``, host arrays the caller already holds (``search_numpy``):
+       that skips the query-DataFrame build and a whole collect job
+       (~0.4 s scheduling floor per call). An empty batch returns an
+       empty result of the right schema.
+    2. ``kernel.prepare(Q)`` on the driver (refusals, broadcast ceiling).
+    3. ONE broadcast of (qids, state): each ``sparkContext.broadcast`` is
+       a driver round-trip on every search call.
+    4. One ``mapInArrow`` pass over ``rows``: per Arrow batch a distance
+       block, never the full (nq × n) matrix.
+    5. With ``k``: a running per-partition top-k (the reference's
+       fused_l2_topk streaming select), ≤ nq·k rows per partition, then
+       ``_finalize`` against a LocalRelation of the collected qids —
+       block_select's phase-2 merge, sentinel-padded to exactly k rows.
+       Two-level merge gate: past parts·k ≈ 64k structs per query the
+       single final collect_list becomes the straggler (50k partitions
+       × k=100 = 5M structs in one task at cluster scale), so a salted
+       partial merge caps it at ``_PREMERGE_SALT``·k first — the same
+       partial/final shape block_select applies within a partition,
+       applied once more ACROSS partitions. With ``radius``: each batch
+       emits its passing (qid, label, distance) pairs unordered — no
+       merge stage, zero shuffles, output bounded by the radius."""
+    spark = rows.sparkSession
+    if queries_host is not None:
+        qids = np.asarray(queries_host[0], dtype=np.int64)
+        Q = np.asarray(queries_host[1], dtype=np.float64)
+        if Q.ndim != 2 or len(qids) != len(Q):
+            raise ValueError("queries_host must be (qids, (nq, d) matrix)")
+    else:
+        qids, Q = _collect_queries(
+            queries.select(
+                F.col(qid_col).cast("long").alias("qid"),
+                F.col(qvec_col).alias("qvec"),
+            )
+        )
+    if len(qids) == 0:
+        return spark.createDataFrame(
+            [], RESULT_SCHEMA if radius is None else kernel.range_schema
+        )
+    bc = spark.sparkContext.broadcast((qids, kernel.prepare(Q)))
+    # the task closures hold the kernel's parts, never the kernel:
+    # ``prepare`` may close over codebooks
+    score, lexsort = kernel.score, kernel.lexsort
+    want_min = _better_is_min(kernel.metric)
+    sign = 1.0 if want_min else -1.0  # minimize sign·distance
 
-    def partial_topk(batches):
-        # Running per-partition top-k: the reference's fused streaming
-        # select — never materializes more than one (nq × batch) block.
-        # Arrow batches in, Arrow batch out: the vector matrix is a
-        # buffer view (_arrow_matrix), not a pandas object column.
+    def emit(batches):
         import pyarrow as pa
 
-        qids_, Q_, qn = bc.value
-        # cosine's query norms are a query-batch constant: hoisted out
-        # of the per-Arrow-batch loop (computed once per task)
-        qrt = np.sqrt(qn) if (qn is not None and metric == "cosine") else None
-        nq_ = Q_.shape[0]
-        best_d = np.full((nq_, 0), 0.0, dtype=dtype)  # grows to ≤ (nq, k)
-        best_l = np.full((nq_, 0), -1, dtype=np.int64)
-        sign = dtype(1.0) if want_min else dtype(-1.0)  # minimize sign*distance
-
+        qids_, state = bc.value
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            V = _arrow_matrix(batch.column("vec"), vec_format, dtype)
-            labels = _arrow_i64(batch.column("id"))
-            if metric == "l1":
-                # no GEMM decomposition exists for L1 — direct |q−v|
-                # broadcast, O(nq·batch·d) bounded by the Arrow batch
-                D = np.abs(Q_[:, None, :] - V[None, :, :]).sum(axis=-1)
-            else:
-                G = Q_ @ V.T  # BLAS — the reference's GEMM kernel family
-                if metric == "l2":
-                    # stored fp32 norms when supplied (reference's
-                    # precomputed-norm policy); recompute otherwise
-                    vn = (
-                        batch.column("norm_sq")
-                        .to_numpy(zero_copy_only=True)
-                        .astype(dtype, copy=False)
-                        if use_norms
-                        else (V * V).sum(axis=1)
-                    )
-                    D = qn[:, None] + vn[None, :] - dtype(2.0) * G  # fused epilogue
-                    np.maximum(D, 0.0, out=D)
-                elif metric == "cosine":
-                    # stored fp32 norms when supplied (same
-                    # precomputed-norm policy as l2); recompute otherwise
-                    vnorm = np.sqrt(
-                        batch.column("norm_sq")
-                        .to_numpy(zero_copy_only=True)
-                        .astype(dtype, copy=False)
-                        if use_norms
-                        else (V * V).sum(axis=1)
-                    )
-                    denom = qrt[:, None] * vnorm[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        D = np.where(denom > 0, G / denom, 0.0)
-                else:
-                    D = G
+            D = score(state, batch)
+            qi, vi = np.nonzero(D < radius if want_min else D > radius)
+            if len(qi):
+                yield pa.record_batch(
+                    [
+                        pa.array(qids_[qi]),
+                        pa.array(_arrow_i64(batch.column("id"))[vi]),
+                        pa.array(D[qi, vi].astype(np.float64)),
+                    ],
+                    names=["qid", "label", "distance"],
+                )
 
-            cat_d = np.concatenate([best_d, sign * D], axis=1)
-            cat_l = np.concatenate(
-                [best_l, np.broadcast_to(labels, (nq_, len(labels)))], axis=1
+    def partial_topk(batches):
+        import pyarrow as pa
+
+        qids_, state = bc.value
+        best = None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            D = score(state, batch)
+            best = _topk_fold(
+                best, sign * D, _arrow_i64(batch.column("id")), k, lexsort
             )
-            if cat_d.shape[1] > k:
-                idx = np.argpartition(cat_d, k - 1, axis=1)[:, :k]
-            else:
-                idx = np.argsort(cat_d, axis=1)
-            best_d = np.take_along_axis(cat_d, idx, axis=1)
-            best_l = np.take_along_axis(cat_l, idx, axis=1)
-
-        n_have = best_d.shape[1]
-        if n_have:
+        if best is not None:
+            best_d, best_l = best
             yield pa.record_batch(
                 [
-                    pa.array(np.repeat(qids_, n_have)),
+                    pa.array(np.repeat(qids_, best_d.shape[1])),
                     pa.array(best_l.ravel()),
                     pa.array((sign * best_d).ravel().astype(np.float64)),
                 ],
                 names=["qid", "label", "distance"],
             )
 
-    return v.mapInArrow(partial_topk, _PARTIAL_SCHEMA)
+    scan = rows if columns is None else rows.select(*columns)
+    if radius is not None:
+        return scan.mapInArrow(emit, kernel.range_schema)
+    candidates = scan.mapInArrow(partial_topk, _PARTIAL_SCHEMA)
+    salt = None
+    try:
+        parts = rows.rdd.getNumPartitions()
+    except Exception:  # pragma: no cover — exotic plans; skip the gate
+        parts = None
+    if parts is not None and parts * k > _PREMERGE_PARTS_K:
+        salt = _PREMERGE_SALT
+    return _finalize(None, candidates, k, kernel.metric, premerge_salt=salt, qids=qids)
 
 
 # ---------------------------------------------------------------------------
@@ -610,70 +757,37 @@ def knn_search_multi(
             "metric", "qid", "rank", "label", "distance"
         )
 
-    if compute == "auto":
-        compute = "f32"  # reference accumulator width — see knn_search
-    if compute not in ("f32", "f64"):
-        raise ValueError(f"unknown compute {compute!r} (auto/f32/f64)")
-    dtype = np.float64 if compute == "f64" else np.float32
-    # driver-side cast: halves broadcast bytes under the f32 default
-    bc = spark.sparkContext.broadcast(
-        (qids, Q.astype(dtype, copy=False),
-         (Q * Q).sum(axis=1).astype(dtype, copy=False))
-    )
+    dtype = _compute_dtype(compute)
+    bc = spark.sparkContext.broadcast((qids, _query_state(Q, dtype)))
     need_gemm = any(m != "l1" for m in metrics)
+    need_vn = "l2" in metrics or "cosine" in metrics
 
     def partial_topk(batches):
         import pyarrow as pa
 
-        qids_, Q_, qn = bc.value
-        nq_ = Q_.shape[0]
-        qrt = np.sqrt(qn)
-        signs = {m: (dtype(1.0) if _better_is_min(m) else dtype(-1.0)) for m in metrics}
-        state = {
-            m: (np.full((nq_, 0), 0.0, dtype=dtype), np.full((nq_, 0), -1, dtype=np.int64))
-            for m in metrics
-        }
+        qids_, (Q_, qn) = bc.value
+        signs = {m: 1.0 if _better_is_min(m) else -1.0 for m in metrics}
+        state = dict.fromkeys(metrics)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             V = _arrow_matrix(batch.column("vec"), "array", dtype)
             labels = _arrow_i64(batch.column("id"))
             G = (Q_ @ V.T) if need_gemm else None
-            vn = (V * V).sum(axis=1) if ("l2" in metrics or "cosine" in metrics) else None
+            vn = (V * V).sum(axis=1) if need_vn else None
             for m in metrics:
-                if m == "l2":
-                    D = qn[:, None] + vn[None, :] - dtype(2.0) * G
-                    np.maximum(D, 0.0, out=D)
-                elif m == "ip":
-                    D = G
-                elif m == "cosine":
-                    denom = qrt[:, None] * np.sqrt(vn)[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        D = np.where(denom > 0, G / denom, 0.0)
-                else:  # l1 — no GEMM decomposition exists
-                    D = np.abs(Q_[:, None, :] - V[None, :, :]).sum(axis=-1)
-                best_d, best_l = state[m]
-                cat_d = np.concatenate([best_d, signs[m] * D], axis=1)
-                cat_l = np.concatenate(
-                    [best_l, np.broadcast_to(labels, (nq_, len(labels)))], axis=1
-                )
-                if cat_d.shape[1] > k:
-                    idx = np.argpartition(cat_d, k - 1, axis=1)[:, :k]
-                else:
-                    idx = np.argsort(cat_d, axis=1)
-                state[m] = (
-                    np.take_along_axis(cat_d, idx, axis=1),
-                    np.take_along_axis(cat_l, idx, axis=1),
-                )
+                D = _distances(m, Q_, V) if m == "l1" else _metric_block(m, G, qn, vn)
+                state[m] = _topk_fold(state[m], signs[m] * D, labels, k)
         mcol, qcol, lcol, dcol = [], [], [], []
         for m in metrics:
+            if state[m] is None:
+                continue
             best_d, best_l = state[m]
             n_have = best_d.shape[1]
-            if n_have:
-                mcol.extend([m] * (nq_ * n_have))
-                qcol.append(np.repeat(qids_, n_have))
-                lcol.append(best_l.ravel())
-                dcol.append((signs[m] * best_d).ravel())
+            mcol.extend([m] * (len(qids_) * n_have))
+            qcol.append(np.repeat(qids_, n_have))
+            lcol.append(best_l.ravel())
+            dcol.append((signs[m] * best_d).ravel())
         if mcol:
             yield pa.record_batch(
                 [
@@ -727,15 +841,6 @@ def knn_search_multi(
     )
 
 
-RANGE_SCHEMA = T.StructType(
-    [
-        T.StructField("qid", T.LongType(), False),
-        T.StructField("label", T.LongType(), False),
-        T.StructField("distance", T.DoubleType(), False),
-    ]
-)
-
-
 def range_search(
     vectors: DataFrame,
     queries: DataFrame,
@@ -749,6 +854,7 @@ def range_search(
     nv_hint: int | None = None,
     vec_format: str = "array",
     compute: Literal["auto", "f32", "f64"] = "auto",
+    norm_col: str | None = None,
 ) -> DataFrame:
     """All neighbors within ``radius`` of each query — FAISS
     ``Index::range_search`` semantics, which the reference inherits but
@@ -766,81 +872,36 @@ def range_search(
     volume bounded by the radius, not by nq·nv. The sql path is the
     declarative twin (crossJoin + HOF distance + filter) that Catalyst
     plans as BroadcastNestedLoopJoin.
+
+    ``norm_col``: the stored fp32 norms of a quantized table, exactly as
+    in ``knn_search`` — both run the same kernel, so a pair both return
+    carries the same distance.
     """
     if metric not in ("l2", "ip", "cosine", "l1"):
         raise ValueError(f"unknown metric {metric!r}")
     want_min = _better_is_min(metric)
 
-    v = vectors.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-    )
-    q = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
-    )
+    vcols, use_norms = _vector_cols(id_col, vec_col, norm_col, metric)
     if method == "auto":
         method = "sql" if (nv_hint is not None and nv_hint <= _SMALL_NV) else "gemm"
     if vec_format != "array" and method != "gemm":
         raise ValueError("compact binary vector storage requires the gemm path")
 
     if method == "sql":
+        q = queries.select(
+            F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
+        )
         dist = _distance_expr(metric, "qvec", "vec").alias("distance")
         pairs = (
             F.broadcast(q)
-            .crossJoin(v)
+            .crossJoin(vectors.select(*vcols[:2]))
             .select("qid", F.col("id").alias("label"), dist)
         )
         pred = F.col("distance") < radius if want_min else F.col("distance") > radius
         return pairs.where(pred)
 
-    if compute == "auto":
-        compute = "f32"  # reference accumulator width — see knn_search
-    if compute not in ("f32", "f64"):
-        raise ValueError(f"unknown compute {compute!r} (auto/f32/f64)")
-    dtype = np.float64 if compute == "f64" else np.float32
-    qids, Q = _collect_queries(q)
-    spark = v.sparkSession
-    if len(qids) == 0:
-        return spark.createDataFrame([], RANGE_SCHEMA)
-    # driver-side cast: halves broadcast bytes under the f32 default
-    bc = spark.sparkContext.broadcast(
-        (qids, Q.astype(dtype, copy=False),
-         (Q * Q).sum(axis=1).astype(dtype, copy=False))
+    return flat_scan(
+        vectors, queries,
+        gemm_scan(metric, vec_format, use_norms, _compute_dtype(compute)),
+        columns=vcols, radius=radius, qid_col=qid_col, qvec_col=qvec_col,
     )
-
-    def emit(batches):
-        import pyarrow as pa
-
-        qids_, Q_, qn = bc.value
-        qrt = np.sqrt(qn) if metric == "cosine" else None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V = _arrow_matrix(batch.column("vec"), vec_format, dtype)
-            labels = _arrow_i64(batch.column("id"))
-            if metric == "l1":
-                D = np.abs(Q_[:, None, :] - V[None, :, :]).sum(axis=-1)
-            else:
-                G = Q_ @ V.T
-                if metric == "l2":
-                    vn = (V * V).sum(axis=1)
-                    D = qn[:, None] + vn[None, :] - dtype(2.0) * G
-                    np.maximum(D, 0.0, out=D)
-                elif metric == "cosine":
-                    denom = qrt[:, None] * np.sqrt((V * V).sum(axis=1))[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        D = np.where(denom > 0, G / denom, 0.0)
-                else:
-                    D = G
-            mask = D < radius if want_min else D > radius
-            qi, vi = np.nonzero(mask)
-            if len(qi):
-                yield pa.record_batch(
-                    [
-                        pa.array(qids_[qi]),
-                        pa.array(labels[vi]),
-                        pa.array(D[qi, vi].astype(np.float64)),
-                    ],
-                    names=["qid", "label", "distance"],
-                )
-
-    return v.mapInArrow(emit, RANGE_SCHEMA)

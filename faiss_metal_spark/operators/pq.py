@@ -20,9 +20,10 @@ Scale shape mirrors the flat kNN path exactly:
   downstream cache/shuffle/parquet at m bytes;
 - **search** broadcasts per-query ADC lookup tables (nq·m·256 doubles —
   query-batch-sized, never corpus-sized) and streams the code table
-  through a running per-partition top-k (the ``_gemm_candidates``
-  pattern), then merges with the shared partial/final ``_finalize``.
-  Distances are sums of m table gathers — no decode, no FP vector ever
+  through ``knn.flat_scan`` — the flat float search's own driver, here
+  with the ``adc_scan`` kernel: running per-partition top-k, then the
+  shared partial/final ``_finalize`` merge. Distances are sums of m
+  table gathers (``_lut_gather``) — no decode, no FP vector ever
   reconstructed in the hot path.
 """
 
@@ -34,7 +35,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .knn import _PARTIAL_SCHEMA, _arrow_i64, _arrow_matrix, _finalize
+from .knn import (
+    _PARTIAL_SCHEMA,
+    ScanKernel,
+    _arrow_i64,
+    _arrow_matrix,
+    _finalize,
+    flat_scan,
+)
 
 KSUB = 256  # 8-bit codes, the FAISS default and the only size stored in 1 byte
 
@@ -325,6 +333,49 @@ def _adc_lut(Q: np.ndarray, codebooks: np.ndarray, metric: str) -> np.ndarray:
     return lut
 
 
+def _lut_gather(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """(nq, n) sums Σ_j ``lut[:, j, codes[:, j]]`` — one (nq, ksub)
+    table gather per stored code byte, accumulated in byte order: the
+    ADC / additive inner loop of every code scan, flat and IVF."""
+    D = np.zeros((lut.shape[0], len(codes)), dtype=np.float64)
+    for j in range(lut.shape[1]):
+        D += lut[:, j, :][:, codes[:, j]]
+    return D
+
+
+def adc_scan(
+    codebooks: np.ndarray, metric: str = "l2", packed4: bool = False
+) -> ScanKernel:
+    """The ADC kernel of :func:`~.knn.flat_scan` over a ``(id, code)``
+    table (faiss ``IndexPQ``'s scanner): the driver builds the (nq, m,
+    ksub) lookup tables once — fused to (nq, ⌈m/2⌉, 256) byte tables
+    with ``packed4`` — and each Arrow batch sums one gather per stored
+    code byte. The LUT is what broadcasts — 256× larger per query than
+    the raw query matrix the float path broadcasts — so it meets the
+    broadcast ceiling, checked before it is built."""
+    m, ksub, dsub = codebooks.shape
+
+    def prepare(Q: np.ndarray) -> np.ndarray:
+        from .knn import _MAX_BROADCAST_ELEMS
+
+        if Q.shape[1] != m * dsub:
+            raise ValueError(f"query dim {Q.shape[1]} != m·dsub {m * dsub}")
+        lut_elems = len(Q) * (((m + 1) // 2) * 256 if packed4 else m * ksub)
+        if lut_elems > _MAX_BROADCAST_ELEMS:
+            raise ValueError(
+                f"ADC LUT too large to broadcast ({lut_elems} elems > "
+                f"{_MAX_BROADCAST_ELEMS}); use smaller query batches"
+            )
+        lut = _adc_lut(Q, codebooks, metric)
+        return _fuse_lut4(lut) if packed4 else lut
+
+    def score(lut, batch) -> np.ndarray:
+        # l2 table entries are sums of squares, so no clamp is needed
+        return _lut_gather(lut, _arrow_codes(batch.column("code")))
+
+    return ScanKernel(score, prepare, metric=metric)
+
+
 def pq_range_search(
     codes: DataFrame,
     codebooks: np.ndarray,
@@ -346,57 +397,10 @@ def pq_range_search(
     shuffle; output volume is bounded by the radius, not nq·n."""
     if metric not in ("l2", "ip"):
         raise ValueError(f"pq_range_search supports l2/ip, got {metric!r}")
-    m, ksub, dsub = codebooks.shape
-    from .knn import _MAX_BROADCAST_ELEMS, RANGE_SCHEMA
-
-    qpdf = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = codes.sparkSession
-    qids = qpdf["qid"].to_numpy(np.int64)
-    nq = len(qids)
-    if nq == 0:
-        return spark.createDataFrame([], RANGE_SCHEMA)
-    Q = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-    if Q.shape[1] != m * dsub:
-        raise ValueError(f"query dim {Q.shape[1]} != m·dsub {m * dsub}")
-    if nq * m * ksub > _MAX_BROADCAST_ELEMS:
-        raise ValueError(
-            f"ADC LUT too large to broadcast ({nq * m * ksub} elems > "
-            f"{_MAX_BROADCAST_ELEMS}); use smaller query batches"
-        )
-    bc = spark.sparkContext.broadcast((qids, _adc_lut(Q, codebooks, metric)))
-    want_min = metric == "l2"
-    r = float(radius)
-
-    def emit(batches):
-        import pyarrow as pa
-
-        qids_, lut_ = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            C = _arrow_codes(batch.column("code"))
-            labels = _arrow_i64(batch.column("id"))
-            D = np.zeros((len(qids_), len(C)), dtype=np.float64)
-            for j in range(m):
-                D += lut_[:, j, :][:, C[:, j]]
-            if want_min:
-                np.maximum(D, 0.0, out=D)
-                qi, vi = np.nonzero(D < r)
-            else:
-                qi, vi = np.nonzero(D > r)
-            if len(qi):
-                yield pa.record_batch(
-                    [
-                        pa.array(qids_[qi]),
-                        pa.array(labels[vi]),
-                        pa.array(D[qi, vi]),
-                    ],
-                    names=["qid", "label", "distance"],
-                )
-
-    return codes.mapInArrow(emit, RANGE_SCHEMA)
+    return flat_scan(
+        codes, queries, adc_scan(codebooks, metric), radius=float(radius),
+        qid_col=qid_col, qvec_col=qvec_col,
+    )
 
 
 def pq_search(
@@ -427,80 +431,10 @@ def pq_search(
     """
     if metric not in ("l2", "ip"):
         raise ValueError(f"pq_search supports l2/ip, got {metric!r}")
-    m, ksub, dsub = codebooks.shape
-    from .knn import _MAX_BROADCAST_ELEMS
-    qpdf = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qvec")
-    ).toPandas()
-    spark = codes.sparkSession
-    qids = qpdf["qid"].to_numpy(np.int64)
-    nq = len(qids)
-    if nq == 0:
-        from .knn import RESULT_SCHEMA
-
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    Q = np.stack(qpdf["qvec"].to_numpy()).astype(np.float64)
-    if Q.shape[1] != m * dsub:
-        raise ValueError(f"query dim {Q.shape[1]} != m·dsub {m * dsub}")
-    # The broadcast here is the ADC LUT (nq·m·256 doubles; fused
-    # nq·⌈m/2⌉·256 for packed4) — 256× larger per query than the raw
-    # query matrix the gemm path broadcasts, so it gets the same
-    # ceiling discipline as _collect_queries.
-    lut_elems = nq * (((m + 1) // 2) * 256 if packed4 else m * ksub)
-    if lut_elems > _MAX_BROADCAST_ELEMS:
-        raise ValueError(
-            f"ADC LUT too large to broadcast ({lut_elems} elems > "
-            f"{_MAX_BROADCAST_ELEMS}); use smaller query batches"
-        )
-
-    lut = _adc_lut(Q, codebooks, metric)
-    if packed4:
-        lut = _fuse_lut4(lut)  # (nq, ⌈m/2⌉, 256) fused byte tables
-    bc = spark.sparkContext.broadcast((qids, lut))
-    want_min = metric == "l2"
-    sign = 1.0 if want_min else -1.0
-
-    def partial_topk(batches):
-        import pyarrow as pa
-
-        qids_, lut_ = bc.value
-        nq_ = len(qids_)
-        n_gather = lut_.shape[1]
-        best_d = np.full((nq_, 0), 0.0)
-        best_l = np.full((nq_, 0), -1, dtype=np.int64)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            C = _arrow_codes(batch.column("code"))
-            labels = _arrow_i64(batch.column("id"))
-            D = np.zeros((nq_, len(C)), dtype=np.float64)
-            for j in range(n_gather):
-                # gather: (nq, 256)[:, codes_j] → (nq, batch)
-                D += lut_[:, j, :][:, C[:, j]]
-            cat_d = np.concatenate([best_d, sign * D], axis=1)
-            cat_l = np.concatenate(
-                [best_l, np.broadcast_to(labels, (nq_, len(labels)))], axis=1
-            )
-            if cat_d.shape[1] > k:
-                idx = np.argpartition(cat_d, k - 1, axis=1)[:, :k]
-            else:
-                idx = np.argsort(cat_d, axis=1)
-            best_d = np.take_along_axis(cat_d, idx, axis=1)
-            best_l = np.take_along_axis(cat_l, idx, axis=1)
-        n_have = best_d.shape[1]
-        if n_have:
-            yield pa.record_batch(
-                [
-                    pa.array(np.repeat(qids_, n_have)),
-                    pa.array(best_l.ravel()),
-                    pa.array((sign * best_d).ravel()),
-                ],
-                names=["qid", "label", "distance"],
-            )
-
-    candidates = codes.mapInArrow(partial_topk, _PARTIAL_SCHEMA)
-    qdf = queries.select(F.col(qid_col).cast("long").alias("qid"))
-    return _finalize(qdf, candidates, k, metric)
+    return flat_scan(
+        codes, queries, adc_scan(codebooks, metric, packed4), k=k,
+        qid_col=qid_col, qvec_col=qvec_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -641,8 +575,6 @@ def pq_scan(
     and each stored code (rejects leave as +inf and drop after the
     partial top-k). The stored code width is checked hard: a
     packed4/layout mismatch raises instead of gathering a prefix."""
-    from .similarity import ScanKernel
-
     m, ksub, dsub = codebooks.shape
     if packed4:
         if ksub != 16:
@@ -671,9 +603,7 @@ def pq_scan(
         codes = np.frombuffer(
             b"".join(pdf["code"].tolist()), dtype=np.uint8
         ).reshape(len(pdf), width)
-        D = np.zeros((len(qidx), len(codes)), dtype=np.float64)
-        for j in range(lut.shape[1]):
-            D += lut[:, j, :][:, codes[:, j]]
+        D = _lut_gather(lut, codes)
         np.maximum(D, 0.0, out=D)
         if htv is not None:
             # polysemous gate: XOR + popcount per byte position

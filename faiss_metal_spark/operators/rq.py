@@ -22,8 +22,9 @@ Scale shape is the PQ discipline exactly:
   ‖q − Σ c_m‖² = ‖q‖² − 2·Σ_m ⟨q, c_m[code_m]⟩ + ‖Σ c_m‖²:
   broadcast nq×M×256 inner-product LUTs (query-batch-sized, like the
   ADC tables), M gathers + the stored ``recn`` per row — no decode,
-  no FP vector reconstructed in the hot path; per-partition partial
-  top-k → the shared ``_finalize`` merge.
+  no FP vector reconstructed in the hot path; the ``lut_scan`` kernel
+  of the shared ``knn.flat_scan`` driver (per-partition partial top-k
+  → the shared ``_finalize`` merge).
 """
 
 from __future__ import annotations
@@ -33,8 +34,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .knn import _PARTIAL_SCHEMA, _arrow_i64, _arrow_matrix, _finalize
-from .pq import KSUB, _arrow_codes, _binary_array, _decode_frame, train_books_np
+from .knn import ScanKernel, _arrow_i64, _arrow_matrix, flat_scan
+from .pq import (
+    _arrow_codes,
+    _binary_array,
+    _decode_frame,
+    _fuse_lut4,
+    _lut_gather,
+    train_books_np,
+)
 
 
 def _train_sample_matrix(
@@ -276,115 +284,78 @@ def rq_search(
     pair-associated, so distances match the unpacked nbits=4 path to
     summation-order ulp (labels identical: equal code chains fuse to
     bit-equal sums)."""
-    qids, qn, Q, empty = _host_queries(codes, queries, qid_col, qvec_col)
-    if empty is not None:
-        return empty
-    m, ksub, d = codebooks.shape
-    if Q.shape[1] != d:
-        raise ValueError(f"query dim {Q.shape[1]} != codebook dim {d}")
-    # nq × m × ksub inner-product LUTs (query-batch-sized broadcast)
-    lut = np.einsum("qd,mkd->qmk", Q, codebooks)
-    if packed4:
-        from .pq import _fuse_lut4
-
-        lut = _fuse_lut4(lut)  # (nq, ⌈m/2⌉, 256) fused byte tables
-    return _lut_topk_search(codes, queries, qid_col, qids, qn, lut, k)
+    return flat_scan(
+        codes, queries, lut_scan(codebooks, packed4), k=k,
+        qid_col=qid_col, qvec_col=qvec_col,
+    )
 
 
-def _host_queries(codes: DataFrame, queries: DataFrame, qid_col: str, qvec_col: str):
-    """Collect the (small) query batch host-side for LUT construction."""
-    from .knn import RESULT_SCHEMA
-
-    qpdf = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qv")
-    ).toPandas()
-    if len(qpdf) == 0:
-        return None, None, None, codes.sparkSession.createDataFrame([], RESULT_SCHEMA)
-    qids = qpdf["qid"].to_numpy(np.int64)
-    Q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64)
-    return qids, (Q * Q).sum(1), Q, None
-
-
-def _lut_topk_search(
-    codes: DataFrame,
-    queries: DataFrame,
-    qid_col: str,
-    qids: np.ndarray,
-    qn: np.ndarray,
-    lut: np.ndarray,
-    k: int,
-) -> DataFrame:
-    """Shared additive-quantizer scan: per-partition LUT-gather ADC +
-    partial top-k → ``_finalize`` merge. ``lut`` is (nq, m_total, 256)
-    with one slab per stored code byte — full-width stages for RQ, a
-    block-diagonal product layout for PRQ (same gather either way)."""
+def _check_lut_broadcast(lut: np.ndarray) -> None:
+    """Same ceiling discipline as pq.py: the LUT is nq·m·256 doubles —
+    past the ceiling it would OOM an executor, so raise with the
+    chunked_queries remedy instead."""
     from .knn import _MAX_BROADCAST_ELEMS
 
-    spark = codes.sparkSession
-    m = lut.shape[1]
-    # Same ceiling discipline as pq.py: the LUT is nq·m·256 doubles —
-    # past the ceiling it would OOM an executor, so raise with the
-    # chunked_queries remedy instead.
     if lut.size > _MAX_BROADCAST_ELEMS:
         raise ValueError(
             f"ADC LUT too large to broadcast ({lut.size} elems > "
             f"{_MAX_BROADCAST_ELEMS}); use smaller query batches "
             f"(see operators.chunked.chunked_queries)"
         )
-    bc = spark.sparkContext.broadcast((qids, qn, lut))
 
-    def partial_topk(batches):
-        import pyarrow as pa
 
-        qids_, qn_, lut_ = bc.value
-        nq = len(qids_)
-        best_d = np.full((nq, 0), 0.0)
-        best_l = np.full((nq, 0), -1, np.int64)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            C = _arrow_codes(batch.column("code"))
-            # hard width check: stale/mismatched codebooks must raise,
-            # not gather a prefix of each code silently (pq.py
-            # ivfpq_search has the same discipline)
-            if C.shape[1] != m:
+def _check_code_width(codes: np.ndarray, width: int) -> None:
+    """Hard width check: stale/mismatched codebooks must raise, not
+    gather a prefix of each code silently while ``recn`` reflects the
+    full reconstruction."""
+    if codes.shape[1] != width:
+        raise ValueError(
+            f"stored code width {codes.shape[1]} != codebook "
+            f"stages {width}: codes/codebooks mismatch"
+        )
+
+
+def _additive_distance(qn: np.ndarray, ip: np.ndarray, recn: np.ndarray) -> np.ndarray:
+    """‖q − r‖² = ‖q‖² − 2⟨q, r⟩ + ‖r‖² from the gathered inner
+    products ``ip`` and the stored ``recn`` = ‖r‖², clamped at 0."""
+    D = qn[:, None] - 2.0 * ip + recn[None, :]
+    np.maximum(D, 0.0, out=D)
+    return D
+
+
+def lut_scan(codebooks: np.ndarray, packed4: bool = False) -> ScanKernel:
+    """The additive-LUT kernel of :func:`~.knn.flat_scan` over an
+    ``(id, code, recn)`` table — RQ ``(m, ksub, d)`` or PRQ ``(ns, m,
+    ksub, dsub)`` codebooks (the disjoint-block identity makes PRQ the
+    same scan with a block-diagonal table). The driver builds the (nq,
+    m_total, ksub) inner-product LUT once (``packed4``: fused per-byte
+    tables over the fast-scan layout), validated against the query dim
+    and the broadcast ceiling; each Arrow batch checks the stored code
+    width and sums one gather per code byte plus ``recn``. Partial
+    top-k by (distance, label) lexsort: quantized reconstructions
+    collide heavily (≤ ksub^m distinct code chains), so tie groups
+    routinely exceed k and an arbitrary-member argpartition would drop
+    the labels the deterministic final merge is bound to keep."""
+
+    def prepare(Q: np.ndarray):
+        lut = addq_lut(Q, codebooks)  # validates the query dim
+        if packed4:
+            if codebooks.ndim == 4 and codebooks.shape[2] != 16:
                 raise ValueError(
-                    f"stored code width {C.shape[1]} != codebook "
-                    f"stages {m}: codes/codebooks mismatch"
+                    f"packed4 requires nbits=4 codebooks, got ksub={codebooks.shape[2]}"
                 )
-            recn = batch.column("recn").to_numpy(zero_copy_only=True)
-            labels = _arrow_i64(batch.column("id"))
-            ip = np.zeros((nq, len(C)), np.float64)
-            for j in range(m):
-                ip += lut_[:, j, :][:, C[:, j]]
-            D = qn_[:, None] - 2.0 * ip + recn[None, :]
-            np.maximum(D, 0.0, out=D)
-            cat_d = np.concatenate([best_d, D], axis=1)
-            cat_l = np.concatenate(
-                [best_l, np.broadcast_to(labels, (nq, len(C)))], axis=1
-            )
-            kk = min(k, cat_d.shape[1])
-            # (distance, label) lexicographic selection — quantized
-            # reconstructions collide heavily (≤ ksub^m distinct code
-            # chains), so tie groups routinely exceed k and an
-            # arbitrary-member argpartition would drop the labels the
-            # deterministic final merge is contractually bound to keep
-            idx = np.lexsort((cat_l, cat_d), axis=1)[:, :kk]
-            best_d = np.take_along_axis(cat_d, idx, axis=1)
-            best_l = np.take_along_axis(cat_l, idx, axis=1)
-        if best_d.shape[1]:
-            yield pa.record_batch(
-                [
-                    pa.array(np.repeat(qids_, best_d.shape[1])),
-                    pa.array(best_l.ravel()),
-                    pa.array(best_d.ravel()),
-                ],
-                names=["qid", "label", "distance"],
-            )
+            lut = _fuse_lut4(lut)
+        _check_lut_broadcast(lut)
+        return (Q * Q).sum(1), lut
 
-    candidates = codes.mapInArrow(partial_topk, _PARTIAL_SCHEMA)
-    qdf = queries.select(F.col(qid_col).cast("long").alias("qid"))
-    return _finalize(qdf, candidates, k, "l2")
+    def score(state, batch) -> np.ndarray:
+        qn, lut = state
+        codes = _arrow_codes(batch.column("code"))
+        _check_code_width(codes, lut.shape[1])
+        recn = batch.column("recn").to_numpy(zero_copy_only=True)
+        return _additive_distance(qn, _lut_gather(lut, codes), recn)
+
+    return ScanKernel(score, prepare, lexsort=True)
 
 
 # ---------------------------------------------------------------------------
@@ -395,7 +366,8 @@ def _lut_topk_search(
 # slice).  Because the blocks are disjoint coordinates, the L2 identity
 # decomposes exactly:  ‖q − r‖² = ‖q‖² − 2·Σ_s⟨q_s, r_s⟩ + Σ_s‖r_s‖²,
 # so search is the SAME LUT-gather ADC scan as RQ with a block-diagonal
-# (nq, nsplits·Msub, 256) table — one shared code path (_lut_topk_search).
+# (nq, nsplits·Msub, 256) table — one shared kernel (``lut_scan``) on the
+# shared flat driver (``knn.flat_scan``).
 # The reference engine has no compressed tier at all
 # (/root/reference/include/faiss-metal/MetalIndexFlat.h:47) — superset.
 # ---------------------------------------------------------------------------
@@ -531,86 +503,10 @@ def prq_search(
     inner products are linear, so pairing across a block boundary sums
     the same reals pair-associated (labels identical, distances to
     summation-order ulp)."""
-    qids, qn, Q, empty = _host_queries(codes, queries, qid_col, qvec_col)
-    if empty is not None:
-        return empty
-    ns, m, ksub, dsub = codebooks.shape
-    if Q.shape[1] != ns * dsub:
-        raise ValueError(f"query dim {Q.shape[1]} != codebook dim {ns * dsub}")
-    nq = len(qids)
-    lut = np.empty((nq, ns * m, ksub), np.float64)
-    for s in range(ns):
-        Qs = Q[:, s * dsub : (s + 1) * dsub]
-        lut[:, s * m : (s + 1) * m, :] = np.einsum("qd,mkd->qmk", Qs, codebooks[s])
-    if packed4:
-        from .pq import _fuse_lut4
-
-        if ksub != 16:
-            raise ValueError(
-                f"packed4 requires nbits=4 codebooks, got ksub={ksub}"
-            )
-        lut = _fuse_lut4(lut)
-    return _lut_topk_search(codes, queries, qid_col, qids, qn, lut, k)
-
-
-def _lut_range_search(
-    codes: DataFrame,
-    qids: np.ndarray,
-    qn: np.ndarray,
-    lut: np.ndarray,
-    radius: float,
-) -> DataFrame:
-    """Shared additive-quantizer range scan: same LUT-gather ADC as
-    :func:`_lut_topk_search`, but each batch emits its (qid, label,
-    distance) pairs with ``distance < radius`` (STRICT, the faiss
-    range_search contract) — no merge stage, zero shuffles, output
-    bounded by the radius like the flat operator."""
-    from .knn import _MAX_BROADCAST_ELEMS, RANGE_SCHEMA
-
-    spark = codes.sparkSession
-    m = lut.shape[1]
-    r = float(radius)
-    if lut.size > _MAX_BROADCAST_ELEMS:
-        raise ValueError(
-            f"ADC LUT too large to broadcast ({lut.size} elems > "
-            f"{_MAX_BROADCAST_ELEMS}); use smaller query batches "
-            f"(see operators.chunked.chunked_queries)"
-        )
-    bc = spark.sparkContext.broadcast((qids, qn, lut))
-
-    def emit(batches):
-        import pyarrow as pa
-
-        qids_, qn_, lut_ = bc.value
-        nq = len(qids_)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            C = _arrow_codes(batch.column("code"))
-            if C.shape[1] != m:
-                raise ValueError(
-                    f"stored code width {C.shape[1]} != codebook "
-                    f"stages {m}: codes/codebooks mismatch"
-                )
-            recn = batch.column("recn").to_numpy(zero_copy_only=True)
-            labels = _arrow_i64(batch.column("id"))
-            ip = np.zeros((nq, len(C)), np.float64)
-            for j in range(m):
-                ip += lut_[:, j, :][:, C[:, j]]
-            D = qn_[:, None] - 2.0 * ip + recn[None, :]
-            np.maximum(D, 0.0, out=D)
-            qi, vi = np.nonzero(D < r)
-            if len(qi):
-                yield pa.record_batch(
-                    [
-                        pa.array(qids_[qi]),
-                        pa.array(labels[vi]),
-                        pa.array(D[qi, vi]),
-                    ],
-                    names=["qid", "label", "distance"],
-                )
-
-    return codes.mapInArrow(emit, RANGE_SCHEMA)
+    return flat_scan(
+        codes, queries, lut_scan(codebooks, packed4), k=k,
+        qid_col=qid_col, qvec_col=qvec_col,
+    )
 
 
 def rq_range_search(
@@ -625,17 +521,10 @@ def rq_range_search(
     IndexFlatCodes): all stored codes whose exact asymmetric distance
     ‖q − reconstruction‖² is strictly under ``radius`` — unordered
     (qid, label, distance), same contract as the flat operator."""
-    qids, qn, Q, _empty = _host_queries(codes, queries, qid_col, qvec_col)
-    if _empty is not None:
-        from .knn import RANGE_SCHEMA
-
-        return codes.sparkSession.createDataFrame([], RANGE_SCHEMA)
-    if Q.shape[1] != codebooks.shape[2]:
-        raise ValueError(
-            f"query dim {Q.shape[1]} != codebook dim {codebooks.shape[2]}"
-        )
-    lut = np.einsum("qd,mkd->qmk", Q, codebooks)
-    return _lut_range_search(codes, qids, qn, lut, radius)
+    return flat_scan(
+        codes, queries, lut_scan(codebooks), radius=float(radius),
+        qid_col=qid_col, qvec_col=qvec_col,
+    )
 
 
 def prq_range_search(
@@ -649,20 +538,10 @@ def prq_range_search(
     """Product form of :func:`rq_range_search` (faiss
     IndexProductResidualQuantizer::range_search) — block-diagonal LUTs,
     same scan."""
-    qids, qn, Q, _empty = _host_queries(codes, queries, qid_col, qvec_col)
-    if _empty is not None:
-        from .knn import RANGE_SCHEMA
-
-        return codes.sparkSession.createDataFrame([], RANGE_SCHEMA)
-    ns, m, ksub, dsub = codebooks.shape
-    if Q.shape[1] != ns * dsub:
-        raise ValueError(f"query dim {Q.shape[1]} != codebook dim {ns * dsub}")
-    nq = len(qids)
-    lut = np.empty((nq, ns * m, ksub), np.float64)
-    for s in range(ns):
-        Qs = Q[:, s * dsub : (s + 1) * dsub]
-        lut[:, s * m : (s + 1) * m, :] = np.einsum("qd,mkd->qmk", Qs, codebooks[s])
-    return _lut_range_search(codes, qids, qn, lut, radius)
+    return flat_scan(
+        codes, queries, lut_scan(codebooks), radius=float(radius),
+        qid_col=qid_col, qvec_col=qvec_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -899,31 +778,20 @@ def additive_scan(
     scalar ⟨q, centroid(cell)⟩ when ``by_residual``. ``packed4``: the
     fast-scan layout, fused per-byte LUTs over packed 4-bit codes.
     Partial top-k by (distance, label) lexsort — additive codes
-    collide heavily, same argument as ``_lut_topk_search``."""
-    from .knn import _MAX_BROADCAST_ELEMS
-    from .similarity import ScanKernel
-
-    width = addq_m_total(codebooks)
-    if packed4:
-        width = (width + 1) // 2  # packed byte width
+    collide heavily, the same argument as the flat kernel
+    :func:`lut_scan`, whose width check, gather and distance identity
+    this kernel shares."""
 
     def prepare(Q: np.ndarray):
         lut = addq_lut(Q, codebooks)  # validates the query dim
         if packed4:
-            from .pq import _fuse_lut4
-
             if not addq_is4(codebooks):
                 raise ValueError(
                     "packed4 requires nbits=4 additive codebooks ((m, 16, d) "
                     f"RQ or (ns, m, 16, dsub) PRQ); got shape {codebooks.shape}"
                 )
             lut = _fuse_lut4(lut)
-        if lut.size > _MAX_BROADCAST_ELEMS:
-            raise ValueError(
-                f"ADC LUT too large to broadcast ({lut.size} elems > "
-                f"{_MAX_BROADCAST_ELEMS}); use smaller query batches "
-                f"(see operators.chunked.chunked_queries)"
-            )
+        _check_lut_broadcast(lut)
         return centroids, lut, (Q * Q).sum(1)
 
     def score(state, Q, qidx, cell, pdf):
@@ -931,22 +799,12 @@ def additive_scan(
         codes = np.frombuffer(
             b"".join(pdf["code"].tolist()), dtype=np.uint8
         ).reshape(len(pdf), -1)
-        # hard width check (the pq.py / _lut_topk_search discipline)
-        if codes.shape[1] != width:
-            raise ValueError(
-                f"stored code width {codes.shape[1]} != codebook "
-                f"stages {width}: codes/codebooks mismatch"
-            )
-        recn = pdf["recn"].to_numpy(np.float64)
-        ip = np.zeros((len(qidx), len(codes)), np.float64)
-        for j in range(width):
-            ip += lut[qidx, j, :][:, codes[:, j]]
+        _check_code_width(codes, lut.shape[1])
+        ip = _lut_gather(lut[qidx], codes)
         if by_residual:
             # the one per-cell scalar: <q, centroid(cell)> per query
             ip += (Q[qidx] @ C[cell])[:, None]
-        D = qn[qidx][:, None] - 2.0 * ip + recn[None, :]
-        np.maximum(D, 0.0, out=D)
-        return D
+        return _additive_distance(qn[qidx], ip, pdf["recn"].to_numpy(np.float64))
 
     return ScanKernel(score, prepare, lexsort=True)
 

@@ -25,9 +25,6 @@ the horizontal-scale paths a 100 TB corpus needs:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from dataclasses import dataclass
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -36,7 +33,15 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.vector import cosine_sim
-from .knn import RANGE_SCHEMA, RESULT_SCHEMA, _finalize
+from .knn import (
+    _PARTIAL_SCHEMA,
+    RESULT_SCHEMA,
+    ScanKernel,
+    _compute_dtype,
+    _distances,
+    _finalize,
+    _topk_fold,
+)
 
 # ---------------------------------------------------------------------------
 # Random-hyperplane LSH (cosine)
@@ -264,12 +269,8 @@ def knn_join_blocked(
     """
     if metric not in ("l2", "ip", "cosine"):
         raise ValueError(f"unknown metric {metric!r}")
-    if compute == "auto":
-        compute = "f32"
-    if compute not in ("f32", "f64"):
-        raise ValueError(f"unknown compute {compute!r} (auto/f32/f64)")
-    wire = "array<float>" if compute == "f32" else "array<double>"
-    dt = np.float32 if compute == "f32" else np.float64
+    dt = _compute_dtype(compute)
+    wire = "array<float>" if dt is np.float32 else "array<double>"
     spark = vectors.sparkSession
     want_min = metric == "l2"
 
@@ -299,30 +300,16 @@ def knn_join_blocked(
         qm = pdf[pdf["role"] == "q"]
         vm = pdf[pdf["role"] == "v"]
         if len(qm) == 0 or len(vm) == 0:
-            return pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
-                {"qid": np.int64, "label": np.int64, "distance": np.float64}
-            )
+            return _no_pairs()
         Q = np.stack(qm["rvec"].to_numpy()).astype(dt, copy=False)
         V = np.stack(vm["rvec"].to_numpy()).astype(dt, copy=False)
-        G = Q @ V.T
-        if metric == "l2":
-            D = (Q * Q).sum(1)[:, None] + (V * V).sum(1)[None, :] - dt(2.0) * G
-            np.maximum(D, 0.0, out=D)
-        elif metric == "cosine":
-            denom = np.linalg.norm(Q, axis=1)[:, None] * np.linalg.norm(V, axis=1)[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                D = np.where(denom > 0, G / denom, 0.0)
-        else:
-            D = G
-        kk = min(k, D.shape[1])
-        Ds = sign * D
-        idx = np.argpartition(Ds, kk - 1, axis=1)[:, :kk] if kk < D.shape[1] else (
-            np.argsort(Ds, axis=1)
+        best_d, best_l = _topk_fold(
+            None, sign * _distances(metric, Q, V), vm["rid"].to_numpy(np.int64), k
         )
-        qids = np.repeat(qm["rid"].to_numpy(np.int64), idx.shape[1])
-        labels = vm["rid"].to_numpy(np.int64)[idx.ravel()]
-        dists = np.take_along_axis(D, idx, axis=1).ravel()
-        return pd.DataFrame({"qid": qids, "label": labels, "distance": dists})
+        qids = np.repeat(qm["rid"].to_numpy(np.int64), best_l.shape[1])
+        return pd.DataFrame(
+            {"qid": qids, "label": best_l.ravel(), "distance": (sign * best_d).ravel()}
+        )
 
     cand_schema = T.StructType(
         [
@@ -522,38 +509,6 @@ def build_probe_map(probe, max_codes=None, cell_sizes=None):
     return cell_to_qidx
 
 
-def _no_state(Q: np.ndarray) -> None:
-    return None
-
-
-@dataclass(frozen=True)
-class ScanKernel:
-    """A codec's in-cell scan for :func:`probe_scan` (the role of
-    faiss's ``InvertedListScanner``):
-
-    - ``score(state, Q, qidx, cell, pdf) -> D``: the (len(qidx),
-      len(pdf)) distances of the probing queries ``Q[qidx]`` to one
-      cell group's stored rows, on the executors;
-    - ``prepare(Q) -> state``: driver-side, once per query batch; its
-      state rides the one broadcast, so large arrays (codebooks, LUTs,
-      centroids) live there and never in ``score``'s pickled closure.
-      It raises on a batch the codec cannot score;
-    - ``metric``: top-k direction, ``_finalize`` order and radius keep
-      rule (L2/L1 keep ``distance < radius``, IP/cosine ``>``);
-    - ``lexsort``: partial top-k by (distance, label) lexsort instead
-      of argpartition (additive codes collide heavily);
-    - ``gated``: drop non-finite distances after the partial top-k (a
-      gate's rejects, e.g. the polysemous filter);
-    - ``range_schema``: the radius path's result schema."""
-
-    score: Callable
-    prepare: Callable = _no_state
-    metric: str = "l2"
-    lexsort: bool = False
-    gated: bool = False
-    range_schema: object = RANGE_SCHEMA
-
-
 def _no_pairs() -> pd.DataFrame:
     return pd.DataFrame({"qid": [], "label": [], "distance": []}).astype(
         {"qid": np.int64, "label": np.int64, "distance": np.float64}
@@ -605,8 +560,6 @@ def probe_scan(
        each cell emits its passing (qid, label, distance) pairs
        unordered — every vector lives in one cell, so nothing merges
        and there is no finalize shuffle."""
-    from .knn import _PARTIAL_SCHEMA
-
     spark = queries.sparkSession
     cell_sizes = cell_size_map(lists, max_codes)
     qpdf = queries.select(
@@ -639,6 +592,7 @@ def probe_scan(
         kernel.score, kernel.metric, kernel.lexsort, kernel.gated
     )
     want_min = metric in ("l2", "l1")
+    sign = 1.0 if want_min else -1.0
     r = None if radius is None else float(radius)
 
     def scan_cell(key, pdf):
@@ -654,21 +608,12 @@ def probe_scan(
             return pd.DataFrame(
                 {"qid": qids_[qidx][qi], "label": labels[vi], "distance": D[qi, vi]}
             )
-        kk = min(k, D.shape[1])
-        if lexsort:
-            idx = np.lexsort((np.broadcast_to(labels, D.shape), D), axis=1)[:, :kk]
-        else:
-            Ds = D if want_min else -D
-            idx = (
-                np.argpartition(Ds, kk - 1, axis=1)[:, :kk]
-                if kk < D.shape[1]
-                else np.argsort(Ds, axis=1)
-            )
+        best_d, best_l = _topk_fold(None, sign * D, labels, k, lexsort)
         out = pd.DataFrame(
             {
-                "qid": np.repeat(qids_[qidx], idx.shape[1]),
-                "label": labels[idx.ravel()],
-                "distance": np.take_along_axis(D, idx, axis=1).ravel(),
+                "qid": np.repeat(qids_[qidx], best_l.shape[1]),
+                "label": best_l.ravel(),
+                "distance": (sign * best_d).ravel(),
             }
         )
         return out[np.isfinite(out["distance"].to_numpy())] if gated else out
@@ -699,18 +644,7 @@ def decode_scan(metric: str = "l2", vec_col: str = "vec", decode=None) -> ScanKe
             if decode is not None
             else np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         )
-        if metric == "l1":
-            return np.abs(Qs[:, None, :] - V[None, :, :]).sum(-1)
-        G = Qs @ V.T
-        if metric == "l2":
-            D = (Qs * Qs).sum(1)[:, None] + (V * V).sum(1)[None, :] - 2.0 * G
-            np.maximum(D, 0.0, out=D)
-            return D
-        if metric == "cosine":
-            denom = np.sqrt((Qs * Qs).sum(1))[:, None] * np.sqrt((V * V).sum(1))[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                return np.where(denom > 0, G / denom, 0.0)
-        return G
+        return _distances(metric, Qs, V)
 
     # ivf_range_search has always declared nullable result columns
     return ScanKernel(

@@ -40,7 +40,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..operators.knn import _better_is_min, _collect_queries
+from ..operators.knn import (
+    _better_is_min,
+    _collect_queries,
+    _distances,
+    _query_state,
+    _topk_fold,
+)
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -92,38 +98,18 @@ def continuous_topk(
     )
     qids, Q = _collect_queries(q)
     spark = vector_stream.sparkSession
-    bc = spark.sparkContext.broadcast((qids, Q))
+    bc = spark.sparkContext.broadcast((qids, _query_state(Q, np.float64)))
     sign = 1.0 if want_min else -1.0
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Q_ = bc.value
-        qn = (Q_ * Q_).sum(axis=1)
+        qids_, (Q_, qn) = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             labels = pdf[id_col].to_numpy(np.int64)
-            if metric == "l1":
-                D = np.abs(Q_[:, None, :] - V[None, :, :]).sum(axis=-1)
-            else:
-                G = Q_ @ V.T
-                if metric == "l2":
-                    D = qn[:, None] + (V * V).sum(axis=1)[None, :] - 2.0 * G
-                    np.maximum(D, 0.0, out=D)
-                elif metric == "cosine":
-                    denom = (
-                        np.sqrt(qn)[:, None]
-                        * np.sqrt((V * V).sum(axis=1))[None, :]
-                    )
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        D = np.where(denom > 0, G / denom, 0.0)
-                else:
-                    D = G
-            kk = min(k, D.shape[1])
-            idx = (
-                np.argpartition(sign * D, kk - 1, axis=1)[:, :kk]
-                if kk < D.shape[1]
-                else np.argsort(sign * D, axis=1)
+            best_d, best_l = _topk_fold(
+                None, sign * _distances(metric, Q_, V, qn), labels, k
             )
             # every nonempty chunk emits ≥1 row per query, so counting
             # distinct chunk ids downstream counts every vector once.
@@ -141,9 +127,9 @@ def continuous_topk(
             chunk_id = hashlib.md5(np.sort(labels).tobytes()).hexdigest()
             yield pd.DataFrame(
                 {
-                    "qid": np.repeat(qids_, idx.shape[1]),
-                    "label": labels[idx].ravel(),
-                    "distance": np.take_along_axis(D, idx, axis=1).ravel(),
+                    "qid": np.repeat(qids_, best_l.shape[1]),
+                    "label": best_l.ravel(),
+                    "distance": (sign * best_d).ravel(),
                     "chunk": chunk_id,
                     "n_chunk": np.int64(len(labels)),
                 }

@@ -797,6 +797,9 @@ class VectorTable:
         return _range_search(
             self._sel_view(params), queries, radius, metric=metric, method=method,
             qid_col=qid_col, qvec_col=qvec_col, vec_format=self._vec_format,
+            # the same precomputed-norm policy as ``search``, so a pair
+            # both return carries the same distance
+            norm_col="norm_sq" if self.storage != STORAGE_FP32 else None,
             compute=compute,
         )
 

@@ -120,3 +120,36 @@ def test_ivf_search_numpy_job_budget(spark, kind, nq):
     )
     assert len(jobs) == IVF_SEARCH_JOBS, f"{kind}: {len(jobs)} jobs {jobs}"
     idx.release()
+
+
+# jobs per flat-family search_numpy call, measured on these toy sizes
+# (local[2]) before the family shared one scan-and-merge driver. The
+# "flat" case is the interactive benchmark's call (fp16-compact
+# VectorTable, nq=1), whose traced knn.jobs_per_call reads 3 on its
+# cache-resident table; this uncached table adds one job for the
+# shuffle in its ingest lineage
+FLAT_SEARCH_JOBS = {"flat": 4, "pq": 4, "rq": 4, "prq": 4}
+
+
+def test_flat_search_numpy_job_budget(spark):
+    """Job budget of one exhaustive ``search_numpy`` call through the
+    flat scan driver, per kernel: an extra collect or count in the
+    driver shows here as one more job."""
+    from faiss_metal_spark import PQIndex, PRQIndex, RQIndex
+
+    V, Q = make_fixture(300, 3, 8, seed=5)
+    vt = VectorTable(spark, 8, storage="fp16", compact=True).add_numpy(V)
+    vt.search_numpy(Q[:1], 5)  # warm the plan outside the pin
+    cases = {
+        "flat": (vt, Q[:1]),
+        "pq": (PQIndex.from_table(vt, 2, iters=2, nbits=4), Q),
+        "rq": (RQIndex.from_table(vt, 2, iters=2), Q),
+        "prq": (PRQIndex.from_table(vt, 2, 2, iters=2, nbits=4), Q),
+    }
+    jobs = {
+        kind: len(_jobs_during(
+            spark, f"flat-jobs-{kind}", lambda: idx.search_numpy(x, 5)
+        )[1])
+        for kind, (idx, x) in cases.items()
+    }
+    assert jobs == FLAT_SEARCH_JOBS, jobs

@@ -304,6 +304,36 @@ def test_vector_table_range_search_matches_operator(spark):
             assert (int(r.qid), int(r.label)) in pairs
 
 
+def test_range_search_distance_equals_search_distance(spark):
+    """On a quantized table search and range_search score with the same
+    stored fp32 norms: every (qid, label) of search(k=5) comes back from
+    a range_search whose radius passes the k-th distance, with a
+    bitwise-equal distance — fp16 and bf16, compact or not, l2 and
+    cosine."""
+    from faiss_metal_spark import SearchParams
+
+    V, Q = make_fixture(300, 4, 16, seed=21)
+    qdf = queries_df(spark, Q)
+    for storage in (STORAGE_FP16, STORAGE_BF16):
+        for compact in (False, True):
+            vt = VectorTable(spark, d=16, storage=storage, compact=compact)
+            vt.add_numpy(V)
+            for metric in ("l2", "cosine"):
+                params = SearchParams(metric=metric)
+                D, L = vt.search_numpy(Q, 5, params=params)
+                radius = D.max() + 1.0 if metric == "l2" else D.min() - 0.5
+                got = vt.range_search(qdf, float(radius), params=params).toPandas()
+                dist = {
+                    (int(r.qid), int(r.label)): r.distance
+                    for r in got.itertuples()
+                }
+                for (qi, j), label in np.ndenumerate(L):
+                    # search_numpy returns the f32 distances as float32
+                    assert np.float32(dist[(qi, int(label))]) == D[qi, j], (
+                        storage, compact, metric, qi, int(label),
+                    )
+
+
 def test_remove_ids_compacts_like_faiss(spark):
     """remove_ids shifts surviving ids down (IndexFlat compaction):
     after removing {1, 3} from 6 vectors, old vector 2 is id 1, old 4
