@@ -159,33 +159,22 @@ def _coarse_state(q) -> tuple:
 
 
 
-def _hnsw_coarse(spark, C: np.ndarray, coarse_hnsw_m, coarse_kw):
-    """The faiss ``IVF<n>_HNSW<M>`` coarse quantizer over trained
-    centroids (operators/coarse.py) — None without ``coarse_hnsw_m``;
+def _coarse(vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw):
+    """``(centroids, quantizer)`` of an IVF tier: k-means centroids on
+    ``base``'s trainer sample and, with ``coarse_hnsw_m``, the faiss
+    ``IVF<n>_HNSW<M>`` coarse quantizer over them (operators/coarse.py;
     ``coarse_kw`` forwards beam/rounds/expand/seed to
-    :meth:`HNSWCoarseQuantizer.train`."""
-    if coarse_hnsw_m is None:
-        return None
-    from .operators.coarse import HNSWCoarseQuantizer
-
-    return HNSWCoarseQuantizer.train(
-        C, M=int(coarse_hnsw_m), **{"spark": spark, **(coarse_kw or {})}
-    )
-
-
-def _fused_coarse(vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw):
-    """``(quantizer, build kwargs)`` for a fused IVF builder
-    (``ivfpq_build`` / ``ivfrq_build``): ``(None, {})`` without
-    ``coarse_hnsw_m`` — the builder trains its own centroids — else
-    centroids trained here and the graph quantizer over them, which
-    the builder then assigns through."""
-    if coarse_hnsw_m is None:
-        return None, {}
+    :meth:`HNSWCoarseQuantizer.train`) — else None, the exact argmin."""
     from .operators.similarity import ivf_train_centroids
 
     C = ivf_train_centroids(base, n_cells, sample_size=sample_size, iters=iters)
-    q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
-    return q, {"centroids": C, "assigner": q}
+    if coarse_hnsw_m is None:
+        return C, None
+    from .operators.coarse import HNSWCoarseQuantizer
+
+    return C, HNSWCoarseQuantizer.train(
+        C, M=int(coarse_hnsw_m), **{"spark": vt.spark, **(coarse_kw or {})}
+    )
 
 
 # -- decode batches: the stored rows a ``_decode()`` closure receives ------
@@ -1053,11 +1042,8 @@ class IVFIndex(_RangePreassigned):
         ``IVF<n>_HNSW<M>`` recipe) — assignment becomes approximate
         exactly as in faiss; ``coarse_kw`` forwards beam/rounds/expand/
         seed to :meth:`HNSWCoarseQuantizer.train`."""
-        from .operators.similarity import ivf_train_centroids
-
         base = _float_view(vt)
-        C = ivf_train_centroids(base, n_cells, sample_size=sample_size, iters=iters)
-        q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
+        C, q = _coarse(vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw)
         return cls(vt.spark, vt.d, vt.metric, C, None, quantizer=q)._fill(base)
 
     def _encode_df(self, rows: DataFrame) -> DataFrame:
@@ -1528,13 +1514,11 @@ class IVFSQIndex(_RangePreassigned):
         """``uniform`` (r13): one shared (vmin, vmax) across dims —
         faiss ``IVF<n>,SQ8_uniform``; constant trained arrays, every
         downstream path unchanged (the SQ8Index uniform discipline)."""
-        from .operators.similarity import ivf_train_centroids
         from .operators.sq import sq_train
 
         base = _float_view(vt)
         vmin, vmax = sq_train(base, uniform=uniform)
-        C = ivf_train_centroids(base, n_cells, sample_size=sample_size, iters=iters)
-        q = _hnsw_coarse(vt.spark, C, coarse_hnsw_m, coarse_kw)
+        C, q = _coarse(vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw)
         return cls(
             vt.spark, vt.d, vt.metric, C, vmin, vmax, None, bits=bits,
             quantizer=q,
@@ -1599,19 +1583,16 @@ class IVFPQIndex(_Preassigned):
         """``nbits`` = residual-code width (faiss ``IVF<n>,PQ<m>x<b>``);
         ``coarse_hnsw_m`` (r12) = the graph-coarse-quantizer recipe
         (``IVF<n>_HNSW<M>,PQ<m>``) — see :meth:`IVFIndex.from_table`."""
-        from .operators.pq import ivfpq_build
+        from .operators.pq import _check_nbits, train_books_np
+        from .operators.similarity import _ivf_prologue
 
         base = _float_view(vt)
-        q, kw = _fused_coarse(
-            vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw
+        C, q = _coarse(vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw)
+        _, _, R = _ivf_prologue(
+            base, n_cells, sample_size=sample_size, centroids=C, assigner=q
         )
-        centroids, books, codes = ivfpq_build(
-            base, n_cells, m, sample_size=sample_size, iters=iters,
-            nbits=nbits, **kw,
-        )
-        codes = codes.persist()
-        n = codes.count()
-        return cls(vt.spark, vt.d, centroids, books, codes, n, quantizer=q)
+        books = train_books_np(R, m, iters, ksub=_check_nbits(nbits))
+        return cls(vt.spark, vt.d, C, books, None, quantizer=q)._fill(base)
 
     def _encode_df(self, rows: DataFrame) -> DataFrame:
         """Assign against the coarse quantizer, PQ-encode the residual."""
@@ -1710,17 +1691,15 @@ class IVFPQRIndex(_IVF):
         sample_size: int = 16384,
         iters: int = 10,
     ) -> "IVFPQRIndex":
-        from .operators.pq import ivfpqr_build
+        from .operators.pq import _pqr_train_np
+        from .operators.similarity import _ivf_prologue
 
         # faiss IndexIVFPQR default: refine PQ has the same m unless told
         m_refine = m if m_refine is None else int(m_refine)
         base = _float_view(vt)
-        centroids, books, rbooks, codes = ivfpqr_build(
-            base, n_cells, m, m_refine, sample_size=sample_size, iters=iters
-        )
-        codes = codes.persist()
-        n = codes.count()
-        return cls(vt.spark, vt.d, centroids, books, rbooks, codes, n)
+        C, _, R = _ivf_prologue(base, n_cells, sample_size=sample_size, iters=iters)
+        books, rbooks = _pqr_train_np(R, m, m_refine, iters)
+        return cls(vt.spark, vt.d, C, books, rbooks, None)._fill(base)
 
     def _encode_df(self, rows: DataFrame) -> DataFrame:
         """Assign, then the two-level residual encode."""
@@ -2087,16 +2066,13 @@ class IVFPQFastScanIndex(_IVF):
         cls, vt, n_cells: int, m: int, sample_size: int = 16384,
         iters: int = 10,
     ) -> "IVFPQFastScanIndex":
-        from .operators.pq import ivfpq_build
+        from .operators.pq import train_books_np
+        from .operators.similarity import _ivf_prologue
 
         base = _float_view(vt)
-        centroids, books, codes = ivfpq_build(
-            base, n_cells, m, sample_size=sample_size, iters=iters,
-            nbits=4, pack4=True,
-        )
-        codes = codes.persist()
-        n = codes.count()
-        return cls(vt.spark, vt.d, centroids, books, codes, n)
+        C, _, R = _ivf_prologue(base, n_cells, sample_size=sample_size, iters=iters)
+        books = train_books_np(R, m, iters, ksub=16)
+        return cls(vt.spark, vt.d, C, books, None)._fill(base)
 
     def _encode_df(self, rows: DataFrame) -> DataFrame:
         """Assign, encode the residual packed."""
@@ -3325,24 +3301,21 @@ class IVFRQIndex(_Preassigned):
         nbits: int = 8, coarse_hnsw_m: int | None = None,
         coarse_kw: dict | None = None,
     ) -> "IVFRQIndex":
-        from .operators.rq import ivfrq_build
+        from .operators.rq import _addq_train_np
+        from .operators.similarity import _ivf_prologue
 
         base = _float_view(vt)
-        q, kw = _fused_coarse(
-            vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw
+        C, q = _coarse(vt, base, n_cells, sample_size, iters, coarse_hnsw_m, coarse_kw)
+        _, _, X = _ivf_prologue(
+            base, n_cells, sample_size=sample_size, centroids=C, assigner=q,
+            by_residual=by_residual,
         )
-        centroids, books, codes = ivfrq_build(
-            base, n_cells, m, nsplits=nsplits, sample_size=sample_size,
-            iters=iters, beam=beam, icm_sweeps=icm_sweeps,
-            by_residual=by_residual, nbits=nbits, **kw,
-        )
-        codes = codes.persist()
-        n = codes.count()
+        books = _addq_train_np(X, m, nsplits, iters, nbits)
         return cls(
-            vt.spark, vt.d, centroids, books, codes, n,
-            beam=int(beam), icm_sweeps=int(icm_sweeps),
-            by_residual=bool(by_residual), quantizer=q,
-        )
+            vt.spark, vt.d, C, books, None, beam=int(beam),
+            icm_sweeps=int(icm_sweeps), by_residual=bool(by_residual),
+            quantizer=q,
+        )._fill(base)
 
     def _encode_df(self, rows: DataFrame) -> DataFrame:
         """Assign against the coarse quantizer, additive-encode (the
@@ -3622,21 +3595,19 @@ class IVFRQFastScanIndex(_IVF):
         iters: int = 10, beam: int = 1, icm_sweeps: int = 0,
         by_residual: bool = True,
     ) -> "IVFRQFastScanIndex":
-        from .operators.rq import ivfrq_build
+        from .operators.rq import _addq_train_np
+        from .operators.similarity import _ivf_prologue
 
         base = _float_view(vt)
-        centroids, books, codes = ivfrq_build(
-            base, n_cells, m, nsplits=nsplits, sample_size=sample_size,
-            iters=iters, beam=beam, icm_sweeps=icm_sweeps,
-            by_residual=by_residual, nbits=4, pack4=True,
+        C, _, X = _ivf_prologue(
+            base, n_cells, sample_size=sample_size, iters=iters,
+            by_residual=by_residual,
         )
-        codes = codes.persist()
-        n = codes.count()
+        books = _addq_train_np(X, m, nsplits, iters, 4)
         return cls(
-            vt.spark, vt.d, centroids, books, codes, n,
-            beam=int(beam), icm_sweeps=int(icm_sweeps),
-            by_residual=bool(by_residual),
-        )
+            vt.spark, vt.d, C, books, None, beam=int(beam),
+            icm_sweeps=int(icm_sweeps), by_residual=bool(by_residual),
+        )._fill(base)
 
     def _encode_df(self, rows: DataFrame) -> DataFrame:
         from .operators.rq import ivfrq_encode

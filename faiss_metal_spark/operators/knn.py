@@ -44,6 +44,11 @@ workers see Arrow batches zero-copy, and distance math is C-speed BLAS.
 The broadcast ceiling on queries (default 100k × d) matches Spark's own
 broadcast-join discipline; larger query sets should use
 ``knn_join`` (block-partitioned both sides — see similarity.py).
+
+The write side has one driver too: ``_encode_scan`` runs every
+distributed encode (PQ/RQ/PRQ codes, their IVF forms, IVF/IMI cell
+assignment) as one broadcast of the codec's frozen state plus one
+``mapInArrow`` pass.
 """
 
 from __future__ import annotations
@@ -567,6 +572,55 @@ def flat_scan(
     if parts is not None and parts * k > _PREMERGE_PARTS_K:
         salt = _PREMERGE_SALT
     return _finalize(None, candidates, k, kernel.metric, premerge_salt=salt, qids=qids)
+
+
+# ---------------------------------------------------------------------------
+# encode scan — broadcast frozen codec state, one scan, no shuffle
+# ---------------------------------------------------------------------------
+
+
+def _encode_rows(
+    vectors: DataFrame, id_col: str, vec_col: str, *extra: str
+) -> DataFrame:
+    """The ``(id long, vec, *extra)`` input of every ``(id, …)``
+    encoder: the id is cast here, once, so an int id column encodes
+    exactly like a long one (every output schema declares it long)."""
+    return vectors.select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec"), *extra
+    )
+
+
+def _encode_scan(
+    rows: DataFrame, state, encode: Callable, schema: T.StructType,
+    vec_col: str = "vec",
+) -> DataFrame:
+    """The encode driver (faiss ``sa_encode`` / ``add`` against FROZEN
+    trained state): every distributed encode in the engine — PQ, IVFPQ,
+    IVFPQR, RQ, PRQ, IVFRQ, and the IVF/IMI cell assignments — is this
+    one function with its codec's ``encode``. The caller runs its
+    refusals first; then:
+
+    1. ONE broadcast of the codec's frozen ``state`` (codebooks,
+       centroids, assigner);
+    2. one ``mapInArrow`` pass over ``rows`` — no shuffle, no action,
+       so streaming frames encode too — that skips empty batches and
+       views ``vec_col`` as a float64 matrix ``V`` (``_arrow_matrix``);
+    3. per batch, ``encode(state, V, batch)`` returns the output
+       columns in ``schema`` order."""
+    bc = rows.sparkSession.sparkContext.broadcast(state)
+    names = schema.names  # the closure ships names, not the schema
+
+    def run(batches):
+        import pyarrow as pa
+
+        st = bc.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            V = _arrow_matrix(batch.column(vec_col), "array", np.float64)
+            yield pa.record_batch(encode(st, V, batch), names=names)
+
+    return rows.mapInArrow(run, schema)
 
 
 # ---------------------------------------------------------------------------

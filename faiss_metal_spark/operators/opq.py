@@ -73,17 +73,11 @@ def opq_train(
     books is the PQ codebook tensor (m, 2^nbits, d/m) trained in
     rotated space. Deterministic for fixed inputs (Procrustes SVD on the exact
     sample; init R = identity unless ``seed_rotation`` is given)."""
-    from .similarity import train_sample
-
-    pdf = train_sample(
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        sample_size,
-        extra_cols=("vec",),
-    )
     from .pq import _check_nbits
+    from .similarity import _train_sample_matrix
 
+    X = _train_sample_matrix(vectors, id_col, vec_col, sample_size)
     ksub = _check_nbits(nbits)
-    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
     if len(X) < ksub:
         raise ValueError(f"need ≥ {ksub} training vectors, got {len(X)}")
     d = X.shape[1]

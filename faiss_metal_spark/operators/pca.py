@@ -60,14 +60,9 @@ def pca_train(
     covariance with a sign convention (largest-|coef| coordinate of
     each component is made positive, the sklearn/LAPACK-stable choice).
     """
-    from .similarity import train_sample
+    from .similarity import _train_sample_matrix
 
-    pdf = train_sample(
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        sample_size,
-        extra_cols=("vec",),
-    )
-    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+    X = _train_sample_matrix(vectors, id_col, vec_col, sample_size)
     n, d = X.shape
     if not (1 <= d_out <= d):
         raise ValueError(f"d_out must be in [1, {d}], got {d_out}")
@@ -302,16 +297,9 @@ def itq_rotation(
     mean, W, _ = pca_train(
         vectors, nbits, id_col=id_col, vec_col=vec_col, sample_size=sample_size
     )
-    from .similarity import train_sample
+    from .similarity import _train_sample_matrix
 
-    sample = train_sample(
-        vectors.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-        ),
-        sample_size,
-        extra_cols=("vec",),
-    )
-    X = np.stack(sample["vec"].to_numpy()).astype(np.float64)
+    X = _train_sample_matrix(vectors, id_col, vec_col, sample_size)
     V = (X - mean) @ W.T  # (n, nbits) PCA-projected, centered
 
     rng = np.random.default_rng(seed)

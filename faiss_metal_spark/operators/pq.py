@@ -15,9 +15,10 @@ Scale shape mirrors the flat kNN path exactly:
 - **train** on a deterministic driver-side sample (like
   ``ivf_train_centroids`` — training is O(sample), encoding is the
   distributed part);
-- **encode** is one scan (``mapInArrow``, no shuffle, zero-copy
-  buffer-view decode), emitting BINARY codes that ride every
-  downstream cache/shuffle/parquet at m bytes;
+- **encode** is one scan of the shared encode driver
+  ``knn._encode_scan`` (no shuffle, zero-copy buffer-view decode),
+  emitting BINARY codes that ride every downstream
+  cache/shuffle/parquet at m bytes;
 - **search** broadcasts per-query ADC lookup tables (nq·m·256 doubles —
   query-batch-sized, never corpus-sized) and streams the code table
   through ``knn.flat_scan`` — the flat float search's own driver, here
@@ -40,9 +41,12 @@ from .knn import (
     ScanKernel,
     _arrow_i64,
     _arrow_matrix,
+    _encode_rows,
+    _encode_scan,
     _finalize,
     flat_scan,
 )
+from .similarity import _ivf_encode, _ivf_prologue, _train_sample_matrix
 
 KSUB = 256  # 8-bit codes, the FAISS default and the only size stored in 1 byte
 
@@ -111,14 +115,7 @@ def pq_train(
     decomposition (same trainer discipline as ``ivf_train_centroids``:
     train on a sample, never on the corpus).
     """
-    from .similarity import train_sample
-
-    pdf = train_sample(
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        sample_size,
-        extra_cols=("vec",),
-    )
-    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+    X = _train_sample_matrix(vectors, id_col, vec_col, sample_size)
     return train_books_np(X, m, iters, ksub=_check_nbits(nbits))
 
 
@@ -155,6 +152,17 @@ def train_books_np(
     return books.astype(np.float32).astype(np.float64)
 
 
+def _check_pack4(ksub: int, pack4: bool) -> None:
+    if pack4 and ksub != 16:
+        raise ValueError(f"pack4 requires nbits=4 codebooks, got ksub={ksub}")
+
+
+def _code_array(codes: np.ndarray, pack4: bool = False):
+    """The stored BINARY code column of an (n, m) uint8 code matrix —
+    two codes per byte with ``pack4`` (the fast-scan layout)."""
+    return _binary_array(pq_pack4_np(codes) if pack4 else codes)
+
+
 def pq_encode(
     vectors: DataFrame,
     codebooks: np.ndarray,
@@ -165,30 +173,15 @@ def pq_encode(
     """Encode to ``(id, code BINARY)`` — one scan, no shuffle, m bytes
     per vector through every downstream stage (⌈m/2⌉ bytes with
     ``pack4`` — the fast-scan layout, requires nbits=4 codebooks)."""
-    m, ksub, dsub = codebooks.shape
-    if pack4 and ksub != 16:
-        raise ValueError(f"pack4 requires nbits=4 codebooks, got ksub={ksub}")
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(codebooks)
+    _, ksub, _ = codebooks.shape
+    _check_pack4(ksub, pack4)
 
-    def enc(batches):
-        import pyarrow as pa
+    def enc(books, V, batch):
+        return [batch.column("id"), _code_array(pq_assign_np(V, books), pack4)]
 
-        books = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V = _arrow_matrix(batch.column(vec_col), "array", np.float64)
-            codes = pq_assign_np(V, books)
-            if pack4:
-                codes = pq_pack4_np(codes)
-            yield pa.record_batch(
-                [pa.array(_arrow_i64(batch.column(id_col))), _binary_array(codes)],
-                names=["id", "code"],
-            )
-
-    out = vectors.select(F.col(id_col), F.col(vec_col))
-    return out.mapInArrow(enc, CODE_SCHEMA)
+    return _encode_scan(
+        _encode_rows(vectors, id_col, vec_col), codebooks, enc, CODE_SCHEMA
+    )
 
 
 def pq_assign_np(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
@@ -464,33 +457,18 @@ def ivfpq_build(
 
     Returns ``(centroids (n_cells, d), codebooks (m, 2^nbits, d/m),
     codes DataFrame (id, cell, code BINARY))``. Training is O(sample)
-    on the driver (both quantizers), encoding is one scan: assign cell,
+    on the driver (both quantizers, through the shared
+    ``similarity._ivf_prologue``), encoding is one scan: assign cell,
     subtract its centroid, PQ-encode the residual — no shuffle.
     ``centroids``/``assigner`` (r12): pre-trained coarse centroids and
     an approximate assigner (the graph coarse quantizer) — the
     residual books then train on the SAME assignment the codes use.
     """
-    from .similarity import ivf_assign, ivf_train_centroids, train_sample
-
-    if centroids is None:
-        centroids = ivf_train_centroids(
-            vectors, n_cells, vec_col=vec_col, id_col=id_col,
-            sample_size=sample_size, iters=iters,
-        )
-    assigned = ivf_assign(
-        vectors, centroids, id_col=id_col, vec_col=vec_col,
-        assigner=assigner,
+    centroids, assigned, R = _ivf_prologue(
+        vectors, n_cells, id_col, vec_col, sample_size, iters,
+        centroids=centroids, assigner=assigner,
     )
-
-    sample = train_sample(
-        assigned.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "cell"),
-        sample_size,
-        extra_cols=("vec", "cell"),
-    )
-    V = np.stack(sample["vec"].to_numpy()).astype(np.float64)
-    R = V - centroids[sample["cell"].to_numpy(np.int64)]
     books = train_books_np(R, m, iters, ksub=_check_nbits(nbits))
-
     codes_df = ivfpq_encode(
         assigned, centroids, books, id_col=id_col, vec_col=vec_col, pack4=pack4
     )
@@ -520,34 +498,15 @@ def ivfpq_encode(
     searches against fixed literal codebooks, the discipline of
     /root/reference/tests/test_metal_flat.mm:72-122). ``pack4`` stores
     the fast-scan two-codes-per-byte layout (nbits=4 only)."""
-    spark = assigned.sparkSession
-    bc = spark.sparkContext.broadcast((centroids, codebooks))
-    mm, ksub, dsub = codebooks.shape
-    if pack4 and ksub != 16:
-        raise ValueError(f"pack4 requires nbits=4 codebooks, got ksub={ksub}")
+    _, ksub, _ = codebooks.shape
+    _check_pack4(ksub, pack4)
 
-    def enc(batches):
-        import pyarrow as pa
+    def code(books, R, C, cells):
+        return [_code_array(pq_assign_np(R, books), pack4)]
 
-        C_, books_ = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V_ = _arrow_matrix(batch.column(vec_col), "array", np.float64)
-            cells = batch.column("cell").to_numpy(zero_copy_only=True)
-            codes = pq_assign_np(V_ - C_[cells], books_)
-            if pack4:
-                codes = pq_pack4_np(codes)
-            yield pa.record_batch(
-                [
-                    pa.array(_arrow_i64(batch.column(id_col))),
-                    pa.array(cells.astype(np.int32, copy=False)),
-                    _binary_array(codes),
-                ],
-                names=["id", "cell", "code"],
-            )
-
-    return assigned.mapInArrow(enc, IVFPQ_CODE_SCHEMA)
+    return _ivf_encode(
+        assigned, centroids, codebooks, code, IVFPQ_CODE_SCHEMA, id_col, vec_col
+    )
 
 
 def ivfpq_write(codes: DataFrame, path: str) -> None:
@@ -801,33 +760,26 @@ def ivfpqr_encode(
     """Two-level encode in ONE scan, no shuffle: r = v − centroid(cell),
     code = PQ1(r), code2 = PQ2(r − decode1(code)) →
     ``(id, cell, code BINARY, code2 BINARY)``."""
-    spark = assigned.sparkSession
-    bc = spark.sparkContext.broadcast((centroids, codebooks, refine_books))
 
-    def enc(batches):
-        import pyarrow as pa
+    def code(books, R, C, cells):
+        books_, rbooks_ = books
+        codes = pq_assign_np(R, books_)
+        codes2 = pq_assign_np(R - pq_decode_np(codes, books_), rbooks_)
+        return [_binary_array(codes), _binary_array(codes2)]
 
-        C_, books_, rbooks_ = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V_ = _arrow_matrix(batch.column(vec_col), "array", np.float64)
-            cells = batch.column("cell").to_numpy(zero_copy_only=True)
-            R = V_ - C_[cells]
-            codes = pq_assign_np(R, books_)
-            R2 = R - pq_decode_np(codes, books_)
-            codes2 = pq_assign_np(R2, rbooks_)
-            yield pa.record_batch(
-                [
-                    pa.array(_arrow_i64(batch.column(id_col))),
-                    pa.array(cells.astype(np.int32, copy=False)),
-                    _binary_array(codes),
-                    _binary_array(codes2),
-                ],
-                names=["id", "cell", "code", "code2"],
-            )
+    return _ivf_encode(
+        assigned, centroids, (codebooks, refine_books), code, IVFPQR_CODE_SCHEMA,
+        id_col, vec_col,
+    )
 
-    return assigned.mapInArrow(enc, IVFPQR_CODE_SCHEMA)
+
+def _pqr_train_np(R: np.ndarray, m: int, m_refine: int, iters: int = 10):
+    """IVFPQR's codebook training on the sample residuals ``R`` →
+    ``(books, refine_books)``: the refine PQ trains on what the first
+    one missed (faiss IndexIVFPQR::train)."""
+    books = train_books_np(R, m, iters)
+    R2 = R - pq_decode_np(pq_assign_np(R, books), books)
+    return books, train_books_np(R2, m_refine, iters)
 
 
 def ivfpqr_build(
@@ -848,25 +800,10 @@ def ivfpqr_build(
     IndexIVFPQR::train trains the refine PQ on the residual-of-residual
     of its own training set); encoding is one distributed scan.
     """
-    from .similarity import ivf_assign, ivf_train_centroids, train_sample
-
-    centroids = ivf_train_centroids(
-        vectors, n_cells, vec_col=vec_col, id_col=id_col,
-        sample_size=sample_size, iters=iters,
+    centroids, assigned, R = _ivf_prologue(
+        vectors, n_cells, id_col, vec_col, sample_size, iters
     )
-    assigned = ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
-
-    sample = train_sample(
-        assigned.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "cell"),
-        sample_size,
-        extra_cols=("vec", "cell"),
-    )
-    V = np.stack(sample["vec"].to_numpy()).astype(np.float64)
-    R = V - centroids[sample["cell"].to_numpy(np.int64)]
-    books = train_books_np(R, m, iters)
-    R2 = R - pq_decode_np(pq_assign_np(R, books), books)
-    refine_books = train_books_np(R2, m_refine, iters)
-
+    books, refine_books = _pqr_train_np(R, m, m_refine, iters)
     codes_df = ivfpqr_encode(
         assigned, centroids, books, refine_books, id_col=id_col, vec_col=vec_col
     )

@@ -15,7 +15,8 @@ dimensions. The reference engine has no compressed tier at all
 Scale shape is the PQ discipline exactly:
 
 - **train** O(sample) on the driver (stage-wise k-means on residuals);
-- **encode** one ``mapInArrow`` scan, no shuffle, emitting
+- **encode** one scan of the shared encode driver ``knn._encode_scan``
+  (one ``mapInArrow`` pass, no shuffle), emitting
   ``(id, code BINARY (M bytes), recn DOUBLE)`` — ``recn`` = ‖Σ c_m‖²
   precomputed at encode time, the term that makes search LUT-only;
 - **search** uses the additive identity
@@ -31,31 +32,19 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .knn import ScanKernel, _arrow_i64, _arrow_matrix, flat_scan
+from .knn import ScanKernel, _encode_rows, _encode_scan, flat_scan
 from .pq import (
     _arrow_codes,
-    _binary_array,
+    _check_pack4,
+    _code_array,
     _decode_frame,
     _fuse_lut4,
     _lut_gather,
     train_books_np,
 )
-
-
-def _train_sample_matrix(
-    vectors: DataFrame, id_col: str, vec_col: str, sample_size: int
-) -> np.ndarray:
-    from .similarity import train_sample
-
-    sample = train_sample(
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        sample_size,
-        extra_cols=("vec",),
-    )
-    return np.stack(sample["vec"].to_numpy()).astype(np.float64)
+from .similarity import _ivf_encode, _ivf_prologue, _train_sample_matrix
 
 
 def rq_train_np(
@@ -87,9 +76,7 @@ def rq_train(
     """Greedy stage-wise training → codebooks ``(m, 2^nbits, d)`` (each
     stage full-width); O(sample) on the driver like the PQ trainer."""
     X = _train_sample_matrix(vectors, id_col, vec_col, sample_size)
-    if not 1 <= int(nbits) <= 8:
-        raise ValueError(f"nbits must be 1..8, got {nbits}")
-    return rq_train_np(X, m, iters, ksub=1 << int(nbits))
+    return _addq_train_np(X, m, None, iters, nbits)
 
 
 def _stage_assign(X: np.ndarray, book: np.ndarray) -> np.ndarray:
@@ -209,6 +196,32 @@ RQ_CODE_SCHEMA = T.StructType(
 )
 
 
+def _additive_code(books, X, beam: int, icm_sweeps: int, pack4: bool, offset=None):
+    """The additive codec's encode of rows ``X`` → its ``[code, recn]``
+    columns: ``recn`` = ‖reconstruction (+ ``offset``, the centroids of
+    a by-residual IVF code)‖², precomputed so search never decodes;
+    packing is layout, ``recn`` reflects the unpacked codes."""
+    import pyarrow as pa
+
+    codes = addq_assign_np(X, books, beam=beam, icm_sweeps=icm_sweeps)
+    full = addq_decode_np(codes, books)
+    if offset is not None:
+        full = full + offset
+    return [_code_array(codes, pack4), pa.array((full * full).sum(1))]
+
+
+def _additive_encode(vectors, codebooks, id_col, vec_col, beam, icm_sweeps, pack4):
+    """``rq_encode`` / ``prq_encode``: the additive codec through the
+    ``knn._encode_scan`` driver → ``(id, code, recn)``."""
+
+    def enc(books, V, batch):
+        return [batch.column("id"), *_additive_code(books, V, beam, icm_sweeps, pack4)]
+
+    return _encode_scan(
+        _encode_rows(vectors, id_col, vec_col), codebooks, enc, RQ_CODE_SCHEMA
+    )
+
+
 def rq_encode(
     vectors: DataFrame,
     codebooks: np.ndarray,
@@ -225,40 +238,10 @@ def rq_encode(
     fast-scan two-codes-per-byte layout (nbits=4 stages only; faiss
     IndexResidualQuantizerFastScan — ``recn`` still reflects the full
     unpacked reconstruction, packing is layout)."""
-    from .pq import pq_pack4_np
-
-    if pack4 and codebooks.shape[1] != 16:
-        raise ValueError(
-            f"pack4 requires nbits=4 codebooks, got ksub={codebooks.shape[1]}"
-        )
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(codebooks)
-
-    def enc(batches):
-        import pyarrow as pa
-
-        books_ = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V = _arrow_matrix(batch.column(vec_col), "array", np.float64)
-            codes = rq_assign_np(V, books_, beam=beam, icm_sweeps=icm_sweeps)
-            rec = rq_decode_np(codes, books_)
-            recn = (rec * rec).sum(1)
-            if pack4:
-                codes = pq_pack4_np(codes)
-            yield pa.record_batch(
-                [
-                    pa.array(_arrow_i64(batch.column(id_col))),
-                    _binary_array(codes),
-                    pa.array(recn),
-                ],
-                names=["id", "code", "recn"],
-            )
-
-    return vectors.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
-    ).mapInArrow(enc, RQ_CODE_SCHEMA)
+    _check_pack4(codebooks.shape[1], pack4)
+    return _additive_encode(
+        vectors, codebooks, id_col, vec_col, beam, icm_sweeps, pack4
+    )
 
 
 def rq_search(
@@ -449,40 +432,10 @@ def prq_encode(
     blocks only; faiss IndexProductResidualQuantizerFastScan — pairs
     pack in stored-byte order straight across block boundaries, the
     same flattened (ns·m)-chain the LUT fusion pairs)."""
-    from .pq import pq_pack4_np
-
-    if pack4 and codebooks.shape[2] != 16:
-        raise ValueError(
-            f"pack4 requires nbits=4 codebooks, got ksub={codebooks.shape[2]}"
-        )
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(codebooks)
-
-    def enc(batches):
-        import pyarrow as pa
-
-        books_ = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V = _arrow_matrix(batch.column(vec_col), "array", np.float64)
-            codes = prq_assign_np(V, books_, beam=beam, icm_sweeps=icm_sweeps)
-            rec = prq_decode_np(codes, books_)
-            recn = (rec * rec).sum(1)
-            if pack4:
-                codes = pq_pack4_np(codes)
-            yield pa.record_batch(
-                [
-                    pa.array(_arrow_i64(batch.column(id_col))),
-                    _binary_array(codes),
-                    pa.array(recn),
-                ],
-                names=["id", "code", "recn"],
-            )
-
-    return vectors.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
-    ).mapInArrow(enc, RQ_CODE_SCHEMA)
+    _check_pack4(codebooks.shape[2], pack4)
+    return _additive_encode(
+        vectors, codebooks, id_col, vec_col, beam, icm_sweeps, pack4
+    )
 
 
 def prq_search(
@@ -633,6 +586,29 @@ IVFRQ_CODE_SCHEMA = T.StructType(
 )
 
 
+def _addq_train_np(
+    X: np.ndarray, m: int, nsplits: int | None, iters: int, nbits: int
+) -> np.ndarray:
+    """Additive codebook training on the sample rows ``X``
+    (``rq_train`` / the IVF additive builders): one full-width residual
+    quantizer (``nsplits=None``) or one per coordinate block."""
+    if not 1 <= int(nbits) <= 8:
+        raise ValueError(f"nbits must be 1..8, got {nbits}")
+    ksub = 1 << int(nbits)
+    if nsplits is None:
+        return rq_train_np(X, m, iters, ksub=ksub)
+    d = X.shape[1]
+    if d % nsplits:
+        raise ValueError(f"d={d} not divisible by nsplits={nsplits}")
+    dsub = d // nsplits
+    return np.stack(
+        [
+            rq_train_np(X[:, s * dsub : (s + 1) * dsub], m, iters, ksub=ksub)
+            for s in range(nsplits)
+        ]
+    )
+
+
 def ivfrq_build(
     vectors: DataFrame,
     n_cells: int,
@@ -658,46 +634,15 @@ def ivfrq_build(
     independent per-coordinate-block quantizer (IVF+PRQ/PLSQ).
     ``nbits``/``pack4``: 4-bit stages stored two per byte — the faiss
     IndexIVFAdditiveQuantizerFastScan layout (RQ form only).
-    Training is O(sample) on the driver (both quantizers; the additive
-    stages train on the sample's COARSE residuals when ``by_residual``,
-    matching faiss's default), encoding is one scan — no shuffle."""
-    from .similarity import ivf_assign, ivf_train_centroids, train_sample
-
-    if centroids is None:
-        centroids = ivf_train_centroids(
-            vectors, n_cells, vec_col=vec_col, id_col=id_col,
-            sample_size=sample_size, iters=iters,
-        )
-    assigned = ivf_assign(
-        vectors, centroids, id_col=id_col, vec_col=vec_col,
-        assigner=assigner,
+    Training is O(sample) on the driver (both quantizers, through the
+    shared ``similarity._ivf_prologue``; the additive stages train on
+    the sample's COARSE residuals when ``by_residual``, matching faiss's
+    default), encoding is one scan — no shuffle."""
+    centroids, assigned, X = _ivf_prologue(
+        vectors, n_cells, id_col, vec_col, sample_size, iters,
+        centroids=centroids, assigner=assigner, by_residual=by_residual,
     )
-
-    sample = train_sample(
-        assigned.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "cell"
-        ),
-        sample_size,
-        extra_cols=("vec", "cell"),
-    )
-    V = np.stack(sample["vec"].to_numpy()).astype(np.float64)
-    R = V - centroids[sample["cell"].to_numpy(np.int64)] if by_residual else V
-    if not 1 <= int(nbits) <= 8:
-        raise ValueError(f"nbits must be 1..8, got {nbits}")
-    ksub = 1 << int(nbits)
-    if nsplits is None:
-        books = rq_train_np(R, m, iters, ksub=ksub)
-    else:
-        d = R.shape[1]
-        if d % nsplits:
-            raise ValueError(f"d={d} not divisible by nsplits={nsplits}")
-        dsub = d // nsplits
-        books = np.stack(
-            [
-                rq_train_np(R[:, s * dsub : (s + 1) * dsub], m, iters, ksub=ksub)
-                for s in range(nsplits)
-            ]
-        )
+    books = _addq_train_np(X, m, nsplits, iters, nbits)
     codes = ivfrq_encode(
         assigned, centroids, books, id_col=id_col, vec_col=vec_col,
         beam=beam, icm_sweeps=icm_sweeps, by_residual=by_residual,
@@ -722,44 +667,20 @@ def ivfrq_encode(
     when ``by_residual``) — the term that keeps search LUT-only.
     ``pack4`` stores the fast-scan two-codes-per-byte layout (4-bit RQ
     stages only; recn still reflects the unpacked reconstruction)."""
-    from .pq import pq_pack4_np
-
     if pack4 and not addq_is4(codebooks):
         raise ValueError(
             "pack4 requires nbits=4 additive codebooks ((m, 16, d) RQ "
             f"or (ns, m, 16, dsub) PRQ); got shape {codebooks.shape}"
         )
-    spark = assigned.sparkSession
-    bc = spark.sparkContext.broadcast((centroids, codebooks))
 
-    def enc(batches):
-        import pyarrow as pa
+    def code(books, X, C, cells):
+        offset = C[cells] if by_residual else None
+        return _additive_code(books, X, beam, icm_sweeps, pack4, offset)
 
-        C_, books_ = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V_ = _arrow_matrix(batch.column(vec_col), "array", np.float64)
-            cells = batch.column("cell").to_numpy(zero_copy_only=True)
-            tgt = V_ - C_[cells] if by_residual else V_
-            codes = addq_assign_np(tgt, books_, beam=beam, icm_sweeps=icm_sweeps)
-            full = addq_decode_np(codes, books_)
-            if by_residual:
-                full = full + C_[cells]
-            recn = (full * full).sum(1)
-            if pack4:
-                codes = pq_pack4_np(codes)
-            yield pa.record_batch(
-                [
-                    pa.array(_arrow_i64(batch.column(id_col))),
-                    pa.array(cells.astype(np.int32, copy=False)),
-                    _binary_array(codes),
-                    pa.array(recn),
-                ],
-                names=["id", "cell", "code", "recn"],
-            )
-
-    return assigned.mapInArrow(enc, IVFRQ_CODE_SCHEMA)
+    return _ivf_encode(
+        assigned, centroids, codebooks, code, IVFRQ_CODE_SCHEMA, id_col, vec_col,
+        by_residual=by_residual,
+    )
 
 
 def additive_scan(

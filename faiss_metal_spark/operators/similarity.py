@@ -20,7 +20,9 @@ the horizontal-scale paths a 100 TB corpus needs:
   the probe filter becomes parquet partition pruning — the scan never
   touches non-probed cells, which is the IVF promise expressed in
   Spark's own storage layout. Every IVF search in the engine runs the
-  one driver ``probe_scan`` with its codec's ``ScanKernel``.
+  one driver ``probe_scan`` with its codec's ``ScanKernel``; every cell
+  assignment and IVF encode runs the encode driver ``knn._encode_scan``,
+  and every fused IVF builder trains through one ``_ivf_prologue``.
 """
 
 from __future__ import annotations
@@ -39,6 +41,8 @@ from .knn import (
     ScanKernel,
     _compute_dtype,
     _distances,
+    _encode_rows,
+    _encode_scan,
     _finalize,
     _topk_fold,
 )
@@ -361,6 +365,19 @@ def train_sample(
     return base.orderBy("_h", id_col).limit(sample_size).drop("_h").toPandas()
 
 
+def _train_sample_matrix(
+    vectors: DataFrame, id_col: str, vec_col: str, sample_size: int
+) -> np.ndarray:
+    """The ``train_sample`` rows of ``vectors`` as a float64 matrix —
+    what every driver-side trainer fits on."""
+    pdf = train_sample(
+        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+        sample_size,
+        extra_cols=("vec",),
+    )
+    return np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+
+
 def ivf_train_centroids(
     vectors: DataFrame,
     n_cells: int,
@@ -387,12 +404,7 @@ def ivf_train_centroids(
     (faiss ``Kmeans.obj``, measured on its train set — here the
     bounded sample, which is the O(sample) 100 TB-safe contract).
     """
-    pdf = train_sample(
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        sample_size,
-        extra_cols=("vec",),
-    )
-    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+    X = _train_sample_matrix(vectors, id_col, vec_col, sample_size)
     if len(X) < n_cells:
         raise ValueError(f"need ≥ {n_cells} vectors to train, got {len(X)}")
     C = X[:n_cells].copy()
@@ -435,35 +447,104 @@ def ivf_assign(
     the graph coarse quantizer hook (faiss IndexHNSWFlat-as-quantizer;
     operators/coarse.py), which makes per-vector assign cost
     independent of nlist. The distributed plan is identical either
-    way."""
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast((centroids, assigner))
-    fields = vectors.schema.fields
+    way: the ``knn._encode_scan`` driver over every input column."""
+    out_schema = T.StructType(
+        list(vectors.schema.fields) + [T.StructField("cell", T.IntegerType())]
+    )
 
-    out_schema = T.StructType(list(fields) + [T.StructField("cell", T.IntegerType())])
-
-    def assign(batches):
+    def assign(state, V, batch):
         import pyarrow as pa
 
-        from .knn import _arrow_matrix
+        C, asg = state
+        if asg is not None:
+            cell = np.asarray(asg.assign_np(V), np.int32)
+        else:
+            # argmin ‖v−c‖² = argmin ‖c‖²−2v·c (‖v‖² constant/row)
+            cn = (C * C).sum(1)
+            cell = (cn[None, :] - 2.0 * (V @ C.T)).argmin(1).astype(np.int32)
+        return list(batch.columns) + [pa.array(cell)]
 
-        C, asg = bc.value
-        cn = (C * C).sum(1)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V = _arrow_matrix(batch.column(vec_col), "array", np.float64)
-            if asg is not None:
-                cell = np.asarray(asg.assign_np(V), np.int32)
-            else:
-                # argmin ‖v−c‖² = argmin ‖c‖²−2v·c (‖v‖² constant/row)
-                cell = (cn[None, :] - 2.0 * (V @ C.T)).argmin(1).astype(np.int32)
-            yield pa.record_batch(
-                list(batch.columns) + [pa.array(cell)],
-                names=list(batch.schema.names) + ["cell"],
-            )
+    return _encode_scan(
+        vectors, (centroids, assigner), assign, out_schema, vec_col=vec_col
+    )
 
-    return vectors.mapInArrow(assign, out_schema)
+
+def _residual(V: np.ndarray, centroids: np.ndarray, cells: np.ndarray) -> np.ndarray:
+    """``v − centroid(cell)`` — what a by-residual IVF codec encodes,
+    on the stored rows (:func:`_ivf_encode`) and on the training sample
+    (:func:`_ivf_prologue`) alike."""
+    return V - centroids[cells]
+
+
+def _ivf_prologue(
+    vectors: DataFrame,
+    n_cells: int,
+    id_col: str = "id",
+    vec_col: str = "vec",
+    sample_size: int = 16384,
+    iters: int = 10,
+    centroids: np.ndarray | None = None,
+    assigner=None,
+    by_residual: bool = True,
+):
+    """The training prologue of every fused IVF builder (``ivfpq_build``
+    / ``ivfpqr_build`` / ``ivfrq_build`` and their tiers): train the
+    coarse centroids (or take ``centroids``), assign through
+    ``assigner`` when given, draw the cell-tagged ``train_sample`` and
+    form its residuals — so the codebooks train on the SAME assignment
+    the codes use. Returns ``(centroids, assigned, X)``: the lazy
+    cell-assigned frame and the codebook training matrix, the sample's
+    residuals (its vectors unless ``by_residual``)."""
+    if centroids is None:
+        centroids = ivf_train_centroids(
+            vectors, n_cells, vec_col=vec_col, id_col=id_col,
+            sample_size=sample_size, iters=iters,
+        )
+    assigned = ivf_assign(
+        vectors, centroids, id_col=id_col, vec_col=vec_col, assigner=assigner
+    )
+    sample = train_sample(
+        assigned.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "cell"),
+        sample_size,
+        extra_cols=("vec", "cell"),
+    )
+    V = np.stack(sample["vec"].to_numpy()).astype(np.float64)
+    if by_residual:
+        V = _residual(V, centroids, sample["cell"].to_numpy(np.int64))
+    return centroids, assigned, V
+
+
+def _ivf_encode(
+    assigned: DataFrame,
+    centroids: np.ndarray,
+    state,
+    code,
+    schema: T.StructType,
+    id_col: str = "id",
+    vec_col: str = "vec",
+    by_residual: bool = True,
+) -> DataFrame:
+    """An IVF codec's encode of a cell-assigned table through the
+    ``knn._encode_scan`` driver: ``(id, cell, *code(state, X, C,
+    cells))`` per batch, where ``X`` is the residual ``v −
+    centroid(cell)`` (``v`` itself unless ``by_residual``) and
+    ``state`` the codec's frozen books, broadcast with the centroids."""
+
+    def enc(st, V, batch):
+        import pyarrow as pa
+
+        C, books = st
+        cells = batch.column("cell").to_numpy(zero_copy_only=True)
+        X = _residual(V, C, cells) if by_residual else V
+        return [
+            batch.column("id"),
+            pa.array(cells.astype(np.int32, copy=False)),
+            *code(books, X, C, cells),
+        ]
+
+    return _encode_scan(
+        _encode_rows(assigned, id_col, vec_col, "cell"), (centroids, state), enc, schema
+    )
 
 
 def ivf_write(assigned: DataFrame, path: str) -> None:
@@ -793,38 +874,22 @@ def imi_assign(
 ) -> DataFrame:
     """(id, vec, cell) with cell = a0·|C1| + a1 (the faiss
     MultiIndexQuantizer composite id) — one Arrow scan, no shuffle."""
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast((C0, C1))
     dh = C0.shape[1]
 
-    def assign(batches):
+    def assign(state, V, batch):
         import pyarrow as pa
 
-        from .knn import _arrow_i64, _arrow_matrix
-
-        C0_, C1_ = bc.value
-        n1 = len(C1_)
+        C0_, C1_ = state
         cn0 = (C0_ * C0_).sum(1)
         cn1 = (C1_ * C1_).sum(1)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            V = _arrow_matrix(batch.column(vec_col), "array", np.float64)
-            a0 = (cn0[None, :] - 2.0 * (V[:, :dh] @ C0_.T)).argmin(1)
-            a1 = (cn1[None, :] - 2.0 * (V[:, dh:] @ C1_.T)).argmin(1)
-            cell = (a0 * n1 + a1).astype(np.int32)
-            yield pa.record_batch(
-                [
-                    pa.array(_arrow_i64(batch.column(id_col))),
-                    batch.column(vec_col),
-                    pa.array(cell),
-                ],
-                names=["id", "vec", "cell"],
-            )
+        a0 = (cn0[None, :] - 2.0 * (V[:, :dh] @ C0_.T)).argmin(1)
+        a1 = (cn1[None, :] - 2.0 * (V[:, dh:] @ C1_.T)).argmin(1)
+        cell = (a0 * len(C1_) + a1).astype(np.int32)
+        return [batch.column("id"), batch.column("vec"), pa.array(cell)]
 
-    return vectors.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(vec_col)
-    ).mapInArrow(assign, f"id long, vec array<float>, cell int")
+    rows = _encode_rows(vectors, id_col, vec_col)
+    schema = T.StructType.fromDDL("id long, vec array<float>, cell int")
+    return _encode_scan(rows, (C0, C1), assign, schema)
 
 
 def imi_probe_cells(C0: np.ndarray, C1: np.ndarray):

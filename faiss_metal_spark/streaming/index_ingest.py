@@ -9,6 +9,11 @@ Structured-Streaming generalization: a stream of ``(id, vec)`` rows is
 cell-assigned with the broadcast trained centroids (one ``mapInArrow``
 projection per micro-batch — no shuffle, no state) and appended to the
 cell-partitioned parquet store that ``ivf_search`` / ``IVFIndex`` read.
+The IVFPQ / IVF-additive ingests encode the same way: every assign and
+encode here is a batch encoder run on the stream, so each goes through
+the engine's one encode driver (``operators/knn.py::_encode_scan`` —
+one broadcast of the frozen state, one Arrow pass, no action on its
+input), and every ingest appends through one sink (``_append_cells``).
 
 The store is the index: readers open ``spark.read.parquet(path)`` at
 any time and get a consistent, probe-prunable inverted list containing
@@ -47,20 +52,15 @@ def read_vector_stream(
     return reader.parquet(path)
 
 
-def run_ivf_ingest(
-    vector_stream: DataFrame,
-    centroids: np.ndarray,
-    index_path: str,
-    checkpoint: str,
-    available_now: bool = True,
+def _append_cells(
+    frame: DataFrame, index_path: str, checkpoint: str, available_now: bool
 ):
-    """Continuously grow a cell-partitioned inverted file at
-    ``index_path`` from ``vector_stream``. Pure append: each micro-batch
-    is assigned against the fixed ``centroids`` and lands in its cells'
-    partitions; no existing file is ever rewritten."""
-    assigned = ivf_assign(vector_stream, centroids)
+    """The ingests' one sink: append ``frame``'s micro-batches to the
+    ``partitionBy("cell")`` parquet store at ``index_path``
+    (exactly-once via the sink's transaction log); ``available_now``
+    drains the backlog and blocks, else a 1 s trigger keeps running."""
     q = (
-        assigned.writeStream.format("parquet")
+        frame.writeStream.format("parquet")
         .option("path", index_path)
         .option("checkpointLocation", checkpoint)
         .partitionBy("cell")
@@ -75,6 +75,21 @@ def run_ivf_ingest(
     if available_now:
         handle.awaitTermination()
     return handle
+
+
+def run_ivf_ingest(
+    vector_stream: DataFrame,
+    centroids: np.ndarray,
+    index_path: str,
+    checkpoint: str,
+    available_now: bool = True,
+):
+    """Continuously grow a cell-partitioned inverted file at
+    ``index_path`` from ``vector_stream``. Pure append: each micro-batch
+    is assigned against the fixed ``centroids`` and lands in its cells'
+    partitions; no existing file is ever rewritten."""
+    assigned = ivf_assign(vector_stream, centroids)
+    return _append_cells(assigned, index_path, checkpoint, available_now)
 
 
 def ivf_store_search(
@@ -115,22 +130,7 @@ def run_ivfpq_ingest(
     from ..operators.pq import ivfpq_encode
 
     codes = ivfpq_encode(ivf_assign(vector_stream, centroids), centroids, codebooks)
-    q = (
-        codes.writeStream.format("parquet")
-        .option("path", index_path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("cell")
-        .outputMode("append")
-    )
-    q = (
-        q.trigger(availableNow=True)
-        if available_now
-        else q.trigger(processingTime="1 second")
-    )
-    handle = q.start()
-    if available_now:
-        handle.awaitTermination()
-    return handle
+    return _append_cells(codes, index_path, checkpoint, available_now)
 
 
 def ivfpq_store_search(
@@ -178,22 +178,7 @@ def run_ivfrq_ingest(
         ivf_assign(vector_stream, centroids), centroids, codebooks,
         beam=beam, icm_sweeps=icm_sweeps, by_residual=by_residual,
     )
-    q = (
-        codes.writeStream.format("parquet")
-        .option("path", index_path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("cell")
-        .outputMode("append")
-    )
-    q = (
-        q.trigger(availableNow=True)
-        if available_now
-        else q.trigger(processingTime="1 second")
-    )
-    handle = q.start()
-    if available_now:
-        handle.awaitTermination()
-    return handle
+    return _append_cells(codes, index_path, checkpoint, available_now)
 
 
 def ivfrq_store_search(

@@ -344,3 +344,102 @@ def test_refine_search_exact_distances_and_recall(spark, trained):
     np.testing.assert_allclose(
         full["distance"].to_numpy(), want["distance"].to_numpy(), atol=1e-9
     )
+
+
+# -- the encode driver: one projection, one plan shape for every encoder ------
+
+
+@pytest.fixture(scope="module")
+def codec_state():
+    """Frozen literal codec state over a tiny 64×8 frame: coarse
+    centroids, 4-bit PQ/RQ/PRQ books and the IMI half-space books."""
+    from faiss_metal_spark.operators.pq import train_books_np
+    from faiss_metal_spark.operators.rq import rq_train_np
+
+    V = np.random.default_rng(5).normal(size=(64, 8)).astype(np.float32)
+    X = V.astype(np.float64)
+    books = train_books_np(X, 2, 2, ksub=16)
+    prq = np.stack(
+        [rq_train_np(X[:, :4], 2, 2, ksub=16), rq_train_np(X[:, 4:], 2, 2, ksub=16)]
+    )
+    return V, {
+        "C": X[:4].copy(), "books": books, "rq": rq_train_np(X, 2, 2, ksub=16),
+        "prq": prq, "C0": X[:4, :4].copy(), "C1": X[4:8, 4:].copy(),
+    }
+
+
+def _encoders():
+    """name → fn(vectors, assigned, state): every distributed encoder;
+    ``assigned`` is the cell-tagged input of the IVF encoders."""
+    from faiss_metal_spark.operators.pq import (
+        ivfpq_build, ivfpq_encode, ivfpqr_encode,
+    )
+    from faiss_metal_spark.operators.rq import ivfrq_encode, prq_encode, rq_encode
+    from faiss_metal_spark.operators.similarity import imi_assign, ivf_assign
+
+    return {
+        "pq_encode": lambda v, a, s: pq_encode(v, s["books"], pack4=True),
+        "ivfpq_encode": lambda v, a, s: ivfpq_encode(a, s["C"], s["books"]),
+        "ivfpqr_encode": lambda v, a, s: ivfpqr_encode(a, s["C"], s["books"], s["books"]),
+        "rq_encode": lambda v, a, s: rq_encode(v, s["rq"]),
+        "prq_encode": lambda v, a, s: prq_encode(v, s["prq"]),
+        "ivfrq_encode": lambda v, a, s: ivfrq_encode(a, s["C"], s["rq"], pack4=True),
+        "imi_assign": lambda v, a, s: imi_assign(v, s["C0"], s["C1"]),
+        "ivf_assign": lambda v, a, s: ivf_assign(v, s["C"]),
+        "ivfpq_build": lambda v, a, s: ivfpq_build(v, 4, 2, iters=2, nbits=4)[2],
+    }
+
+
+def _id_frame(spark, V, id_type):
+    return spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(len(V)), "vec": [v.tolist() for v in V]}),
+        schema=f"id {id_type}, vec array<float>",
+    )
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pq_encode", "ivfpq_encode", "ivfpqr_encode", "rq_encode", "prq_encode",
+     "ivfrq_encode", "imi_assign", "ivfpq_build"],
+)
+def test_encoders_cast_int_ids_to_long(spark, codec_state, name):
+    """Every ``(id, …)`` encoder reads its input through the one
+    ``(id long, vec)`` projection: an int id column encodes to a bigint
+    ``id`` with exactly the rows of the same frame with long ids."""
+    from pyspark.sql import types as T
+
+    from faiss_metal_spark.operators.similarity import ivf_assign
+
+    V, s = codec_state
+    fn = _encoders()[name]
+    out = {}
+    for id_type in ("int", "long"):
+        v = _id_frame(spark, V, id_type)
+        enc = fn(v, ivf_assign(v, s["C"]), s)
+        assert enc.schema["id"].dataType == T.LongType(), id_type
+        out[id_type] = sorted(enc.collect())  # id leads every output row
+    assert out["int"] == out["long"]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pq_encode", "ivfpq_encode", "ivfpqr_encode", "rq_encode", "prq_encode",
+     "ivfrq_encode", "imi_assign", "ivf_assign"],
+)
+def test_encode_plan_is_one_arrow_pass(spark, codec_state, name):
+    """Explain only, no Spark job: each encoder's executed plan is ONE
+    ``MapInArrow`` (the encode driver's pass; the IVF encoders read a
+    literal ``cell`` column here) and no ``Exchange``."""
+    V, s = codec_state
+    v = _id_frame(spark, V, "long")
+    a = v.withColumn("cell", (F.col("id") % 4).cast("int"))
+    sc, group = spark.sparkContext, f"encode-plan-{name}"
+    sc.setJobGroup(group, group, interruptOnCancel=False)
+    try:
+        enc = _encoders()[name](v, a, s)
+        plan = enc._jdf.queryExecution().executedPlan().toString()
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan, plan
